@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 from pathlib import Path
@@ -300,6 +301,77 @@ def await_quiet_box(
     return box, certified, refusal
 
 
+def round_tag() -> int:
+    """Round number stamped on the ``bench_full_r{N}.json`` archive.
+
+    Round-stamped archives let cross-round per-query diffs survive the
+    next run's overwrite (r13 verdict item 7).  The current round is
+    max(existing BENCH_r*.json) + 1: the driver writes BENCH_r{N} at
+    round close, so while round N runs only r1..N-1 exist on disk.
+    """
+    override = os.environ.get("SPARK_GRAFT_BENCH_ROUND")
+    tag = None
+    if override:
+        # Validate instead of a bare int(): a malformed override (e.g.
+        # 'r15') would otherwise raise AFTER the whole bench ran,
+        # losing the archive the override was meant to control (r15
+        # ADVICE).  Fall back to the glob inference with a warning.
+        if re.fullmatch(r"\d+", override.strip()):
+            tag = int(override)
+        else:
+            print(
+                f"[bench] ignoring malformed SPARK_GRAFT_BENCH_ROUND="
+                f"{override!r} (want digits); inferring from BENCH_r* "
+                "files instead",
+                file=sys.stderr,
+            )
+    if tag is None:
+        rounds = [
+            int(m.group(1))
+            for p in Path(_REPO).glob("BENCH_r*.json")
+            if (m := re.match(r"BENCH_r(\d+)\.json$", p.name))
+        ]
+        tag = (max(rounds) + 1) if rounds else 1
+        # The heuristic mislabels in a fresh checkout (BENCH_r* are
+        # driver-written) or an out-of-round run; log it so a wrong
+        # tag is visible rather than silent (r14 ADVICE).  stderr —
+        # stdout stays the one-JSON-line contract.
+        print(
+            f"[bench] archive round tag inferred as r{tag:02d} "
+            "(override with SPARK_GRAFT_BENCH_ROUND)",
+            file=sys.stderr,
+        )
+    return tag
+
+
+def provenance(tag: int, master: str) -> dict:
+    """What a bench record needs to describe itself: round, UTC time,
+    git revision, and the cores the session was given (``master``,
+    ``SPARK_GRAFT_CPUS``) vs the machine's."""
+    import datetime
+    import subprocess
+
+    def git(*args: str) -> str | None:
+        try:
+            return subprocess.run(
+                ["git", *args], cwd=_REPO, capture_output=True, text=True,
+                timeout=10, check=True,
+            ).stdout.strip()
+        except (OSError, subprocess.SubprocessError):
+            return None
+
+    status = git("status", "--porcelain", "--untracked-files=no")
+    return {
+        "round": tag,
+        "utc": datetime.datetime.now(datetime.timezone.utc).isoformat(timespec="seconds"),
+        "git_sha": git("rev-parse", "HEAD"),
+        "git_dirty": None if status is None else bool(status),
+        "spark_graft_cpus": os.environ.get("SPARK_GRAFT_CPUS"),
+        "master": master,
+        "os_cpu_count": os.cpu_count(),
+    }
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf_name = os.path.basename(sf_dir.rstrip("/"))
@@ -432,6 +504,7 @@ def main() -> int:
                 pass
 
     total = round(sum(times.values()), 4)
+    tag = round_tag()
     headline_times = {k: times[k] for k in sorted(HEADLINE) if k in times}
     full_record = {
         "metric": "sum_query_wall_sec",
@@ -447,51 +520,14 @@ def main() -> int:
         "headline_samples": headline_samples,  # sorted; median gated
         "box_state": box,
         "gate_certified": certified,
+        "provenance": provenance(tag, spark.sparkContext.master),
     }
     if errors:
         full_record["errors"] = errors
     side = Path(_REPO) / ".benchmarks" / "bench_full.json"
     side.parent.mkdir(exist_ok=True)
     side.write_text(json.dumps(full_record, indent=1))
-    # Round-stamped archive so cross-round per-query diffs survive the
-    # next run's overwrite (r13 verdict item 7).  The current round is
-    # max(existing BENCH_r*.json) + 1: the driver writes BENCH_r{N} at
-    # round close, so while round N runs only r1..N-1 exist on disk.
-    import re as _re
-
-    _env_tag = os.environ.get("SPARK_GRAFT_BENCH_ROUND")
-    _tag = None
-    if _env_tag:
-        # Validate instead of a bare int(): a malformed override (e.g.
-        # 'r15') would otherwise raise AFTER the whole bench ran,
-        # losing the archive the override was meant to control (r15
-        # ADVICE).  Fall back to the glob inference with a warning.
-        if _re.fullmatch(r"\d+", _env_tag.strip()):
-            _tag = int(_env_tag)
-        else:
-            print(
-                f"[bench] ignoring malformed SPARK_GRAFT_BENCH_ROUND="
-                f"{_env_tag!r} (want digits); inferring from BENCH_r* "
-                "files instead",
-                file=sys.stderr,
-            )
-    if _tag is None:
-        _rounds = [
-            int(m.group(1))
-            for p in Path(_REPO).glob("BENCH_r*.json")
-            if (m := _re.match(r"BENCH_r(\d+)\.json$", p.name))
-        ]
-        _tag = (max(_rounds) + 1) if _rounds else 1
-        # The heuristic mislabels in a fresh checkout (BENCH_r* are
-        # driver-written) or an out-of-round run; log it so a wrong
-        # tag is visible rather than silent (r14 ADVICE).  stderr —
-        # stdout stays the one-JSON-line contract.
-        print(
-            f"[bench] archive round tag inferred as r{_tag:02d} "
-            "(override with SPARK_GRAFT_BENCH_ROUND)",
-            file=sys.stderr,
-        )
-    (side.parent / f"bench_full_r{_tag:02d}.json").write_text(
+    (side.parent / f"bench_full_r{tag:02d}.json").write_text(
         json.dumps(full_record, indent=1)
     )
 

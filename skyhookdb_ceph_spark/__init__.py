@@ -25,8 +25,14 @@ upstream paths/symbols `[U: ...]` from public knowledge of
 github.com/uccross/skyhookdb-ceph and its published papers.
 """
 
-from skyhookdb_ceph_spark.session import get_spark
-from skyhookdb_ceph_spark.catalog import Catalog, TABLES
+from skyhookdb_ceph_spark import _pyworker
+
+# Every engine data source and UDF a Python worker unpickles imports
+# this package first; inert outside Spark Python workers.
+_pyworker.install()
+
+from skyhookdb_ceph_spark.session import get_spark  # noqa: E402
+from skyhookdb_ceph_spark.catalog import Catalog, TABLES  # noqa: E402
 
 __all__ = ["get_spark", "Catalog", "TABLES"]
 __version__ = "0.1.0"

@@ -1,6 +1,7 @@
 """SparkSession factory tuned for this engine.
 
-Scale notes (100 TB design, local[32] test):
+Scale notes (100 TB design; locally local[N] with N = the cores this
+process may run on, overridable with SPARK_GRAFT_CPUS):
 - AQE on: runtime coalescing of shuffle partitions + skew-join splitting
   replaces hand-tuned partition counts when data grows 1000x.
 - shuffle.partitions defaults small for local fixtures; on a real
@@ -19,7 +20,17 @@ import os
 
 from pyspark.sql import SparkSession
 
-_DEF_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def _usable_cpus() -> int:
+    """Cores this process may run on (its affinity mask, not the host's
+    core count, so a pinned container gets what it was given)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        return os.cpu_count() or 1
+
+
+_DEF_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(_usable_cpus())
 
 
 def get_spark(

@@ -4,6 +4,7 @@ and the global-window allowlist matches the actually-audited set."""
 
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -203,3 +204,17 @@ def test_await_quiet_box_waits_out_a_transient_co_tenant():
     )
     assert not ok and "loadavg1" in why
     assert len(box["attempts"]) == 6 and len(slept) == 5
+
+
+def test_bench_record_describes_itself(monkeypatch):
+    """Every bench_full_r*.json carries its round, UTC time, git
+    revision, and the cores it ran on vs the machine's."""
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_ROUND", "7")
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    tag = bench.round_tag()
+    prov = bench.provenance(tag, "local[3,1]")
+    assert tag == 7 and prov["round"] == 7
+    assert prov["utc"].endswith("+00:00")
+    assert prov["git_sha"] is None or len(prov["git_sha"]) == 40
+    assert prov["spark_graft_cpus"] == "3" and prov["master"] == "local[3,1]"
+    assert prov["os_cpu_count"] == os.cpu_count()

@@ -172,3 +172,21 @@ def test_retry_guard_parses_masters_correctly():
     }
     for master, expected in cases.items():
         assert task_retries_available(_S(master)) is expected, master
+
+
+def test_default_master_cores_follow_the_affinity_mask():
+    """Without SPARK_GRAFT_CPUS the local master gets the cores this
+    process may run on; an explicit value still wins."""
+    probe = "from skyhookdb_ceph_spark import session; print(session._DEF_CPUS)"
+
+    def cores(**env_over):
+        env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+        env.update(env_over)
+        out = subprocess.run(
+            [sys.executable, "-c", probe], cwd=REPO, env=env,
+            capture_output=True, text=True, timeout=120, check=True,
+        ).stdout
+        return out.strip().splitlines()[-1]
+
+    assert cores() == str(len(os.sched_getaffinity(0)))
+    assert cores(SPARK_GRAFT_CPUS="3") == "3"
