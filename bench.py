@@ -407,7 +407,7 @@ def main() -> int:
     os.environ.setdefault("SPARK_GRAFT_TASK_ATTEMPTS", "1")
     spark = get_spark(
         app_name="skyhook_bench",
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_BENCH_SHUFFLE", "8")),
+        shuffle_partitions=8,
         extra_conf={
             "spark.sql.adaptive.enabled": "false",
             "spark.sql.cbo.enabled": "false",

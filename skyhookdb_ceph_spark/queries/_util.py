@@ -5,9 +5,23 @@ Oracle-parity rules (SURVEY.md §5.2, FIXTURES.md):
 - averages/ratios rounded to 6;
 - every computed column aliased identically in Spark and oracle SQL;
 - top-k always carries a deterministic tie-break key.
+
+Query lifecycle: a query that writes data stages it in a ``scratch()``
+dir, evaluates, and pins its verdict-sized result with
+``collect_local()`` before the ``with`` block exits and the dir is
+removed — scratch lives exactly until the result is pinned.  Session
+confs a query tunes for its own jobs go through ``scoped_conf()``.
+Scratch is ``$SPARK_GRAFT_SCRATCH``, else tmpfs, else system temp; at
+100 TB ``SPARK_GRAFT_SCRATCH`` MUST be shared storage (s3://...,
+hdfs://...) — executors and the driver do not share a local /tmp.
 """
 
 from __future__ import annotations
+
+import contextlib
+import os
+import shutil
+import tempfile
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -17,12 +31,60 @@ from skyhookdb_ceph_spark.catalog import Catalog
 __all__ = [
     "Catalog",
     "F",
+    "collect_local",
     "local_df",
     "money",
     "ratio",
     "quantize2",
     "QUANTIZE2_SQL",
+    "scoped_conf",
+    "scratch",
 ]
+
+
+def _tmpfs() -> str | None:
+    """/dev/shm when present: local round-trips then pay no disk IO."""
+    return "/dev/shm" if os.path.isdir("/dev/shm") else None
+
+
+def _scratch_dir() -> str | None:
+    """$SPARK_GRAFT_SCRATCH if set; else tmpfs; else None (system temp)."""
+    return os.environ.get("SPARK_GRAFT_SCRATCH") or _tmpfs()
+
+
+@contextlib.contextmanager
+def scratch(prefix: str):
+    """A fresh dir under ``_scratch_dir()``, removed on exit (normal or
+    exceptional).  Pin anything read from it with ``collect_local``
+    inside the block."""
+    d = tempfile.mkdtemp(prefix=prefix, dir=_scratch_dir())
+    try:
+        yield d
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def collect_local(df):
+    """Materialize a SMALL frame and rebuild it as a pure-JVM
+    LocalRelation (``local_df``): the result no longer depends on the
+    files it was read from."""
+    return local_df(df.sparkSession, df.collect(), df.schema)
+
+
+@contextlib.contextmanager
+def scoped_conf(spark, confs: dict[str, str]):
+    """Set session confs for the block and restore the previous values
+    on exit, exceptions included.  A key never set explicitly restores
+    to the effective value it had (its built-in default) — unset and
+    set-to-default behave identically."""
+    prev = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 def local_df(spark, rows, schema):

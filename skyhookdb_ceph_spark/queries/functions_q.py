@@ -341,7 +341,8 @@ def q_fn_map_json(spark, sf_dir):
     on one core; the narrow (event_type, props) shuffle costs less
     than the serialized parse (measured sf0.1: 359 → 270 ms median)
     and is a no-op at scale where the input already has thousands of
-    splits.  Parser choice (r8-verdict item, tools/exp_map_json.py,
+    splits.  Parser choice (r8-verdict item, tools/exp_map_json.py —
+    removed, last present at commit 0295a37;
     interleaved median-of-5/7 at sf0.1 across three sessions): the
     Spark 4 VARIANT path — parse_json once, try_variant_get typed
     extraction — beat get_json_object in every session (314 vs 323,

@@ -31,7 +31,13 @@ from pyspark.sql import functions as F
 from skyhookdb_ceph_spark.operators import minhash, vectors
 from skyhookdb_ceph_spark.queries.llm import FUZZY_CTES, FUZZY_SIG_CTES
 from skyhookdb_ceph_spark.operators.stats import measured_shuffle_width
-from skyhookdb_ceph_spark.queries._util import Catalog, local_df, money, quantize
+from skyhookdb_ceph_spark.queries._util import (
+    Catalog,
+    collect_local,
+    money,
+    quantize,
+    scratch,
+)
 from skyhookdb_ceph_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -600,15 +606,10 @@ def q_agg_incremental_merge(spark, sf_dir):
     the merged (sum, count) rather than being averaged across states
     (averages do not merge; sums and counts do).  The oracle is the
     full recompute — maintenance must equal recomputation exactly."""
-    import shutil
-    import tempfile
-
     ev = Catalog(spark, sf_dir).events
     cut = F.lit(_IVM_CUT).cast("timestamp")
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
 
-    tmp = tempfile.mkdtemp(prefix="skyhook_ivm_", dir=_scratch_dir())
-    try:
+    with scratch("skyhook_ivm_") as tmp:
         base_state = (
             ev.filter(F.col("ts") < cut)
             .groupBy("event_type")
@@ -642,10 +643,7 @@ def q_agg_incremental_merge(spark, sf_dir):
             quantize(F.col("s") / F.col("n"), 6).alias("avg_value"),
         ).orderBy("event_type")
         # materialize before the temp dir vanishes (groups-sized)
-        rows = out.collect()
-        return local_df(spark, rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(out)
 
 
 # ---------------------------------------------------------------------------
@@ -971,16 +969,13 @@ FROM cells GROUP BY bucket ORDER BY bucket
 """
 
 
-def _ivf_incremental_layout(spark, sf_dir):
-    """Build the base IVF layout, append the delta, return (layout df,
-    nb, tmp dir).  Shared with the append-only-files plan test."""
-    import tempfile
-
+def _ivf_incremental_layout(spark, sf_dir, tmp):
+    """Build the base IVF layout under `tmp`, append the delta, return
+    (layout df, nb).  Shared with the append-only-files plan test."""
     from skyhookdb_ceph_spark.operators.vectors import (
         corpus_bits,
         sign_bucket_expr,
     )
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
 
     e = Catalog(spark, sf_dir).embeddings
     base = e.filter(F.col("vec_id") % _IVF_INC_MOD != 0)
@@ -989,7 +984,6 @@ def _ivf_incremental_layout(spark, sf_dir):
     # time (1-row probe); the delta must hash with the same nb or its
     # cells land in a different keyspace
     nb = int(corpus_bits(base).first()["nb"])
-    tmp = tempfile.mkdtemp(prefix="skyhook_ivfinc_", dir=_scratch_dir())
     cell = sign_bucket_expr("embedding", nb)
     base.selectExpr(
         "vec_id", "CAST(0 AS INT) AS is_delta", f"{cell} AS bucket"
@@ -1001,7 +995,7 @@ def _ivf_incremental_layout(spark, sf_dir):
     ).repartition("bucket").write.mode("append").partitionBy(
         "bucket"
     ).parquet(tmp)
-    return spark.read.parquet(tmp), nb, tmp
+    return spark.read.parquet(tmp), nb
 
 
 @query(
@@ -1028,10 +1022,8 @@ def q_vec_ivf_incremental(spark, sf_dir):
     assignment — proving append-maintained == rebuilt-from-scratch.
     Partition-dir values type-infer back as ints, so the census
     re-pads them to the nb-wide bucket strings."""
-    import shutil
-
-    layout, nb, tmp = _ivf_incremental_layout(spark, sf_dir)
-    try:
+    with scratch("skyhook_ivfinc_") as tmp:
+        layout, nb = _ivf_incremental_layout(spark, sf_dir, tmp)
         out = (
             layout.groupBy(
                 F.lpad(F.col("bucket").cast("string"), nb, "0").alias(
@@ -1045,10 +1037,7 @@ def q_vec_ivf_incremental(spark, sf_dir):
             )
             .orderBy("bucket")
         )
-        rows = out.collect()  # cell census: bounded by 2^nb
-        return local_df(spark, rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(out)  # cell census: bounded by 2^nb
 
 
 # ---------------------------------------------------------------------------

@@ -48,7 +48,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from skyhookdb_ceph_spark.queries._util import Catalog, local_df, quantize
+from skyhookdb_ceph_spark.queries._util import Catalog, collect_local, quantize, scratch
 from skyhookdb_ceph_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -193,15 +193,10 @@ def q_maint_recluster(spark, sf_dir):
     costs one footer-stat pass per layout; the rewrite is the
     deliberate heavy step, and skip_frac is the number that says
     whether it paid for itself."""
-    import shutil
-    import tempfile
-
     lo = F.lit(_RC_LO).cast("timestamp")
     hi = F.lit(f"{_RC_HI} 23:59:59").cast("timestamp")
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
 
-    tmp = tempfile.mkdtemp(prefix="skyhook_recluster_", dir=_scratch_dir())
-    try:
+    with scratch("skyhook_recluster_") as tmp:
         before, after = recluster_layouts(spark, sf_dir, tmp)
         out = (
             _file_manifest_leg(spark, after, "after_clustered_ship_month", lo, hi)
@@ -213,10 +208,7 @@ def q_maint_recluster(spark, sf_dir):
             .orderBy("layout")
         )
         # materialize before the temp layouts vanish (2 verdict rows)
-        rows = out.collect()
-        return local_df(spark, rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(out)
 
 
 # ---------------------------------------------------------------------------

@@ -46,14 +46,11 @@ all-pairs against the corpus.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from skyhookdb_ceph_spark.operators import ensure_parallelism, vectors
-from skyhookdb_ceph_spark.queries._util import Catalog, local_df
+from skyhookdb_ceph_spark.queries._util import Catalog, collect_local, scratch
 from skyhookdb_ceph_spark.queries.pipeline14 import (
     _KNN_BINARY_ORACLE,
     _KNN_K,
@@ -71,7 +68,6 @@ from skyhookdb_ceph_spark.queries.pipeline15 import (
     _l1_expr,
     _plane_expr,
 )
-from skyhookdb_ceph_spark.queries.scans import _scratch_dir
 from skyhookdb_ceph_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -154,7 +150,7 @@ def build_sig_index(spark, sf_dir: str, path: str) -> None:
     # is 64 rows at ANY corpus size, so driver materialization is
     # constant-cost and the rebuilt local frame broadcasts instantly.
     thr = _thresholds(ex)
-    thr_local = local_df(spark, thr.collect(), thr.schema)
+    thr_local = collect_local(thr)
     # pin the layout's column order (readers select by name, but a
     # stable on-disk schema keeps appended files byte-compatible)
     _encode(ex, thr_local).select("vec_id", *_SIG_COLS).write.mode(
@@ -340,8 +336,7 @@ def q_vec_sig_build(spark, sf_dir):
     probes pay 16-48 B/vector of index IO instead of 256 B of floats
     plus a corpus-wide percentile pass.  Matches the IVF family's
     lifecycle (q_vec_ivf_build) for the signature tiers."""
-    tmp = tempfile.mkdtemp(prefix="skyhook_sigbuild_", dir=_scratch_dir())
-    try:
+    with scratch("skyhook_sigbuild_") as tmp:
         build_sig_index(spark, sf_dir, tmp)
         idx = spark.read.parquet(f"{tmp}/sigs")
         out = (
@@ -355,9 +350,7 @@ def q_vec_sig_build(spark, sf_dir):
             )
             .orderBy("shard")
         )
-        return local_df(spark, out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(out)
 
 
 # ---------------------------------------------------------------------------
@@ -385,14 +378,11 @@ def q_sim_knn_binary_indexed(spark, sf_dir):
     the build amortized out — at 100 TB the build is once and this
     query's marginal cost is the 16 B/vector coarse scan plus the
     |Q| x 100 rerank."""
-    tmp = tempfile.mkdtemp(prefix="skyhook_sigidx1_", dir=_scratch_dir())
-    try:
+    with scratch("skyhook_sigidx1_") as tmp:
         build_sig_index(spark, sf_dir, tmp)
         e = ensure_parallelism(Catalog(spark, sf_dir).embeddings)
         out = probe_binary(e, spark.read.parquet(f"{tmp}/sigs"))
-        return local_df(spark, out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(out)
 
 
 @query(
@@ -410,14 +400,11 @@ def q_sim_knn_2bit_indexed(spark, sf_dir):
     ladder priced (recall@5 0.92 at shortlist 100): with the index
     persisted, its per-query cost drops to the same two-instruction
     bit_count(xor) scan as the 1-bit tier, at 3x the index bytes."""
-    tmp = tempfile.mkdtemp(prefix="skyhook_sigidx2_", dir=_scratch_dir())
-    try:
+    with scratch("skyhook_sigidx2_") as tmp:
         build_sig_index(spark, sf_dir, tmp)
         e = ensure_parallelism(Catalog(spark, sf_dir).embeddings)
         out = probe_2bit(e, spark.read.parquet(f"{tmp}/sigs"))
-        return local_df(spark, out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(out)
 
 
 # ---------------------------------------------------------------------------
@@ -483,9 +470,8 @@ def q_vec_sig_incremental(spark, sf_dir):
     # lazy, the posexplode+percentile pass over the base corpus would
     # re-run inside BOTH write jobs' broadcast exchanges below.
     thr_plan = _thresholds(_exploded(base))
-    thr = local_df(spark, thr_plan.collect(), thr_plan.schema)
-    tmp = tempfile.mkdtemp(prefix="skyhook_siginc_", dir=_scratch_dir())
-    try:
+    thr = collect_local(thr_plan)
+    with scratch("skyhook_siginc_") as tmp:
         _encode(_exploded(base), thr).withColumn(
             "is_delta", F.lit(0)
         ).write.mode("overwrite").parquet(f"{tmp}/sigs")
@@ -502,9 +488,7 @@ def q_vec_sig_incremental(spark, sf_dir):
             )
             .orderBy("is_delta")
         )
-        return local_df(spark, out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(out)
 
 
 # ---------------------------------------------------------------------------
@@ -852,8 +836,7 @@ def q_stream_late_data(spark, sf_dir):
     )
     early = pc.and_(pc.invert(late), pc.less(t["ts"], split_ts))
     mid = pc.and_(pc.invert(late), pc.invert(pc.less(t["ts"], split_ts)))
-    tmp = tempfile.mkdtemp(prefix="skyhook_late_", dir=_scratch_dir())
-    try:
+    with scratch("skyhook_late_") as tmp:
         for i, mask in enumerate((early, mid, late)):
             p = t.filter(mask)
             p = p.take(pc.sort_indices(p, sort_keys=[("ts", "ascending")]))
@@ -873,11 +856,7 @@ def q_stream_late_data(spark, sf_dir):
             agg, output_mode="append", needs_watermark_batch=True
         )
         out = sink.selectExpr("CAST(window.start AS LONG) AS ws", "cnt")
-        return local_df(spark, out.collect(), out.schema)
-    finally:
-        import shutil as _sh
-
-        _sh.rmtree(tmp, ignore_errors=True)
+        return collect_local(out)
 
 
 # ---------------------------------------------------------------------------

@@ -53,14 +53,17 @@ rank, deterministic doc_id tie-breaks, broadcast-sized dims only.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from skyhookdb_ceph_spark.operators import ensure_parallelism
-from skyhookdb_ceph_spark.queries._util import Catalog, local_df, quantize
+from skyhookdb_ceph_spark.queries._util import (
+    Catalog,
+    collect_local,
+    local_df,
+    quantize,
+    scratch,
+)
 from skyhookdb_ceph_spark.queries.pipeline3 import (
     _BM25_B,
     _BM25_K1,
@@ -72,7 +75,6 @@ from skyhookdb_ceph_spark.queries.pipeline16 import (
     _RRF_SHORTLIST,
     _RRF_TOPK,
 )
-from skyhookdb_ceph_spark.queries.scans import _scratch_dir
 from skyhookdb_ceph_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -223,13 +225,10 @@ def q_text_bm25_indexed(spark, sf_dir):
     the build amortized out — at 100 TB the build is once per corpus
     and this query's marginal cost is |postings(terms)| + the
     doc-length join, independent of corpus text bytes."""
-    tmp = tempfile.mkdtemp(prefix="skyhook_txtidx_", dir=_scratch_dir())
-    try:
+    with scratch("skyhook_txtidx_") as tmp:
         build_text_index(spark, sf_dir, tmp)
         out = probe_bm25(spark, tmp)
-        return local_df(spark, out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(out)
 
 
 # ---------------------------------------------------------------------------
@@ -280,8 +279,7 @@ def q_text_index_incremental(spark, sf_dir):
     d = ensure_parallelism(Catalog(spark, sf_dir).documents)
     base = d.filter(f"NOT ({_TXT_DELTA_PRED})")
     delta = d.filter(_TXT_DELTA_PRED)
-    tmp = tempfile.mkdtemp(prefix="skyhook_txtinc_", dir=_scratch_dir())
-    try:
+    with scratch("skyhook_txtinc_") as tmp:
         _with_tok0(_postings(base)).withColumn(
             "is_delta", F.lit(0).cast("int")
         ).write.mode("overwrite").partitionBy("tok0").parquet(
@@ -302,9 +300,7 @@ def q_text_index_incremental(spark, sf_dir):
             )
             .orderBy("is_delta")
         )
-        return local_df(spark, out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(out)
 
 
 # ---------------------------------------------------------------------------
@@ -504,16 +500,11 @@ def q_hybrid_rrf_indexed(spark, sf_dir):
     from skyhookdb_ceph_spark.queries.pipeline16 import build_sig_index
 
     e = ensure_parallelism(Catalog(spark, sf_dir).embeddings)
-    tdir = tempfile.mkdtemp(prefix="skyhook_hybt_", dir=_scratch_dir())
-    sdir = tempfile.mkdtemp(prefix="skyhook_hybs_", dir=_scratch_dir())
-    try:
+    with scratch("skyhook_hybt_") as tdir, scratch("skyhook_hybs_") as sdir:
         build_text_index(spark, sf_dir, tdir)
         build_sig_index(spark, sf_dir, sdir)
         out = probe_hybrid_rrf(spark, tdir, sdir, e)
-        return local_df(spark, out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tdir, ignore_errors=True)
-        shutil.rmtree(sdir, ignore_errors=True)
+        return collect_local(out)
 
 
 # ---------------------------------------------------------------------------
@@ -609,8 +600,7 @@ def q_text_index_compact(spark, sf_dir):
     d = ensure_parallelism(Catalog(spark, sf_dir).documents)
     base = d.filter(f"NOT ({_TXT_DELTA_PRED})")
     delta = d.filter(_TXT_DELTA_PRED)
-    tmp = tempfile.mkdtemp(prefix="skyhook_txtcmp_", dir=_scratch_dir())
-    try:
+    with scratch("skyhook_txtcmp_") as tmp:
         frag = f"{tmp}/postings"
         _with_tok0(_postings(base)).write.mode("overwrite").partitionBy(
             "tok0"
@@ -658,8 +648,6 @@ def q_text_index_compact(spark, sf_dir):
             "phase string, n_postings bigint, n_tokens bigint,"
             " sum_tf bigint, single_file_per_tok0 int",
         ).orderBy("phase")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def append_text_index(spark, delta_docs: DataFrame, path: str) -> None:

@@ -10,16 +10,13 @@ in Spark and oracle SQL.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from skyhookdb_ceph_spark.operators.multimodal import frame_sample
 from skyhookdb_ceph_spark.operators.skew import salted_join
 from skyhookdb_ceph_spark.operators.vectors import cosine_duckdb, cosine_expr
-from skyhookdb_ceph_spark.queries._util import Catalog, local_df, quantize
+from skyhookdb_ceph_spark.queries._util import Catalog, collect_local, quantize, scratch
 from skyhookdb_ceph_spark.registry import query
 from skyhookdb_ceph_spark.streaming.replay import drain_to_files, events_stream
 
@@ -357,14 +354,8 @@ def q_stream_filesink(spark, sf_dir):
     matching the oracle on the SOURCE proves the sink round-trip is
     lossless and exactly-once.  The streaming stage is a pure map
     (no state, no watermark), so at scale it's one pass per
-    micro-batch with zero shuffle.
-
-    Scratch: $SPARK_GRAFT_SCRATCH if set, else tmpfs/local temp; a
-    real cluster must point this at shared storage."""
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
-
-    tmp = tempfile.mkdtemp(prefix="skyhook_filesink_", dir=_scratch_dir())
-    try:
+    micro-batch with zero shuffle.  Scratch: see ``_util.scratch``."""
+    with scratch("skyhook_filesink_") as tmp:
         src = (
             events_stream(spark, sf_dir)
             .where(
@@ -379,6 +370,4 @@ def q_stream_filesink(spark, sf_dir):
             quantize(F.sum("value"), 2).alias("sum_value"),
         )
         # Materialize before the scratch dir is removed.
-        return local_df(spark, out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(out)

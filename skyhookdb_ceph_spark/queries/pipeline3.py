@@ -15,14 +15,12 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from skyhookdb_ceph_spark.operators import ensure_parallelism
-from skyhookdb_ceph_spark.queries._util import Catalog, quantize
-from skyhookdb_ceph_spark.queries.scans import _scratch_dir
+from skyhookdb_ceph_spark.queries._util import Catalog, _scratch_dir, quantize, scratch
 from skyhookdb_ceph_spark.registry import query
 
 # q_schema_evolve's merged-snapshot dir lives for the process (the
@@ -394,10 +392,8 @@ def q_schema_evolve(spark, sf_dir):
     rewrite).  mergeSchema costs one footer read per FILE at planning
     time — at 100 TB restrict it to snapshot boundaries (explicit
     paths, as here) rather than globbing the whole lake.  Scratch:
-    $SPARK_GRAFT_SCRATCH if set, else tmpfs/local temp; a real
-    cluster must point it at shared storage."""
-    tmp = tempfile.mkdtemp(prefix="skyhook_evolve_", dir=_scratch_dir())
-    try:
+    see ``_util.scratch``."""
+    with scratch("skyhook_evolve_") as tmp:
         d = Catalog(spark, sf_dir).documents
         d.where("doc_id % 2 = 0").select("doc_id", "lang").write.mode(
             "overwrite"
@@ -425,8 +421,6 @@ def q_schema_evolve(spark, sf_dir):
         # class, found here by a /dev/shm census this round).
         _EVOLVE_OUT_DIRS.add(out)
         return spark.read.parquet(out).select("doc_id", "lang", "source")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ===========================================================================

@@ -13,7 +13,13 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from skyhookdb_ceph_spark.operators import ensure_parallelism
-from skyhookdb_ceph_spark.queries._util import Catalog, local_df, quantize, quantize2
+from skyhookdb_ceph_spark.queries._util import (
+    Catalog,
+    collect_local,
+    quantize,
+    quantize2,
+    scratch,
+)
 from skyhookdb_ceph_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -1105,14 +1111,8 @@ def q_scan_partition_prune(spark, sf_dir):
     PushedFilters which still touches every file's footer).  This is
     the date-partitioned table layout every 100 TB event store uses;
     the write is in-query to stay self-contained."""
-    import shutil
-    import tempfile
-
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
-
     ev = Catalog(spark, sf_dir).events
-    tmp = tempfile.mkdtemp(prefix="skyhook_partprune_", dir=_scratch_dir())
-    try:
+    with scratch("skyhook_partprune_") as tmp:
         path = f"{tmp}/events_by_date"
         (
             ev.withColumn("event_date", F.col("ts").cast("date"))
@@ -1134,10 +1134,8 @@ def q_scan_partition_prune(spark, sf_dir):
             .orderBy("event_date", "event_type")
         )
         # Materialize the (days x types)-bounded result before the
-        # scratch dir is removed (house pattern, scans.py).
-        return local_df(spark, out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        # scratch dir is removed (house pattern, _util.scratch).
+        return collect_local(out)
 
 
 # ---------------------------------------------------------------------------
@@ -1218,15 +1216,10 @@ def q_vec_ivf_build(spark, sf_dir):
     promises at scale ('the cell assignment is a partition column'),
     demonstrated end-to-end.  Results are identical to the logical
     cell filter, which is what the oracle states."""
-    import shutil
-    import tempfile
-
     from skyhookdb_ceph_spark.operators import vectors
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
 
     e = Catalog(spark, sf_dir).embeddings
-    tmp = tempfile.mkdtemp(prefix="skyhook_ivf_", dir=_scratch_dir())
-    try:
+    with scratch("skyhook_ivf_") as tmp:
         withb = vectors.bucketed_cells(e)
         # repartition by cell before the partitioned write: without it
         # every input partition writes a file into every cell dir (the
@@ -1251,9 +1244,7 @@ def q_vec_ivf_build(spark, sf_dir):
             .orderBy(F.col("sim").desc(), "vec_id")
             .limit(5)
         )
-        return local_df(spark, out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(out)
 
 
 # ---------------------------------------------------------------------------
@@ -1757,14 +1748,8 @@ def q_join_dpp(spark, sf_dir):
     100 TB: the fact side's IO is decided by the dim filter at
     runtime, exactly like the reference deciding which objects to
     touch from an index lookup."""
-    import shutil
-    import tempfile
-
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
-
     ev = Catalog(spark, sf_dir).events
-    tmp = tempfile.mkdtemp(prefix="skyhook_dpp_", dir=_scratch_dir())
-    try:
+    with scratch("skyhook_dpp_") as tmp:
         path = f"{tmp}/events_by_date"
         (
             ev.withColumn("event_date", F.col("ts").cast("date"))
@@ -1793,9 +1778,7 @@ def q_join_dpp(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("cnt"))
             .orderBy("event_date", "event_type")
         )
-        return local_df(spark, out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(out)
 
 
 # ---------------------------------------------------------------------------

@@ -36,7 +36,14 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from skyhookdb_ceph_spark.queries._util import Catalog, local_df, quantize, quantize2
+from skyhookdb_ceph_spark.queries._util import (
+    Catalog,
+    collect_local,
+    quantize,
+    quantize2,
+    scoped_conf,
+    scratch,
+)
 from skyhookdb_ceph_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -930,16 +937,10 @@ def q_scan_corrupt_json(spark, sf_dir):
     classifies EXACTLY the malformed set and loses no good record.
     Both write and read are distributed (text sink/source, pure map);
     the only shuffle is the final 1-row aggregate."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import types as T
 
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
-
     c = Catalog(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="skyhook_corrupt_", dir=_scratch_dir())
-    try:
+    with scratch("skyhook_corrupt_") as tmp:
         lines = c.documents.select(
             F.when(
                 F.col("doc_id") % 7 == 0,
@@ -990,9 +991,7 @@ def q_scan_corrupt_json(spark, sf_dir):
             .alias("sum_chars_good"),
         )
         # Materialize before the scratch dir is removed.
-        return local_df(spark, out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(out)
 
 
 # ---------------------------------------------------------------------------
@@ -1708,13 +1707,8 @@ def q_scan_binary_file(spark, sf_dir):
     move.  Deliberately driver-written fixtures: 20 files is a
     metadata-scale setup, not a data write."""
     import os
-    import shutil
-    import tempfile
 
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
-
-    tmp = tempfile.mkdtemp(prefix="skyhook_binfile_", dir=_scratch_dir())
-    try:
+    with scratch("skyhook_binfile_") as tmp:
         for k in range(20):
             payload = f"payload-{k}-" + "x" * (k * 7)
             with open(os.path.join(tmp, f"blob_{k:04d}.bin"), "wb") as fh:
@@ -1731,9 +1725,7 @@ def q_scan_binary_file(spark, sf_dir):
             .orderBy("file_k")
         )
         # Materialize before the scratch dir is removed.
-        return local_df(spark, out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(out)
 
 
 # ---------------------------------------------------------------------------
@@ -1768,38 +1760,30 @@ def q_stream_resume(spark, sf_dir):
     _spark_metadata-committed file sink, so the read-back sees only
     committed batches; at 100 TB this restart loop IS the daily
     operations of every incremental ingest pipeline."""
+    import os
     import shutil
-    import tempfile
 
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
     from skyhookdb_ceph_spark.streaming.replay import events_stream
 
-    tmp = tempfile.mkdtemp(prefix="skyhook_resume_", dir=_scratch_dir())
-    src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
-    import os
+    with scratch("skyhook_resume_") as tmp:
+        src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
+        os.makedirs(src, exist_ok=True)
 
-    os.makedirs(src, exist_ok=True)
-
-    def drain_once():
-        stream = events_stream(spark, src, glob="*.parquet").select(
-            "event_type", "value"
-        )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "2")
-        try:
-            q = (
-                stream.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
+        def drain_once():
+            stream = events_stream(spark, src, glob="*.parquet").select(
+                "event_type", "value"
             )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+            with scoped_conf(spark, {"spark.sql.shuffle.partitions": "2"}):
+                q = (
+                    stream.writeStream.format("parquet")
+                    .option("path", out)
+                    .option("checkpointLocation", ckpt)
+                    .outputMode("append")
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                q.awaitTermination()
 
-    try:
         shutil.copy(f"{sf_dir}/events.parquet", f"{src}/a.parquet")
         drain_once()  # run 1: processes A, commits offsets to ckpt
         shutil.copy(f"{sf_dir}/events.parquet", f"{src}/b.parquet")
@@ -1816,9 +1800,7 @@ def q_stream_resume(spark, sf_dir):
             .orderBy("event_type")
         )
         # Materialize before the scratch dir is removed.
-        return local_df(spark, agg.collect(), agg.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(agg)
 
 
 # ---------------------------------------------------------------------------
@@ -2191,14 +2173,13 @@ def q_scan_agg_pushdown(spark, sf_dir):
     scoped to this query (v2 source switching is session-global, so
     the result materializes under the confs and both are restored
     before returning)."""
-    prev_push = spark.conf.get("spark.sql.parquet.aggregatePushdown", "false")
-    prev_v1 = spark.conf.get(
-        "spark.sql.sources.useV1SourceList",
-        "avro,csv,json,kafka,orc,parquet,text",
-    )
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    spark.conf.set("spark.sql.sources.useV1SourceList", "")
-    try:
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.parquet.aggregatePushdown": "true",
+            "spark.sql.sources.useV1SourceList": "",
+        },
+    ):
         li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
         out = li.selectExpr(
             "CAST(count(*) AS BIGINT) AS cnt",
@@ -2206,10 +2187,7 @@ def q_scan_agg_pushdown(spark, sf_dir):
             "max(l_extendedprice) AS max_price",
         )
         # Materialize UNDER the pushdown confs (1 row), then restore.
-        return local_df(spark, out.collect(), out.schema)
-    finally:
-        spark.conf.set("spark.sql.parquet.aggregatePushdown", prev_push)
-        spark.conf.set("spark.sql.sources.useV1SourceList", prev_v1)
+        return collect_local(out)
 
 
 # ---------------------------------------------------------------------------

@@ -45,7 +45,15 @@ from skyhookdb_ceph_spark.operators.skew import (
     SKEW_SHARE_THRESHOLD,
     max_key_share,
 )
-from skyhookdb_ceph_spark.queries._util import Catalog, local_df, quantize, ratio
+from skyhookdb_ceph_spark.queries._util import (
+    Catalog,
+    collect_local,
+    local_df,
+    quantize,
+    ratio,
+    scoped_conf,
+    scratch,
+)
 from skyhookdb_ceph_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -265,15 +273,9 @@ def q_transform_xml(spark, sf_dir):
     decimal strings.  Write and read are both distributed maps; the
     only shuffle is the final aggregate; matching the oracle on the
     SOURCE table proves the round-trip lossless."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import types as T
 
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
-
-    tmp = tempfile.mkdtemp(prefix="skyhook_transform_xml_", dir=_scratch_dir())
-    try:
+    with scratch("skyhook_transform_xml_") as tmp:
         src = Catalog(spark, sf_dir).customer.selectExpr(
             "c_custkey AS _key", "c_mktsegment", "c_acctbal"
         )
@@ -305,9 +307,7 @@ def q_transform_xml(spark, sf_dir):
             )
             .orderBy("c_mktsegment")
         )
-        return local_df(spark, out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(out)
 
 
 # ---------------------------------------------------------------------------
@@ -465,24 +465,19 @@ def q_stream_backpressure(spark, sf_dir):
     operations: in-run batch sizing."""
     import os
     import shutil
-    import tempfile
 
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
     from skyhookdb_ceph_spark.streaming.replay import events_stream
 
-    tmp = tempfile.mkdtemp(prefix="skyhook_backpressure_", dir=_scratch_dir())
-    src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
-    os.makedirs(src, exist_ok=True)
-    try:
+    with scratch("skyhook_backpressure_") as tmp:
+        src, out, ckpt = f"{tmp}/src", f"{tmp}/out", f"{tmp}/ckpt"
+        os.makedirs(src, exist_ok=True)
         for name in ("a", "b", "c", "d"):
             shutil.copy(f"{sf_dir}/events.parquet", f"{src}/{name}.parquet")
         stream = events_stream(
             spark, src, glob="*.parquet",
             options={"maxFilesPerTrigger": "1"},
         ).select("event_type", "value")
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "2")
-        try:
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "2"}):
             q = (
                 stream.writeStream.format("parquet")
                 .option("path", out)
@@ -495,8 +490,6 @@ def q_stream_backpressure(spark, sf_dir):
             n_batches = max(
                 (p["batchId"] for p in q.recentProgress), default=-1
             ) + 1
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         committed = spark.read.parquet(out)
         agg = (
             committed.groupBy("event_type")
@@ -509,9 +502,7 @@ def q_stream_backpressure(spark, sf_dir):
             .withColumn("bounded_ingest", F.lit(n_batches >= 4))
             .orderBy("event_type")
         )
-        return local_df(spark, agg.collect(), agg.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(agg)
 
 
 # ---------------------------------------------------------------------------
@@ -646,22 +637,17 @@ def q_maint_compact(spark, sf_dir):
     with target file size = maxPartitionBytes so post-compaction
     scans get one task per file."""
     import os
-    import shutil
-    import tempfile
 
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
+    with scratch("skyhook_compact_") as tmp:
+        small, big = f"{tmp}/small", f"{tmp}/big"
 
-    tmp = tempfile.mkdtemp(prefix="skyhook_compact_", dir=_scratch_dir())
-    small, big = f"{tmp}/small", f"{tmp}/big"
+        def data_files(d):
+            return [
+                f
+                for f in os.listdir(d)
+                if f.endswith(".parquet") and not f.startswith((".", "_"))
+            ]
 
-    def data_files(d):
-        return [
-            f
-            for f in os.listdir(d)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        ]
-
-    try:
         src = Catalog(spark, sf_dir).events.select("event_type", "value")
         src.repartition(64).write.mode("overwrite").parquet(small)
         files_before = len(data_files(small))
@@ -684,9 +670,7 @@ def q_maint_compact(spark, sf_dir):
                 "sum_cents",
             )
         )
-        return local_df(spark, agg.collect(), agg.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(agg)
 
 
 # ---------------------------------------------------------------------------
@@ -715,13 +699,7 @@ def q_scan_schema_drift(spark, sf_dir):
     schema-on-read beats backfilling petabytes for every added
     column; the per-file footer carries its own schema and the merge
     happens at plan time."""
-    import shutil
-    import tempfile
-
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
-
-    tmp = tempfile.mkdtemp(prefix="skyhook_drift_", dir=_scratch_dir())
-    try:
+    with scratch("skyhook_drift_") as tmp:
         d = Catalog(spark, sf_dir).documents
         d.select("doc_id", "lang").write.mode("overwrite").parquet(
             f"{tmp}/t/vintage=old"
@@ -735,9 +713,7 @@ def q_scan_schema_drift(spark, sf_dir):
             F.count("n_chars").cast("bigint").alias("n_with_chars"),
             F.sum("n_chars").cast("bigint").alias("sum_chars"),
         )
-        return local_df(spark, agg.collect(), agg.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(agg)
 
 
 # ---------------------------------------------------------------------------
@@ -779,12 +755,9 @@ def q_stream_python_source(spark, sf_dir):
     (chunking may never drop/duplicate a row) and >= 4 data batches
     must have executed (bounded_batches)."""
     import ast
-    import shutil
-    import tempfile
     import time
     import uuid
 
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
     from skyhookdb_ceph_spark.sources.skyhook_source import register
 
     register(spark)
@@ -797,10 +770,9 @@ def q_stream_python_source(spark, sf_dir):
         .load()
     )
     name = f"pysrc_{uuid.uuid4().hex[:12]}"
-    tmp = tempfile.mkdtemp(prefix="skyhook_pysrc_", dir=_scratch_dir())
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
+    with scratch("skyhook_pysrc_") as tmp, scoped_conf(
+        spark, {"spark.sql.shuffle.partitions": "2"}
+    ):
         q = (
             stream.writeStream.format("memory")
             .queryName(name)
@@ -847,10 +819,7 @@ def q_stream_python_source(spark, sf_dir):
             .withColumn("bounded_batches", F.lit(data_batches >= n_chunks))
             .orderBy("event_type")
         )
-        return local_df(spark, agg.collect(), agg.schema)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(agg)
 
 
 # ---------------------------------------------------------------------------
@@ -1091,18 +1060,15 @@ def q_maint_vacuum(spark, sf_dir):
     scale."""
     import os
     import shutil
-    import tempfile
 
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
     from skyhookdb_ceph_spark.streaming.replay import (
         drain_to_files,
         events_stream,
     )
 
-    tmp = tempfile.mkdtemp(prefix="skyhook_vacuum_", dir=_scratch_dir())
-    src, out = f"{tmp}/src", f"{tmp}/out"
-    os.makedirs(src, exist_ok=True)
-    try:
+    with scratch("skyhook_vacuum_") as tmp:
+        src, out = f"{tmp}/src", f"{tmp}/out"
+        os.makedirs(src, exist_ok=True)
         shutil.copy(f"{sf_dir}/events.parquet", f"{src}/a.parquet")
         committed_df = drain_to_files(
             events_stream(spark, src, glob="*.parquet").select(
@@ -1167,6 +1133,4 @@ def q_maint_vacuum(spark, sf_dir):
             F.lit(len(orphans)).cast("bigint").alias("orphans_removed"),
             F.lit(after == used).alias("dir_matches_log"),
         )
-        return local_df(spark, agg.collect(), agg.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(agg)

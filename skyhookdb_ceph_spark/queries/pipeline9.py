@@ -45,7 +45,7 @@ import math
 from pyspark.sql import functions as F
 
 from skyhookdb_ceph_spark.operators import vectors
-from skyhookdb_ceph_spark.queries._util import Catalog, local_df
+from skyhookdb_ceph_spark.queries._util import Catalog, collect_local, local_df, scratch
 from skyhookdb_ceph_spark.registry import query
 
 # ---------------------------------------------------------------------------
@@ -112,11 +112,6 @@ def q_vec_ivf_files_pruned(spark, sf_dir):
     decimal-digit int forms; the filter lands in PartitionFilters
     (asserted in tests/test_ivf_layout.py), which at 100 TB is the
     difference between listing nb+1 directories and scanning 2^nb."""
-    import shutil
-    import tempfile
-
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
-
     e = Catalog(spark, sf_dir).embeddings
     b = vectors.bucketed_cells(e)
     qs = b.filter(F.col("vec_id") % 50 == 0).select(
@@ -145,8 +140,7 @@ def q_vec_ivf_files_pruned(spark, sf_dir):
     cells1 = sorted(r["pb"] for r in per_width if r["own"])
     cellsm = sorted(r["pb"] for r in per_width)
     nb = per_width[0]["nb"]
-    tmp = tempfile.mkdtemp(prefix="skyhook_ivfprune_", dir=_scratch_dir())
-    try:
+    with scratch("skyhook_ivfprune_") as tmp:
         # one file per cell directory: repartition(bucket) gives every
         # bucket a single writing task before partitionBy splits dirs
         b.repartition("bucket").write.mode("overwrite").partitionBy(
@@ -204,8 +198,6 @@ def q_vec_ivf_files_pruned(spark, sf_dir):
             "probe_width int, n_cells_probed bigint, n_cells_total bigint, "
             "files_match_cells boolean, frac_corpus_read double",
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -400,14 +392,8 @@ def q_scan_ignore_corrupt(spark, sf_dir):
     q_scan_corrupt_json, which handles row-level corruption inside a
     readable file (PERMISSIVE mode); this is FILE-level corruption
     below the format layer."""
-    import shutil
-    import tempfile
-
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
-
     d = Catalog(spark, sf_dir).documents.select("doc_id", "n_chars")
-    tmp = tempfile.mkdtemp(prefix="skyhook_corrupt_", dir=_scratch_dir())
-    try:
+    with scratch("skyhook_corrupt_") as tmp:
         for shard in range(3):
             d.filter(F.col("doc_id") % 3 == shard).coalesce(1).write.mode(
                 "overwrite"
@@ -434,9 +420,7 @@ def q_scan_ignore_corrupt(spark, sf_dir):
             )
         )
         # materialize before the tempdir is removed (1 bounded row)
-        return local_df(spark, agg.collect(), agg.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(agg)
 
 
 # ---------------------------------------------------------------------------
@@ -468,14 +452,8 @@ def q_transform_text(spark, sf_dir):
     scans split by line boundaries within files, so parallelism is
     maxPartitionBytes-driven exactly like parquet — no format-level
     serialization point."""
-    import shutil
-    import tempfile
-
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
-
     d = Catalog(spark, sf_dir).documents.select("text")
-    tmp = tempfile.mkdtemp(prefix="skyhook_text_", dir=_scratch_dir())
-    try:
+    with scratch("skyhook_text_") as tmp:
         d.write.mode("overwrite").text(tmp)
         lines = spark.read.text(tmp)
         agg = lines.agg(
@@ -484,9 +462,7 @@ def q_transform_text(spark, sf_dir):
             F.min(F.length("value")).cast("bigint").alias("min_chars"),
             F.max(F.length("value")).cast("bigint").alias("max_chars"),
         )
-        return local_df(spark, agg.collect(), agg.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(agg)
 
 
 # ---------------------------------------------------------------------------

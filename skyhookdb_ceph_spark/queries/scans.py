@@ -14,26 +14,11 @@ work at all; `q_scan_full` is a pure pass-through plan.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import types as T
 
 from skyhookdb_ceph_spark.operators.stats import column_stats
-from skyhookdb_ceph_spark.queries._util import Catalog, F, local_df
+from skyhookdb_ceph_spark.queries._util import Catalog, F, collect_local, scratch
 from skyhookdb_ceph_spark.registry import query
-
-
-def _scratch_dir() -> str | None:
-    """$SPARK_GRAFT_SCRATCH if set; else tmpfs (/dev/shm) when present
-    so local round-trip queries don't pay disk IO; else None (system
-    temp).  A real cluster MUST set SPARK_GRAFT_SCRATCH to shared
-    storage (s3://..., hdfs://...) — executors don't share local /tmp."""
-    scratch = os.environ.get("SPARK_GRAFT_SCRATCH")
-    if scratch:
-        return scratch
-    return "/dev/shm" if os.path.isdir("/dev/shm") else None
 
 
 @query("q_scan_full", oracle="SELECT * FROM lineitem")
@@ -68,14 +53,8 @@ def q_transform_format(spark, sf_dir):
     rewrite.  Round-trips a projection of lineitem through CSV with an
     explicit schema, re-lays it out as Parquet, and aggregates the
     result — matching the oracle on the source proves the transform is
-    lossless.
-
-    Scratch location: $SPARK_GRAFT_SCRATCH if set, else a local temp
-    dir.  On a real cluster the scratch URI MUST be shared storage
-    (s3://..., hdfs://...) — executors and driver do not share /tmp;
-    local mode only needs the default."""
-    tmp = tempfile.mkdtemp(prefix="skyhook_transform_", dir=_scratch_dir())
-    try:
+    lossless.  Scratch: see ``_util.scratch``."""
+    with scratch("skyhook_transform_") as tmp:
         src = Catalog(spark, sf_dir).lineitem.select(*_TRANSFORM_COLS)
         csv_path, pq_path = f"{tmp}/row_format_csv", f"{tmp}/col_format_parquet"
         src.write.mode("overwrite").option("header", True).csv(csv_path)
@@ -101,10 +80,7 @@ def q_transform_format(spark, sf_dir):
             )
         )
         # Materialize before the temp dir can be cleaned up.
-        out = local_df(spark, out.collect(), out.schema)
-        return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(out)
 
 
 @query(
@@ -121,8 +97,7 @@ def q_transform_json(spark, sf_dir):
     schema through sources/formats.py, aggregate — matching the oracle
     on the source proves losslessness, including the nested props
     payload."""
-    tmp = tempfile.mkdtemp(prefix="skyhook_transform_json_", dir=_scratch_dir())
-    try:
+    with scratch("skyhook_transform_json_") as tmp:
         from skyhookdb_ceph_spark.sources.formats import read_table
 
         src = Catalog(spark, sf_dir).events.select("event_id", "event_type", "props")
@@ -144,9 +119,7 @@ def q_transform_json(spark, sf_dir):
                 .alias("sum_k"),
             )
         )
-        return local_df(spark, out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(out)
 
 
 @query(
@@ -229,8 +202,7 @@ def q_transform_orc(spark, sf_dir):
     SFT_* read paths]): project orders to ORC, re-ingest with an
     explicit schema through sources/formats.py, aggregate; matching
     the oracle on the source proves losslessness."""
-    tmp = tempfile.mkdtemp(prefix="skyhook_transform_orc_", dir=_scratch_dir())
-    try:
+    with scratch("skyhook_transform_orc_") as tmp:
         from skyhookdb_ceph_spark.sources.formats import read_table
 
         src = Catalog(spark, sf_dir).orders.select(
@@ -254,6 +226,4 @@ def q_transform_orc(spark, sf_dir):
                 ),
             )
         )
-        return local_df(spark, out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(out)

@@ -17,7 +17,6 @@ once the watermark passes — none of it accumulates unboundedly.
 from __future__ import annotations
 
 import shutil
-import tempfile
 from typing import Any, Iterator, Tuple
 
 import pandas as pd
@@ -25,7 +24,12 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from skyhookdb_ceph_spark.queries._util import Catalog, local_df
+from skyhookdb_ceph_spark.queries._util import (
+    Catalog,
+    collect_local,
+    scoped_conf,
+    scratch,
+)
 from skyhookdb_ceph_spark.registry import query
 from skyhookdb_ceph_spark.streaming.replay import drain_to_memory, events_stream
 
@@ -159,10 +163,7 @@ def q_stream_dedup(spark, sf_dir):
     dropDuplicatesWithinWatermark(event_id) must collapse the two
     copies back to the unique event set.  State is keyed by event_id
     and evicted once the watermark passes — bounded memory at scale."""
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
-
-    tmp = tempfile.mkdtemp(prefix="skyhook_stream_dedup_", dir=_scratch_dir())
-    try:
+    with scratch("skyhook_stream_dedup_") as tmp:
         # Replay the fixture TWICE via file-level copies — byte copies
         # cost milliseconds where the previous unionAll + parquet
         # rewrite paid a full Spark write job before the stream even
@@ -178,8 +179,6 @@ def q_stream_dedup(spark, sf_dir):
         # The memory sink buffers results driver-side; the scratch
         # source dir can be removed as soon as the drain finishes.
         return drain_to_memory(deduped, output_mode="append")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @query(
@@ -493,12 +492,8 @@ def q_stream_session_live(spark, sf_dir):
         F.sum("n_ev").alias("n_events"),
     )
     conf_key = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-    prev = spark.conf.get(conf_key, "true")
-    spark.conf.set(conf_key, "false")
-    try:
+    with scoped_conf(spark, {conf_key: "false"}):
         return drain_to_memory(per_user, output_mode="complete")
-    finally:
-        spark.conf.set(conf_key, prev)
 
 
 _FOREACH_BATCH_ORACLE = """
@@ -529,54 +524,51 @@ def q_stream_foreach_batch(spark, sf_dir):
     version; at 100 TB the merge is a keyed join of two aggregates,
     shuffling only group rows, and the stream stage is a pure
     per-batch aggregate."""
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
+    with scratch("skyhook_feb_") as tmp:
+        versions: list[int] = []
 
-    tmp = tempfile.mkdtemp(prefix="skyhook_feb_", dir=_scratch_dir())
-    versions: list[int] = []
-
-    def merge_batch(bdf, batch_id):
-        part = bdf.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.floor(F.col("value") * 100).cast("bigint")).alias(
-                "sum_cents"
-            ),
-        )
-        s = bdf.sparkSession
-        # Idempotence under retry: a re-invoked batch N must merge on
-        # top of the latest version STRICTLY BELOW N — keying off
-        # versions[-1] would self-merge (double count) or read the
-        # directory it is about to overwrite.
-        prior = [v for v in versions if v < batch_id]
-        if prior:
-            prev = s.read.parquet(f"{tmp}/v{max(prior)}")
-            merged = (
-                prev.withColumnsRenamed(
-                    {"n_events": "p_n", "sum_cents": "p_c"}
-                )
-                .join(
-                    part.withColumnsRenamed({"event_type": "b_type"}),
-                    F.col("event_type") == F.col("b_type"),
-                    "full_outer",
-                )
-                .select(
-                    F.coalesce("event_type", "b_type").alias("event_type"),
-                    (
-                        F.coalesce("p_n", F.lit(0))
-                        + F.coalesce("n_events", F.lit(0))
-                    ).alias("n_events"),
-                    (
-                        F.coalesce("p_c", F.lit(0))
-                        + F.coalesce("sum_cents", F.lit(0))
-                    ).alias("sum_cents"),
-                )
+        def merge_batch(bdf, batch_id):
+            part = bdf.groupBy("event_type").agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum(F.floor(F.col("value") * 100).cast("bigint")).alias(
+                    "sum_cents"
+                ),
             )
-        else:
-            merged = part
-        merged.write.mode("overwrite").parquet(f"{tmp}/v{batch_id}")
-        if batch_id not in versions:
-            versions.append(batch_id)
+            s = bdf.sparkSession
+            # Idempotence under retry: a re-invoked batch N must merge on
+            # top of the latest version STRICTLY BELOW N — keying off
+            # versions[-1] would self-merge (double count) or read the
+            # directory it is about to overwrite.
+            prior = [v for v in versions if v < batch_id]
+            if prior:
+                prev = s.read.parquet(f"{tmp}/v{max(prior)}")
+                merged = (
+                    prev.withColumnsRenamed(
+                        {"n_events": "p_n", "sum_cents": "p_c"}
+                    )
+                    .join(
+                        part.withColumnsRenamed({"event_type": "b_type"}),
+                        F.col("event_type") == F.col("b_type"),
+                        "full_outer",
+                    )
+                    .select(
+                        F.coalesce("event_type", "b_type").alias("event_type"),
+                        (
+                            F.coalesce("p_n", F.lit(0))
+                            + F.coalesce("n_events", F.lit(0))
+                        ).alias("n_events"),
+                        (
+                            F.coalesce("p_c", F.lit(0))
+                            + F.coalesce("sum_cents", F.lit(0))
+                        ).alias("sum_cents"),
+                    )
+                )
+            else:
+                merged = part
+            merged.write.mode("overwrite").parquet(f"{tmp}/v{batch_id}")
+            if batch_id not in versions:
+                versions.append(batch_id)
 
-    try:
         q = (
             events_stream(spark, sf_dir)
             .select("event_type", "value")
@@ -596,9 +588,7 @@ def q_stream_foreach_batch(spark, sf_dir):
             .orderBy("event_type")
         )
         # Materialize before the scratch dir is removed.
-        return local_df(spark, out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return collect_local(out)
 
 
 # ---------------------------------------------------------------------------
@@ -1197,53 +1187,50 @@ def _dedup_lsh_pipeline(spark, sf_dir, n_files=1, options=None):
         StorageLevel.MEMORY_AND_DISK
     )
 
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
-
-    tmp = tempfile.mkdtemp(prefix="skyhook_stream_lsh_", dir=_scratch_dir())
-    try:
-        delta = docs.filter("doc_id % 2 = 1").repartition(n_files)
-        delta.write.mode("overwrite").parquet(os.path.join(tmp, "delta"))
-        reader = spark.readStream.schema(delta.schema)
-        for k, v in (options or {}).items():
-            reader = reader.option(k, v)
-        stream = reader.parquet(os.path.join(tmp, "delta")).filter(
-            "text IS NOT NULL"
-        )
-        ssh = stream.selectExpr(
-            "doc_id AS da",
-            minhash.shingle_expr("text") + " AS sx",
-        ).selectExpr("da", "sx", "transform(sx, s -> md5(s)) AS hs")
-        band_cols = [
-            "concat("
-            + ", ".join(
-                "array_min(transform(hs, h -> "
-                f"substring(concat(h, h), {b * minhash.N_ROWS + j + 1}, 8)))"
-                for j in range(minhash.N_ROWS)
+    with scratch("skyhook_stream_lsh_") as tmp:
+        try:
+            delta = docs.filter("doc_id % 2 = 1").repartition(n_files)
+            delta.write.mode("overwrite").parquet(os.path.join(tmp, "delta"))
+            reader = spark.readStream.schema(delta.schema)
+            for k, v in (options or {}).items():
+                reader = reader.option(k, v)
+            stream = reader.parquet(os.path.join(tmp, "delta")).filter(
+                "text IS NOT NULL"
             )
-            + f") AS b{b}"
-            for b in range(minhash.N_BANDS)
-        ]
-        stack = ", ".join(f"{b}, b{b}" for b in range(minhash.N_BANDS))
-        sig_s = ssh.selectExpr("da", "sx", *band_cols).selectExpr(
-            "da",
-            "sx",
-            f"stack({minhash.N_BANDS}, {stack}) AS (b, bsig)",
-        ).selectExpr("da", "sx", "CAST(b AS BIGINT) AS b", "bsig")
-        cand = sig_s.join(base_sig, ["b", "bsig"])
-        ver = cand.join(base_y, "db").selectExpr(
-            "da",
-            "db",
-            "b",
-            "floor((cast(size(array_intersect(sx, sy)) AS double)"
-            " / size(array_distinct(concat(sx, sy)))) * 1000000 + 0.5)"
-            " / 1000000 AS jac",
-        ).filter("jac >= 0.8")
-        return drain_to_memory(ver, output_mode="append")
-    finally:
-        base_sig.unpersist()
-        base_y.unpersist()
-        base_sh.unpersist()
-        shutil.rmtree(tmp, ignore_errors=True)
+            ssh = stream.selectExpr(
+                "doc_id AS da",
+                minhash.shingle_expr("text") + " AS sx",
+            ).selectExpr("da", "sx", "transform(sx, s -> md5(s)) AS hs")
+            band_cols = [
+                "concat("
+                + ", ".join(
+                    "array_min(transform(hs, h -> "
+                    f"substring(concat(h, h), {b * minhash.N_ROWS + j + 1}, 8)))"
+                    for j in range(minhash.N_ROWS)
+                )
+                + f") AS b{b}"
+                for b in range(minhash.N_BANDS)
+            ]
+            stack = ", ".join(f"{b}, b{b}" for b in range(minhash.N_BANDS))
+            sig_s = ssh.selectExpr("da", "sx", *band_cols).selectExpr(
+                "da",
+                "sx",
+                f"stack({minhash.N_BANDS}, {stack}) AS (b, bsig)",
+            ).selectExpr("da", "sx", "CAST(b AS BIGINT) AS b", "bsig")
+            cand = sig_s.join(base_sig, ["b", "bsig"])
+            ver = cand.join(base_y, "db").selectExpr(
+                "da",
+                "db",
+                "b",
+                "floor((cast(size(array_intersect(sx, sy)) AS double)"
+                " / size(array_distinct(concat(sx, sy)))) * 1000000 + 0.5)"
+                " / 1000000 AS jac",
+            ).filter("jac >= 0.8")
+            return drain_to_memory(ver, output_mode="append")
+        finally:
+            base_sig.unpersist()
+            base_y.unpersist()
+            base_sh.unpersist()
 
 
 # ---------------------------------------------------------------------------

@@ -94,11 +94,9 @@ def get_spark(
         .config("spark.sql.cbo.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # catalog tables (bucketed joins) go to scratch, not the repo cwd;
-        # prefer tmpfs locally (same rule as queries/scans._scratch_dir:
-        # bucketed-table round-trips shouldn't pay disk IO on a test
-        # box).  A real cluster MUST set SPARK_GRAFT_WAREHOUSE to
-        # shared storage — executors don't share local /dev/shm.
+        # catalog tables (bucketed joins) go to scratch, not the repo cwd:
+        # tmpfs locally, same rule as queries/_util.scratch.  A real
+        # cluster MUST set SPARK_GRAFT_WAREHOUSE to shared storage.
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get(

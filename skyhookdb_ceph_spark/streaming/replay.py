@@ -10,12 +10,17 @@ event time.  Locally we drain everything in one AvailableNow pass.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
+
+from skyhookdb_ceph_spark.queries._util import _tmpfs, scoped_conf, scratch
 
 def _events_ts_is_nanos(sf_dir: str, glob: str) -> bool:
     """True iff the events fixture stores ts as TIMESTAMP(NANOS) (which
@@ -93,85 +98,84 @@ def events_stream(
     return raw
 
 
-# see the hook in drain_to_memory — None means capture off
+# see the hook in _drain — None means capture off
 PROGRESS_CAPTURE: list | None = None
 
 
-def drain_to_memory(
-    stream_df: DataFrame,
-    output_mode: str = "complete",
-    state_partitions: int | None = None,
-    needs_watermark_batch: bool = False,
-) -> DataFrame:
-    """Run a streaming DataFrame to completion (AvailableNow) into a
-    uniquely-named memory sink; returns the sink table as a DataFrame.
+@contextlib.contextmanager
+def _checkpoint(name: str):
+    """Checkpoint dir for one drain, removed when the drain ends.
+
+    Checkpoint IO (offset log, commit log, state snapshots) pays on
+    every micro-batch commit, so it goes to $SPARK_GRAFT_STREAM_CKPT
+    if set, else a RAM-backed tmpfs base (a real deployment points the
+    env var at fast shared storage), else a ``scratch()`` dir."""
+    base = os.environ.get("SPARK_GRAFT_STREAM_CKPT")
+    if base is None and (tmpfs := _tmpfs()):
+        base = f"{tmpfs}/skyhook_stream_ckpt"
+    if base is None:
+        with scratch("skyhook_stream_ckpt_") as ckpt:
+            yield ckpt
+        return
+    ckpt = f"{base}/{name}"
+    try:
+        yield ckpt
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def _drain(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    name: str,
+    state_partitions: int | None,
+    needs_watermark_batch: bool,
+) -> None:
+    """Run `writer` to completion (AvailableNow) under the drain confs.
 
     AvailableNow processes all currently-available input then stops —
     the deterministic batch-equivalent drain, same code path a live
-    trigger would use.
-    """
-    name = f"sink_{uuid.uuid4().hex[:12]}"
-    spark = stream_df.sparkSession
-    # Checkpoint IO (offset log, commit log, state snapshots) lands on
-    # java.io.tmpdir by default — a disk.  A RAM-backed scratch dir
-    # (tmpfs) removes that IO from every micro-batch commit; a real
-    # deployment would point this at fast shared storage instead.
-    ckpt_base = os.environ.get("SPARK_GRAFT_STREAM_CKPT")
-    if ckpt_base is None and os.path.isdir("/dev/shm"):
-        ckpt_base = "/dev/shm/skyhook_stream_ckpt"
-    ckpt = f"{ckpt_base}/{name}" if ckpt_base else None
-    # Stateful operators allocate one state store per shuffle partition
-    # and pay a per-store commit each micro-batch; size the count to the
-    # deployment (cluster: >= executor cores).  Local fixtures: 2 —
-    # measured best for JVM-side state (8 doubles commit overhead) —
-    # except applyInPandasWithState, whose per-group Python work wants
-    # more parallel workers (q_stream_stateful passes
-    # state_partitions=16, measured 2.26 s -> 1.63 s at sf0.1).
-    stream_parts = os.environ.get(
-        "SPARK_GRAFT_STREAM_SHUFFLE",
-        str(state_partitions) if state_partitions else "2",
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", stream_parts)
-    # A finite AvailableNow drain never restarts from an old offset, so
-    # retaining the default 100 checkpoint batches is pure commit IO;
-    # 1 is the measured (small) win.  Real deployments that resume
-    # from checkpoints should keep the default — and so must the REST
-    # of this session: this conf used to leak (no restore), which made
-    # every later checkpoint in the session retain a single batch file
-    # and broke q_stream_backpressure's commits-log evidence under the
-    # full test sweep (r7).
-    prev_retain = spark.conf.get(
-        "spark.sql.streaming.minBatchesToRetain", "100"
-    )
-    spark.conf.set("spark.sql.streaming.minBatchesToRetain", "1")
-    # After the data batch, Spark schedules one extra NO-DATA micro-batch
-    # purely to advance the watermark and evict state (measured 0.5-1.2 s
-    # of commit + eviction work per drain).  Every sink here emits its
-    # rows in the data batch itself (complete / update / append modes
-    # that emit on arrival: dedup, inner join, stateful update), so the
-    # eviction batch buys nothing for a finite drain.  An append-mode
-    # *windowed aggregation* (emission gated on watermark passage)
-    # MUST pass needs_watermark_batch=True or its closed windows are
-    # silently never emitted — the flag exists so that failure mode is
-    # an explicit per-call decision, not a buried global.
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    spark.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled",
-        "true" if needs_watermark_batch else "false",
-    )
-    try:
-        writer = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
+    trigger would use."""
+    confs = {
+        # Stateful operators allocate one state store per shuffle
+        # partition and pay a per-store commit each micro-batch; size
+        # the count to the deployment (cluster: >= executor cores).
+        # Local fixtures: 2 — measured best for JVM-side state (8
+        # doubles commit overhead) — except applyInPandasWithState,
+        # whose per-group Python work wants more parallel workers
+        # (q_stream_stateful passes state_partitions=16, measured
+        # 2.26 s -> 1.63 s at sf0.1).
+        "spark.sql.shuffle.partitions": str(state_partitions or 2),
+        # A finite AvailableNow drain never restarts from an old
+        # offset, so retaining the default 100 checkpoint batches is
+        # pure commit IO; 1 is the measured (small) win.  Real
+        # deployments that resume from checkpoints keep the default —
+        # and so must the REST of this session: this conf once leaked
+        # (no restore), which made every later checkpoint in the
+        # session retain a single batch file and broke
+        # q_stream_backpressure's commits-log evidence (r7).
+        "spark.sql.streaming.minBatchesToRetain": "1",
+        # After the data batch, Spark schedules one extra NO-DATA
+        # micro-batch purely to advance the watermark and evict state
+        # (measured 0.5-1.2 s of commit + eviction work per drain).
+        # Every sink here emits its rows in the data batch itself
+        # (complete / update / append modes that emit on arrival:
+        # dedup, inner join, stateful update), so the eviction batch
+        # buys nothing for a finite drain.  An append-mode *windowed
+        # aggregation* (emission gated on watermark passage) MUST pass
+        # needs_watermark_batch=True or its closed windows are
+        # silently never emitted — the flag exists so that failure
+        # mode is an explicit per-call decision, not a buried global.
+        "spark.sql.streaming.noDataMicroBatches.enabled": (
+            "true" if needs_watermark_batch else "false"
+        ),
+    }
+    with _checkpoint(name) as ckpt, scoped_conf(spark, confs):
+        q = (
+            writer.option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
+            .start()
         )
-        if ckpt:
-            writer = writer.option("checkpointLocation", ckpt)
-        q = writer.start()
         q.awaitTermination()
         # instrumentation hook (tools/scale_smoke.py --stream): when a
         # caller sets PROGRESS_CAPTURE to a list, every drain appends
@@ -183,16 +187,28 @@ def drain_to_memory(
             PROGRESS_CAPTURE.append(
                 {"sink": name, "progress": list(q.recentProgress)}
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
-        spark.conf.set("spark.sql.streaming.minBatchesToRetain", prev_retain)
-        if ckpt:
-            import shutil
 
-            shutil.rmtree(ckpt, ignore_errors=True)
+
+def drain_to_memory(
+    stream_df: DataFrame,
+    output_mode: str = "complete",
+    state_partitions: int | None = None,
+    needs_watermark_batch: bool = False,
+) -> DataFrame:
+    """Drain a streaming DataFrame into a uniquely-named memory sink;
+    returns the sink table as a DataFrame.  An append-mode windowed
+    aggregation MUST pass needs_watermark_batch=True (see _drain)."""
+    name = f"sink_{uuid.uuid4().hex[:12]}"
+    spark = stream_df.sparkSession
+    _drain(
+        spark,
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode),
+        name,
+        state_partitions,
+        needs_watermark_batch,
+    )
     return spark.table(name)
 
 
@@ -203,8 +219,8 @@ def drain_to_files(
     state_partitions: int | None = None,
 ) -> DataFrame:
     """Drain a streaming DataFrame through Spark's transactional FILE
-    sink (parquet + `_spark_metadata` commit log) with
-    Trigger.AvailableNow, then read the committed files back.
+    sink (parquet + `_spark_metadata` commit log), then read the
+    committed files back.
 
     This is the exactly-once persistence path: the metadata log lists
     exactly the files of committed batches, so a batch read of the
@@ -214,51 +230,15 @@ def drain_to_files(
     passes a window; such callers MUST pass needs_watermark_batch=True
     (same contract as drain_to_memory) or closed windows never flush.
     """
-    import shutil as _shutil
-
-    name = f"filesink_{uuid.uuid4().hex[:12]}"
     spark = stream_df.sparkSession
-    ckpt_base = os.environ.get("SPARK_GRAFT_STREAM_CKPT")
-    if ckpt_base is None and os.path.isdir("/dev/shm"):
-        ckpt_base = "/dev/shm/skyhook_stream_ckpt"
-    if ckpt_base is None:
-        import tempfile as _tempfile
-
-        ckpt_base = _tempfile.mkdtemp(prefix="skyhook_stream_ckpt_")
-    ckpt = f"{ckpt_base}/{name}"  # file sink REQUIRES a checkpoint
-    stream_parts = os.environ.get(
-        "SPARK_GRAFT_STREAM_SHUFFLE",
-        str(state_partitions) if state_partitions else "2",
+    _drain(
+        spark,
+        stream_df.writeStream.format("parquet")
+        .option("path", out_dir)
+        .outputMode("append"),
+        f"filesink_{uuid.uuid4().hex[:12]}",
+        state_partitions,
+        needs_watermark_batch,
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", stream_parts)
-    prev_retain = spark.conf.get(
-        "spark.sql.streaming.minBatchesToRetain", "100"
-    )
-    spark.conf.set("spark.sql.streaming.minBatchesToRetain", "1")
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    spark.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled",
-        "true" if needs_watermark_batch else "false",
-    )
-    try:
-        q = (
-            stream_df.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
-        spark.conf.set("spark.sql.streaming.minBatchesToRetain", prev_retain)
-        _shutil.rmtree(ckpt, ignore_errors=True)
     # Batch read honors _spark_metadata: only committed files are seen.
     return spark.read.parquet(out_dir)

@@ -81,3 +81,32 @@ def _no_session_conf_leaks():
     after = snap()
     leaked = {k: (before[k], after[k]) for k in before if before[k] != after[k]}
     assert not leaked, f"session conf leaked (before, after): {leaked}"
+
+
+@pytest.fixture(autouse=True)
+def _no_scratch_leaks():
+    """Fail the test that leaves a new skyhook_* entry in the scratch
+    dir (queries/_util.scratch).  Allowed by name: the process-lived
+    q_schema_evolve output, the warehouse and the checkpoint base."""
+    import os
+    import tempfile
+
+    from skyhookdb_ceph_spark.queries._util import _scratch_dir
+
+    root = _scratch_dir() or tempfile.gettempdir()
+    allowed = {
+        f"skyhook_evolve_out_{os.getpid()}",
+        "skyhook_warehouse",
+        "skyhook_stream_ckpt",
+    }
+
+    def snap():
+        try:
+            return {e for e in os.listdir(root) if e.startswith("skyhook_")}
+        except OSError:
+            return set()
+
+    before = snap()
+    yield
+    leaked = sorted(snap() - before - allowed)
+    assert not leaked, f"scratch entries leaked into {root}: {leaked}"

@@ -184,16 +184,15 @@ def test_ivf_incremental_append_never_rewrites(spark):
     every cell's assignment matches direct computation."""
     from pyspark.sql import functions as F
 
+    from skyhookdb_ceph_spark.queries._util import scratch
     from skyhookdb_ceph_spark.queries.pipeline11 import (
         _ivf_incremental_layout,
     )
 
-    import shutil
-
-    layout, nb, tmp = _ivf_incremental_layout(
-        spark, "/root/testdata/sf0.001"
-    )
-    try:
+    with scratch("skyhook_ivfinc_") as tmp:
+        layout, nb = _ivf_incremental_layout(
+            spark, "/root/testdata/sf0.001", tmp
+        )
         files = (
             layout.select(
                 F.input_file_name().alias("f"), "is_delta"
@@ -209,5 +208,3 @@ def test_ivf_incremental_append_never_rewrites(spark):
         # no file mixes cohorts: append-only, base files untouched
         assert all(r["hi"] == r["lo"] for r in files)
         assert {r["hi"] for r in files} == {0, 1}
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)

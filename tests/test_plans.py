@@ -457,7 +457,7 @@ def test_partition_prune_uses_partition_filters(spark):
     from pyspark.sql import functions as F
 
     from skyhookdb_ceph_spark.queries._util import Catalog
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
+    from skyhookdb_ceph_spark.queries._util import _scratch_dir
 
     tmp = tempfile.mkdtemp(prefix="skyhook_pp_test_", dir=_scratch_dir())
     try:
@@ -527,7 +527,7 @@ def test_dpp_inserts_dynamic_pruning(spark):
     from pyspark.sql import functions as F
 
     from skyhookdb_ceph_spark.queries._util import Catalog
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
+    from skyhookdb_ceph_spark.queries._util import _scratch_dir
 
     ev = Catalog(spark, SF).events
     tmp = tempfile.mkdtemp(prefix="skyhook_dpp_test_", dir=_scratch_dir())

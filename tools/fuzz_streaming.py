@@ -165,7 +165,7 @@ def _split_dir(sf_dir: str, n_files: int) -> str:
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        from skyhookdb_ceph_spark.queries.scans import _scratch_dir
+        from skyhookdb_ceph_spark.queries._util import _scratch_dir
 
         out = tempfile.mkdtemp(prefix="fuzzv4_split_", dir=_scratch_dir())
         t = pq.read_table(f"{sf_dir}/events.parquet")

@@ -216,7 +216,7 @@ _ALL_SCRATCH: list[str] = []
 
 
 def _scratch_mkdtemp(prefix: str) -> str:
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
+    from skyhookdb_ceph_spark.queries._util import _scratch_dir
 
     d = tempfile.mkdtemp(prefix=prefix, dir=_scratch_dir())
     _ALL_SCRATCH.append(d)
@@ -240,7 +240,6 @@ def _drop_cached_scratch() -> None:
 
 def _sig_index_dir(spark, sf_dir: str) -> str:
     from skyhookdb_ceph_spark.queries.pipeline16 import build_sig_index
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
 
     if sf_dir not in _SIG_INDEX_CACHE:
         tmp = _scratch_mkdtemp("ssmoke_sigidx_")
@@ -251,7 +250,6 @@ def _sig_index_dir(spark, sf_dir: str) -> str:
 
 def _text_index_dir(spark, sf_dir: str) -> str:
     from skyhookdb_ceph_spark.queries.pipeline17 import build_text_index
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
 
     if sf_dir not in _TEXT_INDEX_CACHE:
         tmp = _scratch_mkdtemp("ssmoke_txtidx_")
@@ -265,7 +263,6 @@ def sig_build(spark, sf_dir):
     to a fresh dir, return the 64-row params table as the
     materialization handle (the data work is the sigs write)."""
     from skyhookdb_ceph_spark.queries.pipeline16 import build_sig_index
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
 
     tmp = _scratch_mkdtemp("ssmoke_sigbuild_")
     build_sig_index(spark, sf_dir, tmp)
@@ -320,7 +317,6 @@ def text_build(spark, sf_dir):
     """Inverted-index BUILD cost alone (tokenize + postings shuffle +
     partitioned write to a fresh dir)."""
     from skyhookdb_ceph_spark.queries.pipeline17 import build_text_index
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
 
     tmp = _scratch_mkdtemp("ssmoke_txtbuild_")
     build_text_index(spark, sf_dir, tmp)
@@ -353,7 +349,6 @@ def _frag_text_dir(spark, sf_dir: str) -> str:
         _with_tok0,
         append_text_index,
     )
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
     from pyspark.sql import functions as F
 
     if sf_dir not in _FRAG_TEXT_CACHE:
@@ -505,8 +500,6 @@ def split_events(sf_dir: str, n_files: int = N_FILES) -> str:
 
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
-
-    from skyhookdb_ceph_spark.queries.scans import _scratch_dir
 
     out = _scratch_mkdtemp("ssmoke_split_")
     t = pq.read_table(f"{sf_dir}/events.parquet")
