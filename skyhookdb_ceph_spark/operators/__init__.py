@@ -9,13 +9,21 @@ operations — no driver-side loops, no row-at-a-time Python UDFs:
 - text_index.py — inverted text index (reference IDX_TXT analog)
 - asof.py       — as-of (nearest-timestamp) join
 - range_join.py — bucketed band/theta join (no nested-loop)
-- multimodal.py — opaque-binary columns + Arrow-batched decode plumbing
+- multimodal.py — opaque-binary columns + real WAV / PPM codecs
 - layout.py     — partitioned/sorted Parquet writer (IDX_REC analog)
+
+Shared helpers here: `ensure_parallelism` (widen a narrow input before
+per-row work), `map_rows` (the one Arrow-batched Python row map every
+multimodal codec and payload synth runs through) and
+`guard_global_window`.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 
 def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
@@ -32,6 +40,38 @@ def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def map_rows(
+    df: DataFrame,
+    cols: list[str],
+    fn: Callable[..., list[dict]],
+    schema: T.StructType,
+) -> DataFrame:
+    """Run `fn` over every row of `df[cols]` as ONE Arrow-batched
+    `mapInPandas` stage.
+
+    `fn` gets the row's values in `cols` order and returns a list of
+    output rows (dicts keyed by `schema` field names), so 1:1 codecs and
+    1:N splitters (frames, windows) share the shape.  Python touches
+    each record batch once; map parallelism = partition count and
+    nothing shuffles.  An exception from `fn` fails the task: a
+    malformed payload is never silently dropped.
+    """
+    names = schema.fieldNames()
+
+    def process(batches: Iterator) -> Iterator:
+        import pandas as pd
+
+        for pdf in batches:
+            rows = [
+                out
+                for values in zip(*(pdf[c] for c in cols))
+                for out in fn(*values)
+            ]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.select(*cols).mapInPandas(process, schema)
 
 
 class GlobalWindowScaleError(RuntimeError):

@@ -2,96 +2,42 @@
 
 Model: media travel as opaque `binary` columns with typed metadata
 columns beside them — the same schema-explicit flat model the reference
-uses for scalars, extended with BinaryType.  Decode / feature-extract /
-resize / frame-sample run as Arrow-batched `mapInPandas` stages so each
-task processes whole record batches (the 100 TB path: partition count =
-file-split count, Python touched once per batch, never per row).
+uses for scalars, extended with BinaryType.  Decode / resize / hash /
+frame-sample / windowing run as Arrow-batched `mapInPandas` stages so
+each task processes whole record batches (the 100 TB path: partition
+count = file-split count, Python touched once per batch, never per row).
 
-Codec status: TWO real codecs, no external library.  WAV (RIFF/PCM)
-audio: `wav_bytes` / `parse_wav` / `decode_wav` (chunk walk + int16
-PCM sample decode, numpy-vectorized).  PPM (P6) image: `ppm_bytes` /
-`parse_ppm` / `decode_ppm` (comment-tolerant header tokenizer + uint8
-raster decode with exact length check).  Compressed codecs
-(JPEG/PNG/H.264) remain STUBBED: `decode_stub=True` (default) derives
-deterministic fake features from the bytes so the Spark-side plumbing
-— schema, batch iteration, partitioning — is real and testable;
-`decode_stub=False` raises NotImplementedError where a real
-`PIL.Image.open` / `av.open` call belongs.
+Codec status: every stage is a per-row function that
+`operators.map_rows` runs over Arrow batches; there is no stub path.
+TWO real codecs, no external library.  WAV (RIFF/PCM) audio:
+`wav_bytes` / `parse_wav` / `decode_wav` (bounds-checked chunk walk +
+int16 PCM sample decode, numpy-vectorized).  PPM (P6) image:
+`ppm_bytes` / `ppm_raster` / `parse_ppm` / `decode_ppm` /
+`resize_ppm` / `ahash_ppm` (comment-tolerant digits-only header
+tokenizer + uint8 raster decode with exact length check).  Both
+parsers raise ValueError on malformed input, which fails the Spark
+task.  Compressed codecs (JPEG/PNG/H.264) need a codec library the
+package does not depend on; one would plug in as another row function.
 """
 
 from __future__ import annotations
 
-import hashlib
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-# Output schema of the feature-extraction stage.
-FEATURE_SCHEMA = T.StructType(
+from skyhookdb_ceph_spark.operators import map_rows
+
+# The (media_id, payload) shape every codec stage reads by default and
+# every query-side payload synth emits.
+MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
-        T.StructField("n_bytes", T.IntegerType()),
-        T.StructField("fingerprint", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("feature", T.ArrayType(T.FloatType())),
+        T.StructField("payload", T.BinaryType()),
     ]
 )
-
-
-def _fake_decode(payload: bytes) -> tuple[int, int, list[float]]:
-    """Deterministic stand-in for a real image decode: pseudo dimensions
-    and an 8-dim feature derived from the payload digest."""
-    digest = hashlib.sha256(payload).digest()
-    width = 64 + digest[0]
-    height = 64 + digest[1]
-    feature = [b / 255.0 for b in digest[2:10]]
-    return width, height, feature
-
-
-def extract_features(
-    media: DataFrame,
-    id_col: str = "media_id",
-    bytes_col: str = "payload",
-    decode_stub: bool = True,
-) -> DataFrame:
-    """Arrow-batched feature extraction over a binary column.
-
-    Real deployment: replace _fake_decode with the codec call; the
-    mapInPandas contract (Iterator[pd.DataFrame] -> Iterator[pd.DataFrame])
-    and FEATURE_SCHEMA stay identical.
-    """
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[bytes_col]):
-                data = bytes(payload)
-                if not decode_stub:
-                    raise NotImplementedError(
-                        "real media decode requires an image/audio codec "
-                        "library not present in this environment"
-                    )
-                width, height, feature = _fake_decode(data)
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "n_bytes": len(data),
-                        "fingerprint": hashlib.md5(data).hexdigest(),
-                        "width": width,
-                        "height": height,
-                        "feature": feature,
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FEATURE_SCHEMA.fields]
-            )
-
-    return media.select(id_col, bytes_col).mapInPandas(process, FEATURE_SCHEMA)
 
 
 def frame_sample(
@@ -101,9 +47,11 @@ def frame_sample(
     bytes_col: str = "payload",
 ) -> DataFrame:
     """Deterministic frame-sampling shape: split a binary payload into
-    fixed-size pseudo-frames and keep every n-th — the mapInPandas batch
-    pattern a real video sampler would use (one output row per kept
+    fixed-size pseudo-frames and keep every n-th — the 1:N row-map
+    shape a real video sampler would use (one output row per kept
     frame)."""
+    if every_n < 1:
+        raise ValueError(f"every_n must be >= 1, got {every_n}")
     schema = T.StructType(
         [
             T.StructField("media_id", T.LongType()),
@@ -113,23 +61,18 @@ def frame_sample(
     )
     frame_bytes = 256
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[bytes_col]):
-                data = bytes(payload)
-                frames = [
-                    data[i : i + frame_bytes]
-                    for i in range(0, len(data), frame_bytes)
-                ]
-                for no, fr in enumerate(frames):
-                    if no % every_n == 0:
-                        rows.append(
-                            {"media_id": int(mid), "frame_no": no, "frame": fr}
-                        )
-            yield pd.DataFrame(rows, columns=["media_id", "frame_no", "frame"])
+    def frames(mid, payload):
+        data = bytes(payload)
+        return [
+            {
+                "media_id": int(mid),
+                "frame_no": i // frame_bytes,
+                "frame": data[i : i + frame_bytes],
+            }
+            for i in range(0, len(data), frame_bytes * every_n)
+        ]
 
-    return media.select(id_col, bytes_col).mapInPandas(process, schema)
+    return map_rows(media, [id_col, bytes_col], frames, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -177,7 +120,9 @@ def parse_wav(data: bytes) -> dict:
     """REAL RIFF/PCM parse: chunk walk (arbitrary chunk order, unknown
     chunks skipped, odd-size pad bytes honored), fmt fields unpacked,
     int16 samples decoded via numpy.  Raises ValueError on malformed
-    input — no silent fallback."""
+    input — no silent fallback: a chunk running past the end of the
+    payload, a fmt chunk under 16 bytes, zero channels or sample rate,
+    and PCM that is not whole frames are all rejected."""
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
     fmt = None
@@ -186,8 +131,15 @@ def parse_wav(data: bytes) -> dict:
     while off + 8 <= len(data):
         cid = data[off : off + 4]
         (csz,) = struct.unpack_from("<I", data, off + 4)
+        if off + 8 + csz > len(data):
+            raise ValueError(
+                f"WAV chunk {cid!r} declares {csz} bytes, "
+                f"{len(data) - off - 8} present"
+            )
         body = data[off + 8 : off + 8 + csz]
         if cid == b"fmt ":
+            if csz < 16:
+                raise ValueError(f"WAV fmt chunk is {csz} bytes, need 16")
             fmt = struct.unpack_from("<HHIIHH", body, 0)
         elif cid == b"data":
             pcm = body
@@ -197,6 +149,15 @@ def parse_wav(data: bytes) -> dict:
     audio_format, n_channels, sample_rate, _byte_rate, block_align, bits = fmt
     if audio_format != 1 or bits != 16:
         raise ValueError(f"unsupported WAV encoding {audio_format}/{bits}")
+    if n_channels == 0 or sample_rate == 0:
+        raise ValueError(
+            f"WAV fmt has {n_channels} channels at {sample_rate} Hz"
+        )
+    if block_align != n_channels * 2 or len(pcm) % block_align:
+        raise ValueError(
+            f"WAV PCM length {len(pcm)} is not whole {n_channels}-channel "
+            f"int16 frames (block_align {block_align})"
+        )
     samples = np.frombuffer(pcm, dtype="<i2")
     n_frames = len(samples) // n_channels
     return {
@@ -217,23 +178,13 @@ def decode_wav(
     """Arrow-batched REAL audio decode: parse every WAV payload and
     emit typed metadata + sample statistics.  This is the de-stubbed
     codec path (VERDICT r4 gap 2): actual bytes in, actual decoded
-    sample values out, NotImplementedError unreachable.  Same 100 TB
-    shape as the stubbed stages — pure map over Arrow batches, decode
-    parallelism = partition count, nothing shuffles."""
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[bytes_col]):
-                meta = parse_wav(bytes(payload))
-                meta["media_id"] = int(mid)
-                rows.append(meta)
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in WAV_META_SCHEMA.fields]
-            )
-
-    return media.select(id_col, bytes_col).mapInPandas(
-        process, WAV_META_SCHEMA
+    sample values out.  Pure map over Arrow batches (`map_rows`),
+    decode parallelism = partition count, nothing shuffles."""
+    return map_rows(
+        media,
+        [id_col, bytes_col],
+        lambda mid, p: [{"media_id": int(mid), **parse_wav(bytes(p))}],
+        WAV_META_SCHEMA,
     )
 
 
@@ -262,33 +213,25 @@ def sliding_windows(
         ]
     )
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[bytes_col]):
-                data = bytes(payload)
-                no = 0
-                for off in range(0, max(len(data), 1), hop_bytes):
-                    win = data[off : off + window_bytes]
-                    if not win:
-                        break
-                    if len(win) * 2 < window_bytes:
-                        break
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "win_no": no,
-                            "byte_offset": off,
-                            "win_len": len(win),
-                            "window": win,
-                        }
-                    )
-                    no += 1
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields]
+    def windows(mid, payload):
+        data = bytes(payload)
+        rows = []
+        for off in range(0, max(len(data), 1), hop_bytes):
+            win = data[off : off + window_bytes]
+            if not win or len(win) * 2 < window_bytes:
+                break
+            rows.append(
+                {
+                    "media_id": int(mid),
+                    "win_no": len(rows),
+                    "byte_offset": off,
+                    "win_len": len(win),
+                    "window": win,
+                }
             )
+        return rows
 
-    return media.select(id_col, bytes_col).mapInPandas(process, schema)
+    return map_rows(media, [id_col, bytes_col], windows, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -322,7 +265,8 @@ def ppm_raster(data: bytes) -> tuple[int, int, np.ndarray]:
     and resize_ppm (pixel math): magic check, whitespace/comment-
     tolerant header (PPM allows `#` comments anywhere in it), numpy
     uint8 raster with an exact length check.  Raises ValueError on
-    malformed input — no silent fallback."""
+    malformed input — no silent fallback: header tokens must be plain
+    ASCII digits (no sign) and width and height at least 1."""
     if data[:2] != b"P6":
         raise ValueError("not a P6 PPM payload")
     # Tokenize the header: 3 integers (w, h, maxval), skipping
@@ -345,10 +289,14 @@ def ppm_raster(data: bytes) -> tuple[int, int, np.ndarray]:
             j = i
             while j < len(data) and not data[j : j + 1].isspace():
                 j += 1
+            if not data[i:j].isdigit():  # ASCII digits only: no sign
+                raise ValueError(f"bad PPM header token {data[i:j]!r}")
             tokens.append(int(data[i:j]))
             i = j
     i += 1  # the single whitespace separating header from raster
     width, height, maxval = tokens
+    if width < 1 or height < 1:
+        raise ValueError(f"PPM dimensions {width}x{height} must be >= 1")
     if maxval != 255:
         raise ValueError(f"unsupported PPM maxval {maxval}")
     raster = np.frombuffer(data, dtype=np.uint8, offset=i)
@@ -390,21 +338,12 @@ def resize_ppm(
     any downstream exchange — the reason real pipelines resize as early
     as possible."""
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[bytes_col]):
-                w, h, raster = ppm_raster(bytes(payload))
-                img = raster.reshape(h, w, 3)
-                small = img[::factor, ::factor, :]
-                oh, ow = small.shape[0], small.shape[1]
-                rows.append(
-                    {
-                        id_col: int(mid),
-                        bytes_col: ppm_bytes(small.reshape(-1), ow, oh),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[id_col, bytes_col])
+    def resize(mid, payload):
+        w, h, raster = ppm_raster(bytes(payload))
+        small = raster.reshape(h, w, 3)[::factor, ::factor, :]
+        oh, ow = small.shape[0], small.shape[1]
+        out = ppm_bytes(small.reshape(-1), ow, oh)
+        return [{id_col: int(mid), bytes_col: out}]
 
     schema = T.StructType(
         [
@@ -412,7 +351,7 @@ def resize_ppm(
             T.StructField(bytes_col, T.BinaryType()),
         ]
     )
-    return media.select(id_col, bytes_col).mapInPandas(process, schema)
+    return map_rows(media, [id_col, bytes_col], resize, schema)
 
 
 def decode_ppm(
@@ -422,20 +361,11 @@ def decode_ppm(
     beside WAV): parse every P6 payload and emit typed metadata +
     exact per-channel integer sums.  Pure map over Arrow batches —
     decode parallelism = partition count, nothing shuffles."""
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[bytes_col]):
-                meta = parse_ppm(bytes(payload))
-                meta["media_id"] = int(mid)
-                rows.append(meta)
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PPM_META_SCHEMA.fields]
-            )
-
-    return media.select(id_col, bytes_col).mapInPandas(
-        process, PPM_META_SCHEMA
+    return map_rows(
+        media,
+        [id_col, bytes_col],
+        lambda mid, p: [{"media_id": int(mid), **parse_ppm(bytes(p))}],
+        PPM_META_SCHEMA,
     )
 
 
@@ -481,19 +411,11 @@ def ahash_ppm(
     parallelism = partition count, only 24-byte signature rows ever
     move."""
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[bytes_col]):
-                w, h, raster = ppm_raster(bytes(payload))
-                if (w, h) != (16, 16):
-                    raise ValueError(f"ahash_ppm expects 16x16, got {w}x{h}")
-                lo, hi = ahash64(raster)
-                rows.append(
-                    {"media_id": int(mid), "sig_lo": lo, "sig_hi": hi}
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AHASH_SCHEMA.fields]
-            )
+    def ahash(mid, payload):
+        w, h, raster = ppm_raster(bytes(payload))
+        if (w, h) != (16, 16):
+            raise ValueError(f"ahash_ppm expects 16x16, got {w}x{h}")
+        lo, hi = ahash64(raster)
+        return [{"media_id": int(mid), "sig_lo": lo, "sig_hi": hi}]
 
-    return media.select(id_col, bytes_col).mapInPandas(process, AHASH_SCHEMA)
+    return map_rows(media, [id_col, bytes_col], ahash, AHASH_SCHEMA)

@@ -647,8 +647,8 @@ def q_multimodal_json(spark, sf_dir):
 def q_multimodal_binary(spark, sf_dir):
     """Opaque-binary column handling: payload cast to binary, byte
     length + content digest as typed metadata — the query-side surface
-    of the multimodal model (decode/feature stages live in
-    operators/multimodal.py as Arrow-batched mapInPandas)."""
+    of the multimodal model (decode/resize/hash stages live in
+    operators/multimodal.py as Arrow-batched row maps)."""
     d = Catalog(spark, sf_dir).documents
     payload = F.col("text").cast(T.BinaryType())
     return d.select(

@@ -46,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from skyhookdb_ceph_spark.operators import ensure_parallelism, vectors
+from skyhookdb_ceph_spark.operators import ensure_parallelism, map_rows, vectors
 from skyhookdb_ceph_spark.queries._util import Catalog, quantize
 from skyhookdb_ceph_spark.registry import query
 
@@ -865,10 +865,10 @@ def q_dedup_phash(spark, sf_dir):
     arithmetically, so a header-tokenizer bug, raster offset error,
     block-index mistake, or band-packing error all surface as value
     mismatches."""
-    import pandas as pd
-    from pyspark.sql import types as T
+    import numpy as np
 
     from skyhookdb_ceph_spark.operators.multimodal import (
+        MEDIA_SCHEMA,
         ahash_ppm,
         ppm_bytes,
     )
@@ -882,30 +882,13 @@ def q_dedup_phash(spark, sf_dir):
             "CAST(doc_id % 3 AS BIGINT) AS pert",
         )
     )
-    synth_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
+    def synth(mid, gid, pert):
+        j = np.arange(16 * 16 * 3, dtype=np.int64)
+        raster = (int(gid) * 11 + j * 13 + int(pert)) % 256
+        return [{"media_id": int(mid), "payload": ppm_bytes(raster, 16, 16)}]
 
-    def synth(batches):
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for mid, gid, pert in zip(pdf.media_id, pdf.gid, pdf.pert):
-                j = np.arange(16 * 16 * 3, dtype=np.int64)
-                raster = (int(gid) * 11 + j * 13 + int(pert)) % 256
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "payload": ppm_bytes(raster, 16, 16),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    sig = ahash_ppm(params.mapInPandas(synth, synth_schema))
+    cols = ["media_id", "gid", "pert"]
+    sig = ahash_ppm(map_rows(params, cols, synth, MEDIA_SCHEMA))
     clus = sig.groupBy("sig_lo", "sig_hi").agg(
         F.min("media_id").cast("bigint").alias("rep"),
         F.count(F.lit(1)).cast("bigint").alias("n_imgs"),

@@ -270,9 +270,10 @@ FROM documents, unnest(generate_series(1, length(text), 512)) t(gs)
 def q_multimodal_frames(spark, sf_dir):
     """Video-style frame sampling over an opaque binary column: split
     each payload into fixed 256-byte pseudo-frames and keep every 2nd
-    (operators/multimodal.py frame_sample — the Arrow-batched
-    mapInPandas shape a real decoder drops into; the codec itself is
-    the documented stub).  Pure map stage: frames never shuffle, output
+    (operators/multimodal.py frame_sample — a row function run by
+    operators.map_rows, the Arrow-batched shape every multimodal codec
+    shares; frames are fixed byte slices, no video codec is involved).
+    Pure map stage: frames never shuffle, output
     rows stay on the partition that scanned the payload, so at 100 TB
     cost is one pass over the media bytes.  The query fingerprints each
     kept frame (md5 + length) so the oracle can verify the exact frame

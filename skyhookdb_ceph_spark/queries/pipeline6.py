@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from skyhookdb_ceph_spark.operators import ensure_parallelism
+from skyhookdb_ceph_spark.operators import ensure_parallelism, map_rows
 from skyhookdb_ceph_spark.queries._util import Catalog, money, quantize
 from skyhookdb_ceph_spark.registry import query
 
@@ -60,19 +60,17 @@ def q_multimodal_decode(spark, sf_dir):
     frames, operators/multimodal.wav_bytes), then decode it with the
     pure-Python RIFF parser (parse_wav: chunk walk, fmt unpack,
     numpy int16 sample decode) and emit metadata + sample statistics.
-    The NotImplementedError stub path is unreachable for the WAV
-    codec.  Both stages are Arrow-batched mapInPandas pure maps —
+    Both stages are Arrow-batched row maps (operators.map_rows) —
     decode parallelism = partition count, zero shuffle; at 100 TB the
     payloads stream through executors batch-by-batch and only the
     tiny per-file metadata rows ever move."""
     import numpy as np
-    import pandas as pd
 
     from skyhookdb_ceph_spark.operators.multimodal import (
+        MEDIA_SCHEMA,
         decode_wav,
         wav_bytes,
     )
-    from pyspark.sql import types as T
 
     params = (
         ensure_parallelism(Catalog(spark, sf_dir).documents)
@@ -85,31 +83,14 @@ def q_multimodal_decode(spark, sf_dir):
         )
     )
 
-    synth_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
+    def synth(mid, sr, nch, nfr):
+        k = np.arange(int(nfr) * int(nch), dtype=np.int64)
+        samples = ((int(mid) * 31 + k * 7) % 2001) - 1000
+        payload = wav_bytes(samples, int(sr), int(nch))
+        return [{"media_id": int(mid), "payload": payload}]
 
-    def synth(batches):
-        for pdf in batches:
-            rows = []
-            for mid, sr, nch, nfr in zip(
-                pdf.media_id, pdf.sample_rate, pdf.n_channels, pdf.n_frames
-            ):
-                n = int(nfr) * int(nch)
-                k = np.arange(n, dtype=np.int64)
-                samples = ((int(mid) * 31 + k * 7) % 2001) - 1000
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "payload": wav_bytes(samples, int(sr), int(nch)),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = params.mapInPandas(synth, synth_schema)
+    cols = ["media_id", "sample_rate", "n_channels", "n_frames"]
+    media = map_rows(params, cols, synth, MEDIA_SCHEMA)
     return decode_wav(media).orderBy("media_id")
 
 

@@ -1028,6 +1028,19 @@ FROM p ORDER BY media_id
 """
 
 
+def _ppm_synth(mid, w, h):
+    """Row function: one synthetic P6 payload for a (media_id, width,
+    height) row, raster byte j = (media_id*7 + j*13) % 256 — the pattern
+    the q_multimodal_image and q_multimodal_resize oracles recompute."""
+    import numpy as np
+
+    from skyhookdb_ceph_spark.operators.multimodal import ppm_bytes
+
+    j = np.arange(int(w) * int(h) * 3, dtype=np.int64)
+    raster = (int(mid) * 7 + j * 13) % 256
+    return [{"media_id": int(mid), "payload": ppm_bytes(raster, int(w), int(h))}]
+
+
 @query(
     "q_multimodal_image",
     oracle=_PPM_DECODE_ORACLE,
@@ -1041,19 +1054,11 @@ def q_multimodal_image(spark, sf_dir):
     (operators/multimodal.parse_ppm: whitespace/comment-tolerant
     header tokenizer, numpy uint8 raster decode with exact length
     check) and emit dimensions + exact per-channel integer sums.
-    Both stages are Arrow-batched mapInPandas pure maps — decode
+    Both stages are Arrow-batched row maps (operators.map_rows) — decode
     parallelism = partition count, zero shuffle; only tiny metadata
     rows ever move."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    from skyhookdb_ceph_spark.operators import ensure_parallelism
-    from skyhookdb_ceph_spark.operators.multimodal import (
-        decode_ppm,
-        ppm_bytes,
-    )
+    from skyhookdb_ceph_spark.operators import ensure_parallelism, map_rows
+    from skyhookdb_ceph_spark.operators.multimodal import MEDIA_SCHEMA, decode_ppm
 
     params = (
         ensure_parallelism(Catalog(spark, sf_dir).documents)
@@ -1064,28 +1069,8 @@ def q_multimodal_image(spark, sf_dir):
             "CAST(8 + (doc_id % 7) AS INT) AS height",
         )
     )
-    synth_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def synth(batches):
-        for pdf in batches:
-            rows = []
-            for mid, w, h in zip(pdf.media_id, pdf.width, pdf.height):
-                j = np.arange(int(w) * int(h) * 3, dtype=np.int64)
-                raster = (int(mid) * 7 + j * 13) % 256
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "payload": ppm_bytes(raster, int(w), int(h)),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = params.mapInPandas(synth, synth_schema)
+    cols = ["media_id", "width", "height"]
+    media = map_rows(params, cols, _ppm_synth, MEDIA_SCHEMA)
     return decode_ppm(media).orderBy("media_id")
 
 

@@ -23,9 +23,8 @@ Evidence-hardening queries closing the r7 verdict's residuals:
 7. q_transform_text — line-oriented text round-trip (the raw LLM
    corpus ingest format), completing §2.1's format plurality.
 8. q_multimodal_resize — image resize with real pixel math
-   (operators/multimodal.resize_ppm), completing the §2.12
-   multimodal quartet (decode / feature-extract / resize /
-   frame-sample).
+   (operators/multimodal.resize_ppm), beside the §2.12 decode,
+   perceptual-hash, frame-sample and windowing stages.
 9. q_fn_sql_udf — SQL-defined functions (CREATE FUNCTION ... RETURN)
    + lateral column aliases over aggregate aliases: the declarative
    UDF door, inlined at plan time.
@@ -512,30 +511,27 @@ FROM d ORDER BY media_id
     tags=("pipeline", "multimodal"),
 )
 def q_multimodal_resize(spark, sf_dir):
-    """Image RESIZE with real pixel math — the third stage of the
-    multimodal quartet (decode / feature-extract / RESIZE /
-    frame-sample, SURVEY §2.12): synthesize P6 payloads (disjoint doc
-    subset from q_multimodal_image), nearest-neighbor downsample by 2
+    """Image RESIZE with real pixel math, one of the multimodal row
+    maps (decode / hash / RESIZE / frame-sample, SURVEY §2.12):
+    synthesize P6 payloads with q_multimodal_image's row function
+    (disjoint doc subset), nearest-neighbor downsample by 2
     (operators/multimodal.resize_ppm — output pixel (y, x) = source
     (2y, 2x), re-encoded as a real P6 payload), then decode the
     RESIZED payloads and emit dimensions + exact per-channel sums.
-    Three chained Arrow-batched mapInPandas stages, zero shuffle; the
-    oracle computes the same sums by walking the output pixel
-    positions arithmetically, so any stride/offset/interleave bug in
-    the resize is a value mismatch, not a silent quality loss.  At
+    Three chained Arrow-batched row maps (operators.map_rows), zero
+    shuffle; the oracle computes the same sums by walking the output
+    pixel positions arithmetically, so any stride/offset/interleave
+    bug in the resize is a value mismatch, not a silent quality loss.  At
     100 TB the payload column shrinks ~4x at the resize stage —
     before any exchange — which is why real pipelines resize
     earliest."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from skyhookdb_ceph_spark.operators import ensure_parallelism
+    from skyhookdb_ceph_spark.operators import ensure_parallelism, map_rows
     from skyhookdb_ceph_spark.operators.multimodal import (
+        MEDIA_SCHEMA,
         decode_ppm,
-        ppm_bytes,
         resize_ppm,
     )
+    from skyhookdb_ceph_spark.queries.pipeline7 import _ppm_synth
 
     params = (
         ensure_parallelism(Catalog(spark, sf_dir).documents)
@@ -546,28 +542,8 @@ def q_multimodal_resize(spark, sf_dir):
             "CAST(8 + (doc_id % 7) AS INT) AS height",
         )
     )
-    synth_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def synth(batches):
-        for pdf in batches:
-            rows = []
-            for mid, w, h in zip(pdf.media_id, pdf.width, pdf.height):
-                j = np.arange(int(w) * int(h) * 3, dtype=np.int64)
-                raster = (int(mid) * 7 + j * 13) % 256
-                rows.append(
-                    {
-                        "media_id": int(mid),
-                        "payload": ppm_bytes(raster, int(w), int(h)),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = params.mapInPandas(synth, synth_schema)
+    cols = ["media_id", "width", "height"]
+    media = map_rows(params, cols, _ppm_synth, MEDIA_SCHEMA)
     return decode_ppm(resize_ppm(media, factor=2)).orderBy("media_id")
 
 
