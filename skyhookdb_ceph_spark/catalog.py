@@ -33,26 +33,6 @@ TABLES = (
     "embeddings",
 )
 
-# Small dimension tables that should always be broadcast in joins at any
-# scale factor (region=5, nation=25 rows regardless of SF).
-BROADCAST_DIMS = frozenset({"region", "nation"})
-
-# Expected key columns per table (reference: schema string marks is_key
-# columns, [U: cls_tabular_utils.h — struct col_info]).
-KEYS = {
-    "region": ["r_regionkey"],
-    "nation": ["n_nationkey"],
-    "customer": ["c_custkey"],
-    "supplier": ["s_suppkey"],
-    "part": ["p_partkey"],
-    "orders": ["o_orderkey"],
-    "lineitem": ["l_orderkey", "l_linenumber"],
-    "events": ["event_id"],
-    "documents": ["doc_id"],
-    "embeddings": ["vec_id"],
-}
-
-
 class Catalog:
     """Resolves table names to DataFrames for one scale-factor directory."""
 

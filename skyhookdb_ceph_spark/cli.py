@@ -110,13 +110,9 @@ def run_maintenance(spark: SparkSession, args) -> DataFrame | None:
     exec_build_sky_index_op, exec_transform_db_op, exec_runstats_op]."""
     cat = Catalog(spark, args.sf_dir)
     if args.build_index:
-        from skyhookdb_ceph_spark.operators.text_index import (
-            build_inverted_index,
-            write_index,
-        )
+        from skyhookdb_ceph_spark.operators.text_index import build_text_index
 
-        table = args.table or "documents"
-        write_index(build_inverted_index(cat.table(table)), args.out)
+        build_text_index(spark, cat.table(args.table or "documents"), args.out)
         return None
     if args.transform_db:
         from skyhookdb_ceph_spark.operators.layout import write_partitioned
@@ -137,6 +133,22 @@ def run_maintenance(spark: SparkSession, args) -> DataFrame | None:
             raise ValueError("--runstats needs --table and --cols")
         return column_stats(cat.table(args.table), args.cols.split(","))
     return None
+
+
+def _emit(df: DataFrame, args) -> None:
+    """Print the plan (--explain) or deliver the rows (--output)."""
+    if args.explain:
+        from skyhookdb_ceph_spark.plans.explain import explain_str
+
+        print(explain_str(df))
+    elif args.output == "show":
+        df.show(args.num_rows, truncate=False)
+    elif args.output == "count":
+        print(df.count())
+    elif args.output.startswith("parquet:"):
+        df.write.mode("overwrite").parquet(args.output.split(":", 1)[1])
+    else:
+        raise ValueError(f"unknown --output {args.output!r}")
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -202,19 +214,7 @@ def main(argv: list[str] | None = None) -> int:
                 f"unknown QueryID {args.query_id!r}; "
                 "use --list-queries to enumerate"
             )
-        df = specs[args.query_id].fn(spark, args.sf_dir)
-        if args.explain:
-            from skyhookdb_ceph_spark.plans.explain import explain_str
-
-            print(explain_str(df))
-        elif args.output == "show":
-            df.show(args.num_rows, truncate=False)
-        elif args.output == "count":
-            print(df.count())
-        elif args.output.startswith("parquet:"):
-            df.write.mode("overwrite").parquet(args.output.split(":", 1)[1])
-        else:
-            raise ValueError(f"unknown --output {args.output!r}")
+        _emit(specs[args.query_id].fn(spark, args.sf_dir), args)
         return 0
     if args.build_index or args.transform_db or args.runstats:
         result = run_maintenance(spark, args)
@@ -232,14 +232,7 @@ def main(argv: list[str] | None = None) -> int:
         project_cols=args.project_cols,
         limit=args.limit,
     )
-    if args.output == "show":
-        df.show(args.num_rows, truncate=False)
-    elif args.output == "count":
-        print(df.count())
-    elif args.output.startswith("parquet:"):
-        df.write.mode("overwrite").parquet(args.output.split(":", 1)[1])
-    else:
-        raise ValueError(f"unknown --output {args.output!r}")
+    _emit(df, args)
     return 0
 
 

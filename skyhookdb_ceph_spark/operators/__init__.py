@@ -6,7 +6,10 @@ operations — no driver-side loops, no row-at-a-time Python UDFs:
 - minhash.py    — shingling + banded MinHash LSH (fuzzy dedup)
 - simhash.py    — SimHash bit-signature clustering
 - vectors.py    — cosine/dot expressions + sign-bucket LSH for ANN
-- text_index.py — inverted text index (reference IDX_TXT analog)
+- text_index.py — the one inverted text index (reference IDX_TXT
+  analog): its layout and lifecycle, build_text_index ->
+  append_text_index -> compact, read by keyword_search and
+  probe_bm25; bm25_search scores per execution with the same scorer
 - asof.py       — as-of (nearest-timestamp) join
 - range_join.py — bucketed band/theta join (no nested-loop)
 - multimodal.py — opaque-binary columns + real WAV / PPM codecs

@@ -120,11 +120,17 @@ def parse_wav(data: bytes) -> dict:
     """REAL RIFF/PCM parse: chunk walk (arbitrary chunk order, unknown
     chunks skipped, odd-size pad bytes honored), fmt fields unpacked,
     int16 samples decoded via numpy.  Raises ValueError on malformed
-    input — no silent fallback: a chunk running past the end of the
+    input — no silent fallback: a RIFF size other than the payload's
+    length after the 8-byte header, a chunk running past the end of the
     payload, a fmt chunk under 16 bytes, zero channels or sample rate,
     and PCM that is not whole frames are all rejected."""
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
+    (riff_size,) = struct.unpack_from("<I", data, 4)
+    if riff_size != len(data) - 8:
+        raise ValueError(
+            f"RIFF size {riff_size} != {len(data) - 8} payload bytes"
+        )
     fmt = None
     pcm = None
     off = 12

@@ -36,14 +36,6 @@ def column_stats(df: DataFrame, cols: list[str]) -> DataFrame:
     )
 
 
-def analyze_table(df: DataFrame, name: str) -> None:
-    """Register + ANALYZE so the CBO has ndv/min/max for planning."""
-    df.createOrReplaceTempView(name)
-    df.sparkSession.sql(
-        f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR ALL COLUMNS"
-    )
-
-
 def measured_block_width(
     df: DataFrame,
     key: str,

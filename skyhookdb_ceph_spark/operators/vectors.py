@@ -85,13 +85,6 @@ def cosine_duckdb(a: str, b: str, dim: int = 64) -> str:
     )
 
 
-def sign_bucket_duckdb(col: str, n_bits: int) -> str:
-    return " || ".join(
-        f"(CASE WHEN {col}[{i}] >= 0 THEN '1' ELSE '0' END)"
-        for i in range(1, n_bits + 1)
-    )
-
-
 def scaled_bits_py(n: int) -> int:
     """Python twin of the n_bits derivation (for tests/planning)."""
     import math

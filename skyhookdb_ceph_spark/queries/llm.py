@@ -25,7 +25,8 @@ from skyhookdb_ceph_spark.operators import (
     vectors,
 )
 from skyhookdb_ceph_spark.operators.text_index import (
-    build_inverted_index,
+    _postings,
+    _with_tok0,
     keyword_search,
 )
 from skyhookdb_ceph_spark.queries._util import Catalog, quantize
@@ -373,11 +374,15 @@ def q_text_stats(spark, sf_dir):
 )
 def q_text_keyword(spark, sf_dir):
     """Keyword search ranked by term frequency through the inverted
-    index (operators/text_index.py — the reference's IDX_TXT analog
-    [U: cls_tabular_utils.h — SIT_IDX_TXT]).  Searching 'join' (a
+    index's postings (operators/text_index.py — the reference's IDX_TXT
+    analog [U: cls_tabular_utils.h — SIT_IDX_TXT]), built in memory.
+    Case-insensitive like the oracle: the index does not case-fold, so
+    the text is lowercased before tokenizing.  Searching 'join' (a
     high-frequency corpus token)."""
-    d = Catalog(spark, sf_dir).documents
-    return keyword_search(build_inverted_index(d), "join", k=20)
+    d = Catalog(spark, sf_dir).documents.select(
+        "doc_id", F.lower("text").alias("text")
+    )
+    return keyword_search(_with_tok0(_postings(d)), "join", k=20)
 
 
 _LANGID_MARKERS = {

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from skyhookdb_ceph_spark.operators import minhash, vectors
 from skyhookdb_ceph_spark.queries.llm import FUZZY_CTES, FUZZY_SIG_CTES
 from skyhookdb_ceph_spark.operators.stats import measured_shuffle_width
+from skyhookdb_ceph_spark.operators.text_index import bm25_search
 from skyhookdb_ceph_spark.queries._util import (
     Catalog,
     collect_local,
@@ -125,7 +126,7 @@ def q_join_width_probed(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 _RERANK_TERMS = ("table", "query")
-_RERANK_K1, _RERANK_B = 1.2, 0.75
+_RERANK_K1, _RERANK_B = 1.2, 0.75  # the oracle's statement of BM25's k1, b
 _RERANK_CANDIDATES = 20
 _RERANK_PHRASE = " ".join(_RERANK_TERMS)
 
@@ -196,48 +197,19 @@ def q_text_rerank(spark, sf_dir):
     prior.  Candidate cut on the QUANTIZED bm25 with doc_id tiebreak
     so the k-boundary is engine-invariant; 6-decimal quantization
     before the final rank window (2-term float sums cannot drift)."""
-    d = Catalog(spark, sf_dir).documents.select(
-        "doc_id", "text", F.split("text", " ").alias("toks")
-    )
-    dl = d.select("doc_id", F.size("toks").cast("bigint").alias("dl"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-    tf = (
-        d.select("doc_id", F.explode("toks").alias("term"))
-        .where(F.col("term").isin(*_RERANK_TERMS))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    idf = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    k1, b = _RERANK_K1, _RERANK_B
-    scored = (
-        tf.join(F.broadcast(idf), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(
-            F.sum(
-                F.log(
-                    1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                )
-                * F.col("tf")
-                * (k1 + 1)
-                / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
-            ).alias("raw")
-        )
-    )
-    cand = (
-        scored.select("doc_id", quantize(F.col("raw"), 6).alias("bm25"))
-        .orderBy(F.desc("bm25"), "doc_id")
-        .limit(_RERANK_CANDIDATES)
+    docs = Catalog(spark, sf_dir).documents
+    cand = bm25_search(docs, _RERANK_TERMS, _RERANK_CANDIDATES).select(
+        "doc_id", "bm25"
     )
     # stage 2: k-bounded candidate list BROADCASTS; the corpus side is
     # the streamed side of a broadcast hash join, so text never
     # shuffles and the expensive features run on k rows only
     feat = (
         F.broadcast(cand)
-        .join(d.select("doc_id", "text", F.size("toks").alias("dl")), "doc_id")
+        .join(
+            docs.select("doc_id", "text", F.size(F.split("text", " ")).alias("dl")),
+            "doc_id",
+        )
         .select(
             "doc_id",
             "bm25",

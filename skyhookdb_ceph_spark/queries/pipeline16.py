@@ -50,6 +50,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from skyhookdb_ceph_spark.operators import ensure_parallelism, vectors
+from skyhookdb_ceph_spark.operators.text_index import bm25_search
 from skyhookdb_ceph_spark.queries._util import Catalog, collect_local, scratch
 from skyhookdb_ceph_spark.queries.pipeline14 import (
     _KNN_BINARY_ORACLE,
@@ -949,43 +950,15 @@ def q_text_hybrid_rrf(spark, sf_dir):
     ).filter("doc_id <> 0")
     qv = emb.filter("vec_id = 0").selectExpr("embedding AS v")
 
-    d = u.select("doc_id", F.split("text", " ").alias("toks"))
-    dl = d.select("doc_id", F.size("toks").cast("bigint").alias("dl"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-    tf = (
-        d.select("doc_id", F.explode("toks").alias("term"))
-        .where(F.col("term").isin("table", "query"))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     # each leg: distributed TakeOrdered top-50 FIRST, then ranks over
     # the 50-row result — the global row_number never sees more than
     # the shortlist (a bare corpus-wide ranking window would funnel
     # the whole leg through one task at 100 TB); the (score DESC,
     # doc_id) total order makes limit-then-rank identical to
     # rank-then-filter
-    w_lex = Window.orderBy(F.desc("bm25"), F.asc("doc_id"))
-    lex = (
-        tf.join(F.broadcast(df), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(
-            F.expr(
-                "floor(sum(ln(1 + (n_docs - df + 0.5) / (df + 0.5))"
-                " * tf * (1.2 + 1)"
-                " / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl)))"
-                " * 1000000 + 0.5) / 1000000"
-            ).alias("bm25")
-        )
-        .orderBy(F.desc("bm25"), F.asc("doc_id"))
-        .limit(_RRF_SHORTLIST)
-        .withColumn("r_lex", F.row_number().over(w_lex).cast("int"))
-        .select("doc_id", "r_lex")
-    )
+    lex = bm25_search(
+        u.select("doc_id", "text"), ("table", "query"), _RRF_SHORTLIST
+    ).selectExpr("doc_id", "rnk AS r_lex")
     w_vec = Window.orderBy(F.desc("sim"), F.asc("doc_id"))
     vec = (
         u.crossJoin(F.broadcast(qv))

@@ -1,51 +1,24 @@
-"""Round-15 wave (SURVEY.md §2.11) — the persisted INVERTED TEXT
-index: build / probe-only retrieval / incremental append.
+"""Round-15 wave (SURVEY.md §2.11) — the queries that exercise the
+persisted INVERTED TEXT index's lifecycle: probe-only retrieval,
+incremental append, hybrid serving and compaction.
 
-Closes the last index-lifecycle asymmetry the r14 verdict named: the
-ANN signature tiers (pipeline16) and the IVF family both have the
-full persisted build / probe-only / append story, while the text
-side's inverted index (operators/text_index.py — the Spark
-re-expression of SkyhookDM's SIT_IDX_TXT omap keyword index
+The index itself — the frozen tokenization rule, the tok0-partitioned
+``postings/`` + ``dlens/`` + ``stats/`` layout, build / append /
+compact and the BM25 scorer — lives in operators/text_index.py (the
+Spark re-expression of SkyhookDM's SIT_IDX_TXT omap keyword index
 [U: cls_tabular_utils.h — SkyIdxType; cls_tabular.cc —
-exec_build_sky_index_op]) was built per execution by every retrieval
-query (q_text_keyword, q_text_bm25, q_text_hybrid_rrf all re-explode
-``documents.text``).  This wave gives the text index the same
-lifecycle:
+exec_build_sky_index_op]).  This module only runs it:
 
-1. build_text_index — tokenize once (the FROZEN rule:
-   ``split(text, ' ')``, empty tokens dropped) and persist three
-   pieces: ``postings/`` = (token, doc_id, tf) partitioned by first
-   token letter (tok0 — the partition prune IS the omap consult),
-   ``dlens/`` = (doc_id, dl) document lengths, ``stats/`` = the
-   1-row (n_docs, avgdl) corpus statistics BM25 needs.
-2. q_text_bm25_indexed — BM25 ranked retrieval PROBE-ONLY against
-   the persisted layout: the posting fetch is a tok0 partition prune
-   + token filter (plan-asserted in tests/test_text_index.py: no
-   explode, no split, no documents scan anywhere in the probe plan);
-   per-term df comes from counting the pruned postings themselves.
-   The oracle is the IDENTICAL SQL as q_text_bm25: persisting the
-   index must not change a single answer row.
-3. q_text_index_incremental — append a delta corpus's postings into
-   the existing layout under the frozen-tokenization rule: new row
-   files only, base files byte-untouched (pinned in
-   tests/test_text_index.py, mirroring test_sig_index.py).  The
-   tokenization rule and the tok0 partition key are the index's
-   frozen PARAMETERS — a delta tokenized differently would split
-   postings for the same logical term across keys, silently
-   corrupting every future lookup.
-4. q_hybrid_rrf_indexed — the serving shape end-to-end: RRF fusion
-   of a probe-only BM25 leg (this index) and a probe-only ANN
-   cascade leg (pipeline16's persisted signature index); no
-   tokenize and no encode pass anywhere in the fused plan.
-5. q_text_index_compact — the maintenance op append makes
-   mandatory: rewrite the fragmented tok0 directories into one
-   sorted file each, answers pinned unchanged.
-
-Scale story: at 100 TB the corpus tokenize+shuffle runs once at
-build; a keyword/BM25 probe reads exactly the query terms' tok0
-partitions (a few posting lists) plus the doc-length sidecar, never
-the document bodies.  Append is O(delta) — re-tokenizing only new
-documents — vs O(corpus) for a rebuild per ingest batch.
+1. q_text_bm25_indexed — BM25 PROBE-ONLY against a built index (no
+   explode, no split, no documents scan in the probe plan); the oracle
+   is the IDENTICAL SQL as q_text_bm25.
+2. q_text_index_incremental — base build + delta append, census of
+   the read-back postings by cohort.
+3. q_hybrid_rrf_indexed — RRF fusion of a probe-only BM25 leg and a
+   probe-only ANN cascade leg (pipeline16's persisted signature
+   index); no tokenize and no encode pass anywhere in the fused plan.
+4. q_text_index_compact — compaction of an appended (fragmented)
+   index, answers pinned unchanged.
 
 House rules unchanged: identical aliases both sides, quantize before
 rank, deterministic doc_id tie-breaks, broadcast-sized dims only.
@@ -57,11 +30,17 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from skyhookdb_ceph_spark.operators import ensure_parallelism
+from skyhookdb_ceph_spark.operators.text_index import (
+    _max_files_per_tok0,
+    append_text_index,
+    build_text_index,
+    compact,
+    probe_bm25,
+)
 from skyhookdb_ceph_spark.queries._util import (
     Catalog,
     collect_local,
     local_df,
-    quantize,
     scratch,
 )
 from skyhookdb_ceph_spark.queries.pipeline3 import (
@@ -76,133 +55,6 @@ from skyhookdb_ceph_spark.queries.pipeline16 import (
     _RRF_TOPK,
 )
 from skyhookdb_ceph_spark.registry import query
-
-# ---------------------------------------------------------------------------
-# build-time machinery (probes never run these)
-# ---------------------------------------------------------------------------
-
-
-def _postings(docs: DataFrame) -> DataFrame:
-    """(token, doc_id, tf) under the FROZEN tokenization rule —
-    ``split(text, ' ')`` with empty tokens dropped, the same rule
-    q_text_bm25 scores with (so the persisted index answers the same
-    queries).  One explode + one keyed aggregation; this is the
-    build-side pass a probe must never contain."""
-    return (
-        docs.select(
-            "doc_id", F.explode(F.split("text", " ")).alias("token")
-        )
-        .filter(F.col("token") != "")
-        .groupBy("token", "doc_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-    )
-
-
-def _dlens(docs: DataFrame) -> DataFrame:
-    """(doc_id, dl) — BM25's length-normalization sidecar.  dl counts
-    ALL split positions (empties included), exactly q_text_bm25's
-    ``size(split(text, ' '))`` so scores are bit-identical."""
-    return docs.select(
-        "doc_id", F.size(F.split("text", " ")).cast("bigint").alias("dl")
-    )
-
-
-def _with_tok0(postings: DataFrame) -> DataFrame:
-    return postings.withColumn("tok0", F.substring("token", 1, 1))
-
-
-def build_text_index(spark, sf_dir: str, path: str) -> None:
-    """Build the persisted inverted text index under ``path``:
-    ``postings/`` partitioned by tok0 (a keyword lookup prunes to one
-    directory — the omap point-lookup analog), ``dlens/`` +
-    ``stats/`` = the corpus statistics BM25 needs at probe time.
-    Stats are written because they are index parameters: the probe
-    must read them back, never re-derive them from document bodies."""
-    d = ensure_parallelism(Catalog(spark, sf_dir).documents)
-    _with_tok0(_postings(d)).write.mode("overwrite").partitionBy(
-        "tok0"
-    ).parquet(f"{path}/postings")
-    _dlens(d).write.mode("overwrite").parquet(f"{path}/dlens")
-    # stats from the WRITTEN sidecar, not a third corpus scan: the
-    # dlens values are already materialized a line above, so deriving
-    # (n_docs, avgdl) from the read-back file replaces a full
-    # re-tokenize of every document body with an aggregate over one
-    # bigint column — the same derivation append_text_index commits
-    # with (fuzz-certified equal to a fresh build, tools/fuzz_index.py)
-    spark.read.parquet(f"{path}/dlens").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
-
-
-# ---------------------------------------------------------------------------
-# probe-only BM25 (reads the index, never tokenizes)
-# ---------------------------------------------------------------------------
-
-
-def probe_bm25(
-    spark,
-    path: str,
-    terms: tuple[str, ...] = _BM25_TERMS,
-    k: int = 10,
-    doc_pred: str | None = None,
-) -> DataFrame:
-    """BM25 top-k over a READ-BACK index: the posting fetch filters
-    tok0 (partition prune — only the query terms' first-letter
-    directories are listed) then token (row-group stats finish inside
-    the partition); per-term df is a count over those same pruned
-    postings (a |terms|-row broadcast).  Document bodies never enter
-    the plan — no explode, no split (plan-asserted).  Lazy, same
-    output contract as q_text_bm25.
-
-    ``doc_pred`` restricts the CANDIDATE set (e.g. excluding a query
-    document) without changing df — document frequency is a property
-    of the index, corpus-wide, so a probe that excludes candidates
-    must not see different term weights.
-
-    At 100 TB the probe reads a few posting lists (KBs–MBs) + the
-    doc-length sidecar instead of re-tokenizing the corpus; the dlens
-    join keys on doc_id with the term-matched postings as the small
-    side."""
-    first = sorted({t[:1] for t in terms})
-    post = (
-        spark.read.parquet(f"{path}/postings")
-        .filter(F.col("tok0").isin(first) & F.col("token").isin(*terms))
-        .select("token", "doc_id", "tf")
-    )
-    dfreq = post.groupBy("token").agg(
-        F.count(F.lit(1)).cast("bigint").alias("df")
-    )
-    if doc_pred is not None:
-        post = post.filter(doc_pred)
-    dl = spark.read.parquet(f"{path}/dlens")
-    stats = spark.read.parquet(f"{path}/stats")
-    k1, b = _BM25_K1, _BM25_B
-    scored = (
-        post.join(F.broadcast(dfreq), "token")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(
-            F.sum(
-                F.log(
-                    1
-                    + (F.col("n_docs") - F.col("df") + 0.5)
-                    / (F.col("df") + 0.5)
-                )
-                * F.col("tf")
-                * (k1 + 1)
-                / (
-                    F.col("tf")
-                    + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
-                )
-            ).alias("raw")
-        )
-    )
-    ranked = scored.select("doc_id", quantize(F.col("raw"), 6).alias("bm25"))
-    top = ranked.orderBy(F.desc("bm25"), "doc_id").limit(k)
-    w = Window.orderBy(F.desc("bm25"), "doc_id")  # k rows post-limit
-    return top.withColumn("rnk", F.row_number().over(w).cast("int"))
 
 
 @query(
@@ -226,8 +78,8 @@ def q_text_bm25_indexed(spark, sf_dir):
     and this query's marginal cost is |postings(terms)| + the
     doc-length join, independent of corpus text bytes."""
     with scratch("skyhook_txtidx_") as tmp:
-        build_text_index(spark, sf_dir, tmp)
-        out = probe_bm25(spark, tmp)
+        build_text_index(spark, Catalog(spark, sf_dir).documents, tmp)
+        out = probe_bm25(spark, tmp, _BM25_TERMS)
         return collect_local(out)
 
 
@@ -259,13 +111,13 @@ FROM p GROUP BY 1 ORDER BY 1
     tags=("pipeline", "text", "layout", "scale-design"),
 )
 def q_text_index_incremental(spark, sf_dir):
-    """Incremental inverted-index MAINTENANCE: a delta corpus (the
-    {_TXT_DELTA_PRED} cohort) is tokenized with the SAME frozen rule
-    as the base build and its postings appended into the existing
-    tok0-partitioned layout — new row files only, base files
-    byte-untouched (pinned in tests/test_text_index.py).  Rebuilding
-    per ingest batch re-tokenizes the corpus; appending re-tokenizes
-    only the delta.
+    """Incremental inverted-index MAINTENANCE: the base cohort is
+    indexed with build_text_index, then the delta corpus (the
+    _TXT_DELTA_PRED cohort) goes through append_text_index, which
+    tokenizes it with the SAME frozen rule — new row files only, base
+    files byte-untouched (pinned in tests/test_text_index.py).
+    Rebuilding per ingest batch re-tokenizes the corpus; appending
+    re-tokenizes only the delta.
 
     The frozen-parameter rule here is the tokenization + partition
     key (the q_vec_sig_incremental thresholds lesson, applied to
@@ -273,34 +125,37 @@ def q_text_index_incremental(spark, sf_dir):
     differently would file postings for the same logical term under
     different tokens/tok0 directories, so lookups would silently miss
     the delta's documents.  The verdict is a census of the READ-BACK
-    layout by cohort (posting count, distinct vocabulary, tf mass);
+    postings by cohort (posting count, distinct vocabulary, tf mass);
     the oracle re-derives both cohorts' postings from the raw text —
     persisted-and-appended == computed-fresh, cohort by cohort."""
-    d = ensure_parallelism(Catalog(spark, sf_dir).documents)
-    base = d.filter(f"NOT ({_TXT_DELTA_PRED})")
-    delta = d.filter(_TXT_DELTA_PRED)
     with scratch("skyhook_txtinc_") as tmp:
-        _with_tok0(_postings(base)).withColumn(
-            "is_delta", F.lit(0).cast("int")
-        ).write.mode("overwrite").partitionBy("tok0").parquet(
-            f"{tmp}/postings"
-        )
-        _with_tok0(_postings(delta)).withColumn(
-            "is_delta", F.lit(1).cast("int")
-        ).write.mode("append").partitionBy("tok0").parquet(
-            f"{tmp}/postings"
-        )
-        idx = spark.read.parquet(f"{tmp}/postings")
+        _build_then_append(spark, sf_dir, tmp)
+        cohort = F.when(F.expr(_TXT_DELTA_PRED), 1).otherwise(0)
         out = (
-            idx.groupBy("is_delta")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_postings"),
-                F.countDistinct("token").cast("bigint").alias("n_tokens"),
-                F.sum("tf").cast("bigint").alias("sum_tf"),
+            _postings_census(
+                spark.read.parquet(f"{tmp}/postings").groupBy(
+                    cohort.alias("is_delta")
+                )
             )
             .orderBy("is_delta")
         )
         return collect_local(out)
+
+
+def _build_then_append(spark, sf_dir: str, path: str) -> None:
+    """Index the base cohort, then append the _TXT_DELTA_PRED delta."""
+    d = Catalog(spark, sf_dir).documents
+    build_text_index(spark, d.filter(f"NOT ({_TXT_DELTA_PRED})"), path)
+    append_text_index(spark, d.filter(_TXT_DELTA_PRED), path)
+
+
+def _postings_census(grouped):
+    """(n_postings, n_tokens, sum_tf) of a postings frame or grouping."""
+    return grouped.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_postings"),
+        F.countDistinct("token").cast("bigint").alias("n_tokens"),
+        F.sum("tf").cast("bigint").alias("sum_tf"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -501,7 +356,7 @@ def q_hybrid_rrf_indexed(spark, sf_dir):
 
     e = ensure_parallelism(Catalog(spark, sf_dir).embeddings)
     with scratch("skyhook_hybt_") as tdir, scratch("skyhook_hybs_") as sdir:
-        build_text_index(spark, sf_dir, tdir)
+        build_text_index(spark, Catalog(spark, sf_dir).documents, tdir)
         build_sig_index(spark, sf_dir, sdir)
         out = probe_hybrid_rrf(spark, tdir, sdir, e)
         return collect_local(out)
@@ -533,29 +388,6 @@ ORDER BY phase
 """
 
 
-def _postings_census(idx: DataFrame):
-    return idx.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_postings"),
-        F.countDistinct("token").cast("bigint").alias("n_tokens"),
-        F.sum("tf").cast("bigint").alias("sum_tf"),
-    )
-
-
-def _max_files_per_tok0(root: str) -> int:
-    """Physical fragmentation metric: max parquet-file count over the
-    tok0 partition directories (driver-side listing — metadata only,
-    the same thing a table format's manifest read is)."""
-    import os
-
-    worst = 0
-    for dirpath, _dirs, files in os.walk(root):
-        if os.path.basename(dirpath).startswith("tok0="):
-            worst = max(
-                worst, sum(1 for f in files if f.endswith(".parquet"))
-            )
-    return worst
-
-
 @query(
     "q_text_index_compact",
     oracle=_TXT_CMP_ORACLE,
@@ -566,75 +398,45 @@ def q_text_index_compact(spark, sf_dir):
     append makes mandatory (q_maint_compact's story applied to the
     index): each append lands new row files inside the tok0
     directories, so after k ingest batches a probe of one token opens
-    O(k) small files.  Compaction reads the fragmented layout once,
-    repartitions BY tok0 (each tok0 hashes to exactly one task, so
-    each partition directory gets exactly ONE output file) with rows
-    sorted by (token, doc_id) inside it — token-range row-group
-    stats then serve the probe's pushed token filter — and writes a
-    NEW layout; the atomic directory swap is the table-format commit
-    step, out of scope here.
+    O(k) small files.  text_index.compact rewrites the fragmented
+    index into a NEW one with exactly ONE sorted file per tok0
+    directory.
 
-    Verdict: census of BOTH layouts (posting count, vocabulary, tf
-    mass — compaction must not change one row) plus the physical
-    invariant measured from the layouts themselves:
-    single_file_per_tok0 = 0 fragmented (base write + delta append
-    guarantee some directory holds >= 2 files), = 1 compacted.  The
-    oracle re-derives the census from raw text and states both
-    invariant constants declaratively — if the writer ever stopped
-    fragmenting or compaction stopped consolidating, the measured
-    column diverges from the declared one and the driver flags it.
+    Verdict: census of BOTH layouts' postings (posting count,
+    vocabulary, tf mass — compaction must not change one row) plus the
+    physical invariant measured from the layouts themselves:
+    single_file_per_tok0 = 0 fragmented (base build + delta append
+    leave some directory with >= 2 files), = 1 compacted.  The oracle
+    re-derives the census from raw text and states both invariant
+    constants declaratively — if the writer ever stopped fragmenting
+    or compaction stopped consolidating, the measured column diverges
+    from the declared one and the oracle diff flags it.
 
     At 100 TB: compaction cost is one read + one shuffle of the
     POSTINGS (a fraction of corpus text bytes), amortized across the
-    probes it speeds up; probe cost returns to O(terms) file opens.
-    Skew note: repartition("tok0") routes each first-letter's
-    postings through ONE task — fine at fixture scale, but common
-    first letters are hot at 100 TB; the scale remedy is
-    repartitionByRange("tok0", "token") with a size-derived
-    partition count, which keeps files sorted and per-token-
-    contiguous while splitting hot tok0 directories into
-    several right-sized sorted files (the single-file invariant
-    pinned here relaxes to files-per-tok0 = ceil(bytes/target);
-    a probe still opens only the files whose token range covers
-    its terms, which the sort makes a manifest-level check)."""
-    d = ensure_parallelism(Catalog(spark, sf_dir).documents)
-    base = d.filter(f"NOT ({_TXT_DELTA_PRED})")
-    delta = d.filter(_TXT_DELTA_PRED)
+    probes it speeds up."""
     with scratch("skyhook_txtcmp_") as tmp:
-        frag = f"{tmp}/postings"
-        _with_tok0(_postings(base)).write.mode("overwrite").partitionBy(
-            "tok0"
-        ).parquet(frag)
-        _with_tok0(_postings(delta)).write.mode("append").partitionBy(
-            "tok0"
-        ).parquet(frag)
-        fr = _postings_census(spark.read.parquet(frag)).collect()[0]
+        frag, comp = f"{tmp}/fragmented", f"{tmp}/compacted"
+        _build_then_append(spark, sf_dir, frag)
+        fr = _postings_census(spark.read.parquet(f"{frag}/postings")).collect()[0]
         fr_files = _max_files_per_tok0(frag)
         if fr_files < 2:
             # The oracle declares single_file_per_tok0 = 0 for this
-            # phase; nothing STRUCTURALLY guarantees the base write +
+            # phase; nothing STRUCTURALLY guarantees the base build +
             # delta append overlap in at least one tok0 dir at every
-            # scale factor / partition setting (r15 ADVICE).  If the
-            # precondition ever fails, raise a distinguishable error
+            # scale factor / partition setting.  If the precondition
+            # ever fails, raise a distinguishable error
             # instead of shipping a row the driver would misread as a
             # real correctness divergence.
             raise RuntimeError(
                 "q_text_index_compact: fragmented layout precondition "
                 f"failed (max files per tok0 = {fr_files}, expected >= 2 "
-                "from base write + delta append) — fixture/partitioning "
+                "from base build + delta append) — fixture/partitioning "
                 "change, not a compaction bug"
             )
-
-        compacted = f"{tmp}/postings_compacted"
-        (
-            spark.read.parquet(frag)
-            .repartition("tok0")
-            .sortWithinPartitions("token", "doc_id")
-            .write.partitionBy("tok0")
-            .parquet(compacted)
-        )
-        co = _postings_census(spark.read.parquet(compacted)).collect()[0]
-        co_files = _max_files_per_tok0(compacted)
+        compact(spark, frag, comp)
+        co = _postings_census(spark.read.parquet(f"{comp}/postings")).collect()[0]
+        co_files = _max_files_per_tok0(comp)
 
         rows = [
             ("compacted", co.n_postings, co.n_tokens, co.sum_tf,
@@ -648,31 +450,3 @@ def q_text_index_compact(spark, sf_dir):
             "phase string, n_postings bigint, n_tokens bigint,"
             " sum_tf bigint, single_file_per_tok0 int",
         ).orderBy("phase")
-
-
-def append_text_index(spark, delta_docs: DataFrame, path: str) -> None:
-    """Append a delta corpus into an EXISTING index under the frozen
-    tokenization rule — the full maintenance contract, all three
-    pieces: postings and dlens land as new row files (base files
-    byte-untouched), and the 1-row stats sidecar is REWRITTEN from
-    the combined dlens (the metadata-commit step — stats are index
-    parameters, so they must reflect the post-append corpus or every
-    subsequent BM25 probe scores with stale n_docs/avgdl).  avg(dl)
-    over BIGINT is exact-sum/count in both engines, so the rewritten
-    stats equal a from-scratch build's bit-for-bit (fuzz-certified:
-    tools/fuzz_index.py diffs append-then-probe against
-    rebuild-then-probe and a DuckDB inline scorer per seed)."""
-    _with_tok0(_postings(delta_docs)).write.mode("append").partitionBy(
-        "tok0"
-    ).parquet(f"{path}/postings")
-    _dlens(delta_docs).write.mode("append").parquet(f"{path}/dlens")
-    (
-        spark.read.parquet(f"{path}/dlens")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{path}/stats")
-    )

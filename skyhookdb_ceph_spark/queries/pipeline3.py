@@ -20,6 +20,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from skyhookdb_ceph_spark.operators import ensure_parallelism
+from skyhookdb_ceph_spark.operators.text_index import bm25_search
 from skyhookdb_ceph_spark.queries._util import Catalog, _scratch_dir, quantize, scratch
 from skyhookdb_ceph_spark.registry import query
 
@@ -432,7 +433,7 @@ def q_schema_evolve(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 _BM25_TERMS = ("table", "query")
-_BM25_K1, _BM25_B = 1.2, 0.75
+_BM25_K1, _BM25_B = 1.2, 0.75  # the oracles' statement of BM25's k1, b
 
 _BM25_ORACLE = f"""
 WITH d AS (
@@ -467,48 +468,15 @@ SELECT doc_id, bm25, rnk FROM q WHERE rnk <= 10
 def q_text_bm25(spark, sf_dir):
     """BM25 ranked retrieval — the full scoring path behind the §2.11
     inverted index (q_text_keyword ranks by raw tf; this adds idf and
-    length normalization, the production ranking function).  Postings
-    are filtered to the query terms AT THE EXPLODE (the posting-list
-    fetch), so only matching (doc, term) pairs ever shuffle; N/avgdl
-    are a 1-row broadcast; per-term df is a tiny broadcast dim.  The
-    float sum per doc is over |query| terms only (2), so cross-engine
-    summation order cannot drift; 6-decimal quantization before the
-    rank window makes the ordering engine-invariant."""
-    d = Catalog(spark, sf_dir).documents.select(
-        "doc_id", F.split("text", " ").alias("toks")
-    )
-    dl = d.select("doc_id", F.size("toks").cast("bigint").alias("dl"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-    tf = (
-        d.select("doc_id", F.explode("toks").alias("term"))
-        .where(F.col("term").isin(*_BM25_TERMS))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    k1, b = _BM25_K1, _BM25_B
-    scored = (
-        tf.join(F.broadcast(df), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(
-            F.sum(
-                F.log(1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-                * F.col("tf")
-                * (k1 + 1)
-                / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl")))
-            ).alias("raw")
-        )
-    )
-    ranked = scored.select(
-        "doc_id", quantize(F.col("raw"), 6).alias("bm25")
-    )
-    top = ranked.orderBy(F.desc("bm25"), "doc_id").limit(10)
-    w = Window.orderBy(F.desc("bm25"), "doc_id")  # 10 rows post-limit
-    return top.withColumn("rnk", F.row_number().over(w).cast("int"))
+    length normalization, the production ranking function), computed
+    per execution by text_index.bm25_search.  Postings are filtered to
+    the query terms AT THE EXPLODE (the posting-list fetch), so only
+    matching (doc, term) pairs ever shuffle; N/avgdl are a 1-row
+    broadcast; per-term df is a tiny broadcast dim.  The float sum per
+    doc is over |query| terms only (2), so cross-engine summation
+    order cannot drift; 6-decimal quantization before the rank window
+    makes the ordering engine-invariant."""
+    return bm25_search(Catalog(spark, sf_dir).documents, _BM25_TERMS, 10)
 
 
 # ---------------------------------------------------------------------------

@@ -72,9 +72,25 @@ def test_maintenance_build_index(spark, tmp_path):
         table="documents", cols="", out=out, partition_by="", sort_by="",
     )
     assert run_maintenance(spark, args) is None
-    idx = spark.read.parquet(out)
+    idx = spark.read.parquet(f"{out}/postings")
     assert {"token", "doc_id", "tf", "tok0"} <= set(idx.columns)
     assert idx.filter("token = 'join'").count() > 0
+
+
+def test_cli_built_index_answers_the_bm25_probe(spark, tmp_path):
+    """--build-index writes the one text-index layout: probe_bm25 reads
+    it back and returns exactly q_text_bm25's rows."""
+    from skyhookdb_ceph_spark.cli import main
+    from skyhookdb_ceph_spark.operators.text_index import probe_bm25
+    from skyhookdb_ceph_spark.queries.pipeline3 import _BM25_TERMS
+    from skyhookdb_ceph_spark.registry import load_all
+
+    out = str(tmp_path / "idx")
+    assert main(["--sf-dir", SF, "--build-index", "--out", out]) == 0
+    probed = sorted(map(tuple, probe_bm25(spark, out, _BM25_TERMS).collect()))
+    inline = load_all()["q_text_bm25"].fn(spark, SF)
+    assert probed == sorted(map(tuple, inline.collect()))
+    assert len(probed) == 10
 
 
 def test_cli_query_id_runs_registered_query(spark, capsys):
@@ -91,6 +107,16 @@ def test_cli_query_id_explain_prints_plan(spark, capsys):
 
     assert main(["--sf-dir", SF, "--query-id", "q_topk", "--explain"]) == 0
     assert "TakeOrderedAndProject" in capsys.readouterr().out
+
+
+def test_cli_table_explain_prints_plan(spark, capsys):
+    """--explain applies to every query surface, not only --query-id."""
+    from skyhookdb_ceph_spark.cli import main
+
+    assert main(["--sf-dir", SF, "--table", "region", "--explain"]) == 0
+    out = capsys.readouterr().out
+    assert "Scan parquet" in out
+    assert "r_regionkey" in out and "AFRICA" not in out
 
 
 def test_cli_list_queries_covers_registry(spark, capsys):

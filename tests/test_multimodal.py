@@ -22,6 +22,7 @@ from skyhookdb_ceph_spark.operators.multimodal import (
     ppm_bytes,
     ppm_raster,
     sliding_windows,
+    wav_bytes,
 )
 
 PKG = pathlib.Path(__file__).resolve().parents[1] / "skyhookdb_ceph_spark"
@@ -136,7 +137,11 @@ def test_row_maps_are_the_only_map_in_pandas_sites():
     }
 
 
+_TEN_FRAMES = wav_bytes(np.arange(10), 8000, 1)
+
+
 def test_wav_helper_builds_a_valid_payload():
+    assert parse_wav(_TEN_FRAMES)["n_frames"] == 10
     meta = parse_wav(_wav(fmt=(1, 2, 8000, 32000, 4, 16), data=bytes(400)))
     assert (meta["n_channels"], meta["n_frames"]) == (2, 100)
 
@@ -152,6 +157,11 @@ def test_wav_helper_builds_a_valid_payload():
             _wav(fmt=(1, 2, 8000, 32000, 4, 16), data=bytes(202)),
             id="stereo_odd_sample_count",
         ),
+        pytest.param(
+            _TEN_FRAMES[:4] + struct.pack("<I", 9999) + _TEN_FRAMES[8:],
+            id="riff_size_past_payload",
+        ),
+        pytest.param(_TEN_FRAMES + bytes(7), id="trailing_junk"),
     ],
 )
 def test_parse_wav_rejects_malformed(payload):

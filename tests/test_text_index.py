@@ -4,36 +4,38 @@ token-prefix partition and match the in-memory ranking), plus the
 round-15 lifecycle suite: the BM25 probe must READ the layout — tok0
 partition prune + token filter — never re-tokenize the corpus, and
 the incremental append must be append-only under the
-frozen-tokenization rule.  Mirrors tests/test_sig_index.py for the
+frozen-tokenization rule.  Every test drives the production build /
+append / compact / probe functions of operators/text_index.py, the one
+module that knows the layout.  Mirrors tests/test_sig_index.py for the
 text side of the index lifecycle."""
 
 from __future__ import annotations
 
+import collections
 import os
+import pathlib
 import re
-import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
 from skyhookdb_ceph_spark.catalog import Catalog
 from skyhookdb_ceph_spark.operators.text_index import (
-    build_inverted_index,
-    keyword_search,
-    search_persisted_index,
-    write_index,
-)
-from skyhookdb_ceph_spark.plans.explain import explain_str
-from skyhookdb_ceph_spark.queries.pipeline17 import (
+    _max_files_per_tok0,
     _postings,
     _with_tok0,
+    append_text_index,
     build_text_index,
+    compact,
+    keyword_search,
     probe_bm25,
 )
+from skyhookdb_ceph_spark.plans.explain import explain_str
+from skyhookdb_ceph_spark.queries.pipeline3 import _BM25_TERMS
 from skyhookdb_ceph_spark.registry import load_all
 
 SF = "/root/testdata/sf0.001"
+PKG = pathlib.Path(__file__).resolve().parents[1] / "skyhookdb_ceph_spark"
 
 
 # ---------------------------------------------------------------------------
@@ -42,17 +44,19 @@ SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
-def persisted_index(spark):
-    tmp = tempfile.mkdtemp(prefix="skyhook_idx_")
-    docs = Catalog(spark, SF).documents
-    write_index(build_inverted_index(docs), f"{tmp}/idx")
-    yield spark, SF, f"{tmp}/idx"
-    shutil.rmtree(tmp, ignore_errors=True)
+def persisted_index(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("skyhook_idx") / "idx")
+    build_text_index(spark, Catalog(spark, SF).documents, path)
+    return spark, SF, path
+
+
+def _persisted_search(spark, path, keyword):
+    return keyword_search(spark.read.parquet(f"{path}/postings"), keyword)
 
 
 def test_persisted_search_prunes_partitions(persisted_index):
     spark, _, path = persisted_index
-    plan = explain_str(search_persisted_index(spark, path, "join"))
+    plan = explain_str(_persisted_search(spark, path, "join"))
     assert "PartitionFilters" in plan
     frag = plan.split("PartitionFilters", 1)[1].splitlines()[0]
     assert "tok0" in frag  # the prune actually keys on the prefix dir
@@ -63,12 +67,9 @@ def test_persisted_search_matches_in_memory(persisted_index):
     docs = Catalog(spark, sf).documents
     mem = [
         tuple(r)
-        for r in keyword_search(build_inverted_index(docs), "join").collect()
+        for r in keyword_search(_with_tok0(_postings(docs)), "join").collect()
     ]
-    disk = [
-        tuple(r)
-        for r in search_persisted_index(spark, path, "join").collect()
-    ]
+    disk = [tuple(r) for r in _persisted_search(spark, path, "join").collect()]
     assert disk == mem
     assert len(disk) > 0
 
@@ -100,8 +101,8 @@ def test_probe_plan_never_tokenizes(spark, tmp_path):
     posting lists + the doc-length sidecar instead of re-tokenizing
     every document body per query."""
     tmp = str(tmp_path / "txtidx")
-    build_text_index(spark, SF, tmp)
-    plan = explain_str(probe_bm25(spark, tmp))
+    build_text_index(spark, Catalog(spark, SF).documents, tmp)
+    plan = explain_str(probe_bm25(spark, tmp, _BM25_TERMS))
     for marker in _TOKENIZE_MARKERS:
         assert marker not in plan, f"probe plan re-tokenizes: {marker}"
 
@@ -112,8 +113,8 @@ def test_probe_plan_prunes_tok0_partitions(spark, tmp_path):
     analog — only the query terms' first-letter directories are
     read), and the token equality is pushed into the pruned scan."""
     tmp = str(tmp_path / "txtidx")
-    build_text_index(spark, SF, tmp)
-    plan = explain_str(probe_bm25(spark, tmp))
+    build_text_index(spark, Catalog(spark, SF).documents, tmp)
+    plan = explain_str(probe_bm25(spark, tmp, _BM25_TERMS))
     assert re.search(r"PartitionFilters: \[[^\]]*tok0", plan)
     assert re.search(r"PushedFilters: \[[^\]]*token", plan)
 
@@ -124,41 +125,31 @@ def test_probe_matches_inline_bm25(spark, tmp_path):
     inline oracle, so the driver pins this at sf0.01; this is the
     sf0.001 fast path)."""
     tmp = str(tmp_path / "txtidx")
-    build_text_index(spark, SF, tmp)
-    indexed = sorted(map(tuple, probe_bm25(spark, tmp).collect()))
+    build_text_index(spark, Catalog(spark, SF).documents, tmp)
+    indexed = sorted(map(tuple, probe_bm25(spark, tmp, _BM25_TERMS).collect()))
     reg = load_all()
     ref = sorted(map(tuple, reg["q_text_bm25"].fn(spark, SF).collect()))
     assert indexed == ref and len(indexed) == 10
 
 
-def test_incremental_append_leaves_base_files_untouched(spark):
-    """Appending delta postings writes NEW files only — every base
-    data file (across all tok0 partition directories) survives with
-    identical name, size, and mtime.  O(delta) maintenance; a rebuild
-    is O(corpus)."""
+def test_incremental_append_leaves_base_files_untouched(spark, tmp_path):
+    """append_text_index writes NEW postings and dlens files only —
+    every base data file (across all tok0 partition directories and
+    the length sidecar) survives with identical name, size, and mtime.
+    O(delta) maintenance; a rebuild is O(corpus).  Only the 1-row
+    stats sidecar is rewritten, by design."""
     d = Catalog(spark, SF).documents
-    base = d.filter("doc_id % 10 <> 7")
-    delta = d.filter("doc_id % 10 = 7")
-    tmp = tempfile.mkdtemp(prefix="skyhook_txtinc_test_")
-    try:
-        _with_tok0(_postings(base)).withColumn(
-            "is_delta", F.lit(0).cast("int")
-        ).write.mode("overwrite").partitionBy("tok0").parquet(
-            f"{tmp}/postings"
-        )
-        before = _snapshot_parquet(f"{tmp}/postings")
-        _with_tok0(_postings(delta)).withColumn(
-            "is_delta", F.lit(1).cast("int")
-        ).write.mode("append").partitionBy("tok0").parquet(
-            f"{tmp}/postings"
-        )
-        after = _snapshot_parquet(f"{tmp}/postings")
-        assert set(before) <= set(after)  # strictly additive
-        assert len(after) > len(before)  # delta landed as new files
-        for f, meta in before.items():
+    tmp = str(tmp_path / "txtinc")
+    build_text_index(spark, d.filter("doc_id % 10 <> 7"), tmp)
+    before = _snapshot_parquet(tmp)
+    append_text_index(spark, d.filter("doc_id % 10 = 7"), tmp)
+    after = _snapshot_parquet(tmp)
+    for piece in ("postings", "dlens"):
+        new = {f for f in set(after) - set(before) if f.startswith(piece)}
+        assert new, f"delta landed no new {piece} files"
+    for f, meta in before.items():
+        if not f.startswith("stats"):
             assert after[f] == meta, f"base file rewritten: {f}"
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_frozen_tokenization_is_a_real_parameter(spark):
@@ -192,7 +183,7 @@ def test_stats_sidecar_roundtrips(spark, tmp_path):
     the corpus — the BM25 parameters the probe reads back instead of
     re-deriving from document bodies."""
     tmp = str(tmp_path / "txtidx")
-    build_text_index(spark, SF, tmp)
+    build_text_index(spark, Catalog(spark, SF).documents, tmp)
     stored = spark.read.parquet(f"{tmp}/stats").collect()
     d = Catalog(spark, SF).documents
     fresh = (
@@ -225,7 +216,7 @@ def test_hybrid_probe_plan_never_tokenizes_or_encodes(spark, tmp_path):
 
     tdir = str(tmp_path / "txt")
     sdir = str(tmp_path / "sig")
-    build_text_index(spark, SF, tdir)
+    build_text_index(spark, Catalog(spark, SF).documents, tdir)
     build_sig_index(spark, SF, sdir)
     e = Catalog(spark, SF).embeddings
     plan = explain_str(probe_hybrid_rrf(spark, tdir, sdir, e))
@@ -242,15 +233,15 @@ def test_hybrid_probe_candidate_pred_leaves_df_corpuswide(spark, tmp_path):
     (a property of the index), so scores for surviving docs are
     byte-identical with and without the exclusion."""
     tmp = str(tmp_path / "txtidx")
-    build_text_index(spark, SF, tmp)
+    build_text_index(spark, Catalog(spark, SF).documents, tmp)
     base = {
         r["doc_id"]: r["bm25"]
-        for r in probe_bm25(spark, tmp, k=50).collect()
+        for r in probe_bm25(spark, tmp, _BM25_TERMS, k=50).collect()
     }
     excl = {
         r["doc_id"]: r["bm25"]
         for r in probe_bm25(
-            spark, tmp, k=50, doc_pred="doc_id <> 0"
+            spark, tmp, _BM25_TERMS, k=50, doc_pred="doc_id <> 0"
         ).collect()
     }
     assert 0 not in excl
@@ -260,41 +251,36 @@ def test_hybrid_probe_candidate_pred_leaves_df_corpuswide(spark, tmp_path):
 
 def test_compacted_layout_answers_identically(spark, tmp_path):
     """Compaction must not change one answer: probe_bm25 over the
-    fragmented (base + appended delta) layout equals probe_bm25 over
-    the compacted rewrite, row for row — and the compacted layout
+    fragmented (base build + appended delta) index equals probe_bm25
+    over its compacted rewrite, row for row — and the compacted layout
     really is one file per tok0 directory."""
-    from skyhookdb_ceph_spark.queries.pipeline17 import (
-        _max_files_per_tok0,
-        _TXT_DELTA_PRED,
-    )
+    from skyhookdb_ceph_spark.queries.pipeline17 import _TXT_DELTA_PRED
 
     d = Catalog(spark, SF).documents
-    root = str(tmp_path / "cmp")
-    frag = f"{root}/postings"
-    _with_tok0(
-        _postings(d.filter(f"NOT ({_TXT_DELTA_PRED})"))
-    ).write.mode("overwrite").partitionBy("tok0").parquet(frag)
-    _with_tok0(
-        _postings(d.filter(_TXT_DELTA_PRED))
-    ).write.mode("append").partitionBy("tok0").parquet(frag)
-    comp = f"{root}/postings_compacted"
-    (
-        spark.read.parquet(frag)
-        .repartition("tok0")
-        .sortWithinPartitions("token", "doc_id")
-        .write.partitionBy("tok0")
-        .parquet(comp)
-    )
+    frag, comp = str(tmp_path / "frag"), str(tmp_path / "comp")
+    build_text_index(spark, d.filter(f"NOT ({_TXT_DELTA_PRED})"), frag)
+    append_text_index(spark, d.filter(_TXT_DELTA_PRED), frag)
+    compact(spark, frag, comp)
     assert _max_files_per_tok0(comp) == 1
     assert _max_files_per_tok0(frag) > 1
-    # identical probes: point both layouts at the same sidecars
-    build_text_index(spark, SF, f"{root}/full")
-    for tag, src in (("frag", frag), ("comp", comp)):
-        idxdir = f"{root}/idx_{tag}"
-        os.makedirs(idxdir)
-        os.symlink(src, f"{idxdir}/postings")
-        os.symlink(f"{root}/full/dlens", f"{idxdir}/dlens")
-        os.symlink(f"{root}/full/stats", f"{idxdir}/stats")
-    a = sorted(map(tuple, probe_bm25(spark, f"{root}/idx_frag").collect()))
-    b = sorted(map(tuple, probe_bm25(spark, f"{root}/idx_comp").collect()))
+    a = sorted(map(tuple, probe_bm25(spark, frag, _BM25_TERMS).collect()))
+    b = sorted(map(tuple, probe_bm25(spark, comp, _BM25_TERMS).collect()))
     assert a == b and len(a) == 10
+
+
+def test_index_format_lives_in_one_module():
+    """The Spark BM25 term, the tok0 key derivation and the compaction
+    sort are written once, in operators/text_index.py: no query module
+    keeps its own copy of the layout or the scorer.  (Oracle SQL spells
+    the term ``s.n_docs - df.df`` and is not matched.)"""
+    needles = (
+        r"(?<![.\w])n_docs - df\b|F\.col\(\"n_docs\"\) - F\.col\(\"df\"\)",
+        r'F\.substring\("token"',
+        r'sortWithinPartitions\("token"',
+    )
+    sites = collections.Counter()
+    for path in PKG.rglob("*.py"):
+        text = path.read_text()
+        for needle in needles:
+            sites[str(path.relative_to(PKG))] += len(re.findall(needle, text))
+    assert +sites == {"operators/text_index.py": 3}

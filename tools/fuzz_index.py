@@ -53,7 +53,6 @@ from __future__ import annotations
 
 import atexit
 import json
-import os
 import random
 import shutil
 import sys
@@ -143,12 +142,13 @@ _REBUILD_CACHE: dict[str, str] = {}
 
 
 def _rebuilt_index(spark, sf_dir: str) -> str:
-    from skyhookdb_ceph_spark.queries.pipeline17 import build_text_index
+    from skyhookdb_ceph_spark.operators.text_index import build_text_index
+    from skyhookdb_ceph_spark.queries._util import Catalog
 
     if sf_dir not in _REBUILD_CACHE:
         tmp = tempfile.mkdtemp(prefix="fuzzidx_full_")
         _SCRATCH.append(tmp)
-        build_text_index(spark, sf_dir, tmp)
+        build_text_index(spark, Catalog(spark, sf_dir).documents, tmp)
         _REBUILD_CACHE[sf_dir] = tmp
     return _REBUILD_CACHE[sf_dir]
 
@@ -196,51 +196,26 @@ def _duck_bm25(spec: IndexSpec, sf_dir: str) -> list[tuple]:
 
 
 def compare5(spec: IndexSpec, spark, sf_dir: str) -> str | None:
-    from pyspark.sql import functions as F
-
-    from skyhookdb_ceph_spark.queries._util import Catalog
-    from skyhookdb_ceph_spark.queries.pipeline17 import (
-        _dlens,
-        _postings,
-        _with_tok0,
+    from skyhookdb_ceph_spark.operators.text_index import (
         append_text_index,
+        build_text_index,
+        compact,
         probe_bm25,
     )
+    from skyhookdb_ceph_spark.queries._util import Catalog
 
     docs = Catalog(spark, sf_dir).documents
     delta_pred = f"doc_id % {spec.mod} = {spec.rem}"
     tmp = tempfile.mkdtemp(prefix="fuzzidx_")
     _SCRATCH.append(tmp)
     try:
-        # (A) lifecycle path: base build + append [+ compact].
-        # build_text_index reads the whole fixture, so the base index
-        # is built from the filtered frame via the same primitives.
-        a_dir = f"{tmp}/a"
-        base = docs.filter(f"NOT ({delta_pred})")
-        _with_tok0(_postings(base)).write.mode("overwrite").partitionBy(
-            "tok0"
-        ).parquet(f"{a_dir}/postings")
-        bdl = _dlens(base)
-        bdl.write.mode("overwrite").parquet(f"{a_dir}/dlens")
-        bdl.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
-        ).coalesce(1).write.mode("overwrite").parquet(f"{a_dir}/stats")
-        append_text_index(spark, docs.filter(delta_pred), a_dir)
-        probe_dir = a_dir
+        # (A) lifecycle path: base build + append [+ compact]
+        probe_dir = f"{tmp}/a"
+        build_text_index(spark, docs.filter(f"NOT ({delta_pred})"), probe_dir)
+        append_text_index(spark, docs.filter(delta_pred), probe_dir)
         if spec.kind == "append_compact":
-            comp = f"{tmp}/a_compacted"
-            os.makedirs(comp)
-            (
-                spark.read.parquet(f"{a_dir}/postings")
-                .repartition("tok0")
-                .sortWithinPartitions("token", "doc_id")
-                .write.partitionBy("tok0")
-                .parquet(f"{comp}/postings")
-            )
-            os.symlink(f"{a_dir}/dlens", f"{comp}/dlens")
-            os.symlink(f"{a_dir}/stats", f"{comp}/stats")
-            probe_dir = comp
+            compact(spark, probe_dir, f"{tmp}/a_compacted")
+            probe_dir = f"{tmp}/a_compacted"
 
         def run(path: str) -> list[tuple]:
             return [

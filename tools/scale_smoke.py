@@ -249,11 +249,12 @@ def _sig_index_dir(spark, sf_dir: str) -> str:
 
 
 def _text_index_dir(spark, sf_dir: str) -> str:
-    from skyhookdb_ceph_spark.queries.pipeline17 import build_text_index
+    from skyhookdb_ceph_spark.operators.text_index import build_text_index
+    from skyhookdb_ceph_spark.queries._util import Catalog
 
     if sf_dir not in _TEXT_INDEX_CACHE:
         tmp = _scratch_mkdtemp("ssmoke_txtidx_")
-        build_text_index(spark, sf_dir, tmp)
+        build_text_index(spark, Catalog(spark, sf_dir).documents, tmp)
         _TEXT_INDEX_CACHE[sf_dir] = tmp
     return _TEXT_INDEX_CACHE[sf_dir]
 
@@ -316,10 +317,11 @@ def sig_probe_2bit_fixedq(spark, sf_dir):
 def text_build(spark, sf_dir):
     """Inverted-index BUILD cost alone (tokenize + postings shuffle +
     partitioned write to a fresh dir)."""
-    from skyhookdb_ceph_spark.queries.pipeline17 import build_text_index
+    from skyhookdb_ceph_spark.operators.text_index import build_text_index
+    from skyhookdb_ceph_spark.queries._util import Catalog
 
     tmp = _scratch_mkdtemp("ssmoke_txtbuild_")
-    build_text_index(spark, sf_dir, tmp)
+    build_text_index(spark, Catalog(spark, sf_dir).documents, tmp)
     return spark.read.parquet(f"{tmp}/stats")
 
 
@@ -328,9 +330,10 @@ def text_probe_bm25(spark, sf_dir):
     sf_dir) — the per-query cost a deployment pays once the postings
     are persisted.  The query-term set is constant by construction,
     so this is already a fixed-|Q| curve."""
-    from skyhookdb_ceph_spark.queries.pipeline17 import probe_bm25
+    from skyhookdb_ceph_spark.operators.text_index import probe_bm25
+    from skyhookdb_ceph_spark.queries.pipeline3 import _BM25_TERMS
 
-    return probe_bm25(spark, _text_index_dir(spark, sf_dir))
+    return probe_bm25(spark, _text_index_dir(spark, sf_dir), _BM25_TERMS)
 
 
 _FRAG_TEXT_CACHE: dict[str, str] = {}
@@ -342,45 +345,22 @@ def _frag_text_dir(spark, sf_dir: str) -> str:
     layout a streaming ingest leaves behind (each append lands new
     row files in every touched tok0 directory).  Compacted twin
     under <dir>_c."""
-    from skyhookdb_ceph_spark.queries._util import Catalog
-    from skyhookdb_ceph_spark.queries.pipeline17 import (
-        _dlens,
-        _postings,
-        _with_tok0,
+    from skyhookdb_ceph_spark.operators.text_index import (
         append_text_index,
+        build_text_index,
+        compact,
     )
-    from pyspark.sql import functions as F
+    from skyhookdb_ceph_spark.queries._util import Catalog
 
     if sf_dir not in _FRAG_TEXT_CACHE:
         tmp = _scratch_mkdtemp("ssmoke_txtfrag_")
         docs = Catalog(spark, sf_dir).documents
-        base = docs.filter("doc_id % 8 = 0")
-        _with_tok0(_postings(base)).write.mode("overwrite").partitionBy(
-            "tok0"
-        ).parquet(f"{tmp}/postings")
-        bdl = _dlens(base)
-        bdl.write.mode("overwrite").parquet(f"{tmp}/dlens")
-        bdl.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
-        ).coalesce(1).write.mode("overwrite").parquet(f"{tmp}/stats")
+        build_text_index(spark, docs.filter("doc_id % 8 = 0"), tmp)
         for r in range(1, 8):
             append_text_index(
                 spark, docs.filter(f"doc_id % 8 = {r}"), tmp
             )
-        import os
-
-        comp = f"{tmp}_c"
-        os.makedirs(comp)
-        (
-            spark.read.parquet(f"{tmp}/postings")
-            .repartition("tok0")
-            .sortWithinPartitions("token", "doc_id")
-            .write.partitionBy("tok0")
-            .parquet(f"{comp}/postings")
-        )
-        os.symlink(f"{tmp}/dlens", f"{comp}/dlens")
-        os.symlink(f"{tmp}/stats", f"{comp}/stats")
+        compact(spark, tmp, f"{tmp}_c")
         _FRAG_TEXT_CACHE[sf_dir] = tmp
     return _FRAG_TEXT_CACHE[sf_dir]
 
@@ -390,17 +370,19 @@ def text_probe_frag8(spark, sf_dir):
     pays when compaction is skipped (same query as text_probe_bm25,
     different physical layout; the answer differs only because the
     index covers the same corpus assembled incrementally)."""
-    from skyhookdb_ceph_spark.queries.pipeline17 import probe_bm25
+    from skyhookdb_ceph_spark.operators.text_index import probe_bm25
+    from skyhookdb_ceph_spark.queries.pipeline3 import _BM25_TERMS
 
-    return probe_bm25(spark, _frag_text_dir(spark, sf_dir))
+    return probe_bm25(spark, _frag_text_dir(spark, sf_dir), _BM25_TERMS)
 
 
 def text_probe_compacted(spark, sf_dir):
     """BM25 probe over the compacted rewrite of the same 8-batch
     history — the payoff row for q_text_index_compact."""
-    from skyhookdb_ceph_spark.queries.pipeline17 import probe_bm25
+    from skyhookdb_ceph_spark.operators.text_index import probe_bm25
+    from skyhookdb_ceph_spark.queries.pipeline3 import _BM25_TERMS
 
-    return probe_bm25(spark, _frag_text_dir(spark, sf_dir) + "_c")
+    return probe_bm25(spark, _frag_text_dir(spark, sf_dir) + "_c", _BM25_TERMS)
 
 
 def hybrid_probe_rrf(spark, sf_dir):
