@@ -10,6 +10,12 @@ operations — no driver-side loops, no row-at-a-time Python UDFs:
   analog): its layout and lifecycle, build_text_index ->
   append_text_index -> compact, read by keyword_search and
   probe_bm25; bm25_search scores per execution with the same scorer
+- sig_index.py  — the one ANN signature index (1-bit sign + 2-bit
+  thermometer codes): its sigs/ + params/ layout and lifecycle,
+  build_sig_index -> append_sig_index (stored params), the inline
+  encoders fold_sigs / exploded_sigs, and the one cascade every tier
+  and recall audit runs: shortlist -> rerank (probe_binary,
+  probe_2bit), recall_at_k
 - asof.py       — as-of (nearest-timestamp) join
 - range_join.py — bucketed band/theta join (no nested-loop)
 - multimodal.py — opaque-binary columns + real WAV / PPM codecs

@@ -34,6 +34,11 @@ after §2.23.
    nested loop; the oracle runs the naive theta join (DuckDB IEJoin)
    to pin identical semantics.
 
+The 1-bit cascade behind q_sim_knn_binary, q_sim_maxsim_pruned,
+q_sim_binary_recall and q_sim_rerank_mmr's coarse stage (sign fold,
+Hamming shortlist, rerank, recall count) is operators/sig_index.py's;
+this module keeps the queries and their DuckDB oracles.
+
 House rules unchanged: identical aliases both sides, fixed fold
 order for float math, deterministic tie-breaks on every top-k, no
 all-pairs against the corpus (query sets are bounded + broadcast),
@@ -47,32 +52,25 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from skyhookdb_ceph_spark.operators import ensure_parallelism, map_rows, vectors
-from skyhookdb_ceph_spark.queries._util import Catalog, quantize
+from skyhookdb_ceph_spark.operators.sig_index import (
+    K,
+    NCAND,
+    fold_sigs,
+    probe_binary,
+    recall_at_k,
+    rerank,
+    shortlist,
+)
+from skyhookdb_ceph_spark.queries._util import Catalog
 from skyhookdb_ceph_spark.registry import query
 
 # ---------------------------------------------------------------------------
 # §2.24.1 binary-quantized ANN (Hamming coarse search + cosine rerank)
 # ---------------------------------------------------------------------------
 
-_NCAND = 100  # Hamming-stage survivors per query (see recall audit:
-# the r12 shipped point of 20 measured recall@5 = 0.37 on the
-# isotropic fixture — the r12 verdict's one QUALITY deficit; 100
-# measures 0.67 with the rerank still shortlist-bounded, +~2 ms/query)
-_KNN_K = 5  # final top-k
-
-
-def _sig_expr(col: str, lo: int, hi: int) -> str:
-    """Spark-side sign-bit packing of dims [lo, hi] into one BIGINT
-    (bit j set iff dim lo+j > 0).  Left-to-right fold, pure integer."""
-    return (
-        f"aggregate(sequence({lo}, {hi}), CAST(0 AS BIGINT), "
-        f"(acc, i) -> acc + IF(element_at({col}, i) > 0, "
-        f"shiftleft(CAST(1 AS BIGINT), i - {lo}), CAST(0 AS BIGINT)))"
-    )
-
-
 def _sig_duckdb(col: str, lo: int, hi: int) -> str:
-    """Oracle twin of _sig_expr: identical bit for identical input."""
+    """Oracle twin of sig_index._sig_expr: identical bit for identical
+    input."""
     return (
         f"CAST(list_aggregate(list_transform(generate_series({lo}, {hi}), "
         f"i -> CASE WHEN {col}[i] > 0 THEN (CAST(1 AS BIGINT) << (i - {lo})) "
@@ -107,13 +105,13 @@ rr AS (
   FROM cand c
   JOIN embeddings e ON e.vec_id = c.vec_id
   JOIN q ON q.qid = c.qid
-  WHERE c.cr <= {_NCAND}),
+  WHERE c.cr <= {NCAND}),
 rk AS (
   SELECT qid, vec_id, ham, sim,
     CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id)
       AS INT) AS rnk
   FROM rr)
-SELECT qid, vec_id, ham, sim, rnk FROM rk WHERE rnk <= {_KNN_K}
+SELECT qid, vec_id, ham, sim, rnk FROM rk WHERE rnk <= {K}
 """
 
 
@@ -127,7 +125,7 @@ def q_sim_knn_binary(spark, sf_dir):
     into two BIGINTs (16 bytes/vector — 16x smaller than float32), do
     the coarse search in Hamming space (bit_count(xor) — two CPU
     instructions per candidate, all JVM codegen), keep the top
-    _NCAND by (ham, vec_id), then rerank ONLY those survivors with
+    NCAND by (ham, vec_id), then rerank ONLY those survivors with
     the exact float cosine.  This is the cheapest tier of the modern
     vector-store cascade (binary quantization + rescore).
 
@@ -135,56 +133,16 @@ def q_sim_knn_binary(spark, sf_dir):
     (vec_id % 100 = 0, bounded) broadcasts, so the Hamming stage is a
     narrow broadcast cross-score carrying only (qid, vec_id, 2 sigs)
     — the float corpus NEVER moves.  The candidate window partitions
-    by qid; survivors (|Q| * _NCAND rows) join BACK to the corpus by
+    by qid; survivors (|Q| * NCAND rows) join BACK to the corpus by
     vec_id for the exact rerank, so full embeddings are read twice
     but shuffled never.  At 100 TB the signature column is the
     persisted index (16 bytes/row scans ~400x faster than re-reading
     text+floats) and Hamming top-k per partition is a k-heap —
-    TakeOrdered shape, no global sort."""
+    TakeOrdered shape, no global sort.  Both stages are sig_index's
+    (fold_sigs + probe_binary), the same probe the persisted tier
+    runs over a read-back index."""
     e = ensure_parallelism(Catalog(spark, sf_dir).embeddings)
-    sigs = e.selectExpr(
-        "vec_id",
-        f"{_sig_expr('embedding', 1, 32)} AS sig_lo",
-        f"{_sig_expr('embedding', 33, 64)} AS sig_hi",
-    )
-    q = (
-        sigs.filter("vec_id % 100 = 0")
-        .join(e.selectExpr("vec_id", "embedding AS qv"), "vec_id")
-        .selectExpr("vec_id AS qid", "qv", "sig_lo AS q_lo", "sig_hi AS q_hi")
-    )
-    ham = (
-        sigs.crossJoin(F.broadcast(q.drop("qv")))
-        .filter("vec_id <> qid")
-        .selectExpr(
-            "qid",
-            "vec_id",
-            "CAST(bit_count(sig_lo ^ q_lo) + bit_count(sig_hi ^ q_hi) "
-            "AS INT) AS ham",
-        )
-    )
-    wc = Window.partitionBy("qid").orderBy(F.asc("ham"), F.asc("vec_id"))
-    cand = (
-        ham.withColumn("cr", F.row_number().over(wc))
-        .filter(F.col("cr") <= _NCAND)
-        .drop("cr")
-    )
-    rr = (
-        cand.join(e.selectExpr("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(q.select("qid", "qv")), "qid")
-        .selectExpr(
-            "qid",
-            "vec_id",
-            "ham",
-            f"floor(({vectors.cosine_expr('embedding', 'qv')}) * 1000000"
-            " + 0.5) / 1000000 AS sim",
-        )
-    )
-    wr = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        rr.withColumn("rnk", F.row_number().over(wr).cast("int"))
-        .filter(F.col("rnk") <= _KNN_K)
-        .select("qid", "vec_id", "ham", "sim", "rnk")
-    )
+    return probe_binary(e, fold_sigs(e))
 
 
 # ---------------------------------------------------------------------------
@@ -234,7 +192,7 @@ rk AS (
     CAST(row_number() OVER (PARTITION BY qid ORDER BY score DESC, vec_id)
       AS INT) AS rnk
   FROM sc)
-SELECT qid, vec_id, score, rnk FROM rk WHERE rnk <= {_KNN_K}
+SELECT qid, vec_id, score, rnk FROM rk WHERE rnk <= {K}
 """
 
 
@@ -277,7 +235,7 @@ def q_sim_maxsim(spark, sf_dir):
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("vec_id"))
     return (
         sc.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= _KNN_K)
+        .filter(F.col("rnk") <= K)
         .select("qid", "vec_id", "score", "rnk")
     )
 
@@ -930,11 +888,6 @@ def q_dedup_phash(spark, sf_dir):
 # §2.24.9 the PLAID cascade composed: binary coarse pass -> MaxSim rerank
 # ---------------------------------------------------------------------------
 
-_CASCADE_SHORTLIST = 100  # Hamming-stage survivors fed to MaxSim —
-# widened 50 -> 100 alongside _NCAND (r13): the coarse pass is the
-# recall bottleneck (q_sim_binary_recall's curve), and the MaxSim
-# rerank on 100 rows/query is still corpus-independent constant work
-
 _MAXSIM_PRUNED_ORACLE = f"""
 WITH s AS (
   SELECT vec_id,
@@ -962,13 +915,13 @@ rr AS (
   FROM cand c
   JOIN embeddings e ON e.vec_id = c.vec_id
   JOIN q ON q.qid = c.qid
-  WHERE c.cr <= {_CASCADE_SHORTLIST}),
+  WHERE c.cr <= {NCAND}),
 rk AS (
   SELECT qid, vec_id, ham, score,
     CAST(row_number() OVER (PARTITION BY qid ORDER BY score DESC, vec_id)
       AS INT) AS rnk
   FROM rr)
-SELECT qid, vec_id, ham, score, rnk FROM rk WHERE rnk <= {_KNN_K}
+SELECT qid, vec_id, ham, score, rnk FROM rk WHERE rnk <= {K}
 """
 
 
@@ -980,64 +933,29 @@ SELECT qid, vec_id, ham, score, rnk FROM rk WHERE rnk <= {_KNN_K}
 def q_sim_maxsim_pruned(spark, sf_dir):
     """The PLAID-style retrieval CASCADE composed as one operator:
     the binary-signature Hamming pass (q_sim_knn_binary's coarse
-    stage) shortlists _CASCADE_SHORTLIST candidates per query, and
+    stage) shortlists NCAND (100) candidates per query, and
     MaxSim late-interaction scoring (q_sim_maxsim's expression) runs
     ONLY on the shortlist for the final top-k.  This is the
     production shape the two component operators' scale curves point
     at (BASELINE §L.8): brute-force MaxSim is linear-in-corpus per
     query (451 ms/query at 100x), while here the expensive scorer
     touches a corpus-independent shortlist — per-query cost is the
-    cheap bit-parallel scan plus a CONSTANT 50-row rerank.
+    cheap bit-parallel scan plus a CONSTANT 100-row rerank (the
+    shortlist was widened 50 -> 100 with the 1-bit tier's in r13:
+    the coarse pass is the recall bottleneck).
 
     Plan shape: identical coarse stage to q_sim_knn_binary (signature
     projection, broadcast query set, narrow Hamming cross-score,
     qid-partitioned candidate window), then the shortlist joins BACK
     to the corpus by vec_id and the 16-fold MaxSim expression runs on
-    |Q| x 50 rows.  Shared helpers (_sig_expr / _maxsim) make
-    cascade-vs-component drift impossible."""
+    |Q| x 100 rows.  Shared helpers (sig_index.shortlist / rerank,
+    _maxsim) make cascade-vs-component drift impossible."""
     e = ensure_parallelism(Catalog(spark, sf_dir).embeddings)
-    sigs = e.selectExpr(
-        "vec_id",
-        f"{_sig_expr('embedding', 1, 32)} AS sig_lo",
-        f"{_sig_expr('embedding', 33, 64)} AS sig_hi",
-    )
-    q = (
-        sigs.filter("vec_id % 100 = 0")
-        .join(e.selectExpr("vec_id", "embedding AS qv"), "vec_id")
-        .selectExpr("vec_id AS qid", "qv", "sig_lo AS q_lo", "sig_hi AS q_hi")
-    )
-    ham = (
-        sigs.crossJoin(F.broadcast(q.drop("qv")))
-        .filter("vec_id <> qid")
-        .selectExpr(
-            "qid",
-            "vec_id",
-            "CAST(bit_count(sig_lo ^ q_lo) + bit_count(sig_hi ^ q_hi) "
-            "AS INT) AS ham",
-        )
-    )
-    wc = Window.partitionBy("qid").orderBy(F.asc("ham"), F.asc("vec_id"))
-    cand = (
-        ham.withColumn("cr", F.row_number().over(wc))
-        .filter(F.col("cr") <= _CASCADE_SHORTLIST)
-        .drop("cr")
-    )
-    rr = (
-        cand.join(e.selectExpr("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(q.select("qid", "qv")), "qid")
-        .selectExpr(
-            "qid",
-            "vec_id",
-            "ham",
-            f"floor(({_maxsim('qv', 'embedding', False)}) * 1000000 + 0.5)"
-            " / 1000000 AS score",
-        )
-    )
-    wr = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        rr.withColumn("rnk", F.row_number().over(wr).cast("int"))
-        .filter(F.col("rnk") <= _KNN_K)
-        .select("qid", "vec_id", "ham", "score", "rnk")
+    return rerank(
+        e,
+        *shortlist(e, fold_sigs(e)),
+        score_sql=_maxsim("qv", "embedding", False),
+        score="score",
     )
 
 
@@ -1063,7 +981,7 @@ exact AS (
         floor(({vectors.cosine_duckdb('d.embedding', 'q.qv')})
           * 1000000 + 0.5) / 1000000 DESC, d.vec_id) AS rnk
     FROM embeddings d, q WHERE d.vec_id <> q.qid)
-  WHERE rnk <= {_KNN_K}),
+  WHERE rnk <= {K}),
 h AS (
   SELECT q.qid, s.vec_id,
     CAST(bit_count(xor(s.sig_lo, q.q_lo))
@@ -1074,7 +992,7 @@ cand AS (
     SELECT qid, vec_id,
       row_number() OVER (PARTITION BY qid ORDER BY ham, vec_id) AS cr
     FROM h)
-  WHERE cr <= {_NCAND}),
+  WHERE cr <= {NCAND}),
 approx AS (
   SELECT qid, vec_id FROM (
     SELECT c.qid, c.vec_id,
@@ -1084,10 +1002,10 @@ approx AS (
     FROM cand c
     JOIN embeddings e ON e.vec_id = c.vec_id
     JOIN q ON q.qid = c.qid)
-  WHERE rnk <= {_KNN_K})
+  WHERE rnk <= {K})
 SELECT exact.qid,
   CAST(count(approx.vec_id) AS BIGINT) AS n_hits,
-  floor(CAST(count(approx.vec_id) AS DOUBLE) / {_KNN_K} * 1000000 + 0.5)
+  floor(CAST(count(approx.vec_id) AS DOUBLE) / {K} * 1000000 + 0.5)
     / 1000000 AS recall
 FROM exact LEFT JOIN approx
   ON approx.qid = exact.qid AND approx.vec_id = exact.vec_id
@@ -1103,15 +1021,16 @@ GROUP BY exact.qid
 def q_sim_binary_recall(spark, sf_dir):
     """Recall audit for the binary-quantized cascade — the accuracy
     half of the story whose speed half is measured in BASELINE §L.8:
-    per query, recall@{_KNN_K} of q_sim_knn_binary's answer (Hamming
-    top-{_NCAND} shortlist + exact cosine rerank) against the exact
-    brute-force cosine top-{_KNN_K} ground truth.  Same audit pattern
+    per query, recall@5 of q_sim_knn_binary's answer (Hamming
+    top-100 shortlist + exact cosine rerank) against the exact
+    brute-force cosine top-5 ground truth.  Same audit pattern
     as q_dedup_minhash_recall (measure the production approximation
     against an exact reference inside the engine, never trust the
     sketch on faith).
 
-    Both paths reuse the cascade's shared signature/window helpers so
-    the audit measures the SHIPPED operator, not a reimplementation.
+    Both paths are sig_index's (shortlist + recall_at_k, whose approx
+    leg is the shipped rerank) so the audit measures the SHIPPED
+    operator, not a reimplementation.
     The ground-truth pass is brute-force over the bounded broadcast
     query set (the same |Q| x corpus narrow cross-score shape); at
     100 TB the audit runs on a corpus-scaled SAMPLE of queries the
@@ -1130,85 +1049,10 @@ def q_sim_binary_recall(spark, sf_dir):
     anisotropic and quantize far better, but the audit exists
     precisely so a deployment MEASURES its own corpus instead of
     trusting that sentence.  Per-query cost stays shortlist-bounded:
-    the rerank touches exactly _NCAND corpus rows per query whatever
+    the rerank touches exactly NCAND corpus rows per query whatever
     the corpus size (delta measured in BASELINE §L.8-r13)."""
     e = ensure_parallelism(Catalog(spark, sf_dir).embeddings)
-    sigs = e.selectExpr(
-        "vec_id",
-        f"{_sig_expr('embedding', 1, 32)} AS sig_lo",
-        f"{_sig_expr('embedding', 33, 64)} AS sig_hi",
-    )
-    q = (
-        sigs.filter("vec_id % 100 = 0")
-        .join(e.selectExpr("vec_id", "embedding AS qv"), "vec_id")
-        .selectExpr("vec_id AS qid", "qv", "sig_lo AS q_lo", "sig_hi AS q_hi")
-    )
-    wr = Window.partitionBy("qid")
-    exact = (
-        e.crossJoin(F.broadcast(q.select("qid", "qv")))
-        .filter("vec_id <> qid")
-        .selectExpr(
-            "qid",
-            "vec_id",
-            f"floor(({vectors.cosine_expr('embedding', 'qv')}) * 1000000"
-            " + 0.5) / 1000000 AS sim",
-        )
-        .withColumn(
-            "rnk",
-            F.row_number().over(wr.orderBy(F.desc("sim"), F.asc("vec_id"))),
-        )
-        .filter(F.col("rnk") <= _KNN_K)
-        .select("qid", "vec_id")
-    )
-    ham = (
-        sigs.crossJoin(F.broadcast(q.drop("qv")))
-        .filter("vec_id <> qid")
-        .selectExpr(
-            "qid",
-            "vec_id",
-            "CAST(bit_count(sig_lo ^ q_lo) + bit_count(sig_hi ^ q_hi) "
-            "AS INT) AS ham",
-        )
-    )
-    cand = (
-        ham.withColumn(
-            "cr",
-            F.row_number().over(wr.orderBy(F.asc("ham"), F.asc("vec_id"))),
-        )
-        .filter(F.col("cr") <= _NCAND)
-        .select("qid", "vec_id")
-    )
-    approx = (
-        cand.join(e.selectExpr("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(q.select("qid", "qv")), "qid")
-        .selectExpr(
-            "qid",
-            "vec_id",
-            f"floor(({vectors.cosine_expr('embedding', 'qv')}) * 1000000"
-            " + 0.5) / 1000000 AS sim",
-        )
-        .withColumn(
-            "rnk",
-            F.row_number().over(wr.orderBy(F.desc("sim"), F.asc("vec_id"))),
-        )
-        .filter(F.col("rnk") <= _KNN_K)
-        .selectExpr("qid AS aqid", "vec_id AS avid")
-    )
-    return (
-        exact.join(
-            approx,
-            (F.col("qid") == F.col("aqid")) & (F.col("vec_id") == F.col("avid")),
-            "left",
-        )
-        .groupBy("qid")
-        .agg(
-            F.count("avid").cast("bigint").alias("n_hits"),
-            F.expr(
-                f"floor(CAST(count(avid) AS DOUBLE) / {_KNN_K} * 1000000"
-                " + 0.5) / 1000000"
-            ).alias("recall"),
-        )
-    )
+    return recall_at_k(e, *shortlist(e, fold_sigs(e)))
 
 
 # ---------------------------------------------------------------------------
@@ -1222,7 +1066,7 @@ _MMR_MU = 0.3  # redundancy weight — a LITERAL, not 1-lambda: Python's
 # sf0.1 (found by the oracle diff); both engines now share the exact
 # same double constant
 _MMR_K = 5  # selections per query
-_MMR_NCAND = 20  # MMR shortlist width — deliberately NOT _NCAND: the
+_MMR_NCAND = 20  # MMR shortlist width — deliberately NOT NCAND: the
 # diversification fold is O(shortlist^2) pairwise cosines inside the
 # Arrow group, so its designed group size (20 rows, plan-asserted)
 # stays fixed while the cascade's recall-driven shortlist widens
@@ -1340,35 +1184,10 @@ def q_sim_rerank_mmr(spark, sf_dir):
     from pyspark.sql import types as T
 
     e = ensure_parallelism(Catalog(spark, sf_dir).embeddings)
-    sigs = e.selectExpr(
-        "vec_id",
-        f"{_sig_expr('embedding', 1, 32)} AS sig_lo",
-        f"{_sig_expr('embedding', 33, 64)} AS sig_hi",
-    )
-    q = (
-        sigs.filter("vec_id % 100 = 0")
-        .join(e.selectExpr("vec_id", "embedding AS qv"), "vec_id")
-        .selectExpr("vec_id AS qid", "qv", "sig_lo AS q_lo", "sig_hi AS q_hi")
-    )
-    ham = (
-        sigs.crossJoin(F.broadcast(q.drop("qv")))
-        .filter("vec_id <> qid")
-        .selectExpr(
-            "qid",
-            "vec_id",
-            "CAST(bit_count(sig_lo ^ q_lo) + bit_count(sig_hi ^ q_hi) "
-            "AS INT) AS ham",
-        )
-    )
-    wc = Window.partitionBy("qid").orderBy(F.asc("ham"), F.asc("vec_id"))
-    cand = (
-        ham.withColumn("cr", F.row_number().over(wc))
-        .filter(F.col("cr") <= _MMR_NCAND)
-        .select("qid", "vec_id")
-    )
+    q, cand = shortlist(e, fold_sigs(e), ncand=_MMR_NCAND)
     rel = (
         cand.join(e.selectExpr("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(q.select("qid", "qv")), "qid")
+        .join(F.broadcast(q), "qid")
         .selectExpr(
             "qid",
             "vec_id",

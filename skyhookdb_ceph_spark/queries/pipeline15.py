@@ -21,6 +21,9 @@ Closing the r12 verdict's remaining surface items:
    Closes the recall ladder the r12 verdict asked for: 0.92 recall@5
    at the same shortlist-100 budget where the 1-bit tier measures
    0.67 (audited by q_sim_2bit_recall, the third recall audit).
+   The encode, the L1 shortlist, the rerank and the recall count are
+   operators/sig_index.py's; this module keeps the queries and their
+   DuckDB oracles.
 
 House rules unchanged: identical aliases both sides, deterministic
 everything, no all-pairs, no corpus-sized collect().
@@ -30,6 +33,18 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from skyhookdb_ceph_spark.operators import ensure_parallelism, vectors
+from skyhookdb_ceph_spark.operators.sig_index import (
+    _PLANES,
+    _TQ,
+    _VQ,
+    K,
+    NCAND,
+    exploded_sigs,
+    probe_2bit,
+    recall_at_k,
+    shortlist,
+)
 from skyhookdb_ceph_spark.queries._util import Catalog
 from skyhookdb_ceph_spark.registry import query
 
@@ -121,9 +136,6 @@ def q_sql_empty_rollup(spark, sf_dir):
 # §2.25.2-3 two-bit thermometer-code ANN tier + its recall audit
 # ---------------------------------------------------------------------------
 
-_NCAND2 = 100  # coarse survivors per query (same budget as the 1-bit tier)
-_KNN_K2 = 5
-
 # Thermometer (unary) encoding: per dim, three bits b_k = (v > t_k)
 # against the per-dim quartiles t1 < t2 < t3, one bit PLANE per
 # quartile.  L1 distance between the 2-bit quantized levels equals
@@ -133,47 +145,32 @@ _KNN_K2 = 5
 # bit_count(xor) per plane-half — exactly like the 1-bit tier, at 3x
 # the index bytes (6 BIGINTs = 48 B/vector vs 16).
 #
-# Both engines quantize values AND thresholds to the 1e-6 grid before
-# the > comparison, so a value within float-noise of a quartile can't
-# flip a bit on one engine only; the thresholds themselves agree
+# The oracle encodes with its own DuckDB twins of the planes and the
+# L1 scan below; the 1e-6 grid templates (_VQ, _TQ) and the plane
+# order are the index's (operators/sig_index.py).  The thresholds agree
 # because Spark percentile() and DuckDB quantile_cont() share the
 # linear-interpolation definition and any last-ulp drift collapses
 # under the same quantization (verified cell-exact on the fixture).
 
-_VQ = "floor(CAST({v} AS DOUBLE) * 1000000 + 0.5) / 1000000"
-_TQ = "floor({fn}({arg}, {p}) * 1000000 + 0.5) / 1000000"
 
-
-def _plane_expr(k: int, half: str, duck: bool) -> str:
+def _plane_expr(k: int, half: str) -> str:
     """One packed plane-half: bit (pos-1)%32 set iff v_q > t_k."""
     lo, hi = (1, 32) if half == "l" else (33, 64)
-    shift = (
-        f"(CAST(1 AS BIGINT) << (pos - {lo}))"
-        if duck
-        else f"shiftleft(CAST(1 AS BIGINT), pos - {lo})"
-    )
     return (
         f"CAST(sum(CASE WHEN pos BETWEEN {lo} AND {hi} AND v > t{k} "
-        f"THEN {shift} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS p{k}{half}"
+        f"THEN (CAST(1 AS BIGINT) << (pos - {lo})) ELSE CAST(0 AS BIGINT) "
+        f"END) AS BIGINT) AS p{k}{half}"
     )
 
 
-_PLANES = [(k, h) for k in (1, 2, 3) for h in ("l", "h")]
-
-
-def _l1_expr(duck: bool) -> str:
+def _l1_expr() -> str:
     # DuckDB's bit_count returns INT8 and + propagates it, so the
     # six-term chain overflows once a partial sum passes 127 — the
     # isotropic fixture stays under by luck, a clustered corpus does
     # not (found by q_sim_recall_clustered, r14).  Cast each term.
-    xor = (lambda a, b: f"xor({a}, {b})") if duck else (
-        lambda a, b: f"{a} ^ {b}"
-    )
-    term = (
-        "CAST(bit_count({x}) AS BIGINT)" if duck else "bit_count({x})"
-    )
     return " + ".join(
-        term.format(x=xor(f"s.p{k}{h}", f"q.q{k}{h}")) for k, h in _PLANES
+        f"CAST(bit_count(xor(s.p{k}{h}, q.q{k}{h})) AS BIGINT)"
+        for k, h in _PLANES
     )
 
 
@@ -196,7 +193,7 @@ thr AS (
   FROM ex
   GROUP BY pos),
 s AS (
-  SELECT vec_id, {', '.join(_plane_expr(k, h, True) for k, h in _PLANES)}
+  SELECT vec_id, {', '.join(_plane_expr(k, h) for k, h in _PLANES)}
   FROM ex JOIN thr USING (pos) GROUP BY vec_id),
 q AS (
   SELECT s.vec_id AS qid, e.embedding AS qv,
@@ -205,7 +202,7 @@ q AS (
   WHERE s.vec_id % 100 = 0),
 h AS (
   SELECT q.qid, s.vec_id,
-    CAST({_l1_expr(True)} AS INT) AS l1
+    CAST({_l1_expr()} AS INT) AS l1
   FROM s, q WHERE s.vec_id <> q.qid)
 """
 
@@ -221,97 +218,14 @@ rr AS (
   FROM cand c
   JOIN embeddings e ON e.vec_id = c.vec_id
   JOIN q ON q.qid = c.qid
-  WHERE c.cr <= {_NCAND2}),
+  WHERE c.cr <= {NCAND}),
 rk AS (
   SELECT qid, vec_id, l1, sim,
     CAST(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id)
       AS INT) AS rnk
   FROM rr)
-SELECT qid, vec_id, l1, sim, rnk FROM rk WHERE rnk <= {_KNN_K2}
+SELECT qid, vec_id, l1, sim, rnk FROM rk WHERE rnk <= {K}
 """
-
-
-def _sig2_df(spark, sf_dir):
-    """Spark twin of the thr/ex/s CTE chain: (vec_id, 6 plane-halves).
-
-    One posexplode pass builds the quantized (vec_id, pos, v) rows;
-    the per-dim quartile table (64 rows) is a broadcast join; packing
-    is a vec_id-keyed aggregation of shiftleft contributions — all
-    JVM, no UDF.  At 100 TB the 48-byte signature table is the
-    persisted index (the threshold probe runs once at index build,
-    exactly like the IVF layout's measured planner)."""
-    from pyspark.sql import functions as F
-
-    from skyhookdb_ceph_spark.operators import ensure_parallelism
-    from skyhookdb_ceph_spark.queries._util import Catalog
-
-    e = ensure_parallelism(Catalog(spark, sf_dir).embeddings)
-    ex = e.select(
-        "vec_id", F.posexplode("embedding").alias("pos0", "valf")
-    ).selectExpr("vec_id", "pos0 + 1 AS pos", _VQ.format(v="valf") + " AS v")
-    thr = (
-        ex.groupBy("pos")
-        .agg(
-            *[
-                F.expr(
-                    _TQ.format(fn="percentile", arg="v", p=p)
-                ).alias(f"t{k}")
-                for k, p in ((1, 0.25), (2, 0.50), (3, 0.75))
-            ]
-        )
-    )
-    return (
-        ex.join(F.broadcast(thr), "pos")
-        .groupBy("vec_id")
-        .agg(
-            *[
-                F.expr(
-                    _plane_expr(k, h, False).rsplit(" AS ", 1)[0]
-                ).alias(f"p{k}{h}")
-                for k, h in _PLANES
-            ]
-        )
-    )
-
-
-def _knn_2bit_parts(spark, sf_dir):
-    """Shared coarse stage for the 2-bit tier and its recall audit:
-    returns (e, sigs, q, cand) — corpus, signatures, broadcast query
-    set, and the L1 shortlist."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from skyhookdb_ceph_spark.operators import ensure_parallelism
-    from skyhookdb_ceph_spark.queries._util import Catalog
-
-    e = ensure_parallelism(Catalog(spark, sf_dir).embeddings)
-    sigs = _sig2_df(spark, sf_dir)
-    q = (
-        sigs.filter("vec_id % 100 = 0")
-        .join(e.selectExpr("vec_id", "embedding AS qv"), "vec_id")
-        .selectExpr(
-            "vec_id AS qid",
-            "qv",
-            *[f"p{k}{h} AS q{k}{h}" for k, h in _PLANES],
-        )
-    )
-    l1 = _l1_expr(False)
-    for k, h in _PLANES:
-        l1 = l1.replace(f"s.p{k}{h}", f"p{k}{h}").replace(
-            f"q.q{k}{h}", f"q{k}{h}"
-        )
-    ham = (
-        sigs.crossJoin(F.broadcast(q.drop("qv")))
-        .filter("vec_id <> qid")
-        .selectExpr("qid", "vec_id", f"CAST({l1} AS INT) AS l1")
-    )
-    wc = Window.partitionBy("qid").orderBy(F.asc("l1"), F.asc("vec_id"))
-    cand = (
-        ham.withColumn("cr", F.row_number().over(wc))
-        .filter(F.col("cr") <= _NCAND2)
-        .drop("cr")
-    )
-    return e, sigs, q, cand
 
 
 # Formatted once: also the oracle of the persisted-index probe
@@ -360,35 +274,14 @@ def q_sim_knn_2bit(spark, sf_dir):
     (one posexplode pass + broadcast 64-row threshold join + keyed
     packing aggregation, all JVM), bounded query set broadcasts, the
     float corpus never rides the coarse cross-score, candidates
-    re-enter by vec_id equi-join for the exact rerank."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from skyhookdb_ceph_spark.operators import vectors
-
-    e, _sigs, q, cand = _knn_2bit_parts(spark, sf_dir)
-    rr = (
-        cand.join(e.selectExpr("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(q.select("qid", "qv")), "qid")
-        .selectExpr(
-            "qid",
-            "vec_id",
-            "l1",
-            f"floor(({vectors.cosine_expr('embedding', 'qv')}) * 1000000"
-            " + 0.5) / 1000000 AS sim",
-        )
-    )
-    wr = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        rr.withColumn("rnk", F.row_number().over(wr).cast("int"))
-        .filter(F.col("rnk") <= _KNN_K2)
-        .select("qid", "vec_id", "l1", "sim", "rnk")
-    )
+    re-enter by vec_id equi-join for the exact rerank.  The encode is
+    sig_index.exploded_sigs and the cascade its probe_2bit — the same
+    probe the persisted tier runs over a read-back index."""
+    e = ensure_parallelism(Catalog(spark, sf_dir).embeddings)
+    return probe_2bit(e, exploded_sigs(e))
 
 
 def _bit2_recall_oracle() -> str:
-    from skyhookdb_ceph_spark.operators import vectors
-
     qz = "floor(({e}) * 1000000 + 0.5) / 1000000"
     exact_cos = qz.format(e=vectors.cosine_duckdb("d.embedding", "q.qv"))
     rr_cos = qz.format(e=vectors.cosine_duckdb("e.embedding", "q.qv"))
@@ -400,13 +293,13 @@ exact AS (
       row_number() OVER (PARTITION BY q.qid ORDER BY
         {exact_cos} DESC, d.vec_id) AS rnk
     FROM embeddings d, q WHERE d.vec_id <> q.qid)
-  WHERE rnk <= {_KNN_K2}),
+  WHERE rnk <= {K}),
 cand AS (
   SELECT qid, vec_id FROM (
     SELECT qid, vec_id,
       row_number() OVER (PARTITION BY qid ORDER BY l1, vec_id) AS cr
     FROM h)
-  WHERE cr <= {_NCAND2}),
+  WHERE cr <= {NCAND}),
 approx AS (
   SELECT qid, vec_id FROM (
     SELECT c.qid, c.vec_id,
@@ -415,10 +308,10 @@ approx AS (
     FROM cand c
     JOIN embeddings e ON e.vec_id = c.vec_id
     JOIN q ON q.qid = c.qid)
-  WHERE rnk <= {_KNN_K2})
+  WHERE rnk <= {K})
 SELECT exact.qid,
   CAST(count(approx.vec_id) AS BIGINT) AS n_hits,
-  floor(CAST(count(approx.vec_id) AS DOUBLE) / {_KNN_K2} * 1000000 + 0.5)
+  floor(CAST(count(approx.vec_id) AS DOUBLE) / {K} * 1000000 + 0.5)
     / 1000000 AS recall
 FROM exact LEFT JOIN approx
   ON approx.qid = exact.qid AND approx.vec_id = exact.vec_id
@@ -445,61 +338,8 @@ def q_sim_2bit_recall(spark, sf_dir):
     for 3x the index bytes and identical scan instructions.  The
     recall LADDER a deployment now tunes on its own corpus:
     1-bit/shortlist-20 0.37 -> 1-bit/100 0.67 -> 2-bit/100 0.92 ->
-    wider shortlists / exact.  Both paths reuse the shipped
-    operator's shared helpers (_knn_2bit_parts), so the audit
+    wider shortlists / exact.  Both paths are the shipped
+    operator's (sig_index.shortlist + recall_at_k), so the audit
     measures the production cascade, not a reimplementation."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from skyhookdb_ceph_spark.operators import vectors
-
-    e, _sigs, q, cand = _knn_2bit_parts(spark, sf_dir)
-    wr = Window.partitionBy("qid")
-    exact = (
-        e.crossJoin(F.broadcast(q.select("qid", "qv")))
-        .filter("vec_id <> qid")
-        .selectExpr(
-            "qid",
-            "vec_id",
-            f"floor(({vectors.cosine_expr('embedding', 'qv')}) * 1000000"
-            " + 0.5) / 1000000 AS sim",
-        )
-        .withColumn(
-            "rnk",
-            F.row_number().over(wr.orderBy(F.desc("sim"), F.asc("vec_id"))),
-        )
-        .filter(F.col("rnk") <= _KNN_K2)
-        .select("qid", "vec_id")
-    )
-    approx = (
-        cand.join(e.selectExpr("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(q.select("qid", "qv")), "qid")
-        .selectExpr(
-            "qid",
-            "vec_id",
-            f"floor(({vectors.cosine_expr('embedding', 'qv')}) * 1000000"
-            " + 0.5) / 1000000 AS sim",
-        )
-        .withColumn(
-            "rnk",
-            F.row_number().over(wr.orderBy(F.desc("sim"), F.asc("vec_id"))),
-        )
-        .filter(F.col("rnk") <= _KNN_K2)
-        .selectExpr("qid AS aqid", "vec_id AS avid")
-    )
-    return (
-        exact.join(
-            approx,
-            (F.col("qid") == F.col("aqid"))
-            & (F.col("vec_id") == F.col("avid")),
-            "left",
-        )
-        .groupBy("qid")
-        .agg(
-            F.count("avid").cast("bigint").alias("n_hits"),
-            F.expr(
-                f"floor(CAST(count(avid) AS DOUBLE) / {_KNN_K2} * 1000000"
-                " + 0.5) / 1000000"
-            ).alias("recall"),
-        )
-    )
+    e = ensure_parallelism(Catalog(spark, sf_dir).embeddings)
+    return recall_at_k(e, *shortlist(e, exploded_sigs(e), "l1"))

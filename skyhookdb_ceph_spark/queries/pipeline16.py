@@ -32,6 +32,11 @@ signature tiers the same lifecycle the IVF layout already has
    in both engines) re-runs the 1-bit and 2-bit audits at the same
    shortlist budget, giving the ladder its realistic column.
 
+The index itself — both encoders, the sigs/ + params/ layout,
+build_sig_index / append_sig_index, the shortlist-and-rerank cascade
+and the recall count — lives in operators/sig_index.py; this module
+keeps the queries that run it and their DuckDB oracles.
+
 Scale story (the reason this wave exists): at 100 TB the coarse scan
 of a probe reads 16-48 B/vector from the persisted index instead of
 re-reading 256 B of floats AND paying the encode (for the 2-bit tier,
@@ -50,223 +55,32 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from skyhookdb_ceph_spark.operators import ensure_parallelism, vectors
+from skyhookdb_ceph_spark.operators.sig_index import (
+    _PLANES,
+    _VQ,
+    K,
+    NCAND,
+    append_sig_index,
+    build_sig_index,
+    exploded_sigs,
+    probe_2bit,
+    probe_binary,
+    recall_at_k,
+    shortlist,
+)
 from skyhookdb_ceph_spark.operators.text_index import bm25_search
 from skyhookdb_ceph_spark.queries._util import Catalog, collect_local, scratch
 from skyhookdb_ceph_spark.queries.pipeline14 import (
     _KNN_BINARY_ORACLE,
-    _KNN_K,
-    _NCAND,
     _sig_duckdb,
 )
 from skyhookdb_ceph_spark.queries.pipeline15 import (
     _KNN_2BIT_ORACLE_SQL,
-    _KNN_K2,
-    _NCAND2,
-    _PLANES,
     _THR_DUCK,
-    _TQ,
-    _VQ,
     _l1_expr,
     _plane_expr,
 )
 from skyhookdb_ceph_spark.registry import query
-
-# ---------------------------------------------------------------------------
-# shared encode machinery (build-time only — probes never run these)
-# ---------------------------------------------------------------------------
-
-_PLANE_COLS = [f"p{k}{h}" for k, h in _PLANES]
-_SIG_COLS = ["sig_lo", "sig_hi", *_PLANE_COLS]
-
-
-def _pack1_expr(lo: int, hi: int, duck: bool) -> str:
-    """1-bit sign packing in the EXPLODED form (bit pos-lo set iff the
-    raw value > 0) — bit-identical to pipeline14's per-row fold
-    (_sig_expr) and its oracle twin (_sig_duckdb)."""
-    shift = (
-        f"(CAST(1 AS BIGINT) << (pos - {lo}))"
-        if duck
-        else f"shiftleft(CAST(1 AS BIGINT), pos - {lo})"
-    )
-    return (
-        f"CAST(sum(CASE WHEN pos BETWEEN {lo} AND {hi} AND valf > 0 "
-        f"THEN {shift} ELSE CAST(0 AS BIGINT) END) AS BIGINT)"
-    )
-
-
-def _exploded(e, col: str = "embedding"):
-    """(vec_id, pos, valf raw, v quantized) — one posexplode pass; the
-    raw value feeds the 1-bit sign packing, the 1e-6-quantized value
-    feeds the thermometer thresholds and plane bits (both engines
-    quantize before the > comparison, the r13 parity rule)."""
-    return e.select(
-        "vec_id", F.posexplode(col).alias("pos0", "valf")
-    ).selectExpr(
-        "vec_id", "pos0 + 1 AS pos", "valf", _VQ.format(v="valf") + " AS v"
-    )
-
-
-def _thresholds(ex):
-    """Per-dim quartile table (64 rows) — the index PARAMETERS.
-    Computed once at build time from the cohort the caller chooses;
-    incremental appends must reuse the frozen table, never re-derive."""
-    return ex.groupBy("pos").agg(
-        *[
-            F.expr(_TQ.format(fn="percentile", arg="v", p=p)).alias(f"t{k}")
-            for k, p in ((1, 0.25), (2, 0.50), (3, 0.75))
-        ]
-    )
-
-
-def _encode(ex, thr):
-    """Signature rows (vec_id, sig_lo, sig_hi, p1l..p3h) from an
-    exploded corpus and a FROZEN threshold table: 64-row broadcast
-    join + one keyed packing aggregation, all JVM."""
-    aggs = [
-        F.expr(_pack1_expr(1, 32, False)).alias("sig_lo"),
-        F.expr(_pack1_expr(33, 64, False)).alias("sig_hi"),
-    ] + [
-        F.expr(_plane_expr(k, h, False).rsplit(" AS ", 1)[0]).alias(
-            f"p{k}{h}"
-        )
-        for k, h in _PLANES
-    ]
-    return ex.join(F.broadcast(thr), "pos").groupBy("vec_id").agg(*aggs)
-
-
-def build_sig_index(spark, sf_dir: str, path: str) -> None:
-    """Build the persisted signature index under ``path``:
-    ``sigs/`` = one row per vector with BOTH tiers' signatures
-    (16 B sign bits + 48 B thermometer planes, 9 columns total),
-    ``params/`` = the 64-row quartile threshold table.  Thresholds
-    are written because they are index parameters: an append job and
-    any re-encode audit must read them back, not recompute them."""
-    e = ensure_parallelism(Catalog(spark, sf_dir).embeddings)
-    ex = _exploded(e)
-    # Materialize the 64-row threshold table ONCE.  Left as a lazy
-    # plan it is evaluated twice — once inside the sigs job's
-    # broadcast exchange and once for the params write — and each
-    # evaluation is a full posexplode + percentile pass over the
-    # corpus, the single most expensive step of the build.  The table
-    # is 64 rows at ANY corpus size, so driver materialization is
-    # constant-cost and the rebuilt local frame broadcasts instantly.
-    thr = _thresholds(ex)
-    thr_local = collect_local(thr)
-    # pin the layout's column order (readers select by name, but a
-    # stable on-disk schema keeps appended files byte-compatible)
-    _encode(ex, thr_local).select("vec_id", *_SIG_COLS).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/sigs")
-    thr_local.coalesce(1).write.mode("overwrite").parquet(f"{path}/params")
-
-
-# ---------------------------------------------------------------------------
-# probe-only cascade stages (read the index, never encode)
-# ---------------------------------------------------------------------------
-
-
-def probe_binary(e, idx, q_pred: str = "vec_id % 100 = 0"):
-    """1-bit cascade probe over a READ-BACK index: coarse Hamming
-    stage touches only (vec_id, sig_lo, sig_hi) — 16 B/vector — and
-    the float corpus enters only at the shortlist-bounded rerank
-    join-back.  Lazy (plan-assertable); same output contract as
-    q_sim_knn_binary.  q_pred picks the query cohort (default = the
-    registered oracle's; tools/scale_smoke.py passes a FIXED 20-query
-    set so decade curves measure per-query probe cost, not |Q|
-    growth)."""
-    sigs = idx.select("vec_id", "sig_lo", "sig_hi")
-    q = (
-        sigs.filter(q_pred)
-        .join(e.selectExpr("vec_id", "embedding AS qv"), "vec_id")
-        .selectExpr(
-            "vec_id AS qid", "qv", "sig_lo AS q_lo", "sig_hi AS q_hi"
-        )
-    )
-    ham = (
-        sigs.crossJoin(F.broadcast(q.drop("qv")))
-        .filter("vec_id <> qid")
-        .selectExpr(
-            "qid",
-            "vec_id",
-            "CAST(bit_count(sig_lo ^ q_lo) + bit_count(sig_hi ^ q_hi) "
-            "AS INT) AS ham",
-        )
-    )
-    wc = Window.partitionBy("qid").orderBy(F.asc("ham"), F.asc("vec_id"))
-    cand = (
-        ham.withColumn("cr", F.row_number().over(wc))
-        .filter(F.col("cr") <= _NCAND)
-        .drop("cr")
-    )
-    rr = (
-        cand.join(e.selectExpr("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(q.select("qid", "qv")), "qid")
-        .selectExpr(
-            "qid",
-            "vec_id",
-            "ham",
-            f"floor(({vectors.cosine_expr('embedding', 'qv')}) * 1000000"
-            " + 0.5) / 1000000 AS sim",
-        )
-    )
-    wr = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        rr.withColumn("rnk", F.row_number().over(wr).cast("int"))
-        .filter(F.col("rnk") <= _KNN_K)
-        .select("qid", "vec_id", "ham", "sim", "rnk")
-    )
-
-
-def probe_2bit(e, idx, q_pred: str = "vec_id % 100 = 0"):
-    """2-bit cascade probe over a READ-BACK index: the coarse L1 scan
-    reads only the six plane-half columns (48 B/vector); no
-    posexplode, no percentile probe, no packing — those ran once at
-    build.  Same output contract as q_sim_knn_2bit.  q_pred as in
-    probe_binary (fixed-|Q| decade smokes)."""
-    sigs = idx.select("vec_id", *_PLANE_COLS)
-    q = (
-        sigs.filter(q_pred)
-        .join(e.selectExpr("vec_id", "embedding AS qv"), "vec_id")
-        .selectExpr(
-            "vec_id AS qid",
-            "qv",
-            *[f"p{k}{h} AS q{k}{h}" for k, h in _PLANES],
-        )
-    )
-    l1 = _l1_expr(False)
-    for k, h in _PLANES:
-        l1 = l1.replace(f"s.p{k}{h}", f"p{k}{h}").replace(
-            f"q.q{k}{h}", f"q{k}{h}"
-        )
-    ham = (
-        sigs.crossJoin(F.broadcast(q.drop("qv")))
-        .filter("vec_id <> qid")
-        .selectExpr("qid", "vec_id", f"CAST({l1} AS INT) AS l1")
-    )
-    wc = Window.partitionBy("qid").orderBy(F.asc("l1"), F.asc("vec_id"))
-    cand = (
-        ham.withColumn("cr", F.row_number().over(wc))
-        .filter(F.col("cr") <= _NCAND2)
-        .drop("cr")
-    )
-    rr = (
-        cand.join(e.selectExpr("vec_id", "embedding"), "vec_id")
-        .join(F.broadcast(q.select("qid", "qv")), "qid")
-        .selectExpr(
-            "qid",
-            "vec_id",
-            "l1",
-            f"floor(({vectors.cosine_expr('embedding', 'qv')}) * 1000000"
-            " + 0.5) / 1000000 AS sim",
-        )
-    )
-    wr = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        rr.withColumn("rnk", F.row_number().over(wr).cast("int"))
-        .filter(F.col("rnk") <= _KNN_K2)
-        .select("qid", "vec_id", "l1", "sim", "rnk")
-    )
-
 
 # ---------------------------------------------------------------------------
 # §2.26.1 index build + read-back census
@@ -295,7 +109,7 @@ thr AS (
   SELECT pos, {_THR_DUCK}
   FROM ex GROUP BY pos),
 s2 AS (
-  SELECT vec_id, {', '.join(_plane_expr(k, h, True) for k, h in _PLANES)}
+  SELECT vec_id, {', '.join(_plane_expr(k, h) for k, h in _PLANES)}
   FROM ex JOIN thr USING (pos) GROUP BY vec_id),
 s1 AS (
   SELECT vec_id,
@@ -338,7 +152,7 @@ def q_vec_sig_build(spark, sf_dir):
     plus a corpus-wide percentile pass.  Matches the IVF family's
     lifecycle (q_vec_ivf_build) for the signature tiers."""
     with scratch("skyhook_sigbuild_") as tmp:
-        build_sig_index(spark, sf_dir, tmp)
+        build_sig_index(spark, Catalog(spark, sf_dir).embeddings, tmp)
         idx = spark.read.parquet(f"{tmp}/sigs")
         out = (
             idx.groupBy(
@@ -379,9 +193,9 @@ def q_sim_knn_binary_indexed(spark, sf_dir):
     the build amortized out — at 100 TB the build is once and this
     query's marginal cost is the 16 B/vector coarse scan plus the
     |Q| x 100 rerank."""
+    e = ensure_parallelism(Catalog(spark, sf_dir).embeddings)
     with scratch("skyhook_sigidx1_") as tmp:
-        build_sig_index(spark, sf_dir, tmp)
-        e = ensure_parallelism(Catalog(spark, sf_dir).embeddings)
+        build_sig_index(spark, e, tmp)
         out = probe_binary(e, spark.read.parquet(f"{tmp}/sigs"))
         return collect_local(out)
 
@@ -401,9 +215,9 @@ def q_sim_knn_2bit_indexed(spark, sf_dir):
     ladder priced (recall@5 0.92 at shortlist 100): with the index
     persisted, its per-query cost drops to the same two-instruction
     bit_count(xor) scan as the 1-bit tier, at 3x the index bytes."""
+    e = ensure_parallelism(Catalog(spark, sf_dir).embeddings)
     with scratch("skyhook_sigidx2_") as tmp:
-        build_sig_index(spark, sf_dir, tmp)
-        e = ensure_parallelism(Catalog(spark, sf_dir).embeddings)
+        build_sig_index(spark, e, tmp)
         out = probe_2bit(e, spark.read.parquet(f"{tmp}/sigs"))
         return collect_local(out)
 
@@ -423,7 +237,7 @@ thr AS (
   SELECT pos, {_THR_DUCK}
   FROM ex WHERE NOT ({_DELTA_PRED}) GROUP BY pos),
 s2 AS (
-  SELECT vec_id, {', '.join(_plane_expr(k, h, True) for k, h in _PLANES)}
+  SELECT vec_id, {', '.join(_plane_expr(k, h) for k, h in _PLANES)}
   FROM ex JOIN thr USING (pos) GROUP BY vec_id),
 s1 AS (
   SELECT vec_id,
@@ -463,25 +277,21 @@ def q_vec_sig_incremental(spark, sf_dir):
     base cohort only — if the implementation re-derived from the full
     corpus, the delta cohort's plane popcounts (bits_2bit) would
     mismatch.  The 1-bit tier has no parameters (sign vs 0), so its
-    column doubles as the append-integrity check."""
-    e = ensure_parallelism(Catalog(spark, sf_dir).embeddings)
-    base = e.filter(f"NOT ({_DELTA_PRED})")
-    delta = e.filter(_DELTA_PRED)
-    # FROZEN: base cohort only.  Materialized once (64 rows) — left
-    # lazy, the posexplode+percentile pass over the base corpus would
-    # re-run inside BOTH write jobs' broadcast exchanges below.
-    thr_plan = _thresholds(_exploded(base))
-    thr = collect_local(thr_plan)
+    column doubles as the append-integrity check.
+
+    Runs the production lifecycle: build_sig_index on the base cohort,
+    append_sig_index (which reads the stored params/) on the delta.
+    The layout has no cohort column, so is_delta is derived from
+    vec_id on read.  Encoding both cohorts in one pass and writing
+    once would be cheaper here, but would no longer exercise the
+    append-only lifecycle this query exists to pin."""
+    e = Catalog(spark, sf_dir).embeddings
     with scratch("skyhook_siginc_") as tmp:
-        _encode(_exploded(base), thr).withColumn(
-            "is_delta", F.lit(0)
-        ).write.mode("overwrite").parquet(f"{tmp}/sigs")
-        _encode(_exploded(delta), thr).withColumn(
-            "is_delta", F.lit(1)
-        ).write.mode("append").parquet(f"{tmp}/sigs")
+        build_sig_index(spark, e.filter(f"NOT ({_DELTA_PRED})"), tmp)
+        append_sig_index(spark, e.filter(_DELTA_PRED), tmp)
         idx = spark.read.parquet(f"{tmp}/sigs")
         out = (
-            idx.groupBy("is_delta")
+            idx.groupBy(F.expr(_DELTA_PRED).cast("int").alias("is_delta"))
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
                 F.expr(_BITS1).alias("bits_1bit"),
@@ -544,7 +354,7 @@ def _clustered_expr(duck: bool) -> str:
 
 
 def _clustered_recall_oracle() -> str:
-    planes_duck = ", ".join(_plane_expr(k, h, True) for k, h in _PLANES)
+    planes_duck = ", ".join(_plane_expr(k, h) for k, h in _PLANES)
     qz = "floor(({e}) * 1000000 + 0.5) / 1000000"
     exact_cos = qz.format(e=vectors.cosine_duckdb("d.emb", "q.qv"))
     rr_cos = qz.format(e=vectors.cosine_duckdb("e.emb", "q.qv"))
@@ -559,11 +369,11 @@ a_{tag} AS (
     FROM {cand_cte} c
     JOIN cl e ON e.vec_id = c.vec_id
     JOIN q ON q.qid = c.qid)
-  WHERE rnk <= {_KNN_K}),
+  WHERE rnk <= {K}),
 r_{tag} AS (
   SELECT '{tag}' AS tier, exact.qid,
     CAST(count(a_{tag}.vec_id) AS BIGINT) AS n_hits,
-    floor(CAST(count(a_{tag}.vec_id) AS DOUBLE) / {_KNN_K} * 1000000
+    floor(CAST(count(a_{tag}.vec_id) AS DOUBLE) / {K} * 1000000
       + 0.5) / 1000000 AS recall
   FROM exact LEFT JOIN a_{tag}
     ON a_{tag}.qid = exact.qid AND a_{tag}.vec_id = exact.vec_id
@@ -579,7 +389,7 @@ exact AS (
       row_number() OVER (PARTITION BY q.qid ORDER BY {exact_cos} DESC,
         d.vec_id) AS rnk
     FROM cl d, q WHERE d.vec_id <> q.qid)
-  WHERE rnk <= {_KNN_K}),
+  WHERE rnk <= {K}),
 s1 AS (
   SELECT vec_id,
     {_sig_duckdb('emb', 1, 32)} AS sig_lo,
@@ -594,7 +404,7 @@ c1 AS (
         CAST(bit_count(xor(s.sig_lo, q.q_lo))
            + bit_count(xor(s.sig_hi, q.q_hi)) AS INT), s.vec_id) AS cr
     FROM s1 s, q1 q WHERE s.vec_id <> q.qid)
-  WHERE cr <= {_NCAND}),
+  WHERE cr <= {NCAND}),
 ex AS (
   SELECT vec_id, i.pos, {_VQ.format(v='emb[i.pos]')} AS v
   FROM cl, (SELECT unnest(generate_series(1, 64)) AS pos) i),
@@ -609,9 +419,9 @@ c2 AS (
   SELECT qid, vec_id FROM (
     SELECT q.qid, s.vec_id,
       row_number() OVER (PARTITION BY q.qid ORDER BY
-        CAST({_l1_expr(True)} AS INT), s.vec_id) AS cr
+        CAST({_l1_expr()} AS INT), s.vec_id) AS cr
     FROM s2 s, q2 q WHERE s.vec_id <> q.qid)
-  WHERE cr <= {_NCAND2}),{tier('bin1', 'c1')},{tier('thermo2', 'c2')}
+  WHERE cr <= {NCAND}),{tier('bin1', 'c1')},{tier('thermo2', 'c2')}
 SELECT * FROM r_bin1
 UNION ALL
 SELECT * FROM r_thermo2
@@ -649,99 +459,15 @@ def q_sim_recall_clustered(spark, sf_dir):
     cl = ensure_parallelism(Catalog(spark, sf_dir).embeddings).selectExpr(
         "vec_id", _clustered_expr(False) + " AS emb"
     )
-    q = cl.filter("vec_id % 100 = 0").selectExpr(
-        "vec_id AS qid", "emb AS qv"
-    )
-    qz_cos = (
-        f"floor(({vectors.cosine_expr('emb', 'qv')}) * 1000000 + 0.5)"
-        " / 1000000 AS sim"
-    )
-    wq = Window.partitionBy("qid")
-    exact = (
-        cl.crossJoin(F.broadcast(q))
-        .filter("vec_id <> qid")
-        .selectExpr("qid", "vec_id", qz_cos)
-        .withColumn(
-            "rnk",
-            F.row_number().over(
-                wq.orderBy(F.desc("sim"), F.asc("vec_id"))
-            ),
-        )
-        .filter(F.col("rnk") <= _KNN_K)
-        .select("qid", "vec_id")
-    )
-    # one encode pass yields BOTH tiers' signatures (same machinery
-    # the persisted index writes)
-    sigs = _encode(_exploded(cl, col="emb"), _thresholds(_exploded(cl, col="emb")))
-
-    def shortlist(dist_sql: str, sig_cols, ncand: int):
-        qs = sigs.filter("vec_id % 100 = 0").selectExpr(
-            "vec_id AS qid", *[f"{c} AS q_{c}" for c in sig_cols]
-        )
-        return (
-            sigs.select("vec_id", *sig_cols)
-            .crossJoin(F.broadcast(qs))
-            .filter("vec_id <> qid")
-            .selectExpr("qid", "vec_id", f"CAST({dist_sql} AS INT) AS dist")
-            .withColumn(
-                "cr",
-                F.row_number().over(
-                    wq.orderBy(F.asc("dist"), F.asc("vec_id"))
-                ),
-            )
-            .filter(F.col("cr") <= ncand)
-            .select("qid", "vec_id")
-        )
-
-    def recall(cand, tier: str):
-        approx = (
-            cand.join(cl.selectExpr("vec_id", "emb"), "vec_id")
-            .join(F.broadcast(q), "qid")
-            .selectExpr("qid", "vec_id", qz_cos)
-            .withColumn(
-                "rnk",
-                F.row_number().over(
-                    wq.orderBy(F.desc("sim"), F.asc("vec_id"))
-                ),
-            )
-            .filter(F.col("rnk") <= _KNN_K)
-            .selectExpr("qid AS aqid", "vec_id AS avid")
-        )
-        return (
-            exact.join(
-                approx,
-                (F.col("qid") == F.col("aqid"))
-                & (F.col("vec_id") == F.col("avid")),
-                "left",
-            )
-            .groupBy("qid")
-            .agg(
-                F.count("avid").cast("bigint").alias("n_hits"),
-                F.expr(
-                    f"floor(CAST(count(avid) AS DOUBLE) / {_KNN_K}"
-                    " * 1000000 + 0.5) / 1000000"
-                ).alias("recall"),
-            )
-            .selectExpr(f"'{tier}' AS tier", "qid", "n_hits", "recall")
-        )
-
-    c1 = shortlist(
-        "bit_count(sig_lo ^ q_sig_lo) + bit_count(sig_hi ^ q_sig_hi)",
-        ["sig_lo", "sig_hi"],
-        _NCAND,
-    )
-    c2 = shortlist(
-        " + ".join(
-            f"bit_count(p{k}{h} ^ q_p{k}{h})" for k, h in _PLANES
-        ),
-        _PLANE_COLS,
-        _NCAND2,
-    )
-    return (
-        recall(c1, "bin1")
-        .unionByName(recall(c2, "thermo2"))
-        .orderBy("tier", "qid")
-    )
+    # one encode pass yields BOTH tiers' signatures (the machinery the
+    # persisted index writes); each tier runs the shipped cascade
+    sigs = exploded_sigs(cl, col="emb")
+    tiers = [
+        recall_at_k(cl, *shortlist(cl, sigs, dist, col="emb"), col="emb")
+        .selectExpr(f"'{tier}' AS tier", "qid", "n_hits", "recall")
+        for dist, tier in (("ham", "bin1"), ("l1", "thermo2"))
+    ]
+    return tiers[0].unionByName(tiers[1]).orderBy("tier", "qid")
 
 
 # ---------------------------------------------------------------------------

@@ -15,8 +15,9 @@ exec_build_sky_index_op]).  This module only runs it:
 2. q_text_index_incremental — base build + delta append, census of
    the read-back postings by cohort.
 3. q_hybrid_rrf_indexed — RRF fusion of a probe-only BM25 leg and a
-   probe-only ANN cascade leg (pipeline16's persisted signature
-   index); no tokenize and no encode pass anywhere in the fused plan.
+   probe-only ANN cascade leg (the persisted signature index of
+   operators/sig_index.py); no tokenize and no encode pass anywhere
+   in the fused plan.
 4. q_text_index_compact — compaction of an appended (fragmented)
    index, answers pinned unchanged.
 
@@ -29,7 +30,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from skyhookdb_ceph_spark.operators import ensure_parallelism
+from skyhookdb_ceph_spark.operators import ensure_parallelism, vectors
+from skyhookdb_ceph_spark.operators.sig_index import (
+    HAMMING,
+    NCAND,
+    build_sig_index,
+)
 from skyhookdb_ceph_spark.operators.text_index import (
     _max_files_per_tok0,
     append_text_index,
@@ -165,17 +171,15 @@ def _postings_census(grouped):
 
 
 def _probe_vec_leg(e, idx) -> DataFrame:
-    """Vector leg of the indexed hybrid: the 1-bit cascade probe of
-    pipeline16 run for the single query vector (vec_id 0) with a
-    _RRF_SHORTLIST-deep rerank.  Coarse Hamming touches only the
-    16 B/vector signature columns; the float corpus enters only at
-    the _NCAND-bounded rerank join-back (same guarantee as
-    probe_binary — plan-asserted in tests/test_text_index.py).  Both
-    top-N cuts are distributed TakeOrdered (orderBy+limit); ranking
-    windows see only post-limit rows."""
-    from skyhookdb_ceph_spark.operators import vectors
-    from skyhookdb_ceph_spark.queries.pipeline14 import _NCAND
-
+    """Vector leg of the indexed hybrid: the 1-bit cascade of
+    sig_index run for the single query vector (vec_id 0) with a
+    _RRF_SHORTLIST-deep rerank.  Coarse Hamming (sig_index.HAMMING)
+    touches only the 16 B/vector signature columns; the float corpus
+    enters only at the NCAND-bounded rerank join-back (same guarantee
+    as probe_binary — plan-asserted in tests/test_text_index.py).
+    Unlike the per-query-window shortlist, both top-N cuts here are
+    distributed TakeOrdered (orderBy+limit) — one query needs no qid
+    partitioning; ranking windows see only post-limit rows."""
     sigs = idx.select("vec_id", "sig_lo", "sig_hi")
     q = (
         sigs.filter("vec_id = 0")
@@ -185,13 +189,9 @@ def _probe_vec_leg(e, idx) -> DataFrame:
     ham = (
         sigs.crossJoin(F.broadcast(q.drop("qv")))
         .filter("vec_id <> 0")
-        .selectExpr(
-            "vec_id",
-            "CAST(bit_count(sig_lo ^ q_lo) + bit_count(sig_hi ^ q_hi)"
-            " AS INT) AS ham",
-        )
+        .selectExpr("vec_id", f"CAST({HAMMING} AS INT) AS ham")
     )
-    cand = ham.orderBy(F.asc("ham"), F.asc("vec_id")).limit(_NCAND)
+    cand = ham.orderBy(F.asc("ham"), F.asc("vec_id")).limit(NCAND)
     rr = (
         cand.join(e.selectExpr("vec_id", "embedding"), "vec_id")
         .crossJoin(F.broadcast(q.select("qv")))
@@ -309,13 +309,12 @@ FROM fused QUALIFY rnk <= {_RRF_TOPK}
 
 
 def _hyb_idx_oracle() -> str:
-    from skyhookdb_ceph_spark.operators import vectors
-    from skyhookdb_ceph_spark.queries.pipeline14 import _NCAND, _sig_duckdb
+    from skyhookdb_ceph_spark.queries.pipeline14 import _sig_duckdb
 
     return _HYB_IDX_ORACLE_T.format(
         k1=_BM25_K1,
         b=_BM25_B,
-        ncand=_NCAND,
+        ncand=NCAND,
         sig_lo=_sig_duckdb("embedding", 1, 32),
         sig_hi=_sig_duckdb("embedding", 33, 64),
         cos=vectors.cosine_duckdb("e.embedding", "q.qv"),
@@ -333,7 +332,7 @@ def q_hybrid_rrf_indexed(spark, sf_dir):
     application layer: the lexical leg reads the inverted-postings
     layout (tok0 prune + token filter, df corpus-wide, query doc 0
     excluded as a candidate), the vector leg probes the 1-bit
-    signature index (Hamming coarse over 16 B/vector, _NCAND-bounded
+    signature index (Hamming coarse over 16 B/vector, NCAND-bounded
     exact rerank), and RRF fuses the two 50-row shortlists.  No
     tokenize and no encode pass anywhere in the probe plan
     (plan-asserted in tests/test_text_index.py) — at 100 TB a query
@@ -344,7 +343,7 @@ def q_hybrid_rrf_indexed(spark, sf_dir):
     statistics (n_docs/avgdl/df) are the INDEX's, corpus-wide —
     a probe cannot re-derive per-universe statistics without reading
     bodies; and the vector leg ranks the CASCADE's shortlist (top
-    _RRF_SHORTLIST of the _NCAND Hamming survivors) rather than an
+    _RRF_SHORTLIST of the NCAND Hamming survivors) rather than an
     exact corpus-wide cosine — that approximation is the entire
     point of the signature tier.  The oracle mirrors both deltas
     declaratively.
@@ -352,12 +351,10 @@ def q_hybrid_rrf_indexed(spark, sf_dir):
     Builds run inside the query (fixture lifecycle, same as
     q_text_bm25_indexed); tools/scale_smoke.py measures the fused
     probe with both builds amortized out."""
-    from skyhookdb_ceph_spark.queries.pipeline16 import build_sig_index
-
     e = ensure_parallelism(Catalog(spark, sf_dir).embeddings)
     with scratch("skyhook_hybt_") as tdir, scratch("skyhook_hybs_") as sdir:
         build_text_index(spark, Catalog(spark, sf_dir).documents, tdir)
-        build_sig_index(spark, sf_dir, sdir)
+        build_sig_index(spark, e, sdir)
         out = probe_hybrid_rrf(spark, tdir, sdir, e)
         return collect_local(out)
 

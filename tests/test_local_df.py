@@ -104,7 +104,7 @@ def test_build_sig_index_threshold_materialization_is_value_exact(spark):
     table through local_df; the persisted params must still equal a
     fresh lazy derivation cell-for-cell (the frozen-parameter rule)."""
     from skyhookdb_ceph_spark.queries._util import Catalog
-    from skyhookdb_ceph_spark.queries.pipeline16 import (
+    from skyhookdb_ceph_spark.operators.sig_index import (
         _exploded,
         _thresholds,
     )

@@ -1,12 +1,14 @@
-"""Persisted ANN signature index (SURVEY.md §2.26): the probe must
-READ the layout, never re-encode, and the incremental append must be
-append-only under the frozen-parameter rule — the scale properties
+"""Persisted ANN signature index (operators/sig_index.py, SURVEY.md
+§2.26): the probe must READ the layout, never re-encode, the append
+must be append-only and encode under the stored params, and both
+encoders must reject a malformed embedding — the scale properties
 q_sim_knn_binary_indexed / q_sim_knn_2bit_indexed / q_vec_sig_incremental
-claim, proven in plans and on-disk file sets."""
+claim, proven in plans, on-disk file sets and failures."""
 
 from __future__ import annotations
 
 import os
+import pathlib
 import shutil
 import tempfile
 
@@ -14,18 +16,23 @@ import pytest
 from pyspark.sql import functions as F
 
 from skyhookdb_ceph_spark.catalog import Catalog
-from skyhookdb_ceph_spark.plans.explain import explain_str
-from skyhookdb_ceph_spark.queries.pipeline16 import (
+from skyhookdb_ceph_spark.operators.sig_index import (
+    _SIG_COLS,
     _encode,
     _exploded,
     _thresholds,
+    append_sig_index,
     build_sig_index,
+    exploded_sigs,
+    fold_sigs,
     probe_2bit,
     probe_binary,
 )
+from skyhookdb_ceph_spark.plans.explain import explain_str
 from skyhookdb_ceph_spark.registry import load_all
 
 SF = "/root/testdata/sf0.001"
+_DELTA = "vec_id % 10 = 7"
 
 # Encode-only physical markers: signature packing is shiftleft folds,
 # the thermometer thresholds are a percentile aggregation over a
@@ -36,7 +43,7 @@ _ENCODE_MARKERS = ("shiftleft", "posexplode", "percentile")
 @pytest.fixture(scope="module")
 def sig_index(spark):
     tmp = tempfile.mkdtemp(prefix="skyhook_sigtest_")
-    build_sig_index(spark, SF, tmp)
+    build_sig_index(spark, Catalog(spark, SF).embeddings, tmp)
     yield spark, tmp
     shutil.rmtree(tmp, ignore_errors=True)
 
@@ -88,40 +95,58 @@ def test_probe_matches_inline_tier(sig_index, probe, inline):
     assert indexed == ref and len(indexed) > 0
 
 
-def test_incremental_append_leaves_base_files_untouched(spark):
+@pytest.fixture(scope="module")
+def appended(spark):
+    """A base-cohort build plus a delta-cohort append, through the
+    production lifecycle; yields (spark, path, base file snapshots
+    taken between the two)."""
+    e = Catalog(spark, SF).embeddings
+    tmp = tempfile.mkdtemp(prefix="sigtest_append_")
+    try:
+        build_sig_index(spark, e.filter(f"NOT ({_DELTA})"), tmp)
+        before = _snapshot(tmp)
+        append_sig_index(spark, e.filter(_DELTA), tmp)
+        yield spark, tmp, before
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _snapshot(tmp):
+    return {
+        f: (st.st_size, st.st_mtime_ns)
+        for f in os.listdir(f"{tmp}/sigs")
+        if f.endswith(".parquet")
+        for st in [os.stat(f"{tmp}/sigs/{f}")]
+    }
+
+
+def test_incremental_append_leaves_base_files_untouched(appended):
     """Appending delta signatures writes NEW files only: every base
     data file survives with identical name, size, and mtime —
     O(delta) maintenance, the property that makes per-ingest-batch
     refresh affordable (rebuild is O(corpus))."""
-    e = Catalog(spark, SF).embeddings
-    base = e.filter("vec_id % 10 <> 7")
-    delta = e.filter("vec_id % 10 = 7")
-    thr = _thresholds(_exploded(base))
-    tmp = tempfile.mkdtemp(prefix="skyhook_siginc_test_")
-    try:
-        _encode(_exploded(base), thr).withColumn(
-            "is_delta", F.lit(0)
-        ).write.mode("overwrite").parquet(f"{tmp}/sigs")
+    _spark, tmp, before = appended
+    after = _snapshot(tmp)
+    assert set(before) <= set(after)  # strictly additive
+    assert len(after) > len(before)  # delta landed as new files
+    for f, meta in before.items():
+        assert after[f] == meta, f"base file rewritten: {f}"
 
-        def snapshot():
-            return {
-                f: (st.st_size, st.st_mtime_ns)
-                for f in os.listdir(f"{tmp}/sigs")
-                if f.endswith(".parquet")
-                for st in [os.stat(f"{tmp}/sigs/{f}")]
-            }
 
-        before = snapshot()
-        _encode(_exploded(delta), thr).withColumn(
-            "is_delta", F.lit(1)
-        ).write.mode("append").parquet(f"{tmp}/sigs")
-        after = snapshot()
-        assert set(before) <= set(after)  # strictly additive
-        assert len(after) > len(before)  # delta landed as new files
-        for f, meta in before.items():
-            assert after[f] == meta, f"base file rewritten: {f}"
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+def test_append_encodes_with_stored_params(appended):
+    """append_sig_index encodes the delta under the thresholds stored in
+    params/ (the base cohort's), not under thresholds of its own: the
+    appended rows equal an encode with the stored table and differ from
+    one with delta-derived quartiles."""
+    spark, tmp, _before = appended
+    delta = _exploded(Catalog(spark, SF).embeddings.filter(_DELTA))
+
+    def rows(df):
+        return sorted(map(tuple, df.select("vec_id", *_SIG_COLS).collect()))
+
+    got = rows(spark.read.parquet(f"{tmp}/sigs").filter(_DELTA))
+    assert got == rows(_encode(delta, spark.read.parquet(f"{tmp}/params")))
+    assert got != rows(_encode(delta, _thresholds(delta)))
 
 
 def test_frozen_thresholds_are_a_real_parameter(spark):
@@ -133,8 +158,8 @@ def test_frozen_thresholds_are_a_real_parameter(spark):
     ever degenerates to identical quartiles this test fails loudly
     rather than letting the pin rot silently."""
     e = Catalog(spark, SF).embeddings
-    base = e.filter("vec_id % 10 <> 7")
-    delta = e.filter("vec_id % 10 = 7")
+    base = e.filter(f"NOT ({_DELTA})")
+    delta = e.filter(_DELTA)
     frozen = _encode(_exploded(delta), _thresholds(_exploded(base)))
     rederived = _encode(_exploded(delta), _thresholds(_exploded(e)))
     a = sorted(map(tuple, frozen.collect()))
@@ -157,3 +182,52 @@ def test_params_sidecar_roundtrips(sig_index):
         )
     )
     assert stored == fresh and len(stored) == 64
+
+
+_MALFORMED = {
+    "63": ("slice(embedding, 1, 63)", "has 63 dims"),
+    "65": ("concat(embedding, array(CAST(1.0 AS FLOAT)))", "has 65 dims"),
+    "null": ("CAST(NULL AS array<float>)", "has NULL"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_MALFORMED))
+@pytest.mark.parametrize("encoder", ["build", "fold_sigs", "exploded_sigs"])
+def test_encoders_reject_malformed_embeddings(spark, tmp_path, case, encoder):
+    """Every encoder fails on an embedding that is not 64-dim, naming
+    the vector: unchecked, the per-row fold packed a 65-dim vector's
+    first 64 dims and read past a 63-dim one's end, and the build
+    encoded a 63-dim vector from what it had and dropped a NULL one
+    from the index (499 rows for 500 vectors), so probes answered."""
+    bad_expr, cause = _MALFORMED[case]
+    e = Catalog(spark, SF).embeddings.withColumn(
+        "embedding",
+        F.expr(f"CASE WHEN vec_id = 5 THEN {bad_expr} ELSE embedding END"),
+    )
+    run = {
+        "build": lambda: build_sig_index(spark, e, str(tmp_path)),
+        "fold_sigs": lambda: fold_sigs(e).collect(),
+        "exploded_sigs": lambda: exploded_sigs(e).collect(),
+    }[encoder]
+    with pytest.raises(Exception, match=f"64-dim embeddings: vec_id 5 {cause}"):
+        run()
+
+
+def test_index_knowledge_lives_in_one_module():
+    """The Hamming term, the shortlist cut, the threshold percentile and
+    the recall count are written once, in operators/sig_index.py; a
+    second copy anywhere in the package is the drift this module
+    exists to prevent."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "skyhookdb_ceph_spark"
+    for needle in (
+        "bit_count(sig_lo ^",
+        'F.col("cr") <=',
+        'fn="percentile"',
+        'count("avid")',
+    ):
+        holders = sorted(
+            str(p.relative_to(pkg))
+            for p in pkg.rglob("*.py")
+            if needle in p.read_text()
+        )
+        assert holders == ["operators/sig_index.py"], (needle, holders)

@@ -210,14 +210,14 @@ def test_hybrid_probe_plan_never_tokenizes_or_encodes(spark, tmp_path):
     signature encode pass (shiftleft packing, posexplode, percentile
     probe) — both ran once at build.  At 100 TB a hybrid query
     touches a few posting lists, the 16 B/vector signature column,
-    and ~_NCAND float rows."""
-    from skyhookdb_ceph_spark.queries.pipeline16 import build_sig_index
+    and ~NCAND float rows."""
+    from skyhookdb_ceph_spark.operators.sig_index import build_sig_index
     from skyhookdb_ceph_spark.queries.pipeline17 import probe_hybrid_rrf
 
     tdir = str(tmp_path / "txt")
     sdir = str(tmp_path / "sig")
     build_text_index(spark, Catalog(spark, SF).documents, tdir)
-    build_sig_index(spark, SF, sdir)
+    build_sig_index(spark, Catalog(spark, SF).embeddings, sdir)
     e = Catalog(spark, SF).embeddings
     plan = explain_str(probe_hybrid_rrf(spark, tdir, sdir, e))
     for marker in _TOKENIZE_MARKERS + _ENCODE_MARKERS:

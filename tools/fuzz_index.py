@@ -305,17 +305,13 @@ def _duck_sig_census(pred_t: str, sf_dir: str) -> list[tuple]:
     only (the r14 parity fix), both tiers encoded for ALL vectors,
     popcount census per cohort.  pred_t carries a {v} placeholder so
     the delta predicate can be rendered unambiguously in each scope."""
+    from skyhookdb_ceph_spark.operators.sig_index import _PLANES, _VQ
     from skyhookdb_ceph_spark.queries.pipeline14 import _sig_duckdb
-    from skyhookdb_ceph_spark.queries.pipeline15 import (
-        _PLANES,
-        _THR_DUCK,
-        _VQ,
-        _plane_expr,
-    )
+    from skyhookdb_ceph_spark.queries.pipeline15 import _THR_DUCK, _plane_expr
     from skyhookdb_ceph_spark.queries.pipeline16 import _BITS1, _BITS2
 
     emb = f"'{sf_dir}/embeddings.parquet'"
-    planes = ", ".join(_plane_expr(k, h, True) for k, h in _PLANES)
+    planes = ", ".join(_plane_expr(k, h) for k, h in _PLANES)
     return duckdb.sql(
         f"""
         WITH ex AS (
@@ -345,37 +341,30 @@ def _duck_sig_census(pred_t: str, sf_dir: str) -> list[tuple]:
 
 
 def compare5b(spec: SigSpec, spark, sf_dir: str) -> str | None:
+    """The production lifecycle under test: build_sig_index on the
+    base cohort, append_sig_index (stored params) on the delta; the
+    cohort is derived from vec_id on read."""
     from pyspark.sql import functions as F
 
-    from skyhookdb_ceph_spark.operators import ensure_parallelism
-    from skyhookdb_ceph_spark.queries._util import Catalog
-    from skyhookdb_ceph_spark.queries.pipeline16 import (
-        _BITS1,
-        _BITS2,
-        _encode,
-        _exploded,
-        _thresholds,
+    from skyhookdb_ceph_spark.operators.sig_index import (
+        append_sig_index,
+        build_sig_index,
     )
+    from skyhookdb_ceph_spark.queries._util import Catalog
+    from skyhookdb_ceph_spark.queries.pipeline16 import _BITS1, _BITS2
 
     pred_t = f"{{v}} % {spec.mod} = {spec.rem}"
     pred = pred_t.format(v="vec_id")
     tmp = tempfile.mkdtemp(prefix="fuzzsig_")
     _SCRATCH.append(tmp)
     try:
-        e = ensure_parallelism(Catalog(spark, sf_dir).embeddings)
-        base = e.filter(f"NOT ({pred})")
-        delta = e.filter(pred)
-        thr = _thresholds(_exploded(base))  # FROZEN: base cohort only
-        _encode(_exploded(base), thr).withColumn(
-            "is_delta", F.lit(0)
-        ).write.mode("overwrite").parquet(f"{tmp}/sigs")
-        _encode(_exploded(delta), thr).withColumn(
-            "is_delta", F.lit(1)
-        ).write.mode("append").parquet(f"{tmp}/sigs")
+        e = Catalog(spark, sf_dir).embeddings
+        build_sig_index(spark, e.filter(f"NOT ({pred})"), tmp)
+        append_sig_index(spark, e.filter(pred), tmp)
         got = [
             tuple(r)
             for r in spark.read.parquet(f"{tmp}/sigs")
-            .groupBy("is_delta")
+            .groupBy(F.expr(pred).cast("int").alias("is_delta"))
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_vectors"),
                 F.expr(_BITS1).alias("bits_1bit"),

@@ -525,7 +525,7 @@ AUDIT = {
         "Composed PLAID cascade (r12 second wave). Wanted: the "
         "q_sim_knn_binary coarse stage verbatim (broadcast query "
         "set, narrow Hamming cross-score, qid window), then the "
-        "16-fold MaxSim Project over ONLY the 50-row-per-query "
+        "16-fold MaxSim Project over ONLY the 100-row-per-query "
         "shortlist after the vec_id equi-join-back; no Python, no "
         "cartesian, no global window."
     ),

@@ -239,11 +239,12 @@ def _drop_cached_scratch() -> None:
 
 
 def _sig_index_dir(spark, sf_dir: str) -> str:
-    from skyhookdb_ceph_spark.queries.pipeline16 import build_sig_index
+    from skyhookdb_ceph_spark.operators.sig_index import build_sig_index
+    from skyhookdb_ceph_spark.queries._util import Catalog
 
     if sf_dir not in _SIG_INDEX_CACHE:
         tmp = _scratch_mkdtemp("ssmoke_sigidx_")
-        build_sig_index(spark, sf_dir, tmp)
+        build_sig_index(spark, Catalog(spark, sf_dir).embeddings, tmp)
         _SIG_INDEX_CACHE[sf_dir] = tmp
     return _SIG_INDEX_CACHE[sf_dir]
 
@@ -263,16 +264,17 @@ def sig_build(spark, sf_dir):
     """Index BUILD cost alone: encode both tiers + write the layout
     to a fresh dir, return the 64-row params table as the
     materialization handle (the data work is the sigs write)."""
-    from skyhookdb_ceph_spark.queries.pipeline16 import build_sig_index
+    from skyhookdb_ceph_spark.operators.sig_index import build_sig_index
+    from skyhookdb_ceph_spark.queries._util import Catalog
 
     tmp = _scratch_mkdtemp("ssmoke_sigbuild_")
-    build_sig_index(spark, sf_dir, tmp)
+    build_sig_index(spark, Catalog(spark, sf_dir).embeddings, tmp)
     return spark.read.parquet(f"{tmp}/params")
 
 
 def sig_probe_binary(spark, sf_dir):
     from skyhookdb_ceph_spark.queries._util import Catalog
-    from skyhookdb_ceph_spark.queries.pipeline16 import probe_binary
+    from skyhookdb_ceph_spark.operators.sig_index import probe_binary
 
     idx = spark.read.parquet(f"{_sig_index_dir(spark, sf_dir)}/sigs")
     return probe_binary(Catalog(spark, sf_dir).embeddings, idx)
@@ -280,7 +282,7 @@ def sig_probe_binary(spark, sf_dir):
 
 def sig_probe_2bit(spark, sf_dir):
     from skyhookdb_ceph_spark.queries._util import Catalog
-    from skyhookdb_ceph_spark.queries.pipeline16 import probe_2bit
+    from skyhookdb_ceph_spark.operators.sig_index import probe_2bit
 
     idx = spark.read.parquet(f"{_sig_index_dir(spark, sf_dir)}/sigs")
     return probe_2bit(Catalog(spark, sf_dir).embeddings, idx)
@@ -296,7 +298,7 @@ _FIXED_Q_PRED = "vec_id % 100 = 0 AND vec_id < 2000"
 
 def sig_probe_binary_fixedq(spark, sf_dir):
     from skyhookdb_ceph_spark.queries._util import Catalog
-    from skyhookdb_ceph_spark.queries.pipeline16 import probe_binary
+    from skyhookdb_ceph_spark.operators.sig_index import probe_binary
 
     idx = spark.read.parquet(f"{_sig_index_dir(spark, sf_dir)}/sigs")
     return probe_binary(
@@ -306,7 +308,7 @@ def sig_probe_binary_fixedq(spark, sf_dir):
 
 def sig_probe_2bit_fixedq(spark, sf_dir):
     from skyhookdb_ceph_spark.queries._util import Catalog
-    from skyhookdb_ceph_spark.queries.pipeline16 import probe_2bit
+    from skyhookdb_ceph_spark.operators.sig_index import probe_2bit
 
     idx = spark.read.parquet(f"{_sig_index_dir(spark, sf_dir)}/sigs")
     return probe_2bit(
