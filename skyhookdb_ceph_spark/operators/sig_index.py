@@ -76,14 +76,14 @@ _TIERS = {
 }
 
 
-def _checked(col: str, value: str) -> str:
-    """`value` when `col` holds a DIMS-dim embedding, else a task
-    failure that names the vector and what it holds."""
+def _checked(value: str) -> str:
+    """`value` when ``embedding`` has DIMS dims, else a task failure
+    that names the vector and what it holds."""
     return (
-        f"CASE WHEN size({col}) = {DIMS} THEN {value} ELSE raise_error("
+        f"CASE WHEN size(embedding) = {DIMS} THEN {value} ELSE raise_error("
         f"concat('signature index needs {DIMS}-dim embeddings: vec_id ', "
-        f"CAST(vec_id AS STRING), ' has ', CASE WHEN {col} IS NULL "
-        f"THEN 'NULL' ELSE CAST(size({col}) AS STRING) || ' dims' END)) END"
+        "CAST(vec_id AS STRING), ' has ', CASE WHEN embedding IS NULL "
+        "THEN 'NULL' ELSE CAST(size(embedding) AS STRING) || ' dims' END)) END"
     )
 
 
@@ -92,33 +92,33 @@ def _checked(col: str, value: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _sig_expr(col: str, lo: int, hi: int) -> str:
+def _sig_expr(lo: int, hi: int) -> str:
     """Sign-bit packing of dims [lo, hi] into one BIGINT (bit j set iff
     dim lo+j > 0).  Left-to-right fold, pure integer."""
     return (
         f"aggregate(sequence({lo}, {hi}), CAST(0 AS BIGINT), "
-        f"(acc, i) -> acc + IF(element_at({col}, i) > 0, "
+        "(acc, i) -> acc + IF(element_at(embedding, i) > 0, "
         f"shiftleft(CAST(1 AS BIGINT), i - {lo}), CAST(0 AS BIGINT)))"
     )
 
 
-def fold_sigs(e: DataFrame, col: str = "embedding") -> DataFrame:
+def fold_sigs(e: DataFrame) -> DataFrame:
     """(vec_id, sig_lo, sig_hi) of a vectors frame by a per-row fold:
     a pure map, so a probe over it needs no shuffle before the coarse
     cross-score."""
     return e.selectExpr(
         "vec_id",
-        f"{_checked(col, _sig_expr(col, 1, 32))} AS sig_lo",
-        f"{_checked(col, _sig_expr(col, 33, 64))} AS sig_hi",
+        f"{_checked(_sig_expr(1, 32))} AS sig_lo",
+        f"{_checked(_sig_expr(33, 64))} AS sig_hi",
     )
 
 
-def _exploded(e: DataFrame, col: str = "embedding") -> DataFrame:
+def _exploded(e: DataFrame) -> DataFrame:
     """(vec_id, pos, valf raw, v quantized) — one posexplode pass; the
     raw value feeds the sign bits, the quantized one the thresholds and
     plane bits."""
     return e.select(
-        "vec_id", F.posexplode(F.expr(_checked(col, col))).alias("pos0", "valf")
+        "vec_id", F.posexplode(F.expr(_checked("embedding"))).alias("pos0", "valf")
     ).selectExpr(
         "vec_id", "pos0 + 1 AS pos", "valf", _VQ.format(v="valf") + " AS v"
     )
@@ -159,10 +159,10 @@ def _encode(ex: DataFrame, thr: DataFrame) -> DataFrame:
     return ex.join(F.broadcast(thr), "pos").groupBy("vec_id").agg(*aggs)
 
 
-def exploded_sigs(e: DataFrame, col: str = "embedding") -> DataFrame:
+def exploded_sigs(e: DataFrame) -> DataFrame:
     """Both tiers of a vectors frame, thresholds derived from the frame
     itself (the inline 2-bit tier: no persisted parameters)."""
-    return _encode(_exploded(e, col), _thresholds(_exploded(e, col)))
+    return _encode(_exploded(e), _thresholds(_exploded(e)))
 
 
 # ---------------------------------------------------------------------------
@@ -208,7 +208,6 @@ def shortlist(
     dist: str = "ham",
     q_pred: str = Q_PRED,
     ncand: int = NCAND,
-    col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
     """Coarse stage over a sigs frame: returns ``(q, cand)``, the query
     set (qid, qv) picked by `q_pred`, and each query's top `ncand`
@@ -219,7 +218,7 @@ def shortlist(
     sigs = sigs.select("vec_id", *cols)
     q = (
         sigs.filter(q_pred)
-        .join(e.selectExpr("vec_id", f"{col} AS qv"), "vec_id")
+        .join(e.selectExpr("vec_id", "embedding AS qv"), "vec_id")
         .selectExpr(
             "vec_id AS qid",
             "qv",
@@ -246,16 +245,15 @@ def rerank(
     cand: DataFrame,
     score_sql: str | None = None,
     score: str = "sim",
-    col: str = "embedding",
 ) -> DataFrame:
     """Exact stage: the shortlist joins back to `e` by vec_id, each row
     is scored against its broadcast query vector on the 1e-6 grid
-    (cosine, or `score_sql` over `col` and qv) and each query keeps its
+    (cosine, or `score_sql` over embedding and qv) and each query keeps its
     top K by (score DESC, vec_id) as rnk: cand's columns, `score`,
     rnk."""
-    score_sql = score_sql or cosine_expr(col, "qv")
+    score_sql = score_sql or cosine_expr("embedding", "qv")
     rr = (
-        cand.join(e.selectExpr("vec_id", col), "vec_id")
+        cand.join(e.select("vec_id", "embedding"), "vec_id")
         .join(F.broadcast(q), "qid")
         .selectExpr(
             *cand.columns,
@@ -283,9 +281,7 @@ def probe_2bit(e: DataFrame, sigs: DataFrame, q_pred: str = Q_PRED) -> DataFrame
     return rerank(e, *shortlist(e, sigs, "l1", q_pred))
 
 
-def recall_at_k(
-    e: DataFrame, q: DataFrame, cand: DataFrame, col: str = "embedding"
-) -> DataFrame:
+def recall_at_k(e: DataFrame, q: DataFrame, cand: DataFrame) -> DataFrame:
     """(qid, n_hits, recall): how many of each query's exact top K
     (brute-force cosine against the broadcast query set) the cascade's
     reranked top K over `cand` finds."""
@@ -296,14 +292,14 @@ def recall_at_k(
         .selectExpr(
             "qid",
             "vec_id",
-            f"floor(({cosine_expr(col, 'qv')}) * 1000000"
+            f"floor(({cosine_expr('embedding', 'qv')}) * 1000000"
             " + 0.5) / 1000000 AS sim",
         )
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= K)
         .select("qid", "vec_id")
     )
-    approx = rerank(e, q, cand, col=col).selectExpr(
+    approx = rerank(e, q, cand).selectExpr(
         "qid AS aqid", "vec_id AS avid"
     )
     return (

@@ -457,13 +457,13 @@ def q_sim_recall_clustered(spark, sf_dir):
     (|corpus| x |Q| float cosines — the accepted audit pattern), and
     corpus-x-corpus is what is avoided."""
     cl = ensure_parallelism(Catalog(spark, sf_dir).embeddings).selectExpr(
-        "vec_id", _clustered_expr(False) + " AS emb"
+        "vec_id", _clustered_expr(False) + " AS embedding"
     )
     # one encode pass yields BOTH tiers' signatures (the machinery the
     # persisted index writes); each tier runs the shipped cascade
-    sigs = exploded_sigs(cl, col="emb")
+    sigs = exploded_sigs(cl)
     tiers = [
-        recall_at_k(cl, *shortlist(cl, sigs, dist, col="emb"), col="emb")
+        recall_at_k(cl, *shortlist(cl, sigs, dist))
         .selectExpr(f"'{tier}' AS tier", "qid", "n_hits", "recall")
         for dist, tier in (("ham", "bin1"), ("l1", "thermo2"))
     ]
