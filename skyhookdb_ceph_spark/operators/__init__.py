@@ -5,7 +5,11 @@ operations — no driver-side loops, no row-at-a-time Python UDFs:
 
 - minhash.py    — shingling + banded MinHash LSH (fuzzy dedup)
 - simhash.py    — SimHash bit-signature clustering
-- vectors.py    — cosine/dot expressions + sign-bucket LSH for ANN
+- vectors.py    — cosine/dot expressions, sign-bucket LSH, and the
+  one IVF index: the cell key and its Hamming-1 multiprobe set, the
+  partitionBy(bucket) layout and lifecycle, build_ivf_index ->
+  append_ivf_index (frozen nb) -> read_ivf_index, and the one
+  single-query probe
 - text_index.py — the one inverted text index (reference IDX_TXT
   analog): its layout and lifecycle, build_text_index ->
   append_text_index -> compact, read by keyword_search and

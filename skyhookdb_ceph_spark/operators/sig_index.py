@@ -6,10 +6,11 @@ and let every probe scan 16-48 B/vector instead of 256 B of floats.
 This module is the only code that knows the index.  Its frozen
 parameters:
 
-- embeddings have exactly 64 dims.  Any other size, NULL included,
-  fails the job with a message naming the vec_id: unchecked, the
-  per-row fold would pack the dims it has (or index past the end) and
-  the exploded pass would drop a NULL row from the index outright;
+- embeddings have exactly 64 dims (`vectors.dims_checked`, the check
+  every vector index shares).  Any other size, NULL included, fails
+  the job with a message naming the vec_id: unchecked, the per-row
+  fold would pack the dims it has (or index past the end) and the
+  exploded pass would drop a NULL row from the index outright;
 - 1-bit tier: bit j of ``sig_lo`` / ``sig_hi`` is set iff dim j+1 /
   j+33 > 0 (16 B/vector); the coarse metric is Hamming distance;
 - 2-bit tier: per dim, three thermometer bits v > t1, t2, t3 against
@@ -43,10 +44,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from skyhookdb_ceph_spark.operators import ensure_parallelism
-from skyhookdb_ceph_spark.operators.vectors import cosine_expr
+from skyhookdb_ceph_spark.operators.vectors import cosine_expr, dims_checked
 from skyhookdb_ceph_spark.queries._util import collect_local
 
-DIMS = 64
 K = 5  # final top-k of every tier
 NCAND = 100  # coarse survivors per query.  r12 shipped 20 and measured
 # recall@5 = 0.37 on the isotropic fixture; r13 widened it to 100
@@ -76,17 +76,6 @@ _TIERS = {
 }
 
 
-def _checked(value: str) -> str:
-    """`value` when ``embedding`` has DIMS dims, else a task failure
-    that names the vector and what it holds."""
-    return (
-        f"CASE WHEN size(embedding) = {DIMS} THEN {value} ELSE raise_error("
-        f"concat('signature index needs {DIMS}-dim embeddings: vec_id ', "
-        "CAST(vec_id AS STRING), ' has ', CASE WHEN embedding IS NULL "
-        "THEN 'NULL' ELSE CAST(size(embedding) AS STRING) || ' dims' END)) END"
-    )
-
-
 # ---------------------------------------------------------------------------
 # encoders
 # ---------------------------------------------------------------------------
@@ -108,8 +97,8 @@ def fold_sigs(e: DataFrame) -> DataFrame:
     cross-score."""
     return e.selectExpr(
         "vec_id",
-        f"{_checked(_sig_expr(1, 32))} AS sig_lo",
-        f"{_checked(_sig_expr(33, 64))} AS sig_hi",
+        f"{dims_checked(_sig_expr(1, 32))} AS sig_lo",
+        f"{dims_checked(_sig_expr(33, 64))} AS sig_hi",
     )
 
 
@@ -118,7 +107,7 @@ def _exploded(e: DataFrame) -> DataFrame:
     raw value feeds the sign bits, the quantized one the thresholds and
     plane bits."""
     return e.select(
-        "vec_id", F.posexplode(F.expr(_checked("embedding"))).alias("pos0", "valf")
+        "vec_id", F.posexplode(F.expr(dims_checked("embedding"))).alias("pos0", "valf")
     ).selectExpr(
         "vec_id", "pos0 + 1 AS pos", "valf", _VQ.format(v="valf") + " AS v"
     )

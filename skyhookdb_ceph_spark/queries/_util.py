@@ -54,10 +54,12 @@ def _scratch_dir() -> str | None:
 
 @contextlib.contextmanager
 def scratch(prefix: str):
-    """A fresh dir under ``_scratch_dir()``, removed on exit (normal or
-    exceptional).  Pin anything read from it with ``collect_local``
-    inside the block."""
-    d = tempfile.mkdtemp(prefix=prefix, dir=_scratch_dir())
+    """A fresh dir ``<prefix><pid>_*`` under ``_scratch_dir()``, removed
+    on exit (normal or exceptional).  The pid names the owner, so a
+    leak check can tell this process's entries from other processes'
+    in a shared scratch root.  Pin anything read from it with
+    ``collect_local`` inside the block."""
+    d = tempfile.mkdtemp(prefix=f"{prefix}{os.getpid()}_", dir=_scratch_dir())
     try:
         yield d
     finally:

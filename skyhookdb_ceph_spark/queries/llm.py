@@ -319,18 +319,7 @@ def q_sim_knn_ivf(spark, sf_dir):
     recall is traded via n_bits / multi-probe.  The oracle computes the
     identical cell-restricted search."""
     e = Catalog(spark, sf_dir).embeddings
-    withb = vectors.bucketed_cells(e)
-    q = withb.filter(F.col("vec_id") == 0).selectExpr(
-        "embedding AS qv", "bucket AS qbucket"
-    )
-    return (
-        withb.join(F.broadcast(q), F.col("bucket") == F.col("qbucket"))
-        .selectExpr(
-            "vec_id", f"floor(({vectors.cosine_expr('embedding', 'qv')}) * 1000000 + 0.5) / 1000000 AS sim"
-        )
-        .orderBy(F.col("sim").desc(), "vec_id")
-        .limit(10)
-    )
+    return vectors.probe(vectors.bucketed_cells(e), 0, 10)
 
 
 # ---------------------------------------------------------------------------

@@ -941,35 +941,6 @@ FROM cells GROUP BY bucket ORDER BY bucket
 """
 
 
-def _ivf_incremental_layout(spark, sf_dir, tmp):
-    """Build the base IVF layout under `tmp`, append the delta, return
-    (layout df, nb).  Shared with the append-only-files plan test."""
-    from skyhookdb_ceph_spark.operators.vectors import (
-        corpus_bits,
-        sign_bucket_expr,
-    )
-
-    e = Catalog(spark, sf_dir).embeddings
-    base = e.filter(F.col("vec_id") % _IVF_INC_MOD != 0)
-    delta = e.filter(F.col("vec_id") % _IVF_INC_MOD == 0)
-    # nb is an INDEX PARAMETER: frozen from the base corpus at build
-    # time (1-row probe); the delta must hash with the same nb or its
-    # cells land in a different keyspace
-    nb = int(corpus_bits(base).first()["nb"])
-    cell = sign_bucket_expr("embedding", nb)
-    base.selectExpr(
-        "vec_id", "CAST(0 AS INT) AS is_delta", f"{cell} AS bucket"
-    ).repartition("bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(tmp)
-    delta.selectExpr(
-        "vec_id", "CAST(1 AS INT) AS is_delta", f"{cell} AS bucket"
-    ).repartition("bucket").write.mode("append").partitionBy(
-        "bucket"
-    ).parquet(tmp)
-    return spark.read.parquet(tmp), nb
-
-
 @query(
     "q_vec_ivf_incremental",
     oracle=_IVF_INC_ORACLE,
@@ -990,18 +961,18 @@ def q_vec_ivf_incremental(spark, sf_dir):
     corpus — re-deriving would silently re-key every existing cell
     (the oracle computes nb from the base cohort the same way).  The
     verdict table is the per-cell (n_base, n_delta, n_total) census
-    of the read-back layout, which the oracle re-derives from direct
-    assignment — proving append-maintained == rebuilt-from-scratch.
-    Partition-dir values type-infer back as ints, so the census
-    re-pads them to the nb-wide bucket strings."""
+    of the read-back index, cohorts told apart by vec_id, which the
+    oracle re-derives from direct assignment — proving
+    append-maintained == rebuilt-from-scratch."""
+    e = Catalog(spark, sf_dir).embeddings
+    delta = F.col("vec_id") % _IVF_INC_MOD == 0
     with scratch("skyhook_ivfinc_") as tmp:
-        layout, nb = _ivf_incremental_layout(spark, sf_dir, tmp)
+        vectors.build_ivf_index(spark, e.filter(~delta), tmp)
+        vectors.append_ivf_index(spark, e.filter(delta), tmp)
         out = (
-            layout.groupBy(
-                F.lpad(F.col("bucket").cast("string"), nb, "0").alias(
-                    "bucket"
-                )
-            )
+            vectors.read_ivf_index(spark, tmp)
+            .withColumn("is_delta", delta.cast("int"))
+            .groupBy("bucket")
             .agg(
                 F.sum(1 - F.col("is_delta")).cast("bigint").alias("n_base"),
                 F.sum("is_delta").cast("bigint").alias("n_delta"),

@@ -605,30 +605,7 @@ def q_sim_knn_multiprobe(spark, sf_dir):
     from skyhookdb_ceph_spark.operators import vectors
 
     e = Catalog(spark, sf_dir).embeddings
-    withb = vectors.bucketed_cells(e)
-    qrow = withb.filter(F.col("vec_id") == 0).selectExpr(
-        "embedding AS qv", "bucket AS qb"
-    )
-    probes = (
-        qrow.crossJoin(F.broadcast(vectors.corpus_bits(e)))
-        .selectExpr(
-            "qv",
-            "explode(array_union(array(qb), "
-            "transform(sequence(1, nb), i -> concat(substr(qb, 1, i - 1), "
-            "CASE WHEN substr(qb, i, 1) = '1' THEN '0' ELSE '1' END, "
-            "substr(qb, i + 1, nb))))) AS pb",
-        )
-    )
-    return (
-        withb.join(F.broadcast(probes), F.col("bucket") == F.col("pb"))
-        .selectExpr(
-            "vec_id",
-            f"floor(({vectors.cosine_expr('embedding', 'qv')}) * 1000000 + 0.5)"
-            " / 1000000 AS sim",
-        )
-        .orderBy(F.col("sim").desc(), "vec_id")
-        .limit(10)
-    )
+    return vectors.probe(vectors.bucketed_cells(e), 0, 10, multiprobe=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1209,10 +1186,10 @@ ORDER BY sim DESC, b.vec_id LIMIT 5
 @query("q_vec_ivf_build", oracle=_ivf_build_oracle(), tags=("llm", "similarity", "layout"))
 def q_vec_ivf_build(spark, sf_dir):
     """IVF index BUILD as physical layout: embeddings written
-    partitionBy(cell) to scratch (the index build), then the probe
-    reads back with a cell filter — so the candidate restriction is
-    DIRECTORY pruning, not even a row filter: the probe's IO is
-    |cell|, not |corpus|.  This is what q_sim_knn_ivf's docstring
+    partitionBy(cell) to scratch (operators/vectors.build_ivf_index),
+    then the probe reads back with a cell filter — so the candidate
+    restriction is DIRECTORY pruning, not even a row filter: the
+    probe's IO is |cell|, not |corpus|.  This is what q_sim_knn_ivf's docstring
     promises at scale ('the cell assignment is a partition column'),
     demonstrated end-to-end.  Results are identical to the logical
     cell filter, which is what the oracle states."""
@@ -1220,30 +1197,10 @@ def q_vec_ivf_build(spark, sf_dir):
 
     e = Catalog(spark, sf_dir).embeddings
     with scratch("skyhook_ivf_") as tmp:
-        withb = vectors.bucketed_cells(e)
-        # repartition by cell before the partitioned write: without it
-        # every input partition writes a file into every cell dir (the
-        # small-files problem — 32x the files at 32 input partitions);
-        # with it each cell is one file, the layout an ANN probe wants.
-        # Local wall time is job-count-bound either way (~6 jobs x
-        # dispatch floor); at scale the file count is what matters.
-        withb.repartition("bucket").write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(f"{tmp}/ivf")
-        index = spark.read.parquet(f"{tmp}/ivf")
-        qrow = withb.filter(F.col("vec_id") == 0).selectExpr(
-            "embedding AS qv", "bucket AS qb"
-        )
-        out = (
-            index.join(F.broadcast(qrow), F.col("bucket") == F.col("qb"))
-            .selectExpr(
-                "vec_id",
-                f"floor(({vectors.cosine_expr('embedding', 'qv')}) "
-                "* 1000000 + 0.5) / 1000000 AS sim",
-            )
-            .orderBy(F.col("sim").desc(), "vec_id")
-            .limit(5)
-        )
+        vectors.build_ivf_index(spark, e, tmp)
+        # the query row is read back too: the probe never recomputes a
+        # cell, and the bucket filter prunes directories
+        out = vectors.probe(vectors.read_ivf_index(spark, tmp), 0, 5)
         return collect_local(out)
 
 

@@ -825,15 +825,9 @@ def q_vec_recall_eval(spark, sf_dir):
         "qid", "qv", "qnrm", F.lit(1).alias("pw"),
         F.col("qbucket").alias("pb"),
     )
-    multi = (
-        qs.crossJoin(F.broadcast(vectors.corpus_bits(e)))
-        .selectExpr(
-            "qid", "qv", "qnrm", "cast(nb + 1 AS int) AS pw",
-            "explode(array_union(array(qbucket), "
-            "transform(sequence(1, nb), i -> concat(substr(qbucket, 1, i - 1), "
-            "CASE WHEN substr(qbucket, i, 1) = '1' THEN '0' ELSE '1' END, "
-            "substr(qbucket, i + 1, nb))))) AS pb",
-        )
+    multi = qs.selectExpr(
+        "qid", "qv", "qnrm", "cast(length(qbucket) + 1 AS int) AS pw",
+        f"explode({vectors.hamming1_sql('qbucket')}) AS pb",
     )
     probes = single.unionByName(multi)
     cand = (

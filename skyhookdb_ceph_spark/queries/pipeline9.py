@@ -106,46 +106,31 @@ def q_vec_ivf_files_pruned(spark, sf_dir):
     (vec_id % 50 == 0).  Driver-side materialization is the DISTINCT
     CELL LIST — bounded by 2^nb regardless of corpus size (the same
     boundedness that makes an IVF directory listing cheap at 100 TB) —
-    never vectors or rows.  Partition-directory values type-infer back
-    as ints ("0110" -> 110), so probe cells are pushed as their
-    decimal-digit int forms; the filter lands in PartitionFilters
-    (asserted in tests/test_ivf_layout.py), which at 100 TB is the
-    difference between listing nb+1 directories and scanning 2^nb."""
+    never vectors or rows.  The index is built and read through
+    operators/vectors.py's lifecycle, so cells come back as the
+    strings they were written as and the probe pushes them as-is; the
+    filter lands in PartitionFilters (asserted in
+    tests/test_ivf_layout.py), which at 100 TB is the difference
+    between listing nb+1 directories and scanning 2^nb."""
     e = Catalog(spark, sf_dir).embeddings
-    b = vectors.bucketed_cells(e)
-    qs = b.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("bucket").alias("qbucket")
-    )
-    # distinct probe CELLS for both widths in ONE job (bounded by
-    # 2^nb per width, collect-safe): width-1 cells are the query
-    # buckets themselves; the multiprobe set adds the Hamming-1 flips
-    per_width = (
-        qs.crossJoin(F.broadcast(vectors.corpus_bits(e)))
-        .selectExpr(
-            "nb",
-            "explode(array_union(array(qbucket), "
-            "transform(sequence(1, nb), i -> concat(substr(qbucket, 1, i - 1), "
-            "CASE WHEN substr(qbucket, i, 1) = '1' THEN '0' ELSE '1' END, "
-            "substr(qbucket, i + 1, nb))))) AS pb",
-            "qbucket",
-        )
-        .select(
-            "pb", (F.col("pb") == F.col("qbucket")).alias("is_own"), "nb"
-        )
-        .groupBy("pb")
-        .agg(F.max("is_own").alias("own"), F.first("nb").alias("nb"))
-        .collect()
-    )
-    cells1 = sorted(r["pb"] for r in per_width if r["own"])
-    cellsm = sorted(r["pb"] for r in per_width)
-    nb = per_width[0]["nb"]
     with scratch("skyhook_ivfprune_") as tmp:
-        # one file per cell directory: repartition(bucket) gives every
-        # bucket a single writing task before partitionBy splits dirs
-        b.repartition("bucket").write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(tmp)
-        layout = spark.read.parquet(tmp)
+        vectors.build_ivf_index(spark, e, tmp)
+        layout = vectors.read_ivf_index(spark, tmp)
+        # distinct probe CELLS for both widths in ONE job (bounded by
+        # 2^nb per width, collect-safe): width-1 cells are the query
+        # buckets themselves; the multiprobe set adds the Hamming-1 flips
+        per_width = (
+            layout.filter(F.col("vec_id") % 50 == 0)
+            .selectExpr(
+                f"explode({vectors.hamming1_sql('bucket')}) AS pb", "bucket"
+            )
+            .groupBy("pb")
+            .agg(F.max(F.col("pb") == F.col("bucket")).alias("own"))
+            .collect()
+        )
+        cells1 = sorted(r["pb"] for r in per_width if r["own"])
+        cellsm = sorted(r["pb"] for r in per_width)
+        nb = len(cellsm[0])
         totals = layout.agg(
             F.count_distinct("bucket").cast("bigint").alias("n_cells_total"),
             F.count(F.lit(1)).cast("bigint").alias("corpus_n"),
@@ -156,7 +141,7 @@ def q_vec_ivf_files_pruned(spark, sf_dir):
         legs = []
         for pw, cells in ((1, cells1), (nb + 1, cellsm)):
             legs.append(
-                layout.filter(F.col("bucket").isin([int(c) for c in cells]))
+                layout.filter(F.col("bucket").isin(cells))
                 .withColumn("_file", F.input_file_name())
                 .select(F.lit(pw).alias("pw"), "_file", "bucket")
             )

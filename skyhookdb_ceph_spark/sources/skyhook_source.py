@@ -161,8 +161,10 @@ def _stats_can_match(f: Filter, stats) -> bool:
 
 
 class SkyhookReader(DataSourceReader):
-    def __init__(self, path: str, pushdown: bool = True, min_splits: int = 1):
+    def __init__(self, path: str, pushdown: bool = True, min_splits: int = 1,
+                 columns: list[str] | None = None):
         self.path = path
+        self.columns = columns  # the declared schema's, decoded in order
         # the reference exposes pushdown as a PER-QUERY flag
         # (--use-cls on/off [U: run-query.cc]); so do we — an A/B knob,
         # not a deployment config.  (A runtime flip of
@@ -259,7 +261,9 @@ class SkyhookReader(DataSourceReader):
     def read(self, partition: RowGroupPartition):
         import pyarrow.parquet as pq
 
-        table = pq.ParquetFile(partition.path).read_row_group(partition.row_group)
+        table = pq.ParquetFile(partition.path).read_row_group(
+            partition.row_group, columns=self.columns
+        )
         if partition.lo is not None:
             table = table.slice(partition.lo, partition.hi - partition.lo)
         expr = None
@@ -300,6 +304,7 @@ class SkyhookDataSource(DataSource):
             self.options["path"],
             pushdown=self.options.get("pushdown", "true").lower() == "true",
             min_splits=int(self.options.get("min_splits", "1")),
+            columns=schema.fieldNames(),
         )
 
     def streamReader(self, schema) -> "SkyhookStreamReader":

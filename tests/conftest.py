@@ -83,30 +83,39 @@ def _no_session_conf_leaks():
     assert not leaked, f"session conf leaked (before, after): {leaked}"
 
 
+def own_scratch_entries(root: str, pid: int) -> set[str]:
+    """The skyhook_* entries under `root` that process `pid` made
+    (queries/_util.scratch names them ``<prefix><pid>_*``); other
+    processes sharing the root are not this run's leaks."""
+    import os
+    import re
+
+    own = re.compile(rf"skyhook_[a-z_]*_{pid}(_|$)")
+    try:
+        return {e for e in os.listdir(root) if own.match(e)}
+    except OSError:
+        return set()
+
+
 @pytest.fixture(autouse=True)
 def _no_scratch_leaks():
-    """Fail the test that leaves a new skyhook_* entry in the scratch
-    dir (queries/_util.scratch).  Allowed by name: the process-lived
-    q_schema_evolve output, the warehouse and the checkpoint base."""
+    """Fail the test that leaves a new skyhook_* entry of this process
+    in the scratch dir (queries/_util.scratch).  Allowed by name: the
+    process-lived q_schema_evolve output, the warehouse and the
+    checkpoint base."""
     import os
     import tempfile
 
     from skyhookdb_ceph_spark.queries._util import _scratch_dir
 
     root = _scratch_dir() or tempfile.gettempdir()
+    pid = os.getpid()
     allowed = {
-        f"skyhook_evolve_out_{os.getpid()}",
+        f"skyhook_evolve_out_{pid}",
         "skyhook_warehouse",
         "skyhook_stream_ckpt",
     }
-
-    def snap():
-        try:
-            return {e for e in os.listdir(root) if e.startswith("skyhook_")}
-        except OSError:
-            return set()
-
-    before = snap()
+    before = own_scratch_entries(root, pid)
     yield
-    leaked = sorted(snap() - before - allowed)
+    leaked = sorted(own_scratch_entries(root, pid) - before - allowed)
     assert not leaked, f"scratch entries leaked into {root}: {leaked}"

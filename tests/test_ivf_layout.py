@@ -1,11 +1,13 @@
 """IVF scale path end-to-end: cells persisted partitionBy(bucket) make
 a probe a PARTITION PRUNE — the ANN query touches one directory out of
-2^n_bits (the claim in q_sim_knn_ivf's docstring, proven in the plan)."""
+2^n_bits (the claim in q_sim_knn_ivf's docstring, proven in the plan).
+The index is built, appended and read through operators/vectors.py's
+lifecycle, the one place that knows its layout."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
+import pathlib
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,26 +16,35 @@ from skyhookdb_ceph_spark.catalog import Catalog
 from skyhookdb_ceph_spark.operators import vectors
 from skyhookdb_ceph_spark.plans.explain import explain_str
 
+SF = "/root/testdata/sf0.001"
+
 
 @pytest.fixture(scope="module")
-def ivf_index(spark):
-    sf = "/root/testdata/sf0.001"
-    tmp = tempfile.mkdtemp(prefix="skyhook_ivf_")
-    cells = vectors.bucketed_cells(Catalog(spark, sf).embeddings, n_bits=4)
-    cells.write.mode("overwrite").partitionBy("bucket").parquet(f"{tmp}/cells")
-    yield spark, sf, f"{tmp}/cells"
-    shutil.rmtree(tmp, ignore_errors=True)
+def ivf_index(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("ivf") / "cells")
+    vectors.build_ivf_index(spark, Catalog(spark, SF).embeddings, path)
+    return spark, SF, path
+
+
+def _query_cell(spark, path):
+    return (
+        vectors.read_ivf_index(spark, path)
+        .filter(F.col("vec_id") == 0)
+        .select("bucket")
+        .first()[0]
+    )
 
 
 def test_probe_prunes_to_one_cell(ivf_index):
     spark, sf, path = ivf_index
-    qcell = (
+    qcell = _query_cell(spark, path)
+    assert qcell == (
         vectors.bucketed_cells(Catalog(spark, sf).embeddings, n_bits=4)
         .filter(F.col("vec_id") == 0)
         .select("bucket")
-        .collect()[0][0]
+        .first()[0]
     )
-    probe = spark.read.parquet(path).filter(F.col("bucket") == qcell)
+    probe = vectors.read_ivf_index(spark, path).filter(F.col("bucket") == qcell)
     plan = explain_str(probe)
     assert "PartitionFilters" in plan
     assert "bucket" in plan.split("PartitionFilters", 1)[1].splitlines()[0]
@@ -46,23 +57,10 @@ def test_persisted_probe_matches_inline_ivf(ivf_index):
     inline = sorted(
         map(tuple, load_all()["q_sim_knn_ivf"].fn(spark, sf).collect())
     )
-    qrow = (
-        vectors.bucketed_cells(Catalog(spark, sf).embeddings, n_bits=4)
-        .filter(F.col("vec_id") == 0)
-        .selectExpr("embedding AS qv", "bucket AS qbucket")
-    )
     persisted = sorted(
         map(
             tuple,
-            spark.read.parquet(path)
-            .join(F.broadcast(qrow), F.col("bucket") == F.col("qbucket"))
-            .selectExpr(
-                "vec_id",
-                f"round({vectors.cosine_expr('embedding', 'qv')}, 6) AS sim",
-            )
-            .orderBy(F.col("sim").desc(), "vec_id")
-            .limit(10)
-            .collect(),
+            vectors.probe(vectors.read_ivf_index(spark, path), 0, 10).collect(),
         )
     )
     assert persisted == inline
@@ -99,12 +97,7 @@ def test_multiprobe_prunes_to_probe_set_only(ivf_index):
     partitions (scanned distinct buckets == probe set, a strict
     subset of the 2^nb cells)."""
     spark, sf, path = ivf_index
-    qcell = (
-        vectors.bucketed_cells(Catalog(spark, sf).embeddings, n_bits=4)
-        .filter(F.col("vec_id") == 0)
-        .select("bucket")
-        .collect()[0][0]
-    )
+    qcell = _query_cell(spark, path)
     probes = sorted(
         {qcell}
         | {
@@ -113,31 +106,24 @@ def test_multiprobe_prunes_to_probe_set_only(ivf_index):
         }
     )
     assert len(probes) == 5
-    pruned = spark.read.parquet(path).filter(F.col("bucket").isin(probes))
+    index = vectors.read_ivf_index(spark, path)
+    pruned = index.filter(F.col("bucket").isin(probes))
     plan = explain_str(pruned)
     assert "PartitionFilters" in plan
     assert "bucket" in plan.split("PartitionFilters", 1)[1].splitlines()[0]
-    # partition-dir values type-infer to INT ("0001" -> 1); normalize
-    # back to the 4-bit string form for the set comparison
-    scanned = {
-        str(r["bucket"]).zfill(4)
-        for r in pruned.select("bucket").distinct().collect()
-    }
-    all_cells = {
-        str(r["bucket"]).zfill(4)
-        for r in spark.read.parquet(path).select("bucket").distinct().collect()
-    }
+    scanned = {r["bucket"] for r in pruned.select("bucket").distinct().collect()}
+    all_cells = {r["bucket"] for r in index.select("bucket").distinct().collect()}
     assert scanned <= set(probes)
     assert len(all_cells) > len(probes)  # pruning was non-trivial
 
 
-def test_files_pruned_probe_plans_partition_filters(spark):
+def test_files_pruned_probe_plans_partition_filters(spark, tmp_path):
     """q_vec_ivf_files_pruned's claim rests on the probe's IN filter
     reaching PartitionFilters (directory pruning, not a scan+filter).
-    Reproduce its exact read shape — persisted partitionBy(bucket)
-    layout, int-inferred partition values, isin over probe cells —
-    and assert the filter lands on the partition column, plus the
-    query's own verdict columns hold."""
+    Reproduce its exact read shape — the index built and read back
+    through the lifecycle, string cells, isin over probe cells — and
+    assert the filter lands on the partition column, plus the query's
+    own verdict columns hold."""
     from skyhookdb_ceph_spark.registry import load_all
 
     rows = {
@@ -154,57 +140,76 @@ def test_files_pruned_probe_plans_partition_filters(spark):
     assert rows[w1]["n_cells_probed"] <= rows[wm]["n_cells_probed"]
     assert rows[w1]["frac_corpus_read"] < rows[wm]["frac_corpus_read"]
     # plan shape: same persisted-layout probe read must partition-prune
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="skyhook_ivfprune_plan_")
-    try:
-        cells = vectors.bucketed_cells(
-            Catalog(spark, "/root/testdata/sf0.001").embeddings
-        )
-        cells.repartition("bucket").write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(tmp)
-        some = [
-            int(r["bucket"])
-            for r in cells.select("bucket").distinct().limit(3).collect()
-        ]
-        pruned = spark.read.parquet(tmp).filter(F.col("bucket").isin(some))
-        plan = explain_str(pruned)
-        assert "PartitionFilters" in plan
-        assert "bucket" in plan.split("PartitionFilters", 1)[1].splitlines()[0]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    vectors.build_ivf_index(spark, Catalog(spark, SF).embeddings, str(tmp_path))
+    index = vectors.read_ivf_index(spark, str(tmp_path))
+    some = [r["bucket"] for r in index.select("bucket").distinct().limit(3).collect()]
+    pruned = index.filter(F.col("bucket").isin(some))
+    plan = explain_str(pruned)
+    assert "PartitionFilters" in plan
+    assert "bucket" in plan.split("PartitionFilters", 1)[1].splitlines()[0]
 
 
-def test_ivf_incremental_append_never_rewrites(spark):
+def test_ivf_incremental_append_never_rewrites(spark, tmp_path):
     """q_vec_ivf_incremental's append-only contract: after the delta
     append, base rows and delta rows live in DISJOINT files (the
-    append created new files; it never rewrote a base file), and
-    every cell's assignment matches direct computation."""
-    from pyspark.sql import functions as F
-
-    from skyhookdb_ceph_spark.queries._util import scratch
-    from skyhookdb_ceph_spark.queries.pipeline11 import (
-        _ivf_incremental_layout,
+    append created new files; it never rewrote a base file)."""
+    e = Catalog(spark, SF).embeddings
+    delta = F.col("vec_id") % 4 == 0
+    vectors.build_ivf_index(spark, e.filter(~delta), str(tmp_path))
+    vectors.append_ivf_index(spark, e.filter(delta), str(tmp_path))
+    files = (
+        vectors.read_ivf_index(spark, str(tmp_path))
+        .select(F.input_file_name().alias("f"), delta.cast("int").alias("is_delta"))
+        .groupBy("f")
+        .agg(F.max("is_delta").alias("hi"), F.min("is_delta").alias("lo"))
+        .collect()
     )
+    assert files, "layout must have files"
+    # no file mixes cohorts: append-only, base files untouched
+    assert all(r["hi"] == r["lo"] for r in files)
+    assert {r["hi"] for r in files} == {0, 1}
 
-    with scratch("skyhook_ivfinc_") as tmp:
-        layout, nb = _ivf_incremental_layout(
-            spark, "/root/testdata/sf0.001", tmp
+
+def test_append_keys_with_the_frozen_nb(spark, tmp_path):
+    """The append keys a delta with the index's stored nb, never one
+    derived from the delta: a 4-bit index (500 vectors) grown by 4,096
+    synthetic vectors, whose own size would derive 6 bits, keeps every
+    appended cell 4 wide and equal to bucketed_cells(delta, n_bits=4)."""
+    n_delta = 4096
+    assert vectors.scaled_bits_py(n_delta) >= 6
+    delta = spark.range(n_delta).selectExpr(
+        "id + 100000 AS vec_id",
+        "transform(sequence(0, 63), j -> CAST(sin(id * (2 * j + 3) + j) AS FLOAT))"
+        " AS embedding",
+    )
+    vectors.build_ivf_index(spark, Catalog(spark, SF).embeddings, str(tmp_path))
+    vectors.append_ivf_index(spark, delta, str(tmp_path))
+    appended = (
+        vectors.read_ivf_index(spark, str(tmp_path))
+        .filter(F.col("vec_id") >= 100000)
+        .select("vec_id", "bucket")
+    )
+    rows = sorted(map(tuple, appended.collect()))
+    assert len(rows) == n_delta
+    assert {len(b) for _, b in rows} == {4}
+    expected = vectors.bucketed_cells(delta, n_bits=4).select("vec_id", "bucket")
+    assert rows == sorted(map(tuple, expected.collect()))
+
+
+def test_ivf_index_knowledge_lives_in_one_module():
+    """The partitionBy(bucket) write, the Hamming-1 flip and the nb
+    derivation are written once, in operators/vectors.py; a second copy
+    anywhere in the package is the drift that module exists to
+    prevent."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "skyhookdb_ceph_spark"
+    for needle in (
+        r'partitionBy\(\s*"bucket"\s*\)',
+        re.escape(", i, 1) = '1'"),
+        re.escape("corpus_bits("),
+    ):
+        holders = sorted(
+            str(p.relative_to(pkg))
+            for p in pkg.rglob("*.py")
+            if re.search(needle, p.read_text())
         )
-        files = (
-            layout.select(
-                F.input_file_name().alias("f"), "is_delta"
-            )
-            .groupBy("f")
-            .agg(
-                F.max("is_delta").alias("hi"),
-                F.min("is_delta").alias("lo"),
-            )
-            .collect()
-        )
-        assert files, "layout must have files"
-        # no file mixes cohorts: append-only, base files untouched
-        assert all(r["hi"] == r["lo"] for r in files)
-        assert {r["hi"] for r in files} == {0, 1}
+        assert holders == ["operators/vectors.py"], (needle, holders)

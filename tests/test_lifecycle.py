@@ -41,6 +41,27 @@ def test_scratch_removed_on_return_and_on_exception(monkeypatch, tmp_path):
     assert os.listdir(tmp_path) == []
 
 
+def test_leak_guard_counts_only_this_process(monkeypatch, tmp_path):
+    """The scratch-leak guard (conftest.own_scratch_entries) ignores a
+    skyhook_* entry another process makes in the shared root while a
+    test runs, and still reports one this process's scratch() leaves."""
+    from conftest import own_scratch_entries
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    pid = os.getpid()
+    before = own_scratch_entries(str(tmp_path), pid)
+    (tmp_path / f"skyhook_ivfinc_{pid + 1}_x1y2").mkdir()
+    (tmp_path / "skyhook_sigbuild_y7c7we90").mkdir()  # no owner pid
+    leaky = scratch("skyhook_t_")
+    d = leaky.__enter__()
+    try:
+        assert os.path.basename(d).startswith(f"skyhook_t_{pid}_")
+        leaked = own_scratch_entries(str(tmp_path), pid) - before
+        assert leaked == {os.path.basename(d)}
+    finally:
+        leaky.__exit__(None, None, None)
+
+
 def test_scoped_conf_restores_on_exception(spark):
     set_key = "spark.sql.shuffle.partitions"
     unset_key = "spark.sql.streaming.stateStore.minDeltasForSnapshot"

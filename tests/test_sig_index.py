@@ -28,6 +28,11 @@ from skyhookdb_ceph_spark.operators.sig_index import (
     probe_2bit,
     probe_binary,
 )
+from skyhookdb_ceph_spark.operators.vectors import (
+    banded_cells,
+    bucketed_cells,
+    build_ivf_index,
+)
 from skyhookdb_ceph_spark.plans.explain import explain_str
 from skyhookdb_ceph_spark.registry import load_all
 
@@ -192,13 +197,26 @@ _MALFORMED = {
 
 
 @pytest.mark.parametrize("case", sorted(_MALFORMED))
-@pytest.mark.parametrize("encoder", ["build", "fold_sigs", "exploded_sigs"])
+@pytest.mark.parametrize(
+    "encoder",
+    [
+        "build",
+        "fold_sigs",
+        "exploded_sigs",
+        "ivf_build",
+        "bucketed_cells",
+        "banded_cells",
+    ],
+)
 def test_encoders_reject_malformed_embeddings(spark, tmp_path, case, encoder):
     """Every encoder fails on an embedding that is not 64-dim, naming
     the vector: unchecked, the per-row fold packed a 65-dim vector's
     first 64 dims and read past a 63-dim one's end, and the build
     encoded a 63-dim vector from what it had and dropped a NULL one
-    from the index (499 rows for 500 vectors), so probes answered."""
+    from the index (499 rows for 500 vectors), so probes answered.
+    The IVF / LSH cell keys share the check: unchecked, they binned a
+    NULL embedding into cell '0000' and a 63- or 65-dim one from its
+    first nb dims."""
     bad_expr, cause = _MALFORMED[case]
     e = Catalog(spark, SF).embeddings.withColumn(
         "embedding",
@@ -208,6 +226,9 @@ def test_encoders_reject_malformed_embeddings(spark, tmp_path, case, encoder):
         "build": lambda: build_sig_index(spark, e, str(tmp_path)),
         "fold_sigs": lambda: fold_sigs(e).collect(),
         "exploded_sigs": lambda: exploded_sigs(e).collect(),
+        "ivf_build": lambda: build_ivf_index(spark, e, str(tmp_path / "ivf")),
+        "bucketed_cells": lambda: bucketed_cells(e).collect(),
+        "banded_cells": lambda: banded_cells(e).collect(),
     }[encoder]
     with pytest.raises(Exception, match=f"64-dim embeddings: vec_id 5 {cause}"):
         run()

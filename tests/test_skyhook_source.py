@@ -306,3 +306,28 @@ def test_min_splits_slices_after_pruning(spark, sf_small):
     a = sorted(map(tuple, plain.select("doc_id").collect()))
     b = sorted(map(tuple, sliced.select("doc_id").collect()))
     assert a == b and len(a) > 0
+
+
+def test_columns_option_projects_batch_read(spark):
+    """option("columns", "c,a") declares a (c, a) schema, and the batch
+    reader must decode exactly those columns in that order: decoding
+    every column failed the scan with DATA_SOURCE_RETURN_SCHEMA_MISMATCH.
+    A filter pushed on a projected column still applies."""
+    import pyarrow.compute as pc
+
+    import skyhookdb_ceph_spark.sources.skyhook_source as src
+
+    src.register(spark)
+    df = (
+        spark.read.format("skyhook")
+        .option("path", LI)
+        .option("columns", "l_quantity,l_orderkey")
+        .load()
+        .filter("l_quantity < 10")
+    )
+    assert df.columns == ["l_quantity", "l_orderkey"]
+    t = pq.read_table(LI, columns=["l_quantity", "l_orderkey"])
+    t = t.filter(pc.field("l_quantity") < 10)
+    expected = sorted(zip(*(t.column(c).to_pylist() for c in t.column_names)))
+    got = sorted(map(tuple, df.collect()))
+    assert got == expected and len(got) > 0
