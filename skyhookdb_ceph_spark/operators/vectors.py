@@ -58,6 +58,7 @@ N_BANDS = 4
 BAND_STRIDE = 16
 _MIN_BITS = 4
 DIMS = 64  # every index over `embedding` keys exactly this many dims
+QUERY_VEC_ID = 0  # the probe's query vector
 _IVF_SCHEMA = "vec_id bigint, embedding array<float>, bucket string"
 
 
@@ -195,14 +196,14 @@ def hamming1_sql(cell: str) -> str:
 def bucketed_cells(emb: DataFrame, n_bits: int | None = None) -> DataFrame:
     """(vec_id, embedding, bucket): the band-0 cell per vector, nb
     derived from the corpus unless `n_bits` pins it."""
-    return _keyed(ensure_parallelism(emb), n_bits, emb)
-
-
-def _keyed(e: DataFrame, n_bits: int | None, corpus: DataFrame) -> DataFrame:
-    """`e` with its cells: nb pinned, or broadcast from `corpus`."""
+    e = ensure_parallelism(emb)
     if n_bits is None:
-        e, n_bits = e.crossJoin(F.broadcast(corpus_bits(corpus))), "nb"
-    return e.selectExpr("vec_id", "embedding", f"{cell_sql(n_bits)} AS bucket")
+        e, n_bits = e.crossJoin(F.broadcast(corpus_bits(emb))), "nb"
+    return _keyed(e, n_bits)
+
+
+def _keyed(e: DataFrame, nb) -> DataFrame:
+    return e.selectExpr("vec_id", "embedding", f"{cell_sql(nb)} AS bucket")
 
 
 def banded_cells(emb: DataFrame) -> DataFrame:
@@ -275,26 +276,27 @@ def _write_cells(cells: DataFrame, path: str, mode: str) -> None:
 
 def build_ivf_index(spark, vectors: DataFrame, path: str) -> None:
     """Write the index of a (vec_id, embedding) frame to ``path``."""
-    _write_cells(_keyed(vectors, None, vectors), path, "overwrite")
+    keyed = _keyed(vectors.crossJoin(F.broadcast(corpus_bits(vectors))), "nb")
+    _write_cells(keyed, path, "overwrite")
 
 
 def append_ivf_index(spark, vectors: DataFrame, path: str) -> None:
     """Add a delta frame to the index at ``path`` as new files, keyed
     with the stored cells' width as nb."""
     nb = read_ivf_index(spark, path).select(F.length("bucket")).first()[0]
-    _write_cells(_keyed(vectors, nb, vectors), path, "append")
+    _write_cells(_keyed(vectors, nb), path, "append")
 
 
 def read_ivf_index(spark, path: str) -> DataFrame:
     return spark.read.schema(_IVF_SCHEMA).parquet(path)
 
 
-def probe(cells: DataFrame, qid: int, k: int, multiprobe: bool = False) -> DataFrame:
-    """Top k (vec_id, sim) of a cells frame against its vector `qid`:
+def probe(cells: DataFrame, k: int, multiprobe: bool = False) -> DataFrame:
+    """Top k (vec_id, sim) of a cells frame against its QUERY_VEC_ID:
     the query's cell (plus its Hamming-1 neighbours if `multiprobe`)
     broadcast into a bucket equi-join, cosine on the 1e-6 grid."""
     pcell = f"explode({hamming1_sql('bucket')})" if multiprobe else "bucket"
-    probes = cells.filter(F.col("vec_id") == qid).selectExpr(
+    probes = cells.filter(F.col("vec_id") == QUERY_VEC_ID).selectExpr(
         "embedding AS qv", f"{pcell} AS pcell"
     )
     return (

@@ -319,7 +319,7 @@ def q_sim_knn_ivf(spark, sf_dir):
     recall is traded via n_bits / multi-probe.  The oracle computes the
     identical cell-restricted search."""
     e = Catalog(spark, sf_dir).embeddings
-    return vectors.probe(vectors.bucketed_cells(e), 0, 10)
+    return vectors.probe(vectors.bucketed_cells(e), 10)
 
 
 # ---------------------------------------------------------------------------

@@ -605,7 +605,7 @@ def q_sim_knn_multiprobe(spark, sf_dir):
     from skyhookdb_ceph_spark.operators import vectors
 
     e = Catalog(spark, sf_dir).embeddings
-    return vectors.probe(vectors.bucketed_cells(e), 0, 10, multiprobe=True)
+    return vectors.probe(vectors.bucketed_cells(e), 10, multiprobe=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1200,7 +1200,7 @@ def q_vec_ivf_build(spark, sf_dir):
         vectors.build_ivf_index(spark, e, tmp)
         # the query row is read back too: the probe never recomputes a
         # cell, and the bucket filter prunes directories
-        out = vectors.probe(vectors.read_ivf_index(spark, tmp), 0, 5)
+        out = vectors.probe(vectors.read_ivf_index(spark, tmp), 5)
         return collect_local(out)
 
 

@@ -90,7 +90,7 @@ def own_scratch_entries(root: str, pid: int) -> set[str]:
     import os
     import re
 
-    own = re.compile(rf"skyhook_[a-z_]*_{pid}(_|$)")
+    own = re.compile(rf"skyhook_.*_{pid}(_|$)")
     try:
         return {e for e in os.listdir(root) if own.match(e)}
     except OSError:

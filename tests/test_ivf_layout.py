@@ -60,7 +60,7 @@ def test_persisted_probe_matches_inline_ivf(ivf_index):
     persisted = sorted(
         map(
             tuple,
-            vectors.probe(vectors.read_ivf_index(spark, path), 0, 10).collect(),
+            vectors.probe(vectors.read_ivf_index(spark, path), 10).collect(),
         )
     )
     assert persisted == inline

@@ -52,14 +52,15 @@ def test_leak_guard_counts_only_this_process(monkeypatch, tmp_path):
     before = own_scratch_entries(str(tmp_path), pid)
     (tmp_path / f"skyhook_ivfinc_{pid + 1}_x1y2").mkdir()
     (tmp_path / "skyhook_sigbuild_y7c7we90").mkdir()  # no owner pid
-    leaky = scratch("skyhook_t_")
-    d = leaky.__enter__()
-    try:
-        assert os.path.basename(d).startswith(f"skyhook_t_{pid}_")
-        leaked = own_scratch_entries(str(tmp_path), pid) - before
-        assert leaked == {os.path.basename(d)}
-    finally:
-        leaky.__exit__(None, None, None)
+    for prefix in ("skyhook_t_", "skyhook_sigidx1_"):  # a digit in one
+        leaky = scratch(prefix)
+        d = leaky.__enter__()
+        try:
+            assert os.path.basename(d).startswith(f"{prefix}{pid}_")
+            leaked = own_scratch_entries(str(tmp_path), pid) - before
+            assert leaked == {os.path.basename(d)}
+        finally:
+            leaky.__exit__(None, None, None)
 
 
 def test_scoped_conf_restores_on_exception(spark):
