@@ -3,7 +3,11 @@
 Each module implements one family as compositions of DataFrame
 operations — no driver-side loops, no row-at-a-time Python UDFs:
 
-- minhash.py    — shingling + banded MinHash LSH (fuzzy dedup)
+- minhash.py    — the one banded MinHash LSH (fuzzy dedup): shingle
+  sets, the band encode in its batch (band_signatures) and stream
+  (inline_band_signatures) forms, the one Jaccard verify (jaccard_sql
+  at THRESHOLD), and the bucketed signature index, build_lsh_index ->
+  probe_lsh_index (the one delta probe)
 - simhash.py    — SimHash bit-signature clustering
 - vectors.py    — cosine/dot expressions, sign-bucket LSH, and the
   one IVF index: the cell key and its Hamming-1 multiprobe set, the

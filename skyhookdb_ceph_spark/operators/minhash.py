@@ -13,11 +13,26 @@ Python.  Hash = md5 because it is byte-identical in DuckDB, keeping the
 whole pipeline oracle-checkable (the driver red-flags oracle-less ops).
 
 Determinism: band salt is the band index; no RNG anywhere.
+
+The MinHash LSH — the only code that knows it.  Documents are
+(doc_id, text); a NULL text yields no shingles, so no candidates.
+- Encode: `shingle_sets` (distinct K_SHINGLE-word shingles), then one
+  row-minimum template and one band stack in two forms —
+  `band_minima_wide` / `band_signatures` (exploded groupBy-min, the
+  batch form) and `inline_band_signatures` (per-row array lambdas, the
+  only form a stream can run).  Both yield identical (doc_id, b, bsig).
+- Verify: `jaccard_sql` is the one set-Jaccard term, kept at
+  >= THRESHOLD; candidate pairs reach their shingle sets through one
+  merge-hinted lookup (`jaccard_pairs`, `recall_curve`, the probe).
+- Index: `build_lsh_index(docs)` persists (doc_id, b, bsig) as a
+  session-scoped bucketBy(bsig) table; `probe_lsh_index(index, base,
+  delta)` returns the verified (dd, db, jac) delta-vs-base pairs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from skyhookdb_ceph_spark.operators import ensure_parallelism
 
@@ -32,25 +47,23 @@ N_BANDS = 8  # LSH bands (candidate = collision in ANY band)
 # (BASELINE.md §L.1).  r=4, b=8 moves the threshold to ~0.59:
 # recall@J=0.8 = 1-(1-0.41)^8 = 98.5%, candidates@J=0.32 cut 12×.
 N_ROWS = 4
+THRESHOLD = 0.8  # exact Jaccard a verified near-dup pair must reach
+_AUDIT_DOCS = 5000  # recall_curve's sample size at any corpus size
 
 
-def shingle_expr(text_col: str, k: int = K_SHINGLE) -> str:
-    """Distinct k-word shingles of a text column (1-based, mirrors the
+def shingle_expr(k: int = K_SHINGLE) -> str:
+    """Distinct k-word shingles of `text` (1-based, mirrors the
     DuckDB oracle's generate_series/list indexing)."""
     return (
         f"array_distinct(transform("
-        f"sequence(1, greatest(size(split({text_col}, ' ')) - {k - 1}, 1)), "
-        f"i -> concat_ws(' ', slice(split({text_col}, ' '), i, {k}))))"
+        f"sequence(1, greatest(size(split(text, ' ')) - {k - 1}, 1)), "
+        f"i -> concat_ws(' ', slice(split(text, ' '), i, {k}))))"
     )
 
 
-def shingle_sets(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = K_SHINGLE,
-) -> DataFrame:
-    """(id, shingles) — distinct k-word shingle set per document.
+def shingle_sets(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingles) — distinct K_SHINGLE-word shingle set per
+    document.
 
     Built via posexplode + (k-1) leads over a doc-keyed window +
     collect_set, NOT the transform/slice lambda of shingle_expr: the
@@ -64,114 +77,162 @@ def shingle_sets(
     rejoins split()'s empty tokens, so arbitrary whitespace
     round-trips exactly)."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
+    k = K_SHINGLE
     # Explicit NULL-text filter: explode(split(NULL)) silently drops
     # the row, whereas the DuckDB oracles produce a NULL signature that
     # can never equi-join — filtering here makes "NULL text yields no
     # candidates" true on both engines BY CONSTRUCTION, not by fixture
     # luck (ADVICE r4).
-    docs = ensure_parallelism(docs).filter(F.col(text_col).isNotNull())
+    docs = ensure_parallelism(docs).filter(F.col("text").isNotNull())
     words = docs.selectExpr(
-        id_col, f"posexplode(split({text_col}, ' ')) AS (pos, w)"
+        "doc_id", "posexplode(split(text, ' ')) AS (pos, w)"
     )
-    wnd = Window.partitionBy(id_col).orderBy("pos")
+    wnd = Window.partitionBy("doc_id").orderBy("pos")
     cols = [F.col("w").alias("w0")] + [
         F.lead("w", j).over(wnd).alias(f"w{j}") for j in range(1, k)
     ]
     full = (
-        words.select(id_col, *cols)
+        words.select("doc_id", *cols)
         .filter(F.col(f"w{k - 1}").isNotNull())
         .select(
-            id_col,
+            "doc_id",
             F.concat_ws(" ", *[f"w{j}" for j in range(k)]).alias("s"),
         )
     )
-    shorts = docs.selectExpr(id_col, f"{text_col} AS s").filter(
-        f"size(split({text_col}, ' ')) < {k}"
+    shorts = docs.selectExpr("doc_id", "text AS s").filter(
+        f"size(split(text, ' ')) < {k}"
     )
     return (
         full.unionByName(shorts)
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.collect_set("s").alias("shingles"))
     )
 
 
-def band_signatures(sh: DataFrame, n_bands: int = N_BANDS, id_col: str = "doc_id") -> DataFrame:
-    """One BANDED min-hash signature per (doc, band): the
-    concatenation of N_ROWS independent row-minima — two docs collide
-    in a band only when every row agrees (the standard (b, r) LSH
-    construction; see N_ROWS for the S-curve).
+def _band_cols(row_min, rows: int = N_ROWS) -> list[str]:
+    """b0..b{N_BANDS-1}: band b is the concatenation of `rows`
+    row-minima (Catalyst flattens the `||` chain into one concat).
+    Each shingle is md5-hashed ONCE (`h`); row (b, j)'s hash
+    function is a rotation of that digest (the 8-hex window at
+    offset b*N_ROWS+j of digest||digest) — b×r distinct hash families
+    for the cost of one md5 per shingle (the dominant cost of the
+    pipeline).  The min-hash collision argument only needs each row's
+    function to rank shingles uniformly, which the rotated windows do
+    (adjacent windows differ in their leading character, which decides
+    almost every comparison).  `row_min` turns the per-shingle window
+    into its minimum over the document."""
+    return [
+        " || ".join(
+            row_min(f"substring(concat(h, h), {b * N_ROWS + j + 1}, 8)")
+            for j in range(rows)
+        )
+        + f" AS b{b}"
+        for b in range(N_BANDS)
+    ]
 
-    Each shingle is md5-hashed ONCE; row (b, j)'s hash function is a
-    rotation of that digest (the 8-hex window at offset b*N_ROWS+j of
-    digest||digest) — b×r distinct hash families for the cost of one
-    md5 per shingle (the dominant cost of the pipeline).  The min-hash
-    collision argument only needs each row's function to rank shingles
-    uniformly, which the rotated windows do (adjacent windows differ
-    in their leading character, which decides almost every
-    comparison)."""
-    g = band_minima_wide(sh, n_bands, id_col)
-    stack = ", ".join(f"{b}, b{b}" for b in range(n_bands))
-    return g.selectExpr(
-        id_col, f"stack({n_bands}, {stack}) AS (b, bsig)"
+
+def _stack(wide: DataFrame, *keep: str) -> DataFrame:
+    """Wide b0..b{N_BANDS-1} -> one (b, bsig) row per band."""
+    stack = ", ".join(f"{b}, b{b}" for b in range(N_BANDS))
+    return wide.selectExpr(*keep, f"stack({N_BANDS}, {stack}) AS (b, bsig)")
+
+
+def _grouped_minima(sh: DataFrame, hash_sql: str, rows: int) -> DataFrame:
+    # Explode the shingle set once, hash each shingle once, and take
+    # the per-row minimum as grouped MIN aggregates — the values equal
+    # the array_min(transform(...)) form exactly (min commutes), but
+    # everything stays in whole-stage codegen instead of interpreted
+    # lambdas per document.
+    ex = sh.selectExpr("doc_id", "explode(shingles) AS s").selectExpr(
+        "doc_id", f"{hash_sql} AS h"
+    )
+    return ex.groupBy("doc_id").agg(
+        *[F.expr(c) for c in _band_cols(lambda w: f"min({w})", rows)]
     )
 
 
-def band_minima_wide(
-    sh: DataFrame, n_bands: int = N_BANDS, id_col: str = "doc_id"
-) -> DataFrame:
+def band_minima_wide(sh: DataFrame) -> DataFrame:
     """Wide form of band_signatures: one row per doc with columns
-    b0..b{n_bands-1}.  Used stacked for the LSH bucket join and wide by
+    b0..b{N_BANDS-1}.  Used stacked for the LSH bucket join and wide by
     the recall audit (the per-pair catch flag is an OR over the band
     columns — pure codegen, no extra shuffle)."""
-    # Explode the shingle set once, hash each shingle once, and take
-    # the per-row minimum as n_bands*N_ROWS grouped MIN aggregates —
-    # the values equal the array_min(transform(...)) form exactly (min
-    # commutes), but everything stays in whole-stage codegen instead
-    # of interpreted lambdas per document.
-    from pyspark.sql import functions as F
+    return _grouped_minima(sh, "md5(s)", N_ROWS)
 
-    ex = sh.selectExpr(id_col, "explode(shingles) AS s").selectExpr(
-        id_col, "md5(s) AS h"
+
+def band_signatures(sh: DataFrame) -> DataFrame:
+    """One BANDED min-hash signature per (doc, band): (doc_id, b,
+    bsig), the concatenation of N_ROWS independent row-minima — two
+    docs collide in a band only when every row agrees (the standard
+    (b, r) LSH construction; see N_ROWS for the S-curve)."""
+    return _stack(band_minima_wide(sh), "doc_id")
+
+
+def inline_band_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingles, b, bsig) computed per row with array lambdas
+    (shingle_expr, one md5 per shingle, array_min per rotated window):
+    no shuffle, so it runs on a stream, where the batch form's window
+    and groupBy cannot.  Same values as band_signatures."""
+    hashed = (
+        docs.filter("text IS NOT NULL")
+        .selectExpr("doc_id", f"{shingle_expr()} AS shingles")
+        .selectExpr(
+            "doc_id", "shingles", "transform(shingles, s -> md5(s)) AS hs"
+        )
     )
-    aggs = [
-        F.concat(
-            *[
-                F.min(
-                    F.expr(
-                        f"substring(concat(h, h), {b * N_ROWS + j + 1}, 8)"
-                    )
-                )
-                for j in range(N_ROWS)
-            ]
-        ).alias(f"b{b}")
-        for b in range(n_bands)
-    ]
-    return ex.groupBy(id_col).agg(*aggs)
+    wide = hashed.selectExpr(
+        "doc_id",
+        "shingles",
+        *_band_cols(lambda w: f"array_min(transform(hs, h -> {w}))"),
+    )
+    return _stack(wide, "doc_id", "shingles")
 
 
-def candidate_pairs(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Distinct (a < b) pairs sharing any band signature — the LSH
-    bucket equi-join."""
-    a = sig.selectExpr(f"{id_col} AS da", "b", "bsig")
-    c = sig.selectExpr(f"{id_col} AS db", "b AS b2", "bsig AS bsig2")
+def _band_join(a: DataFrame, c: DataFrame) -> DataFrame:
+    """(da, db) per band signature an `a` doc shares with a `c` doc —
+    the LSH bucket equi-join on (b, bsig)."""
+    a = a.selectExpr("doc_id AS da", "b", "bsig")
+    c = c.selectExpr("doc_id AS db", "b AS b2", "bsig AS bsig2")
+    return a.join(c, (a.b == c.b2) & (a.bsig == c.bsig2)).select("da", "db")
+
+
+def candidate_pairs(sig: DataFrame) -> DataFrame:
+    """Distinct (da < db) pairs sharing any band signature."""
+    return _band_join(sig, sig).filter("da < db").distinct()
+
+
+def jaccard_sql(a: str, b: str) -> str:
+    """Exact set Jaccard of two distinct-element arrays, quantized to
+    1e-6.  cast(... as double): a bare 1.0 literal parses as DECIMAL in
+    Spark SQL, which would surface as Decimal objects in pandas;
+    floor-quantization instead of round() for engine parity."""
     return (
-        a.join(c, (a.b == c.b2) & (a.bsig == c.bsig2) & (a.da < c.db))
-        .select("da", "db")
-        .distinct()
+        f"floor((cast(size(array_intersect({a}, {b})) AS double) "
+        f"/ size(array_distinct(concat({a}, {b})))) * 1000000 + 0.5) / 1000000"
     )
 
 
-def jaccard_pairs(
-    docs: DataFrame,
-    threshold: float,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_bands: int = N_BANDS,
-) -> DataFrame:
+def _lookup(cand: DataFrame, x: DataFrame, y: DataFrame) -> DataFrame:
+    """Candidate pairs (da, db) joined to per-doc features: `x` keyed
+    by da, `y` by db.
+
+    merge hints: the verify joins must NEVER broadcast the
+    shingle-set side — it is corpus-sized, and Catalyst's size
+    estimate for the derived subtree undershoots so badly that at
+    100× fixture rows it picked BroadcastHashJoin and the driver
+    OOMed ("Not enough memory to build and broadcast", round 11,
+    BASELINE.md §L.1).  SortMergeJoin over shuffle_hash: the SHJ
+    hash build of the candidate side ALSO died at sf10 ("Can't
+    acquire ... bytes to build hash relation" — 32 concurrent
+    builds sharing one local heap), while SMJ sorts both sides and
+    SPILLS — the only strategy whose memory is bounded regardless
+    of candidate skew."""
+    return cand.hint("merge").join(x, "da").hint("merge").join(y, "db")
+
+
+def jaccard_pairs(docs: DataFrame) -> DataFrame:
     """Full fuzzy-dedup pipeline: shingle -> band LSH -> exact Jaccard
-    on candidates -> filter >= threshold.  Returns (doc_a, doc_b, jac).
+    on candidates -> filter >= THRESHOLD.  Returns (doc_a, doc_b, jac).
 
     The shingle-set DataFrame feeds THREE consumers (band signatures +
     both sides of the verify join); without persist() Spark re-derives
@@ -182,47 +243,86 @@ def jaccard_pairs(
     four."""
     from pyspark import StorageLevel
 
-    sh = shingle_sets(docs, text_col, id_col).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    cand = candidate_pairs(band_signatures(sh, n_bands, id_col), id_col)
-    x = sh.selectExpr(f"{id_col} AS da", "shingles AS sx")
-    y = sh.selectExpr(f"{id_col} AS db", "shingles AS sy")
-    # merge hints: the verify joins must NEVER broadcast the
-    # shingle-set side — it is corpus-sized, and Catalyst's size
-    # estimate for the derived subtree undershoots so badly that at
-    # 100× fixture rows it picked BroadcastHashJoin and the driver
-    # OOMed ("Not enough memory to build and broadcast", round 11,
-    # BASELINE.md §L.1).  SortMergeJoin over shuffle_hash: the SHJ
-    # hash build of the candidate side ALSO died at sf10 ("Can't
-    # acquire ... bytes to build hash relation" — 32 concurrent
-    # builds sharing one local heap), while SMJ sorts both sides and
-    # SPILLS — the only strategy whose memory is bounded regardless
-    # of candidate skew.
+    sh = shingle_sets(docs).persist(StorageLevel.MEMORY_AND_DISK)
+    cand = candidate_pairs(band_signatures(sh))
+    x = sh.selectExpr("doc_id AS da", "shingles AS sx")
+    y = sh.selectExpr("doc_id AS db", "shingles AS sy")
     return (
-        cand.hint("merge")
-        .join(x, "da")
-        .hint("merge")
-        .join(y, "db")
+        _lookup(cand, x, y)
         .selectExpr(
-            "da AS doc_a",
-            "db AS doc_b",
-            # cast(... as double): a bare 1.0 literal parses as DECIMAL in
-            # Spark SQL, which would surface as Decimal objects in pandas;
-            # floor-quantization instead of round() for engine parity
-            "floor((cast(size(array_intersect(sx, sy)) AS double) "
-            "/ size(array_distinct(concat(sx, sy)))) * 1000000 + 0.5) / 1000000 AS jac",
+            "da AS doc_a", "db AS doc_b", f"{jaccard_sql('sx', 'sy')} AS jac"
         )
-        .filter(f"jac >= {threshold}")
+        .filter(f"jac >= {THRESHOLD}")
     )
 
 
-def recall_curve(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    audit_docs: int = 5000,
+def build_lsh_index(docs: DataFrame) -> DataFrame:
+    """Persist the corpus's (doc_id, b, bsig) signatures ONCE as a
+    bucketBy(bsig) table — pre-shuffled for exactly the band equi-join
+    a probe runs (operators/bucketing.py) — and return it.  The name is
+    per run and session-scoped: concurrent sessions sharing a
+    warehouse never clobber each other's index mid-read, and the
+    session's previous index is dropped."""
+    from skyhookdb_ceph_spark.operators.bucketing import write_bucketed_scoped
+    from skyhookdb_ceph_spark.operators.stats import measured_shuffle_width
+
+    # bucket count scaled from a MEASURED row probe: a FIXED 8 buckets
+    # serializes both the index write and the band join onto 8 tasks
+    # once the corpus outgrows them — the sf10 scaling smoke measured
+    # the last decade going superlinear before this (BASELINE.md
+    # §L.1).  The probe counts DOCS (a cheap column-pruned scan), not
+    # the signature frame — probing the signatures would recompute the
+    # whole shingling subtree once just to count it.  Each doc emits
+    # N_BANDS=8 signatures, so 12.5k docs/bucket ≈ 100k sigs/bucket.
+    n_buckets = max(
+        8,
+        measured_shuffle_width(docs.select("doc_id"), 12_500, max_width=256)
+        or 8,
+    )
+    sig = band_signatures(shingle_sets(docs))
+    tbl = write_bucketed_scoped(sig, "inc_sig_index", ["bsig"], n_buckets)
+    return docs.sparkSession.table(tbl)
+
+
+def probe_lsh_index(
+    index: DataFrame, base: DataFrame, delta: DataFrame
 ) -> DataFrame:
+    """Verified near-dup pairs (dd, db, jac) of each `delta` doc
+    against the indexed `base` docs: jac >= THRESHOLD.
+
+    Cost O(delta + candidates), never O(corpus): the delta signatures
+    equi-join the index on (b, bsig) once, eagerly, and only the
+    candidate BASE docs are re-shingled for the exact verify
+    (semi-join bounded; a production index would store shingle
+    digests alongside)."""
+    sh_delta = shingle_sets(delta)
+    # merge hint: at fixture scale Catalyst would broadcast the delta
+    # signatures, which at 100× rows is a driver OOM (§L.1); the merge
+    # join rides the index's bucketBy(bsig) layout exchange-free on
+    # the index side while the delta side shuffles O(delta)
+    # localCheckpoint: the pairs feed the verify AND, through the
+    # semi-join, the base re-shingling — unmaterialized, each consumer
+    # re-ran the delta shingling and the index join (3 candidate joins
+    # and 108 stages per admission at sf0.01; 77 stages with it).  The
+    # pairs are candidate-sized and stay on the executors.
+    cand = (
+        _band_join(band_signatures(sh_delta), index.hint("merge"))
+        .distinct()
+        .localCheckpoint()
+    )
+    base_cand = base.join(
+        cand.select(F.col("db").alias("doc_id")).distinct(), "doc_id", "semi"
+    )
+    x = sh_delta.selectExpr("doc_id AS da", "shingles AS sx")
+    y = shingle_sets(base_cand).selectExpr("doc_id AS db", "shingles AS sy")
+    return (
+        _lookup(cand, x, y)
+        .selectExpr("da AS dd", "db", f"{jaccard_sql('sx', 'sy')} AS jac")
+        .filter(f"jac >= {THRESHOLD}")
+    )
+
+
+def recall_curve(docs: DataFrame) -> DataFrame:
     """MEASURED recall of the production (b=8, r=4) banded LSH, per
     exact-Jaccard band — the audit every dedup stack owes its users
     after changing detector parameters (this repo changed r=1 -> r=4 in
@@ -233,7 +333,7 @@ def recall_curve(
     an INDEPENDENT hash family (salted md5), S-curve threshold ~1/b =
     0.125 — over a deterministic, corpus-scaled doc sample (high bits
     of the Knuth multiplicative hash of the id, mod max(1,
-    n//audit_docs) == 0; ~audit_docs docs at any corpus size; the
+    n//_AUDIT_DOCS) == 0; ~_AUDIT_DOCS docs at any corpus size; the
     whole fixture at fixture scale).  The hash — not the raw id — is
     what makes the sample hold on SPARSE or STRIDED id spaces
     (post-dedup survivors, all-odd ids): `doc_id % m == 0` silently
@@ -249,12 +349,11 @@ def recall_curve(
     J>=0.8 bands the operating point (recall ~ 1).
 
     Columns: j_band (floor(jac*10)/10), truth_pairs, caught_pairs,
-    recall.  100 TB: sample is O(audit_docs) regardless of corpus; the
+    recall.  100 TB: sample is O(_AUDIT_DOCS) regardless of corpus; the
     only joins are the reference band equi-join and doc-keyed feature
     lookups; never all-pairs.
     """
     from pyspark import StorageLevel
-    from pyspark.sql import functions as F
 
     n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs_audit"))
     sample = (
@@ -267,61 +366,37 @@ def recall_curve(
             # the high bits are the well-mixed ones (Fibonacci
             # hashing).  Pre-mod keeps the product inside BIGINT for
             # any id; identical expression in DuckDB.
-            f"CAST(floor(((({id_col} % 2147483647) * 2654435761) "
+            "CAST(floor((((doc_id % 2147483647) * 2654435761) "
             "% 4294967296) / 64.0) AS BIGINT)"
-            f" % greatest(1, CAST(floor(n_docs_audit / {audit_docs}.0) "
+            f" % greatest(1, CAST(floor(n_docs_audit / {_AUDIT_DOCS}.0) "
             "AS BIGINT)) = 0"
         )
         .drop("n_docs_audit")
     )
-    sh = shingle_sets(sample, text_col, id_col).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sh = shingle_sets(sample).persist(StorageLevel.MEMORY_AND_DISK)
     # reference detector: r=1, b=8 minima of an independent salted
     # family — candidates down to J ~ 0.05 by the 1-(1-J)^8 curve, so
     # the audit sees the S-curve's floor as well as its shoulder
-    rex = sh.selectExpr(id_col, "explode(shingles) AS s").selectExpr(
-        id_col, "md5(concat('r1|', s)) AS h"
-    )
-    rsig = rex.groupBy(id_col).agg(
-        *[
-            F.min(F.expr(f"substring(concat(h, h), {b * 4 + 1}, 8)")).alias(
-                f"r{b}"
-            )
-            for b in range(N_BANDS)
-        ]
-    )
-    stack = ", ".join(f"{b}, r{b}" for b in range(N_BANDS))
-    rlong = rsig.selectExpr(
-        id_col, f"stack({N_BANDS}, {stack}) AS (b, bsig)"
-    )
-    cand = candidate_pairs(rlong, id_col)
+    rsig = _grouped_minima(sh, "md5(concat('r1|', s))", 1)
+    cand = candidate_pairs(_stack(rsig, "doc_id"))
     # per-doc features for the verify side: shingle set (exact J) +
     # the 8 production band signatures (catch flag) — joined ONCE per
-    # pair side; merge hints for the same reason as jaccard_pairs
-    feat = sh.join(band_minima_wide(sh, N_BANDS, id_col), id_col)
+    # pair side
+    feat = sh.join(band_minima_wide(sh), "doc_id")
     x = feat.selectExpr(
-        f"{id_col} AS da",
+        "doc_id AS da",
         "shingles AS sx",
         *[f"b{b} AS ab{b}" for b in range(N_BANDS)],
     )
     y = feat.selectExpr(
-        f"{id_col} AS db",
+        "doc_id AS db",
         "shingles AS sy",
         *[f"b{b} AS cb{b}" for b in range(N_BANDS)],
     )
     caught = " OR ".join(f"ab{b} = cb{b}" for b in range(N_BANDS))
-    pairs = (
-        cand.hint("merge")
-        .join(x, "da")
-        .hint("merge")
-        .join(y, "db")
-        .selectExpr(
-            "floor((cast(size(array_intersect(sx, sy)) AS double) "
-            "/ size(array_distinct(concat(sx, sy)))) * 1000000 + 0.5) "
-            "/ 1000000 AS jac",
-            f"CASE WHEN {caught} THEN 1 ELSE 0 END AS caught",
-        )
+    pairs = _lookup(cand, x, y).selectExpr(
+        f"{jaccard_sql('sx', 'sy')} AS jac",
+        f"CASE WHEN {caught} THEN 1 ELSE 0 END AS caught",
     )
     return (
         pairs.groupBy(F.expr("floor(jac * 10) / 10").alias("j_band"))

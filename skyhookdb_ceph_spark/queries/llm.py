@@ -108,7 +108,7 @@ def q_dedup_fuzzy(spark, sf_dir):
     operators/minhash.py for the banding math; candidate generation is
     an equi-join on (band, signature), never all-pairs."""
     d = Catalog(spark, sf_dir).documents
-    return minhash.jaccard_pairs(d, threshold=0.8)
+    return minhash.jaccard_pairs(d)
 
 
 @query(
@@ -172,8 +172,7 @@ def q_dedup_ngram(spark, sf_dir):
         .selectExpr(
             "doc_a",
             "doc_b",
-            "floor((cast(size(array_intersect(wa, wb)) AS double) "
-            "/ size(array_distinct(concat(wa, wb)))) * 1000000 + 0.5) / 1000000 AS tok_jac",
+            f"{minhash.jaccard_sql('wa', 'wb')} AS tok_jac",
         )
         .filter("tok_jac >= 0.5")
     )
@@ -714,7 +713,7 @@ def q_dedup_decontaminate(spark, sf_dir):
     Downstream, `anti-join on doc_id` removes the contaminated docs."""
     d = ensure_parallelism(Catalog(spark, sf_dir).documents)
     sh = d.selectExpr(
-        "doc_id", f"explode({minhash.shingle_expr('text', 5)}) AS s"
+        "doc_id", f"explode({minhash.shingle_expr(5)}) AS s"
     )
     bench = sh.filter("doc_id < 20").select("s").distinct()
     return (

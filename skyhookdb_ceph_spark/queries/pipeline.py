@@ -406,7 +406,7 @@ def cluster_labels(spark, sf_dir):
     # to the corpus at any scale (clusters would checkpoint to shared
     # storage on a real deployment).
     pairs = (
-        minhash.jaccard_pairs(d, threshold=0.8)
+        minhash.jaccard_pairs(d)
         .select("doc_a", "doc_b")
         .localCheckpoint()
     )

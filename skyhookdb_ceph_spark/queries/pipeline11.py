@@ -293,7 +293,7 @@ def q_dedup_agreement(spark, sf_dir):
     value is the plumbing + the confusion counts being exact and
     oracle-checked."""
     c = Catalog(spark, sf_dir)
-    tp = minhash.jaccard_pairs(c.documents, threshold=0.8).select(
+    tp = minhash.jaccard_pairs(c.documents).select(
         F.col("doc_a").alias("a"),
         F.col("doc_b").alias("b"),
         F.lit(1).alias("in_text"),
@@ -734,98 +734,19 @@ def q_dedup_incremental(spark, sf_dir):
     arrived; the q_agg_incremental_merge maintenance idea applied to
     q_dedup_fuzzy).
 
-    The signature index (doc_id, band, minhash) is written ONCE,
-    bucketBy(bsig) — pre-shuffled for exactly the band equi-join that
-    admission runs (operators/bucketing.py); per refresh the work is
+    The index is built ONCE (operators/minhash.build_lsh_index: a
+    bucketBy(bsig) signature table, pre-shuffled for the band
+    equi-join); per refresh operators/minhash.probe_lsh_index pays
     sig(delta) + a delta-vs-index equi-join + exact-Jaccard verify on
-    candidates only, where the candidate BASE docs are re-shingled
-    via a semi-join-bounded subset (candidate-sized; a production
-    index would store shingle digests alongside).  Cost per refresh:
-    O(delta + candidates), never O(corpus).  Verdict per delta doc:
-    dup_of = smallest matching base doc (deterministic), NULL = admit.
-    Oracle derives the same delta-vs-base pairing from the shared
-    FUZZY_SIG_CTES chain."""
-    from skyhookdb_ceph_spark.operators.bucketing import (
-        write_bucketed_scoped,
-    )
-
+    candidates only: O(delta + candidates), never O(corpus).  Verdict
+    per delta doc: dup_of = smallest matching base doc
+    (deterministic), NULL = admit.  Oracle derives the same
+    delta-vs-base pairing from the shared FUZZY_SIG_CTES chain."""
     d = Catalog(spark, sf_dir).documents
     base = d.filter(F.col("doc_id") % _INC_MOD != 0)
     delta = d.filter(F.col("doc_id") % _INC_MOD == 0)
-
-    # --- ingest time (amortized): persist the base signature index
-    # (per-run unique name: concurrent sessions sharing a warehouse
-    # must not clobber each other's index mid-read)
-    sig_base = minhash.band_signatures(minhash.shingle_sets(base))
-    # bucket count scaled from a MEASURED row probe (the sixth
-    # consumer of the stats machinery): a FIXED 8 buckets serializes
-    # both the index write and the band join onto 8 tasks once the
-    # corpus outgrows them — the sf10 scaling smoke measured the last
-    # decade going superlinear before this (BASELINE.md §L.1).  The
-    # probe counts BASE DOCS (a cheap column-pruned scan), not the
-    # signature frame — probing sig_base would recompute the whole
-    # shingling subtree once just to count it.  Each doc emits
-    # N_BANDS=8 signatures, so 12.5k docs/bucket ≈ 100k sigs/bucket.
-    from skyhookdb_ceph_spark.operators.stats import (
-        measured_shuffle_width,
-    )
-
-    n_buckets = max(
-        8,
-        measured_shuffle_width(
-            base.select("doc_id"), 12_500, max_width=256
-        )
-        or 8,
-    )
-    tbl = write_bucketed_scoped(
-        sig_base, "inc_sig_index", ["bsig"], n_buckets
-    )
-    index = spark.table(tbl)
-
-    # --- refresh time: delta signatures vs the index
-    sh_delta = minhash.shingle_sets(delta)
-    sig_delta = minhash.band_signatures(sh_delta)
-    sd = sig_delta.selectExpr("doc_id AS dd", "b", "bsig")
-    si = index.selectExpr("doc_id AS db", "b AS b2", "bsig AS bsig2")
-    # merge hint: at fixture scale Catalyst would broadcast the delta
-    # signatures, which at 100× rows is a driver OOM (§L.1); the merge
-    # join rides the index's bucketBy(bsig) layout exchange-free on
-    # the index side while the delta side shuffles O(delta)
-    cand = (
-        sd.join(
-            si.hint("merge"), (sd.b == si.b2) & (sd.bsig == si.bsig2)
-        )
-        .select("dd", "db")
-        .distinct()
-    )
-    # exact verify on candidates only; base shingles recomputed for
-    # the candidate subset (semi-join bounded)
-    base_cand = base.join(
-        cand.select(F.col("db").alias("doc_id")).distinct(),
-        "doc_id",
-        "semi",
-    )
-    sh_base_cand = minhash.shingle_sets(base_cand)
-    x = sh_delta.selectExpr("doc_id AS dd", "shingles AS sx")
-    y = sh_base_cand.selectExpr("doc_id AS db", "shingles AS sy")
-    # merge: never broadcast a shingle-set side (delta shingles are
-    # O(delta) but a 100 TB day's delta still dwarfs driver memory),
-    # and SMJ spills where a shuffle_hash build would exhaust the
-    # heap (same fix as operators/minhash.jaccard_pairs, §L.1)
-    ver = (
-        cand.hint("merge")
-        .join(x, "dd")
-        .hint("merge")
-        .join(y, "db")
-        .selectExpr(
-            "dd",
-            "db",
-            "floor((cast(size(array_intersect(sx, sy)) AS double) "
-            "/ size(array_distinct(concat(sx, sy)))) * 1000000 + 0.5) "
-            "/ 1000000 AS jac",
-        )
-        .filter("jac >= 0.8")
-    )
+    index = minhash.build_lsh_index(base)
+    ver = minhash.probe_lsh_index(index, base, delta)
     ag = ver.groupBy("dd").agg(F.min("db").alias("dup_of"))
     return (
         delta.select("doc_id")

@@ -1137,15 +1137,15 @@ def q_stream_dedup_lsh(spark, sf_dir):
     equi-joins + a filter, so append mode needs no watermark and no
     state store at any scale.
 
-    100 TB shape: the static side is exactly the persisted bucketBy
-    signature index q_dedup_incremental maintains (here built inline —
+    100 TB shape: the static side holds the same signatures as the
+    persisted index q_dedup_incremental maintains
+    (operators/minhash.band_signatures, here built inline and cached —
     corpus-sized ONCE, never per batch); per micro-batch cost is
-    O(delta + candidates).  The stream side derives its banded (8,4)
-    signatures via array lambdas (one md5 per shingle, then 32 rotated
-    window minima over the hashed array) because the batch side's
-    explode+window formulation is not available on streams — same
-    values as operators/minhash.band_signatures by construction, and
-    the DuckDB oracle is the shared FUZZY_SIG_CTES chain.
+    O(delta + candidates).  The stream side encodes with
+    operators/minhash.inline_band_signatures (per-row array lambdas,
+    the only encoder a stream can run) — same values as the batch
+    encoder — and verifies with the module's one Jaccard term at its
+    THRESHOLD; the DuckDB oracle is the shared FUZZY_SIG_CTES chain.
 
     Output: da (delta doc), db (admitted base doc), b (colliding
     band), jac.  A delta doc is REJECTED iff any row names it."""
@@ -1194,38 +1194,17 @@ def _dedup_lsh_pipeline(spark, sf_dir, n_files=1, options=None):
             reader = spark.readStream.schema(delta.schema)
             for k, v in (options or {}).items():
                 reader = reader.option(k, v)
-            stream = reader.parquet(os.path.join(tmp, "delta")).filter(
-                "text IS NOT NULL"
-            )
-            ssh = stream.selectExpr(
+            stream = reader.parquet(os.path.join(tmp, "delta"))
+            sig_s = minhash.inline_band_signatures(stream).selectExpr(
                 "doc_id AS da",
-                minhash.shingle_expr("text") + " AS sx",
-            ).selectExpr("da", "sx", "transform(sx, s -> md5(s)) AS hs")
-            band_cols = [
-                "concat("
-                + ", ".join(
-                    "array_min(transform(hs, h -> "
-                    f"substring(concat(h, h), {b * minhash.N_ROWS + j + 1}, 8)))"
-                    for j in range(minhash.N_ROWS)
-                )
-                + f") AS b{b}"
-                for b in range(minhash.N_BANDS)
-            ]
-            stack = ", ".join(f"{b}, b{b}" for b in range(minhash.N_BANDS))
-            sig_s = ssh.selectExpr("da", "sx", *band_cols).selectExpr(
-                "da",
-                "sx",
-                f"stack({minhash.N_BANDS}, {stack}) AS (b, bsig)",
-            ).selectExpr("da", "sx", "CAST(b AS BIGINT) AS b", "bsig")
+                "shingles AS sx",
+                "CAST(b AS BIGINT) AS b",
+                "bsig",
+            )
             cand = sig_s.join(base_sig, ["b", "bsig"])
             ver = cand.join(base_y, "db").selectExpr(
-                "da",
-                "db",
-                "b",
-                "floor((cast(size(array_intersect(sx, sy)) AS double)"
-                " / size(array_distinct(concat(sx, sy)))) * 1000000 + 0.5)"
-                " / 1000000 AS jac",
-            ).filter("jac >= 0.8")
+                "da", "db", "b", f"{minhash.jaccard_sql('sx', 'sy')} AS jac"
+            ).filter(f"jac >= {minhash.THRESHOLD}")
             return drain_to_memory(ver, output_mode="append")
         finally:
             base_sig.unpersist()

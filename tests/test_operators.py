@@ -61,8 +61,31 @@ def test_minhash_identical_docs_get_jaccard_one(spark):
             Row(doc_id=3, text="an entirely different sentence with other words here"),
         ]
     )
-    pairs = jaccard_pairs(docs, threshold=0.9).collect()
+    pairs = jaccard_pairs(docs).collect()
     assert [(r.doc_a, r.doc_b, r.jac) for r in pairs] == [(1, 2, 1.0)]
+
+
+def test_minhash_knowledge_lives_in_one_module():
+    """The set-Jaccard term, the rotated hash window, the band stack
+    and the bsig-bucketed index write are written once, in
+    operators/minhash.py; a second copy anywhere in the package is the
+    drift that module exists to prevent."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "skyhookdb_ceph_spark"
+    for needle in (
+        re.escape("size(array_intersect("),
+        re.escape("substring(concat(h, h)"),
+        re.escape("AS (b, bsig)"),
+        r'write_bucketed\w*\([^)]*"bsig"',  # the bsig-bucketed index
+    ):
+        holders = sorted(
+            str(p.relative_to(pkg))
+            for p in pkg.rglob("*.py")
+            if re.search(needle, p.read_text())
+        )
+        assert holders == ["operators/minhash.py"], (needle, holders)
 
 
 def test_shingles_are_distinct_word_triples(spark):

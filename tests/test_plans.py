@@ -1196,6 +1196,17 @@ def test_incremental_dedup_joins_index_not_corpus(spark):
     # scoped per-run table names clean themselves up (bucketing.py)
 
 
+def test_plan_audit_explains_what_collect_local_collected(spark):
+    """tools/plan_audit.py on a query that returns collect_local(frame)
+    explains `frame` — the scan of the read-back IVF index — not the
+    LocalTableScan of the collected census."""
+    from tools.plan_audit import audited_plan
+
+    plan = audited_plan(spark, "q_vec_ivf_incremental", SF)
+    assert "Scan parquet" in plan
+    assert "LocalTableScan" not in plan
+
+
 def test_rerank_candidates_broadcast_text_never_shuffles(spark):
     """Two-stage retrieval: the candidate list must broadcast (the
     corpus side of the text fetch streams through a broadcast hash

@@ -532,15 +532,17 @@ def _py_band_signatures(texts: dict[int, str], n_bands=8, n_rows=4):
     )
 )
 def test_band_signatures_match_python_reference(spark, texts):
-    """operators/minhash.band_signatures (exploded groupBy-min
-    Catalyst formulation) against the pure-Python md5/rotated-window
-    reference on arbitrary short texts — including sub-shingle-width
-    docs and texts with repeated/empty tokens (the concat_ws
-    round-trip edge)."""
+    """Both encoders of operators/minhash — band_signatures (exploded
+    groupBy-min Catalyst formulation) and inline_band_signatures (the
+    per-row lambda form streams run) — against the pure-Python
+    md5/rotated-window reference on arbitrary short texts, including
+    sub-shingle-width docs and texts with repeated/empty tokens (the
+    concat_ws round-trip edge)."""
     from pyspark.sql import Row
 
     from skyhookdb_ceph_spark.operators.minhash import (
         band_signatures,
+        inline_band_signatures,
         shingle_sets,
     )
 
@@ -549,10 +551,11 @@ def test_band_signatures_match_python_reference(spark, texts):
     docs = spark.createDataFrame(
         [Row(doc_id=i, text=t) for i, t in tx.items()]
     )
-    got = {}
-    for r in band_signatures(shingle_sets(docs)).collect():
-        got.setdefault(r["doc_id"], {})[r["b"]] = r["bsig"]
-    assert got == expected
+    for sig in (band_signatures(shingle_sets(docs)), inline_band_signatures(docs)):
+        got = {}
+        for r in sig.collect():
+            got.setdefault(r["doc_id"], {})[r["b"]] = r["bsig"]
+        assert got == expected
 
 
 @pytest.mark.slow

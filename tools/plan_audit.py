@@ -14,6 +14,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from skyhookdb_ceph_spark.plans.explain import explain_str
+from skyhookdb_ceph_spark.queries import _util
 from skyhookdb_ceph_spark.registry import load_all
 from skyhookdb_ceph_spark.session import get_spark
 
@@ -364,9 +365,10 @@ AUDIT = {
     ),
     "q_dedup_incremental": (
         "Incremental near-dup admission (r10). Wanted: delta "
-        "signatures equi-join the persisted bucketed index; exact "
-        "verify bounded to candidates via a semi-join on the base "
-        "side; no cartesian anywhere."
+        "signatures equi-join the persisted bucketed index ONCE, "
+        "eagerly (the checkpointed pairs read back as Scan "
+        "ExistingRDD[da, db]); exact verify bounded to candidates via "
+        "a semi-join on the base side; no cartesian anywhere."
     ),
     "q_join_broadcast_probed": (
         "Measured broadcast choice (r10). Wanted at fixture scale: "
@@ -547,10 +549,39 @@ AUDIT = {
 }
 
 
+def audited_plan(spark, name: str, sf_dir: str) -> str:
+    """The formatted physical plan of query `name`.  A query that ends
+    in `return collect_local(frame)` returns a LocalRelation whose plan
+    is one LocalTableScan, so for it the plan of `frame` — the work the
+    query ran — is explained instead.  Every module's bound
+    `collect_local` records what it collected for the one call."""
+    specs = load_all()  # imports the modules that bind collect_local
+    orig = _util.collect_local
+    collected = {}
+
+    def recording(df):
+        local = orig(df)
+        collected[id(local)] = (local, df)
+        return local
+
+    binders = [
+        m for m in list(sys.modules.values())
+        if getattr(m, "collect_local", None) is orig
+    ]
+    for m in binders:
+        m.collect_local = recording
+    try:
+        out = specs[name].fn(spark, sf_dir)
+    finally:
+        for m in binders:
+            m.collect_local = orig
+    local, frame = collected.get(id(out), (None, None))
+    return explain_str(frame if local is out else out, "formatted")
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark(app_name="plan_audit", shuffle_partitions=8)
-    specs = load_all()
     out = [
         "# PLANS — physical-plan audit",
         "",
@@ -561,7 +592,7 @@ def main() -> int:
         "",
     ]
     for name, want in AUDIT.items():
-        plan = explain_str(specs[name].fn(spark, sf_dir), "formatted")
+        plan = audited_plan(spark, name, sf_dir)
         out += [f"## {name}", "", want, "", "```", plan.strip(), "```", ""]
     Path(__file__).resolve().parent.parent.joinpath("PLANS.md").write_text(
         "\n".join(out)
