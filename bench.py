@@ -97,6 +97,10 @@ WINDOW_ALLOWLIST = {
     "q_agg_skyline",
     "q_fn_histogram",
     "q_text_bm25",
+    # q_text_bm25's window (_bm25_top_k's rank over k rows post-limit)
+    # in the frames these two collect (tools/plan_audit.audited_frame)
+    "q_text_bm25_indexed",
+    "q_hybrid_rrf_indexed",
     "q_text_rerank",  # rank over 10 rows post-limit (bm25 precedent)
     "q_text_hybrid_rrf",  # leg ranks over 50 rows post-TakeOrdered +
     # fusion rank over <=100 fused rows — all shortlist-bounded

@@ -30,22 +30,18 @@ from pyspark.sql import types as T
 
 from skyhookdb_ceph_spark.operators import map_rows
 
-# The (media_id, payload) shape every codec stage reads by default and
-# every query-side payload synth emits.
+# The (media_id, payload) shape every codec stage reads and every
+# query-side payload synth emits.
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
         T.StructField("payload", T.BinaryType()),
     ]
 )
+MEDIA_COLS = MEDIA_SCHEMA.fieldNames()
 
 
-def frame_sample(
-    media: DataFrame,
-    every_n: int,
-    id_col: str = "media_id",
-    bytes_col: str = "payload",
-) -> DataFrame:
+def frame_sample(media: DataFrame, every_n: int) -> DataFrame:
     """Deterministic frame-sampling shape: split a binary payload into
     fixed-size pseudo-frames and keep every n-th — the 1:N row-map
     shape a real video sampler would use (one output row per kept
@@ -72,7 +68,7 @@ def frame_sample(
             for i in range(0, len(data), frame_bytes * every_n)
         ]
 
-    return map_rows(media, [id_col, bytes_col], frames, schema)
+    return map_rows(media, MEDIA_COLS, frames, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -178,9 +174,7 @@ def parse_wav(data: bytes) -> dict:
     }
 
 
-def decode_wav(
-    media: DataFrame, id_col: str = "media_id", bytes_col: str = "payload"
-) -> DataFrame:
+def decode_wav(media: DataFrame) -> DataFrame:
     """Arrow-batched REAL audio decode: parse every WAV payload and
     emit typed metadata + sample statistics.  This is the de-stubbed
     codec path (VERDICT r4 gap 2): actual bytes in, actual decoded
@@ -188,18 +182,14 @@ def decode_wav(
     decode parallelism = partition count, nothing shuffles."""
     return map_rows(
         media,
-        [id_col, bytes_col],
+        MEDIA_COLS,
         lambda mid, p: [{"media_id": int(mid), **parse_wav(bytes(p))}],
         WAV_META_SCHEMA,
     )
 
 
 def sliding_windows(
-    media: DataFrame,
-    window_bytes: int = 256,
-    hop_bytes: int = 128,
-    id_col: str = "media_id",
-    bytes_col: str = "payload",
+    media: DataFrame, window_bytes: int = 256, hop_bytes: int = 128
 ) -> DataFrame:
     """Audio-style OVERLAPPING windowing of a binary payload: fixed
     window length, fixed hop (hop < window => overlap), one output row
@@ -237,7 +227,7 @@ def sliding_windows(
             )
         return rows
 
-    return map_rows(media, [id_col, bytes_col], windows, schema)
+    return map_rows(media, MEDIA_COLS, windows, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -329,12 +319,7 @@ def parse_ppm(data: bytes) -> dict:
     }
 
 
-def resize_ppm(
-    media: DataFrame,
-    factor: int = 2,
-    id_col: str = "media_id",
-    bytes_col: str = "payload",
-) -> DataFrame:
+def resize_ppm(media: DataFrame, factor: int = 2) -> DataFrame:
     """Arrow-batched nearest-neighbor DOWNSAMPLE of P6 payloads: output
     pixel (y, x) = source pixel (factor*y, factor*x) — deterministic
     integer pixel math, re-encoded as a new P6 payload so the result
@@ -349,27 +334,19 @@ def resize_ppm(
         small = raster.reshape(h, w, 3)[::factor, ::factor, :]
         oh, ow = small.shape[0], small.shape[1]
         out = ppm_bytes(small.reshape(-1), ow, oh)
-        return [{id_col: int(mid), bytes_col: out}]
+        return [{"media_id": int(mid), "payload": out}]
 
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField(bytes_col, T.BinaryType()),
-        ]
-    )
-    return map_rows(media, [id_col, bytes_col], resize, schema)
+    return map_rows(media, MEDIA_COLS, resize, MEDIA_SCHEMA)
 
 
-def decode_ppm(
-    media: DataFrame, id_col: str = "media_id", bytes_col: str = "payload"
-) -> DataFrame:
+def decode_ppm(media: DataFrame) -> DataFrame:
     """Arrow-batched REAL image decode (the second de-stubbed codec
     beside WAV): parse every P6 payload and emit typed metadata +
     exact per-channel integer sums.  Pure map over Arrow batches —
     decode parallelism = partition count, nothing shuffles."""
     return map_rows(
         media,
-        [id_col, bytes_col],
+        MEDIA_COLS,
         lambda mid, p: [{"media_id": int(mid), **parse_ppm(bytes(p))}],
         PPM_META_SCHEMA,
     )
@@ -402,9 +379,7 @@ def ahash64(raster: np.ndarray) -> tuple[int, int]:
     return lo, hi
 
 
-def ahash_ppm(
-    media: DataFrame, id_col: str = "media_id", bytes_col: str = "payload"
-) -> DataFrame:
+def ahash_ppm(media: DataFrame) -> DataFrame:
     """Perceptual average-hash (aHash) over REAL P6 payloads: parse the
     PPM (the same whitespace/comment-tolerant header tokenizer as
     decode_ppm), downsample the 16x16 grayscale image to 8x8 by 2x2
@@ -424,4 +399,4 @@ def ahash_ppm(
         lo, hi = ahash64(raster)
         return [{"media_id": int(mid), "sig_lo": lo, "sig_hi": hi}]
 
-    return map_rows(media, [id_col, bytes_col], ahash, AHASH_SCHEMA)
+    return map_rows(media, MEDIA_COLS, ahash, AHASH_SCHEMA)

@@ -30,27 +30,11 @@ BAND_BITS = N_BITS // N_BANDS
 HAMMING_MAX = 8      # near-dup verdict threshold on candidate pairs
 
 
-def simhash_spark_expr(text_col: str = "text") -> str:
-    """64-bit signature, one md5 pair per word (single pass: the
-    per-word 64-hex-digit projection string is built once, then one
-    aggregate folds ±1 votes into a 64-long counter array)."""
-    hexes = f"transform(split({text_col}, ' '), w -> concat(md5(w), md5(concat('x', w))))"
-    votes = (
-        f"aggregate({hexes}, array_repeat(0, {N_BITS}), (acc, h) -> "
-        f"zip_with(acc, transform(sequence(1, {N_BITS}), "
-        f"i -> CASE WHEN substring(h, i, 1) <= '7' THEN 1 ELSE -1 END), "
-        f"(a, b) -> a + b))"
-    )
-    return (
-        f"concat_ws('', transform({votes}, s -> CASE WHEN s >= 0 THEN '1' ELSE '0' END))"
-    )
-
-
-def simhash_duckdb_expr(text_col: str = "text") -> str:
-    """Oracle twin: per-bit independent ±1 sums over the same md5
-    projection (addition per position is order-independent, so the
-    per-bit formulation equals Spark's single-pass fold exactly)."""
-    words = f"string_split({text_col}, ' ')"
+def simhash_duckdb_expr() -> str:
+    """Oracle twin over `text`: per-bit independent ±1 sums over the
+    same md5 projection (addition per position is order-independent,
+    so the per-bit formulation equals Spark's per-bit sums exactly)."""
+    words = "string_split(text, ' ')"
     return (
         f"array_to_string(list_transform(generate_series(1, {N_BITS}), "
         f"i -> CASE WHEN list_aggregate(list_transform({words}, "
@@ -80,15 +64,16 @@ def hamming_duckdb_expr(a: str, b: str) -> str:
     )
 
 
-def simhash_signatures(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(id, sig) — the 64-bit signature per document.
+def simhash_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, sig) — the 64-bit signature per document of a
+    (doc_id, text) frame.
 
     Implementation: explode words -> one md5 pair per word -> 64
     codegen'd conditional-sum aggregates per document, then the sign
-    string.  Mathematically identical to the single-pass array fold in
-    simhash_spark_expr (per-bit ±1 sums commute), but whole-stage
-    codegen'd instead of 64-wide interpreted higher-order lambdas per
-    word — measured 4.4 s -> sub-second at sf0.1.  Explode preserves
+    string.  Mathematically identical to a single-pass array fold over
+    the words (per-bit ±1 sums commute), but whole-stage codegen'd
+    instead of 64-wide interpreted higher-order lambdas per word —
+    measured 4.4 s -> sub-second at sf0.1.  Explode preserves
     partition locality, so the partial aggregate finishes each doc's
     votes before the doc-keyed exchange; only 64-int states shuffle."""
     from pyspark.sql import functions as F
@@ -98,11 +83,11 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text", id_col: str = "d
     # Filter explicitly so both engines drop it by construction.
     words = (
         ensure_parallelism(docs)
-        .filter(F.col(text_col).isNotNull())
-        .selectExpr(id_col, f"explode(split({text_col}, ' ')) AS w")
+        .filter(F.col("text").isNotNull())
+        .selectExpr("doc_id", "explode(split(text, ' ')) AS w")
     )
     hx = words.selectExpr(
-        id_col, "concat(md5(w), md5(concat('x', w))) AS h"
+        "doc_id", "concat(md5(w), md5(concat('x', w))) AS h"
     )
     votes = [
         F.sum(
@@ -112,23 +97,18 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text", id_col: str = "d
         ).alias(f"v{i}")
         for i in range(1, N_BITS + 1)
     ]
-    agg = hx.groupBy(id_col).agg(*votes)
+    agg = hx.groupBy("doc_id").agg(*votes)
     sig = "concat(" + ", ".join(
         f"CASE WHEN v{i} >= 0 THEN '1' ELSE '0' END"
         for i in range(1, N_BITS + 1)
     ) + ")"
-    return agg.selectExpr(id_col, f"{sig} AS sig")
+    return agg.selectExpr("doc_id", f"{sig} AS sig")
 
 
-def simhash_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hamming_max: int = HAMMING_MAX,
-) -> DataFrame:
-    """Near-dup pairs (doc_a, doc_b, hamming): banded LSH candidates
-    (share any 16-bit band → equi-join), verified by exact Hamming
-    distance <= hamming_max.  Only (id, band-bits) pairs cross the
+def simhash_pairs(docs: DataFrame) -> DataFrame:
+    """Near-dup pairs (doc_a, doc_b, hamming) of a (doc_id, text) frame:
+    banded LSH candidates (share any 16-bit band → equi-join), verified
+    by exact Hamming distance <= HAMMING_MAX.  Only (id, band-bits) pairs cross the
     candidate shuffle; signatures re-join for the verify step."""
     # The signature is the expensive expression (md5 pair per word +
     # 64-way vote fold), so compute it ONCE per document and CARRY it
@@ -143,28 +123,28 @@ def simhash_pairs(
     # 64-way vote fold (the dominant cost) twice.  Same localCheckpoint
     # pattern as cluster_labels / q_text_edit_distance; the frame is
     # one (id, 64-char sig) row per doc.
-    sigs = simhash_signatures(docs, text_col, id_col).localCheckpoint()
+    sigs = simhash_signatures(docs).localCheckpoint()
     bands = sigs.selectExpr(
-        id_col,
+        "doc_id",
         "sig",
         f"explode(transform(sequence(0, {N_BANDS - 1}), "
         f"b -> concat(cast(b AS string), ':', substring(sig, b * {BAND_BITS} + 1, {BAND_BITS})))) AS bsig",
     )
-    a = bands.selectExpr(f"{id_col} AS doc_a", "sig AS sa", "bsig")
-    c = bands.selectExpr(f"{id_col} AS doc_b", "sig AS sb", "bsig AS bsig2")
+    a = bands.selectExpr("doc_id AS doc_a", "sig AS sa", "bsig")
+    c = bands.selectExpr("doc_id AS doc_b", "sig AS sb", "bsig AS bsig2")
     return (
         a.join(c, (a.bsig == c.bsig2) & (a.doc_a < c.doc_b))
         .select("doc_a", "doc_b", "sa", "sb")
         .distinct()
         .selectExpr("doc_a", "doc_b", f"cast({hamming_spark_expr('sa', 'sb')} AS int) AS hamming")
-        .filter(f"hamming <= {hamming_max}")
+        .filter(f"hamming <= {HAMMING_MAX}")
     )
 
 
-def simhash_pairs_oracle(hamming_max: int = HAMMING_MAX) -> str:
+def simhash_pairs_oracle() -> str:
     """DuckDB oracle for simhash_pairs over the documents table."""
     return f"""
-WITH sig AS (SELECT doc_id, {simhash_duckdb_expr('text')} AS sig FROM documents),
+WITH sig AS (SELECT doc_id, {simhash_duckdb_expr()} AS sig FROM documents),
 bands AS (
   SELECT doc_id, CAST(t.b AS VARCHAR) || ':' || substr(sig, t.b * {BAND_BITS} + 1, {BAND_BITS}) AS bsig
   FROM sig, unnest(generate_series(0, {N_BANDS - 1})) t(b)),
@@ -174,5 +154,5 @@ cand AS (
 SELECT doc_a, doc_b,
   CAST({hamming_duckdb_expr('x.sig', 'y.sig')} AS INT) AS hamming
 FROM cand JOIN sig x ON x.doc_id = cand.doc_a JOIN sig y ON y.doc_id = cand.doc_b
-WHERE {hamming_duckdb_expr('x.sig', 'y.sig')} <= {hamming_max}
+WHERE {hamming_duckdb_expr('x.sig', 'y.sig')} <= {HAMMING_MAX}
 """

@@ -11,6 +11,8 @@ per-group partial rows cross the network, never the raw scan.
 
 from __future__ import annotations
 
+from pyspark.sql import Window
+
 from skyhookdb_ceph_spark.queries._util import Catalog, F, money, quantize, ratio
 from skyhookdb_ceph_spark.registry import query
 
@@ -337,3 +339,242 @@ def q_agg_filtered(spark, sf_dir):
         ).alias("disc_rev"),
         F.count(F.lit(1)).alias("n_all"),
     )
+
+
+_KS_SPLIT = "DATE '1998-01-01'"
+_KS_BUCKET_WIDTH = 5000.0
+
+_KS_ORACLE = f"""
+WITH d AS (
+  SELECT o_totalprice AS v,
+    CAST(o_orderdate < {_KS_SPLIT} AS INT) AS ia
+  FROM orders),
+g AS (SELECT v, sum(ia) AS ca, sum(1 - ia) AS cb FROM d GROUP BY v),
+t AS (SELECT CAST(sum(ia) AS BIGINT) AS n_a,
+             CAST(sum(1 - ia) AS BIGINT) AS n_b FROM d),
+c AS (
+  SELECT
+    sum(ca) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_a,
+    sum(cb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS cum_b
+  FROM g)
+SELECT t.n_a, t.n_b,
+  floor(max(abs(CAST(cum_a AS DOUBLE) / t.n_a
+              - CAST(cum_b AS DOUBLE) / t.n_b)) * 1000000 + 0.5)
+    / 1000000 AS ks_stat
+FROM c, t GROUP BY t.n_a, t.n_b
+"""
+
+
+@query(
+    "q_stats_ks_drift",
+    oracle=_KS_ORACLE,
+    tags=("stats", "drift", "scale-design"),
+)
+def q_stats_ks_drift(spark, sf_dir):
+    """Two-sample Kolmogorov-Smirnov statistic between the pre- and
+    post-1998 order-price distributions — the classic exact
+    distribution-shift test, complementing the closed-form binned
+    Jensen-Shannon monitor (q_text_drift_js).  KS = max over the
+    pooled ECDF of |F_a(v) - F_b(v)|.
+
+    Distributed-prefix-sum shape (NOT a global window over rows):
+    group by distinct value (one keyed shuffle, map-side partial),
+    bucket values by price band, cumulative counts INSIDE each
+    bucket via a bucket-partitioned window, per-bucket totals carried
+    across buckets by a window over the ~120 bucket-summary rows
+    (bounded by price range / band width, independent of row count),
+    broadcast the offsets back, final max is a plain aggregate.  The
+    ECDF ratio divides exact BIGINT cumulants once per distinct
+    value, so the statistic is bit-deterministic in both engines.
+    The oracle computes the identical KS with DuckDB's single-node
+    window — same values, different physical plan, which is the
+    point."""
+    o = Catalog(spark, sf_dir).orders
+    d = o.selectExpr(
+        "o_totalprice AS v",
+        f"CAST(o_orderdate < {_KS_SPLIT} AS INT) AS ia",
+    )
+    tot = d.agg(
+        F.sum("ia").cast("bigint").alias("n_a"),
+        F.sum(F.expr("1 - ia")).cast("bigint").alias("n_b"),
+    )
+    g = (
+        d.groupBy("v")
+        .agg(F.sum("ia").alias("ca"), F.sum(F.expr("1 - ia")).alias("cb"))
+        .withColumn(
+            "bkt", F.expr(f"CAST(floor(v / {_KS_BUCKET_WIDTH}) AS BIGINT)")
+        )
+    )
+    wi = (
+        Window.partitionBy("bkt")
+        .orderBy("v")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    intra = g.select(
+        "bkt",
+        F.sum("ca").over(wi).alias("ia_cum"),
+        F.sum("cb").over(wi).alias("ib_cum"),
+    )
+    bs = g.groupBy("bkt").agg(
+        F.sum("ca").alias("sa"), F.sum("cb").alias("sb")
+    )
+    # bucket-offset carry: a window over the bucket SUMMARIES — row
+    # count bounded by (price range / band width), not by data size
+    wo = (
+        Window.orderBy("bkt")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    boff = bs.select(
+        "bkt",
+        F.coalesce(F.sum("sa").over(wo), F.lit(0)).alias("oa"),
+        F.coalesce(F.sum("sb").over(wo), F.lit(0)).alias("ob"),
+    )
+    cum = intra.join(F.broadcast(boff), "bkt").selectExpr(
+        "oa + ia_cum AS cum_a", "ob + ib_cum AS cum_b"
+    )
+    return (
+        cum.crossJoin(F.broadcast(tot))
+        .selectExpr(
+            "n_a",
+            "n_b",
+            "abs(CAST(cum_a AS DOUBLE) / n_a"
+            " - CAST(cum_b AS DOUBLE) / n_b) AS dd",
+        )
+        .groupBy("n_a", "n_b")
+        .agg(
+            F.expr(
+                "floor(max(dd) * 1000000 + 0.5) / 1000000"
+            ).alias("ks_stat")
+        )
+    )
+
+
+_MI_MIN_DF = 5  # vocabulary floor: tokens in >= 5 docs
+_MI_TOPK = 30
+
+
+def _mi_term_sql(c: str, nx: str, nl: str, n: str) -> str:
+    """One MI contingency term (in bits), zero-guarded: identical
+    operation order in both engines, all counts widened to DOUBLE
+    before any multiply (products stay < 2^53 — exact)."""
+    return (
+        f"CASE WHEN {c} > 0 THEN (CAST({c} AS DOUBLE) / {n}) * "
+        f"log2((CAST({c} AS DOUBLE) * CAST({n} AS DOUBLE)) / "
+        f"(CAST({nx} AS DOUBLE) * CAST({nl} AS DOUBLE))) "
+        f"ELSE 0.0 END"
+    )
+
+
+_MI_ORACLE = f"""
+WITH pres AS (
+  SELECT DISTINCT doc_id, lang, tok FROM (
+    SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok
+    FROM documents WHERE text IS NOT NULL)
+  WHERE tok <> ''),
+ntl AS (SELECT tok, lang, CAST(count(*) AS BIGINT) AS n_tl
+        FROM pres GROUP BY tok, lang),
+nt AS (SELECT tok, CAST(sum(n_tl) AS BIGINT) AS n_t FROM ntl GROUP BY tok),
+vocab AS (SELECT tok, n_t FROM nt WHERE n_t >= {_MI_MIN_DF}),
+ls AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_l,
+              CAST((SELECT count(*) FROM documents) AS BIGINT) AS n
+       FROM documents GROUP BY lang),
+cell AS (
+  SELECT v.tok, v.n_t, ls.lang, ls.n_l, ls.n,
+         coalesce(ntl.n_tl, 0) AS n_tl
+  FROM vocab v CROSS JOIN ls
+  LEFT JOIN ntl ON ntl.tok = v.tok AND ntl.lang = ls.lang),
+mi AS (
+  SELECT tok AS token, max(n_t) AS n_docs,
+    floor(sum({_mi_term_sql('n_tl', 'n_t', 'n_l', 'n')}
+            + {_mi_term_sql('(n_l - n_tl)', '(n - n_t)', 'n_l', 'n')})
+      * 1000000 + 0.5) / 1000000 AS mi
+  FROM cell GROUP BY tok)
+SELECT token, n_docs, mi FROM mi
+ORDER BY mi DESC, token LIMIT {_MI_TOPK}
+"""
+
+
+@query(
+    "q_agg_mutual_info",
+    oracle=_MI_ORACLE,
+    tags=("llm", "text", "stats"),
+)
+def q_agg_mutual_info(spark, sf_dir):
+    """Token <-> label mutual information (bits): for every vocabulary
+    token, I(token-presence; lang) over the full 2 x |langs|
+    contingency — the classic feature-selection / label-leakage
+    audit run before training a quality or topic classifier.  All
+    four cells contribute (absent-cells matter: a token missing only
+    from one language is informative), counts come from two keyed
+    aggregations (doc-presence distinct, (token,lang) counts) plus a
+    tok-partitioned window for token totals, and the lang census is
+    a broadcast of one SMALL aggregate; absent (token,lang) cells
+    collapse algebraically into one closed-form correction per token
+    (see inline comment) so no vocab x langs grid materializes.
+
+    Top-30 by quantized MI with a token tie-break.  At 100 TB the
+    only stage that reads document TEXT is the single explode ->
+    distinct -> count chain (map-side-combinable); the N and
+    per-lang censuses re-scan only the pruned `lang` column
+    (plan-asserted: their ReadSchema excludes text), so the heavy
+    column moves through the cluster exactly once.  The MI
+    arithmetic itself runs on vocabulary-sized data."""
+    docs = Catalog(spark, sf_dir).documents
+    pres = (
+        docs.filter("text IS NOT NULL")
+        .select(
+            "doc_id", "lang", F.explode(F.split("text", " ")).alias("tok")
+        )
+        .filter("tok <> ''")
+        .distinct()
+    )
+    ntl = pres.groupBy("tok", "lang").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_tl")
+    )
+    n_total = docs.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    ls = (
+        docs.groupBy("lang")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_l"))
+        .crossJoin(F.broadcast(n_total))
+    )
+    # Token totals via a tok-partitioned WINDOW instead of a groupBy +
+    # join-back, so the (token, lang) counts are consumed exactly once
+    # and the presence explode — the only scan of the text column —
+    # runs exactly once (plan-asserted).  Langs where the token never
+    # appears contribute ONLY their absent cell; the sum of those
+    # terms collapses algebraically to one closed-form correction per
+    # token: sum_{missing l} (n_l/N)*log2(N/(N-n_t))
+    #      = ((N - sum_present n_l)/N) * log2(N/(N-n_t)).
+    # The log2 argument is the exact integer quotient both engines
+    # round identically; the outer multiply regroups a sum of rounded
+    # products, a ~1e-16 regrouping absorbed by the 1e-6 quantum.
+    w = Window.partitionBy("tok")
+    cell = (
+        ntl.join(F.broadcast(ls), "lang")
+        .withColumn("n_t", F.sum("n_tl").over(w).cast("bigint"))
+        .withColumn("nl_pres", F.sum("n_l").over(w).cast("bigint"))
+        .filter(F.col("n_t") >= _MI_MIN_DF)
+        .withColumn(
+            "t_pres",
+            F.expr(
+                f"{_mi_term_sql('n_tl', 'n_t', 'n_l', 'n')}"
+                f" + {_mi_term_sql('(n_l - n_tl)', '(n - n_t)', 'n_l', 'n')}"
+            ),
+        )
+        .withColumn(
+            "t_miss",
+            F.expr(
+                "CASE WHEN n - n_t > 0 AND n - nl_pres > 0 THEN "
+                "(CAST(n - nl_pres AS DOUBLE) / n) * "
+                "log2(CAST(n AS DOUBLE) / CAST(n - n_t AS DOUBLE)) "
+                "ELSE 0.0 END"
+            ),
+        )
+    )
+    mi = cell.groupBy(F.col("tok").alias("token")).agg(
+        F.max("n_t").alias("n_docs"),
+        F.expr(
+            "floor((sum(t_pres) + max(t_miss)) * 1000000 + 0.5) / 1000000"
+        ).alias("mi"),
+    )
+    return mi.orderBy(F.desc("mi"), F.asc("token")).limit(_MI_TOPK)

@@ -304,3 +304,126 @@ def q_join_multiway(spark, sf_dir):
             money(F.sum("o_totalprice")).alias("sum_total"),
         )
     )
+
+
+_IVL_MIN = 30  # interval length, minutes
+
+
+def _ivl_side_duckdb(etype: str, p: str) -> str:
+    return (
+        f"SELECT ts AS {p}_ts, ts + INTERVAL {_IVL_MIN} MINUTE AS {p}_end "
+        f"FROM events WHERE event_type = '{etype}'"
+    )
+
+
+_INTERVAL_GRID_ORACLE = f"""
+WITH a AS ({_ivl_side_duckdb('click', 'a')}),
+b AS ({_ivl_side_duckdb('purchase', 'b')})
+SELECT CAST(CAST(greatest(a_ts, b_ts) AS DATE) AS VARCHAR) AS day,
+  CAST(count(*) AS BIGINT) AS n_pairs
+FROM a, b
+WHERE a_ts <= b_end AND b_ts <= a_end
+GROUP BY 1
+"""
+
+
+_GRID_TARGET_PAIRS = 1024  # per-cell pair-work budget for the probe
+
+
+def _interval_grid(spark, sf_dir, target_pairs):
+    """Shared body so tests can force either branch via target_pairs
+    (tiny target -> probed fine grid; shipped target at fixture
+    density -> the probe surrenders and the static hour grid runs)."""
+    from skyhookdb_ceph_spark.operators.stats import (
+        measured_grid_cell_width,
+    )
+
+    ev = Catalog(spark, sf_dir).events
+
+    def side(etype: str, p: str):
+        return ev.filter(F.col("event_type") == etype).selectExpr(
+            f"ts AS {p}_ts", f"ts + INTERVAL {_IVL_MIN} MINUTE AS {p}_end"
+        )
+
+    a_side, b_side = side("click", "a"), side("purchase", "b")
+    w = measured_grid_cell_width(
+        a_side, "a_ts", b_side, "b_ts", target_pairs
+    )
+
+    def cells(df, p: str):
+        if w is None:
+            # static hour grid: probe measured per-cell work under
+            # target at this density, finer cells buy nothing
+            seq = (
+                f"sequence(date_trunc('HOUR', {p}_ts), "
+                f"date_trunc('HOUR', {p}_end), INTERVAL 1 HOUR)"
+            )
+        else:
+            # probed fine grid: integer cell ids at the measured
+            # width (floor-of-floor identity keeps coverage exact:
+            # floor(floor(epoch)/w) = floor(epoch/w) for integer w)
+            seq = (
+                f"sequence(CAST(floor(unix_timestamp({p}_ts) / {w}) "
+                f"AS BIGINT), CAST(floor(unix_timestamp({p}_end) / {w}) "
+                f"AS BIGINT))"
+            )
+        return df.withColumn("cell", F.explode(F.expr(seq)))
+
+    resp = (
+        "date_trunc('HOUR', greatest(a_ts, b_ts)) = cell"
+        if w is None
+        else f"CAST(floor(unix_timestamp(greatest(a_ts, b_ts)) / {w}) "
+        "AS BIGINT) = cell"
+    )
+    return (
+        cells(a_side, "a")
+        .join(cells(b_side, "b"), "cell")
+        .filter("a_ts <= b_end AND b_ts <= a_end")
+        .filter(resp)
+        .selectExpr("CAST(to_date(greatest(a_ts, b_ts)) AS STRING) AS day")
+        .groupBy("day")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
+    )
+
+
+@query(
+    "q_join_interval_grid",
+    oracle=_INTERVAL_GRID_ORACLE,
+    tags=("join", "interval", "scale-design", "stats-driven"),
+)
+def q_join_interval_grid(spark, sf_dir):
+    """Interval-overlap JOIN with no equi-key — click windows vs
+    purchase windows (each event opens a 30-minute interval), pairs
+    counted per day of the later start.  A naive overlap theta-join
+    plans BroadcastNestedLoop (quadratic once neither side
+    broadcasts); the scalable form grid-buckets both interval sets
+    into cells, equi-joins on the cell id, and de-duplicates across
+    cells with the RESPONSIBILITY rule: only the cell containing the
+    later start emits the pair.  greatest(a_ts, b_ts) lies inside
+    both intervals whenever they overlap, so exactly one cell owns
+    each overlapping pair — no distinct needed, no pair counted
+    twice.
+
+    The cell width is PROBED, not static (r12 verdict item 6 — the
+    sixth measured-stats consumer): per-cell work is
+    (rate_a * w) * (rate_b * w), quadratic in the width, so the right
+    grid depends on the measured arrival rates —
+    operators/stats.measured_grid_cell_width solves
+    w = sqrt(target / (rate_a * rate_b)) from one union-tagged probe
+    job and surrenders to the static hour grid when the measured
+    width is an hour or coarser (fixture densities land there; one
+    decade denser flips to the fine grid — both branches are
+    row-identical under the responsibility rule, so the naive-theta
+    oracle never needs to know which ran; both plan shapes pinned in
+    tests/test_plans.py).
+
+    One keyed shuffle on the cell; an ADVERSARIAL burst (one hot
+    cell) is the same skew class as a hot join key: split the hot
+    cell's A side into s salted sub-buckets and replicate the B side
+    s ways — the exact recipe measured in q_join_skew_salted — or
+    let AQE's skew-join splitting do it at runtime; the
+    responsibility rule is unaffected because it depends only on
+    (cell, timestamps), not the salt.  The oracle runs the NAIVE
+    theta join (DuckDB plans IEJoin) so the grid semantics are
+    pinned against the textbook definition."""
+    return _interval_grid(spark, sf_dir, _GRID_TARGET_PAIRS)

@@ -1,6 +1,6 @@
 """Training-data pipeline operators, round 3 (SURVEY.md §2.14) —
-sampling/splitting, CDC compaction, skew-safe aggregation, range and
-co-occurrence analytics.  Everything is oracle-checked; sampling and
+sampling/splitting, CDC compaction, skew-safe aggregation and range
+analytics.  Everything is oracle-checked; sampling and
 splitting are DETERMINISTIC (md5-keyed, no RNG) so reruns — and the
 DuckDB oracle — reproduce the exact subset, which is what training-data
 lineage requires anyway.
@@ -10,11 +10,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from skyhookdb_ceph_spark.operators import ensure_parallelism
 from skyhookdb_ceph_spark.operators.range_join import banded_interval_join
 from skyhookdb_ceph_spark.operators.skew import salted_sum_count
-from skyhookdb_ceph_spark.queries._util import Catalog, local_df, money, quantize, ratio
+from skyhookdb_ceph_spark.queries._util import Catalog, local_df, money, quantize
 from skyhookdb_ceph_spark.registry import query
+
 
 # ---------------------------------------------------------------------------
 # Deterministic sampling / splitting
@@ -218,80 +218,6 @@ def q_join_range(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Text analytics: repetition scoring, co-occurrence
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "q_text_repetition",
-    oracle=(
-        "SELECT doc_id, "
-        "CAST(len(grams) AS INT) AS n_grams, "
-        "floor((1.0 - len(list_distinct(grams)) * 1.0 / len(grams)) * 1000000 + 0.5) / 1000000 AS rep_score "
-        "FROM (SELECT doc_id, list_transform("
-        "  generate_series(1, greatest(len(string_split(text, ' ')) - 2, 1)), "
-        "  i -> array_to_string(list_slice(string_split(text, ' '), i, i + 2), ' ')) AS grams "
-        "FROM documents)"
-    ),
-    tags=("pipeline", "text"),
-)
-def q_text_repetition(spark, sf_dir):
-    """Within-document repetition scoring: 1 - distinct/total word
-    trigrams — the cheap detector for looping/boilerplate generations
-    that every pretraining filter stack runs.  Pure per-row JVM
-    expressions, no shuffle; the oracle mirrors the short-doc partial
-    trigram exactly (array_to_string/list_slice)."""
-    d = ensure_parallelism(Catalog(spark, sf_dir).documents)
-    return (
-        d.selectExpr(
-            "doc_id",
-            "transform(sequence(1, greatest(size(split(text, ' ')) - 2, 1)), "
-            "i -> concat_ws(' ', slice(split(text, ' '), i, 3))) AS grams",
-        )
-        .selectExpr(
-            "doc_id",
-            "cast(size(grams) AS int) AS n_grams",
-            "floor((cast(1.0 AS double) - cast(size(array_distinct(grams)) AS double) "
-            "/ size(grams)) * 1000000 + 0.5) / 1000000 AS rep_score",
-        )
-    )
-
-
-@query(
-    "q_text_cooccur",
-    oracle=(
-        "WITH toks AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS w "
-        "FROM documents) "
-        "SELECT a.w AS w_a, b.w AS w_b, CAST(count(*) AS BIGINT) AS n_docs "
-        "FROM toks a JOIN toks b ON a.doc_id = b.doc_id AND a.w < b.w "
-        "GROUP BY 1, 2 ORDER BY n_docs DESC, w_a, w_b LIMIT 20"
-    ),
-    tags=("pipeline", "text"),
-)
-def q_text_cooccur(spark, sf_dir):
-    """Top-20 word co-occurrence pairs (doc-level) — the PMI/embedding
-    pretraining statistic.  Distinct words per doc FIRST (explode after
-    dedup), then a doc-keyed self-join generates within-doc pairs;
-    pair counting partial-aggregates map-side; the top-k is
-    TakeOrderedAndProject.  The self-join is keyed by doc_id, so work
-    scales with Σ(per-doc vocab²) — bounded by document length, never
-    corpus-quadratic."""
-    d = ensure_parallelism(Catalog(spark, sf_dir).documents)
-    toks = d.selectExpr(
-        "doc_id", "explode(array_distinct(split(text, ' '))) AS w"
-    )
-    a = toks.selectExpr("doc_id", "w AS w_a")
-    b = toks.selectExpr("doc_id AS doc_id2", "w AS w_b")
-    return (
-        a.join(b, (a.doc_id == b.doc_id2) & (a.w_a < b.w_b))
-        .groupBy("w_a", "w_b")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy(F.desc("n_docs"), "w_a", "w_b")
-        .limit(20)
-    )
-
-
-# ---------------------------------------------------------------------------
 # Sketched quantiles, vector centroids
 # ---------------------------------------------------------------------------
 
@@ -330,118 +256,9 @@ def q_agg_approx_quantile(spark, sf_dir):
     )
 
 
-@query(
-    "q_vec_centroids",
-    oracle=(
-        "SELECT lang, CAST(count(*) AS BIGINT) AS n_vecs, "
-        "floor((avg(CAST(embedding[1] AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS c1, "
-        "floor((avg(CAST(embedding[2] AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS c2 "
-        "FROM embeddings JOIN documents ON vec_id = doc_id GROUP BY lang"
-    ),
-    tags=("pipeline", "similarity"),
-)
-def q_vec_centroids(spark, sf_dir):
-    """Per-class embedding centroids (first two dims + counts): the
-    building block for IVF coarse-quantizer training and per-class
-    drift monitoring.  Per-dimension avg is a plain partial-aggregable
-    sum/count — one keyed shuffle; the doc metadata join broadcasts
-    nothing explicitly (Catalyst decides by size)."""
-    c = Catalog(spark, sf_dir)
-    e = c.embeddings
-    d = c.documents.select("doc_id", "lang")
-    return (
-        e.join(d, e.vec_id == d.doc_id)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            ratio(F.avg(F.element_at("embedding", 1).cast("double"))).alias("c1"),
-            ratio(F.avg(F.element_at("embedding", 2).cast("double"))).alias("c2"),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # Wave 2: clustering, modal values, correlation, URL parsing, PII redaction
 # ---------------------------------------------------------------------------
-
-
-def cluster_label_ctes() -> str:
-    """The q_dedup_cluster derivation as a reusable CTE chain ending
-    in `labels(doc_id, cluster)` — shared with the corpus-dedup ACTION
-    (q_transform_dedup_corpus, pipeline13.py) so audit and action are
-    provably selecting over the same verdicts."""
-    from skyhookdb_ceph_spark.queries.llm import FUZZY_CTES, FUZZY_SELECT
-
-    return f"""{FUZZY_CTES},
-pairs AS ({FUZZY_SELECT}),
-und AS (
-  SELECT doc_a AS v, doc_b AS n FROM pairs
-  UNION ALL SELECT doc_b AS v, doc_a AS n FROM pairs),
-l1 AS (
-  SELECT d.doc_id AS v, least(d.doc_id, coalesce(min(und.n), d.doc_id)) AS lab
-  FROM documents d LEFT JOIN und ON und.v = d.doc_id GROUP BY d.doc_id),
-l2 AS (
-  SELECT l1.v, least(l1.lab, coalesce(min(ln.lab), l1.lab)) AS cluster
-  FROM l1 LEFT JOIN und ON und.v = l1.v LEFT JOIN l1 ln ON ln.v = und.n
-  GROUP BY l1.v, l1.lab),
-labels AS (SELECT v AS doc_id, cluster FROM l2)"""
-
-
-def _cluster_oracle() -> str:
-    return f"WITH {cluster_label_ctes()}\nSELECT doc_id, cluster FROM labels"
-
-
-def cluster_labels(spark, sf_dir):
-    """Spark twin of cluster_label_ctes(): per-document near-dup
-    cluster ids via two rounds of min-label propagation over the
-    MinHash LSH edge set.  Shared by the audit (q_dedup_cluster) and
-    the action (q_transform_dedup_corpus)."""
-    from skyhookdb_ceph_spark.operators import minhash
-
-    d = Catalog(spark, sf_dir).documents
-    # The LSH pair pipeline feeds BOTH propagation rounds; without a
-    # checkpoint each round re-runs shingling + banding + jaccard over
-    # the corpus (~3 recomputes, measured 3.4 s -> 1.4 s at sf0.1).
-    # The materialized edge list is near-dup pairs only — tiny relative
-    # to the corpus at any scale (clusters would checkpoint to shared
-    # storage on a real deployment).
-    pairs = (
-        minhash.jaccard_pairs(d)
-        .select("doc_a", "doc_b")
-        .localCheckpoint()
-    )
-    und = pairs.unionByName(
-        pairs.selectExpr("doc_b AS doc_a", "doc_a AS doc_b")
-    ).selectExpr("doc_a AS v", "doc_b AS n")
-    docs = d.select(F.col("doc_id").alias("v"))
-    l1 = (
-        docs.join(und, "v", "left")
-        .groupBy("v")
-        .agg(F.least(F.col("v"), F.coalesce(F.min("n"), F.col("v"))).alias("lab"))
-    )
-    neigh_lab = und.join(
-        l1.selectExpr("v AS nv", "lab AS nlab"), F.col("n") == F.col("nv")
-    ).select("v", "nlab")
-    return (
-        l1.join(neigh_lab, "v", "left")
-        .groupBy("v", "lab")
-        .agg(F.least(F.col("lab"), F.coalesce(F.min("nlab"), F.col("lab"))).alias("cluster"))
-        .selectExpr("v AS doc_id", "cluster")
-    )
-
-
-@query("q_dedup_cluster", oracle=_cluster_oracle(), tags=("pipeline", "dedup"))
-def q_dedup_cluster(spark, sf_dir):
-    """Duplicate-cluster labeling: near-dup PAIRS (the MinHash LSH
-    edges from q_dedup_fuzzy) propagated to per-document cluster ids
-    via TWO rounds of min-label propagation — each round is one keyed
-    shuffle (join edges to current labels + grouped min), the standard
-    large-graph connected-components step.  Two rounds label every
-    component of diameter <= 2 exactly (near-dup clusters are dense:
-    LSH emits most cross pairs directly); production fixpoints loop
-    the same step until labels stop changing — the plan per round is
-    identical at any scale.  Isolated documents keep their own id."""
-    return cluster_labels(spark, sf_dir)
 
 
 @query(
@@ -540,54 +357,6 @@ def q_fn_url_parse(spark, sf_dir):
     )
 
 
-@query(
-    "q_text_pii_redact",
-    oracle=(
-        "SELECT doc_id, "
-        "CAST(len(regexp_extract_all(augmented, '[a-z0-9]+@[a-z0-9.]+')) AS INT) AS n_emails, "
-        "CAST(len(regexp_extract_all(augmented, '\\+1-555-[0-9]{4}')) AS INT) AS n_phones, "
-        "md5(regexp_replace(regexp_replace(augmented, '[a-z0-9]+@[a-z0-9.]+', '<EMAIL>', 'g'), "
-        "'\\+1-555-[0-9]{4}', '<PHONE>', 'g')) AS redacted_md5 "
-        "FROM (SELECT doc_id, text || ' contact user' || CAST(doc_id AS VARCHAR) "
-        "|| '@example.com or +1-555-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') "
-        "AS augmented FROM documents)"
-    ),
-    tags=("pipeline", "text"),
-)
-def q_text_pii_redact(spark, sf_dir):
-    """PII redaction (emails, phone numbers) with per-doc match counts
-    and a digest of the redacted text.  The fixture corpus contains no
-    PII, so deterministic synthetic contact strings are appended
-    first — honestly a plumbing demonstration; real corpora swap in
-    richer patterns, same plan (per-row JVM regex, no shuffle, global
-    replace semantics aligned across engines)."""
-    d = Catalog(spark, sf_dir).documents
-    aug = F.concat(
-        F.col("text"), F.lit(" contact user"), F.col("doc_id").cast("string"),
-        F.lit("@example.com or +1-555-"),
-        F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-    )
-    email_re = "[a-z0-9]+@[a-z0-9.]+"
-    phone_re = r"\+1-555-[0-9]{4}"
-    a = d.select("doc_id", aug.alias("augmented"))
-    return a.select(
-        "doc_id",
-        F.size(F.expr(f"regexp_extract_all(augmented, '{email_re}', 0)"))
-        .cast("int")
-        .alias("n_emails"),
-        F.size(F.expr(f"regexp_extract_all(augmented, '\\\\+1-555-[0-9]{{4}}', 0)"))
-        .cast("int")
-        .alias("n_phones"),
-        F.md5(
-            F.regexp_replace(
-                F.regexp_replace("augmented", email_re, "<EMAIL>"),
-                phone_re,
-                "<PHONE>",
-            )
-        ).alias("redacted_md5"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Wave 3 — sequence packing, mixture sampling, LM scoring, sessionization,
 # URL canonicalization
@@ -673,46 +442,6 @@ def q_sample_weighted(spark, sf_dir):
 
 
 @query(
-    "q_text_unigram_lp",
-    oracle=(
-        "WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w "
-        "FROM documents), "
-        "vocab AS (SELECT w, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY w) "
-        "SELECT doc_id, "
-        "floor(avg(log10(CAST(c AS DOUBLE) / (SELECT CAST(count(*) AS BIGINT) FROM tok))) "
-        "* 1000000 + 0.5) / 1000000 AS avg_logp, "
-        "CAST(count(*) AS BIGINT) AS n_tokens "
-        "FROM tok JOIN vocab USING (w) GROUP BY doc_id"
-    ),
-    tags=("pipeline", "text"),
-)
-def q_text_unigram_lp(spark, sf_dir):
-    """Unigram language-model scoring: corpus-derived token
-    frequencies -> per-document mean log10 probability — the classic
-    cheap perplexity proxy for quality filtering (low score = rare
-    gibberish tokens).  Two passes over the token stream: (1) vocab =
-    one keyed partial agg, (2) re-join tokens to vocab (equi-join,
-    AQE broadcasts when the vocab is small) and one per-doc agg.
-    Cross-engine float drift from summation order is absorbed by
-    6-decimal quantization (house rule, see q_agg_corr)."""
-    d = ensure_parallelism(Catalog(spark, sf_dir).documents)
-    tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
-    vocab = tok.groupBy("w").agg(F.count("*").cast("bigint").alias("c"))
-    tot = tok.groupBy().agg(F.count("*").cast("bigint").alias("n"))
-    return (
-        tok.join(vocab, "w")
-        .crossJoin(F.broadcast(tot))
-        .groupBy("doc_id")
-        .agg(
-            ratio(F.avg(F.log10(F.col("c").cast("double") / F.col("n")))).alias(
-                "avg_logp"
-            ),
-            F.count("*").cast("bigint").alias("n_tokens"),
-        )
-    )
-
-
-@query(
     "q_win_sessionize",
     oracle=(
         "SELECT user_id, event_id, ts, "
@@ -750,56 +479,6 @@ def q_win_sessionize(spark, sf_dir):
         "event_id",
         "ts",
         F.sum("is_new").over(wc).cast("bigint").alias("session_seq"),
-    )
-
-
-@query(
-    "q_dedup_url",
-    oracle=(
-        "SELECT canonical_url, CAST(min(doc_id) AS BIGINT) AS keep_doc, "
-        "CAST(count(*) AS BIGINT) AS n_dupes "
-        "FROM (SELECT doc_id, "
-        "regexp_replace(regexp_replace(lower(raw_url), '\\?.*$', ''), '/$', '') AS canonical_url "
-        "FROM (SELECT doc_id, 'https://' || "
-        "CASE WHEN doc_id % 2 = 0 THEN upper(source) ELSE source END || "
-        "'.Example.COM/page/' || CAST(doc_id % 10 AS VARCHAR) || "
-        "CASE WHEN doc_id % 3 = 0 THEN '/' ELSE '' END || "
-        "'?sid=' || CAST(doc_id AS VARCHAR) AS raw_url FROM documents)) "
-        "GROUP BY canonical_url"
-    ),
-    tags=("pipeline", "dedup"),
-)
-def q_dedup_url(spark, sf_dir):
-    """Canonical-URL deduplication — the first dedup pass of every
-    web-crawl pipeline: canonicalize (lowercase host, drop query
-    string and fragment, strip trailing slash) and keep the lowest
-    doc_id per canonical URL.  URLs are synthesized with
-    deterministic case/query/trailing-slash noise (fixtures carry no
-    URLs) so canonicalization genuinely collapses ~2-3 variants per
-    page.  Plan: per-row canonicalization, ONE keyed partial agg —
-    min/count combine map-side, only (url, id) pairs shuffle."""
-    d = Catalog(spark, sf_dir).documents
-    raw = F.concat(
-        F.lit("https://"),
-        F.when(F.col("doc_id") % 2 == 0, F.upper("source")).otherwise(
-            F.col("source")
-        ),
-        F.lit(".Example.COM/page/"),
-        (F.col("doc_id") % 10).cast("string"),
-        F.when(F.col("doc_id") % 3 == 0, F.lit("/")).otherwise(F.lit("")),
-        F.lit("?sid="),
-        F.col("doc_id").cast("string"),
-    )
-    canon = F.regexp_replace(
-        F.regexp_replace(F.lower(raw), r"\?.*$", ""), "/$", ""
-    )
-    return (
-        d.select("doc_id", canon.alias("canonical_url"))
-        .groupBy("canonical_url")
-        .agg(
-            F.min("doc_id").cast("bigint").alias("keep_doc"),
-            F.count("*").cast("bigint").alias("n_dupes"),
-        )
     )
 
 

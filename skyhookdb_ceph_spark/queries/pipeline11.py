@@ -12,26 +12,16 @@ Closing the r9 verdict's stretch items:
    and never needs to know which branch ran.  Both plan shapes are
    pinned in tests/test_plans.py.
 
-2. q_text_rerank — two-stage retrieval (r9 verdict item 9): BM25
-   top-k candidate generation, then a feature-scored rerank that
-   re-touches ONLY the k candidate documents (broadcast candidate
-   list, corpus never shuffles) — the retrieve-then-rerank shape
-   every production search / RAG pipeline runs.
-
 House rules unchanged: identical aliases both sides, deterministic
 everything, no all-pairs, no corpus-sized collect() — the probes'
-driver-side materializations are one row / k rows.
+driver-side materializations are one row.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from skyhookdb_ceph_spark.operators import minhash, vectors
-from skyhookdb_ceph_spark.queries.llm import FUZZY_CTES, FUZZY_SIG_CTES
 from skyhookdb_ceph_spark.operators.stats import measured_shuffle_width
-from skyhookdb_ceph_spark.operators.text_index import bm25_search
 from skyhookdb_ceph_spark.queries._util import (
     Catalog,
     collect_local,
@@ -40,6 +30,7 @@ from skyhookdb_ceph_spark.queries._util import (
     scratch,
 )
 from skyhookdb_ceph_spark.registry import query
+
 
 # ---------------------------------------------------------------------------
 # §2.21.1 probe-driven shuffle-partition count for a keyed join
@@ -119,300 +110,6 @@ def q_join_width_probed(spark, sf_dir):
     split an undersized one, which is exactly the failure the probe
     prevents."""
     return _width_probed_join(spark, sf_dir, _WIDTH_TARGET_ROWS)
-
-
-# ---------------------------------------------------------------------------
-# §2.21.2 two-stage retrieval: BM25 candidates -> feature rerank
-# ---------------------------------------------------------------------------
-
-_RERANK_TERMS = ("table", "query")
-_RERANK_K1, _RERANK_B = 1.2, 0.75  # the oracle's statement of BM25's k1, b
-_RERANK_CANDIDATES = 20
-_RERANK_PHRASE = " ".join(_RERANK_TERMS)
-
-_RERANK_ORACLE = f"""
-WITH d AS (
-  SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents),
-dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM d),
-stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, avg(dl) AS avgdl FROM dl),
-tf AS (
-  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM (
-    SELECT doc_id, unnest(toks) AS term FROM d) x
-  WHERE term IN ('{_RERANK_TERMS[0]}', '{_RERANK_TERMS[1]}')
-  GROUP BY doc_id, term),
-idf AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
-scored AS (
-  SELECT tf.doc_id,
-    sum(ln(1 + (s.n_docs - idf.df + 0.5) / (idf.df + 0.5))
-        * tf.tf * ({_RERANK_K1} + 1)
-        / (tf.tf + {_RERANK_K1} * (1 - {_RERANK_B} + {_RERANK_B} * dl.dl / s.avgdl))
-    ) AS raw
-  FROM tf JOIN idf USING (term) JOIN dl USING (doc_id), stats s
-  GROUP BY tf.doc_id),
-cand AS (
-  SELECT doc_id, floor(raw * 1000000 + 0.5) / 1000000 AS bm25
-  FROM scored
-  ORDER BY floor(raw * 1000000 + 0.5) / 1000000 DESC, doc_id
-  LIMIT {_RERANK_CANDIDATES}),
-feat AS (
-  SELECT c.doc_id, c.bm25,
-    CASE WHEN d.text LIKE '%{_RERANK_PHRASE}%' THEN 1 ELSE 0 END
-      AS phrase_hit,
-    1.0 / ln(1 + dl.dl) AS len_prior
-  FROM cand c JOIN d USING (doc_id) JOIN dl USING (doc_id)),
-r AS (
-  SELECT doc_id, bm25,
-    floor((bm25 + 0.5 * phrase_hit + len_prior) * 1000000 + 0.5) / 1000000
-      AS rerank
-  FROM feat)
-SELECT doc_id, bm25, rerank,
-  CAST(row_number() OVER (ORDER BY rerank DESC, doc_id) AS INT) AS rnk
-FROM r ORDER BY rerank DESC, doc_id LIMIT 10
-"""
-
-
-@query(
-    "q_text_rerank",
-    oracle=_RERANK_ORACLE,
-    tags=("pipeline", "text", "scale-design"),
-)
-def q_text_rerank(spark, sf_dir):
-    """Two-stage retrieval: BM25 candidate generation (q_text_bm25's
-    scoring path, widened to top-20), then a feature-scored RERANK
-    over the candidates only — the retrieve-then-rerank shape every
-    production search / RAG pipeline runs (a cheap sparse scorer
-    prunes the corpus; an expensive scorer re-orders the survivors).
-
-    The scale contract is the candidate boundary: stage 1 never
-    shuffles document text (postings filtered at the explode, exactly
-    q_text_bm25), and stage 2's expensive features (phrase scan over
-    the raw text + length prior) run on exactly k=20 rows — the
-    candidate list broadcasts and the corpus side of the text fetch is
-    a broadcast-hash-join stream, so document text STILL never
-    shuffles (plan-asserted: no exchange carries `text`).  At 100 TB
-    stage 2's cost is O(k), independent of corpus size — the whole
-    point of the two-stage shape.  The rerank score is
-    bm25 + 0.5 * phrase_hit + 1/ln(1+dl): an exact-phrase bonus (the
-    feature BM25's bag-of-words model cannot see) and a brevity
-    prior.  Candidate cut on the QUANTIZED bm25 with doc_id tiebreak
-    so the k-boundary is engine-invariant; 6-decimal quantization
-    before the final rank window (2-term float sums cannot drift)."""
-    docs = Catalog(spark, sf_dir).documents
-    cand = bm25_search(docs, _RERANK_TERMS, _RERANK_CANDIDATES).select(
-        "doc_id", "bm25"
-    )
-    # stage 2: k-bounded candidate list BROADCASTS; the corpus side is
-    # the streamed side of a broadcast hash join, so text never
-    # shuffles and the expensive features run on k rows only
-    feat = (
-        F.broadcast(cand)
-        .join(
-            docs.select("doc_id", "text", F.size(F.split("text", " ")).alias("dl")),
-            "doc_id",
-        )
-        .select(
-            "doc_id",
-            "bm25",
-            F.when(F.col("text").contains(_RERANK_PHRASE), 1)
-            .otherwise(0)
-            .alias("phrase_hit"),
-            (F.lit(1.0) / F.log(1 + F.col("dl"))).alias("len_prior"),
-        )
-    )
-    r = feat.select(
-        "doc_id",
-        "bm25",
-        quantize(
-            F.col("bm25") + 0.5 * F.col("phrase_hit") + F.col("len_prior"), 6
-        ).alias("rerank"),
-    )
-    top = r.orderBy(F.desc("rerank"), "doc_id").limit(10)
-    w = Window.orderBy(F.desc("rerank"), "doc_id")  # 10 rows post-limit
-    return top.withColumn("rnk", F.row_number().over(w).cast("int"))
-
-
-# ---------------------------------------------------------------------------
-# §2.21.3 dedup-method agreement audit (MinHash vs embedding-cosine)
-# ---------------------------------------------------------------------------
-
-_AGREE_ORACLE = f"""
-WITH {FUZZY_CTES},
-tpair AS (
-  SELECT da AS a, db AS b
-  FROM cand JOIN sh x ON x.doc_id = cand.da JOIN sh y ON y.doc_id = cand.db
-  WHERE floor((len(list_intersect(x.shingles, y.shingles)) * 1.0
-        / len(list_distinct(x.shingles || y.shingles))) * 1000000 + 0.5)
-        / 1000000 >= 0.8),
-{vectors.banded_cells_cte_duckdb()},
-ecand AS (
-  SELECT DISTINCT a.vec_id AS a, c.vec_id AS b
-  FROM cells a JOIN cells c ON a.bucket = c.bucket AND a.vec_id < c.vec_id),
-epair AS (
-  SELECT ecand.a, ecand.b
-  FROM ecand JOIN embeddings x ON x.vec_id = ecand.a
-             JOIN embeddings y ON y.vec_id = ecand.b
-  WHERE {vectors.cosine_duckdb('x.embedding', 'y.embedding')} > 0.4),
-u AS (
-  SELECT COALESCE(t.in_text, 0) AS in_text, COALESCE(e.in_embed, 0) AS in_embed
-  FROM (SELECT a, b, 1 AS in_text FROM tpair) t
-  FULL OUTER JOIN (SELECT a, b, 1 AS in_embed FROM epair) e
-    ON t.a = e.a AND t.b = e.b)
-SELECT
-  CAST(sum(in_text * in_embed) AS BIGINT) AS n_both,
-  CAST(sum(in_text * (1 - in_embed)) AS BIGINT) AS n_text_only,
-  CAST(sum((1 - in_text) * in_embed) AS BIGINT) AS n_embed_only,
-  floor((sum(in_text * in_embed) * 1.0 / count(*)) * 1000000 + 0.5) / 1000000
-    AS agreement
-FROM u
-"""
-
-
-@query(
-    "q_dedup_agreement",
-    oracle=_AGREE_ORACLE,
-    tags=("llm", "dedup", "scale-design"),
-)
-def q_dedup_agreement(spark, sf_dir):
-    """Agreement audit between the two near-dup detectors: the
-    text-side MinHash pipeline (q_dedup_fuzzy: shingle LSH -> exact
-    Jaccard >= 0.8) vs the embedding-side cosine pipeline
-    (q_dedup_embed's pair stage: sign-LSH buckets -> cosine > 0.4) —
-    the validation every production dedup stack runs before trusting
-    the cheap method at scale (Jaccard agreement of the pair sets =
-    how often the scalable detector and the semantic detector find
-    the SAME duplicates; text_only = semantic misses, embed_only =
-    lexical misses).
-
-    Scale shape: both pair generators are LSH-bucketed candidate
-    joins (never all-pairs — the operators/minhash.py and
-    operators/vectors.py machinery with corpus-scaled band widths);
-    the agreement join keys on 16-byte id pairs, so its input is
-    pair-count-sized, orders of magnitude below the corpus; output is
-    ONE row.  Fixture embeddings are synthetic (not derived from the
-    texts), so the measured agreement is near zero — the operator's
-    value is the plumbing + the confusion counts being exact and
-    oracle-checked."""
-    c = Catalog(spark, sf_dir)
-    tp = minhash.jaccard_pairs(c.documents).select(
-        F.col("doc_a").alias("a"),
-        F.col("doc_b").alias("b"),
-        F.lit(1).alias("in_text"),
-    )
-    ep = (
-        vectors.bucketed_pairs(c.embeddings)
-        .selectExpr(
-            "va AS a", "vb AS b", f"{vectors.cosine_expr('ea', 'eb')} AS sim"
-        )
-        .filter("sim > 0.4")
-        .select("a", "b", F.lit(1).alias("in_embed"))
-    )
-    u = tp.join(ep, ["a", "b"], "full_outer").select(
-        F.coalesce("in_text", F.lit(0)).alias("in_text"),
-        F.coalesce("in_embed", F.lit(0)).alias("in_embed"),
-    )
-    both = F.sum(F.col("in_text") * F.col("in_embed"))
-    return u.agg(
-        both.cast("bigint").alias("n_both"),
-        F.sum(F.col("in_text") * (1 - F.col("in_embed")))
-        .cast("bigint")
-        .alias("n_text_only"),
-        F.sum((1 - F.col("in_text")) * F.col("in_embed"))
-        .cast("bigint")
-        .alias("n_embed_only"),
-        quantize(both / F.count(F.lit(1)), 6).alias("agreement"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2.21.4 two-stage quality-filter cascade
-# ---------------------------------------------------------------------------
-
-_CASCADE_HI, _CASCADE_LO, _CASCADE_BD = 0.62, 0.5, 0.97
-
-
-def cascade_exprs() -> tuple[str, str]:
-    """(q1, bd) Spark SQL expression strings of the two cascade stage
-    scores — shared by q_text_quality_cascade and the recomposed e2e
-    pipeline (q_pipeline_e2e_v2, pipeline13.py) so the gate cannot
-    drift between the audit and the pipeline that applies it."""
-    toks = "split(text, ' ')"
-    q1 = (
-        f"floor((cast(0.5 AS double) * least(size({toks}) / cast(80.0 AS double), cast(1.0 AS double)) "
-        f"+ cast(0.5 AS double) * (cast(size(array_distinct({toks})) AS double) "
-        f"/ size({toks}))) * 1000000 + 0.5) / 1000000"
-    )
-    bg = (
-        f"transform(sequence(1, size({toks}) - 1), "
-        f"i -> concat(element_at({toks}, i), ' ', element_at({toks}, i + 1)))"
-    )
-    bd = (
-        f"CASE WHEN size({toks}) < 2 THEN cast(1.0 AS double) "
-        f"ELSE floor((cast(size(array_distinct({bg})) AS double) "
-        f"/ (size({toks}) - 1)) * 1000000 + 0.5) / 1000000 END"
-    )
-    return q1, bd
-
-_CASCADE_ORACLE = f"""
-WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-s1 AS (
-  SELECT doc_id, toks,
-    floor((0.5 * least(len(toks) / 80.0, 1.0)
-     + 0.5 * (len(list_distinct(toks)) * 1.0 / len(toks))) * 1000000 + 0.5)
-     / 1000000 AS q1
-  FROM t),
-s2 AS (
-  SELECT doc_id, q1,
-    CASE WHEN q1 >= {_CASCADE_HI} OR q1 < {_CASCADE_LO} THEN NULL
-         WHEN len(toks) < 2 THEN 1.0
-         ELSE floor((len(list_distinct(list_transform(
-                generate_series(1, len(toks) - 1),
-                i -> toks[i] || ' ' || toks[i + 1]))) * 1.0
-                / (len(toks) - 1)) * 1000000 + 0.5) / 1000000 END AS bd
-  FROM s1)
-SELECT doc_id, q1,
-  CAST(CASE WHEN bd IS NULL THEN 1 ELSE 2 END AS INT) AS stage,
-  CASE WHEN bd IS NULL THEN
-         (CASE WHEN q1 >= {_CASCADE_HI} THEN 'accept' ELSE 'reject' END)
-       WHEN bd >= {_CASCADE_BD} THEN 'accept' ELSE 'reject' END AS verdict
-FROM s2
-"""
-
-
-@query(
-    "q_text_quality_cascade",
-    oracle=_CASCADE_ORACLE,
-    tags=("llm", "text", "scale-design"),
-)
-def q_text_quality_cascade(spark, sf_dir):
-    """Two-stage quality-filter CASCADE: the cheap heuristic score
-    (q_text_quality's length x lexical-diversity blend) routes every
-    document — confident accepts/rejects exit at stage 1; only the
-    uncertain middle band pays the expensive stage-2 feature (bigram
-    diversity: distinct bigrams / total bigrams, the n-gram repetition
-    screen).  This is the cost model every production quality pipeline
-    uses when the expensive scorer (a model) cannot run on the full
-    corpus: expensive-cost = P(uncertain) x corpus, not corpus.
-
-    Spark shape: ONE Project over the scan — the cascade is a lazy
-    CASE WHEN, and Catalyst's CaseWhen evaluates branches in order per
-    row, so the bigram build+distinct runs ONLY for rows that reach
-    the stage-2 branch; no second pass, no shuffle, no routing join
-    (plan-asserted: zero exchanges).  Both stage scores are
-    floor-quantized at 6 decimals BEFORE banding so the band
-    assignment is engine-invariant.  size<2 guard because Spark's
-    sequence(1, 0) yields a DESCENDING [1,0] while DuckDB's
-    generate_series(1, 0) is empty."""
-    d = Catalog(spark, sf_dir).documents
-    q1, bd = cascade_exprs()
-    return d.selectExpr(
-        "doc_id",
-        f"{q1} AS q1",
-        f"CAST(CASE WHEN {q1} >= {_CASCADE_HI} OR {q1} < {_CASCADE_LO} "
-        f"THEN 1 ELSE 2 END AS INT) AS stage",
-        f"CASE WHEN {q1} >= {_CASCADE_HI} THEN 'accept' "
-        f"WHEN {q1} < {_CASCADE_LO} THEN 'reject' "
-        f"WHEN {bd} >= {_CASCADE_BD} THEN 'accept' ELSE 'reject' END AS verdict",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -694,75 +391,6 @@ def q_gdpr_crypto_shred(spark, sf_dir):
     ).orderBy("c_custkey")
 
 
-
-# ---------------------------------------------------------------------------
-# §2.21.9 incremental near-dup admission against a persisted index
-# ---------------------------------------------------------------------------
-
-_INC_MOD = 5  # doc_id % 5 == 0 -> today's delta; else the indexed base
-
-_INC_ORACLE = f"""
-WITH {FUZZY_SIG_CTES},
-cand AS (
-  SELECT DISTINCT d.doc_id AS dd, b.doc_id AS db
-  FROM sig d JOIN sig b ON d.b = b.b AND d.bsig = b.bsig
-  WHERE d.doc_id % {_INC_MOD} = 0 AND b.doc_id % {_INC_MOD} != 0),
-ver AS (
-  SELECT dd, db
-  FROM cand JOIN sh x ON x.doc_id = cand.dd JOIN sh y ON y.doc_id = cand.db
-  WHERE floor((len(list_intersect(x.shingles, y.shingles)) * 1.0
-        / len(list_distinct(x.shingles || y.shingles))) * 1000000 + 0.5)
-        / 1000000 >= 0.8),
-ag AS (SELECT dd, min(db) AS dup_of FROM ver GROUP BY dd)
-SELECT d.doc_id, ag.dup_of,
-  CAST(CASE WHEN ag.dup_of IS NOT NULL THEN 1 ELSE 0 END AS INT) AS is_dup
-FROM documents d LEFT JOIN ag ON ag.dd = d.doc_id
-WHERE d.doc_id % {_INC_MOD} = 0 ORDER BY d.doc_id
-"""
-
-
-@query(
-    "q_dedup_incremental",
-    oracle=_INC_ORACLE,
-    tags=("llm", "dedup", "scale-design"),
-)
-def q_dedup_incremental(spark, sf_dir):
-    """Incremental near-dup ADMISSION: today's delta documents are
-    checked against a PERSISTED MinHash signature index of the base
-    corpus — the production dedup shape once a corpus exists (nobody
-    re-runs all-pairs LSH over 100 TB because one day of crawl
-    arrived; the q_agg_incremental_merge maintenance idea applied to
-    q_dedup_fuzzy).
-
-    The index is built ONCE (operators/minhash.build_lsh_index: a
-    bucketBy(bsig) signature table, pre-shuffled for the band
-    equi-join); per refresh operators/minhash.probe_lsh_index pays
-    sig(delta) + a delta-vs-index equi-join + exact-Jaccard verify on
-    candidates only: O(delta + candidates), never O(corpus).  Verdict
-    per delta doc: dup_of = smallest matching base doc
-    (deterministic), NULL = admit.  Oracle derives the same
-    delta-vs-base pairing from the shared FUZZY_SIG_CTES chain."""
-    d = Catalog(spark, sf_dir).documents
-    base = d.filter(F.col("doc_id") % _INC_MOD != 0)
-    delta = d.filter(F.col("doc_id") % _INC_MOD == 0)
-    index = minhash.build_lsh_index(base)
-    ver = minhash.probe_lsh_index(index, base, delta)
-    ag = ver.groupBy("dd").agg(F.min("db").alias("dup_of"))
-    return (
-        delta.select("doc_id")
-        .join(ag, delta.doc_id == ag.dd, "left")
-        .select(
-            "doc_id",
-            "dup_of",
-            F.when(F.col("dup_of").isNotNull(), 1)
-            .otherwise(0)
-            .cast("int")
-            .alias("is_dup"),
-        )
-        .orderBy("doc_id")
-    )
-
-
 # ---------------------------------------------------------------------------
 # §2.21.10 probe-driven broadcast-vs-shuffle join choice
 # ---------------------------------------------------------------------------
@@ -835,73 +463,6 @@ def q_join_broadcast_probed(spark, sf_dir):
     Both branches are row-identical; the oracle is branch-invariant.
     Plan shapes pinned both ways in tests/test_plans.py."""
     return _broadcast_probed_join(spark, sf_dir, _BCAST_THRESHOLD)
-
-
-# ---------------------------------------------------------------------------
-# §2.21.11 incremental IVF index maintenance (append, never rebuild)
-# ---------------------------------------------------------------------------
-
-_IVF_INC_MOD = 4  # vec_id % 4 == 0 -> newly arriving vectors
-
-_IVF_INC_ORACLE = f"""
-WITH nb AS (
-  SELECT least(greatest(CAST(ceil(log2(count(*) / 64.0)) AS INT), 4), 16)
-    AS nb
-  FROM embeddings WHERE vec_id % {_IVF_INC_MOD} != 0),
-cells AS (
-  SELECT vec_id,
-    CASE WHEN vec_id % {_IVF_INC_MOD} = 0 THEN 1 ELSE 0 END AS is_delta,
-    array_to_string(list_transform(generate_series(1, nb.nb),
-      i -> CASE WHEN embedding[i] >= 0 THEN '1' ELSE '0' END), '')
-      AS bucket
-  FROM embeddings, nb)
-SELECT bucket, CAST(sum(1 - is_delta) AS BIGINT) AS n_base,
-  CAST(sum(is_delta) AS BIGINT) AS n_delta,
-  CAST(count(*) AS BIGINT) AS n_total
-FROM cells GROUP BY bucket ORDER BY bucket
-"""
-
-
-@query(
-    "q_vec_ivf_incremental",
-    oracle=_IVF_INC_ORACLE,
-    tags=("vector", "layout", "scale-design"),
-)
-def q_vec_ivf_incremental(spark, sf_dir):
-    """Incremental IVF index MAINTENANCE: newly arriving vectors are
-    hashed with the index's FROZEN bit count and appended into the
-    existing partitionBy(bucket) layout — new files in the affected
-    cell directories, base files untouched (append-only proven in
-    tests/test_ivf_layout.py) — completing the incremental-maintenance
-    triad (aggregates: q_agg_incremental_merge, dedup:
-    q_dedup_incremental, ANN index: here).  Rebuilding the layout per
-    ingest batch costs O(corpus) writes; appending costs O(delta).
-
-    The one real subtlety is pinned: nb is an index PARAMETER frozen
-    from the BASE corpus at build time, not re-derived from the grown
-    corpus — re-deriving would silently re-key every existing cell
-    (the oracle computes nb from the base cohort the same way).  The
-    verdict table is the per-cell (n_base, n_delta, n_total) census
-    of the read-back index, cohorts told apart by vec_id, which the
-    oracle re-derives from direct assignment — proving
-    append-maintained == rebuilt-from-scratch."""
-    e = Catalog(spark, sf_dir).embeddings
-    delta = F.col("vec_id") % _IVF_INC_MOD == 0
-    with scratch("skyhook_ivfinc_") as tmp:
-        vectors.build_ivf_index(spark, e.filter(~delta), tmp)
-        vectors.append_ivf_index(spark, e.filter(delta), tmp)
-        out = (
-            vectors.read_ivf_index(spark, tmp)
-            .withColumn("is_delta", delta.cast("int"))
-            .groupBy("bucket")
-            .agg(
-                F.sum(1 - F.col("is_delta")).cast("bigint").alias("n_base"),
-                F.sum("is_delta").cast("bigint").alias("n_delta"),
-                F.count(F.lit(1)).cast("bigint").alias("n_total"),
-            )
-            .orderBy("bucket")
-        )
-        return collect_local(out)  # cell census: bounded by 2^nb
 
 
 # ---------------------------------------------------------------------------
@@ -1128,91 +689,4 @@ def q_graph_triangles(spark, sf_dir):
                 6,
             ).alias("closure_ratio"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2.21.14 corpus drift monitor (per-source JS divergence)
-# ---------------------------------------------------------------------------
-
-_DRIFT_ORACLE = """
-WITH tok AS (
-  SELECT source, unnest(string_split(text, ' ')) AS w FROM documents),
-n AS (SELECT count(*) AS n FROM tok),
-cw AS (SELECT w, count(*) AS cw FROM tok GROUP BY w),
-ns AS (SELECT source, count(*) AS ns FROM tok GROUP BY source),
-csw AS (SELECT source, w, count(*) AS csw FROM tok GROUP BY source, w),
-terms AS (
-  SELECT csw.source,
-    (csw.csw * 1.0 / ns.ns) AS p, (cw.cw * 1.0 / n.n) AS q
-  FROM csw JOIN ns USING (source) JOIN cw USING (w), n),
-ag AS (
-  SELECT source,
-    sum(0.5 * p * log2(2 * p / (p + q))
-      + 0.5 * q * log2(2 * q / (p + q))) AS s_term,
-    sum(q) AS q_mass
-  FROM terms GROUP BY source)
-SELECT ag.source, CAST(ns.ns AS BIGINT) AS n_tokens,
-  floor(q_mass * 1000000 + 0.5) / 1000000 AS q_mass,
-  floor((s_term + 0.5 * (1 - q_mass)) * 1000000 + 0.5) / 1000000 AS js
-FROM ag JOIN ns ON ag.source = ns.source ORDER BY ag.source
-"""
-
-
-@query(
-    "q_text_drift_js",
-    oracle=_DRIFT_ORACLE,
-    tags=("llm", "text", "scale-design"),
-)
-def q_text_drift_js(spark, sf_dir):
-    """Corpus DRIFT monitor: Jensen-Shannon divergence of each
-    source's token distribution from the global corpus mix — the
-    distribution-shift alarm every continuously-ingesting training
-    pipeline runs (a source whose JS jumps changed its content mix;
-    q_agg_entropy and q_text_zipf describe ONE distribution, this
-    compares them).
-
-    The naive JS needs each (source, global) pair's UNION of support —
-    a per-source full-outer join over the vocabulary.  The closed form
-    used here avoids it: tokens ABSENT from a source contribute
-    exactly 0.5·q each (p=0 ⇒ the KL(q‖m) term is q·log2(2q/q)·0.5 =
-    q/2), so  JS = Σ_{w∈source} term(p,q) + 0.5·(1 − Σ_{w∈source} q)
-    — only PRESENT (source, token) rows are ever materialized.  Shape:
-    three keyed partial aggregates (per-token, per-source,
-    per-source-token), one vocab-bounded equi-join, a 1-row total
-    broadcast; output is sources-bounded.  Summation-order drift sits
-    ~7 orders below the 6-decimal quantization (term sums are
-    vocab-length chains of ~1e-3 doubles)."""
-    d = Catalog(spark, sf_dir).documents
-    tok = d.select("source", F.explode(F.split("text", " ")).alias("w"))
-    n = tok.agg(F.count(F.lit(1)).alias("n"))
-    cw = tok.groupBy("w").agg(F.count(F.lit(1)).alias("cw"))
-    ns = tok.groupBy("source").agg(F.count(F.lit(1)).alias("ns"))
-    csw = tok.groupBy("source", "w").agg(F.count(F.lit(1)).alias("csw"))
-    terms = (
-        csw.join(ns, "source")
-        .join(cw, "w")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "source",
-            (F.col("csw") / F.col("ns")).alias("p"),
-            (F.col("cw") / F.col("n")).alias("q"),
-        )
-    )
-    term = 0.5 * F.col("p") * F.log2(2 * F.col("p") / (F.col("p") + F.col("q"))) \
-        + 0.5 * F.col("q") * F.log2(2 * F.col("q") / (F.col("p") + F.col("q")))
-    ag = terms.groupBy("source").agg(
-        F.sum(term).alias("s_term"), F.sum("q").alias("q_mass")
-    )
-    return (
-        ag.join(ns, "source")
-        .select(
-            "source",
-            F.col("ns").cast("bigint").alias("n_tokens"),
-            quantize(F.col("q_mass"), 6).alias("q_mass"),
-            quantize(
-                F.col("s_term") + 0.5 * (1 - F.col("q_mass")), 6
-            ).alias("js"),
-        )
-        .orderBy("source")
     )

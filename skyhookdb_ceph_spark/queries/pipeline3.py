@@ -1,7 +1,6 @@
 """Training-data pipeline operators, round 3 wave 7 (SURVEY.md §2.14)
 — time-series regularization (gap-fill/LOCF, OHLC downsampling),
-exact-k reservoir sampling, hierarchical dedup, tokenizer-training
-pair mining, nearest-event joins, and parquet schema evolution.
+exact-k reservoir sampling, tokenizer-training pair mining, nearest-event joins, and parquet schema evolution.
 
 Same house rules as pipeline.py/pipeline2.py: deterministic (no RNG),
 every computed column quantized engine-invariantly and aliased
@@ -20,9 +19,9 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from skyhookdb_ceph_spark.operators import ensure_parallelism
-from skyhookdb_ceph_spark.operators.text_index import bm25_search
 from skyhookdb_ceph_spark.queries._util import Catalog, _scratch_dir, quantize, scratch
 from skyhookdb_ceph_spark.registry import query
+
 
 # q_schema_evolve's merged-snapshot dir lives for the process (the
 # returned DataFrame reads it) and is reclaimed here at exit so tmpfs
@@ -220,44 +219,6 @@ def q_sample_reservoir(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Hierarchical (shard-local then global) exact dedup
-# ---------------------------------------------------------------------------
-
-_HIER_DEDUP_ORACLE = """
-SELECT md5(text) AS content_key, min(doc_id) AS keeper_doc,
-       CAST(count(*) AS BIGINT) AS n_copies
-FROM documents GROUP BY 1
-"""
-
-
-@query("q_dedup_hierarchical", oracle=_HIER_DEDUP_ORACLE, tags=("pipeline", "dedup"))
-def q_dedup_hierarchical(spark, sf_dir):
-    """Two-level exact dedup: collapse duplicates WITHIN a shard
-    first (level 1), then merge shard survivors globally (level 2) —
-    the hierarchy every petabyte dedup runs so the global shuffle
-    carries one (key, keeper, count) row per shard-distinct document
-    instead of every raw row.  Result is provably identical to a
-    single global groupBy (min and sum are associative), which is
-    exactly what the oracle computes — the diff IS the equivalence
-    proof.  Level 1 here keys on (doc_id % 8); on a real cluster the
-    shard is the ingest partition, making level 1 map-side-only."""
-    d = Catalog(spark, sf_dir).documents
-    l1 = (
-        d.select(
-            F.md5("text").alias("content_key"),
-            (F.col("doc_id") % 8).alias("shard"),
-            "doc_id",
-        )
-        .groupBy("shard", "content_key")
-        .agg(F.min("doc_id").alias("keeper"), F.count(F.lit(1)).alias("cnt"))
-    )
-    return l1.groupBy("content_key").agg(
-        F.min("keeper").alias("keeper_doc"),
-        F.sum("cnt").alias("n_copies"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # Tokenizer-training pair mining (BPE first-merge statistics)
 # ---------------------------------------------------------------------------
 
@@ -422,61 +383,6 @@ def q_schema_evolve(spark, sf_dir):
         # class, found here by a /dev/shm census this round).
         _EVOLVE_OUT_DIRS.add(out)
         return spark.read.parquet(out).select("doc_id", "lang", "source")
-
-
-# ===========================================================================
-# Wave 8
-# ===========================================================================
-
-# ---------------------------------------------------------------------------
-# BM25 ranked retrieval (full scoring path over the inverted-index idea)
-# ---------------------------------------------------------------------------
-
-_BM25_TERMS = ("table", "query")
-_BM25_K1, _BM25_B = 1.2, 0.75  # the oracles' statement of BM25's k1, b
-
-_BM25_ORACLE = f"""
-WITH d AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM d),
-stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, avg(dl) AS avgdl FROM dl),
-tf AS (
-  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM (
-    SELECT doc_id, unnest(toks) AS term FROM d) x
-  WHERE term IN ('{_BM25_TERMS[0]}', '{_BM25_TERMS[1]}')
-  GROUP BY doc_id, term),
-df AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
-scored AS (
-  SELECT tf.doc_id,
-    sum(ln(1 + (s.n_docs - df.df + 0.5) / (df.df + 0.5))
-        * tf.tf * ({_BM25_K1} + 1)
-        / (tf.tf + {_BM25_K1} * (1 - {_BM25_B} + {_BM25_B} * dl.dl / s.avgdl))
-    ) AS raw
-  FROM tf JOIN df USING (term) JOIN dl USING (doc_id), stats s
-  GROUP BY tf.doc_id),
-q AS (
-  SELECT doc_id, floor(raw * 1000000 + 0.5) / 1000000 AS bm25,
-    CAST(row_number() OVER (
-      ORDER BY floor(raw * 1000000 + 0.5) / 1000000 DESC, doc_id) AS INT)
-      AS rnk
-  FROM scored)
-SELECT doc_id, bm25, rnk FROM q WHERE rnk <= 10
-"""
-
-
-@query("q_text_bm25", oracle=_BM25_ORACLE, tags=("pipeline", "text"))
-def q_text_bm25(spark, sf_dir):
-    """BM25 ranked retrieval — the full scoring path behind the §2.11
-    inverted index (q_text_keyword ranks by raw tf; this adds idf and
-    length normalization, the production ranking function), computed
-    per execution by text_index.bm25_search.  Postings are filtered to
-    the query terms AT THE EXPLODE (the posting-list fetch), so only
-    matching (doc, term) pairs ever shuffle; N/avgdl are a 1-row
-    broadcast; per-term df is a tiny broadcast dim.  The float sum per
-    doc is over |query| terms only (2), so cross-engine summation
-    order cannot drift; 6-decimal quantization before the rank window
-    makes the ordering engine-invariant."""
-    return bm25_search(Catalog(spark, sf_dir).documents, _BM25_TERMS, 10)
 
 
 # ---------------------------------------------------------------------------

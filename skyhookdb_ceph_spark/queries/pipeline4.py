@@ -3,8 +3,7 @@
 analytics (connected components, PageRank), probabilistic-filter
 semantics (deterministic Bloom pre-join filter, Count-Min sketch),
 time-series linear interpolation, MERGE/upsert classification, struct
-algebra, distribution windows, LSH bucket diagnostics, and Zipf
-vocabulary analysis.
+algebra and distribution windows.
 
 House rules (pipeline.py..pipeline3.py): deterministic — no RNG, no
 wall clock; every computed double quantized engine-invariantly
@@ -22,13 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from skyhookdb_ceph_spark.operators import ensure_parallelism
-from skyhookdb_ceph_spark.queries._util import (
-    Catalog,
-    quantize,
-    quantize2,
-    ratio,
-)
+from skyhookdb_ceph_spark.queries._util import Catalog, quantize, quantize2, ratio
 from skyhookdb_ceph_spark.registry import query
 
 
@@ -859,112 +852,6 @@ def q_win_cume_dist(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# §2.15.13 MinHash LSH bucket diagnostics
-# ---------------------------------------------------------------------------
-
-_MINHASH_CLUSTER_ORACLE = """
-WITH sh AS (
-  SELECT doc_id, list_distinct(list_transform(
-    generate_series(1, greatest(len(string_split(text, ' ')) - 2, 1)),
-    i -> array_to_string(list_slice(string_split(text, ' '), i, i + 2), ' '))) AS shingles
-  FROM documents),
-hsh AS (
-  SELECT doc_id, list_transform(shingles, s -> md5(s)) AS hs FROM sh),
-sig AS (
-  -- banded (b=8, r=4) signature, oracle twin of band_signatures
-  SELECT doc_id, b,
-    list_aggregate(list_transform(hs, h -> substr(h || h, b * 4 + 1, 8)), 'min')
-    || list_aggregate(list_transform(hs, h -> substr(h || h, b * 4 + 2, 8)), 'min')
-    || list_aggregate(list_transform(hs, h -> substr(h || h, b * 4 + 3, 8)), 'min')
-    || list_aggregate(list_transform(hs, h -> substr(h || h, b * 4 + 4, 8)), 'min') AS bsig
-  FROM hsh, unnest(generate_series(0, 7)) t(b)),
-buckets AS (
-  SELECT b, bsig, CAST(count(*) AS BIGINT) AS bucket_size
-  FROM sig GROUP BY b, bsig)
-SELECT b, bucket_size, CAST(count(*) AS BIGINT) AS n_buckets
-FROM buckets GROUP BY b, bucket_size ORDER BY b, bucket_size
-"""
-
-
-@query(
-    "q_text_minhash_cluster",
-    oracle=_MINHASH_CLUSTER_ORACLE,
-    tags=("llm", "dedup"),
-)
-def q_text_minhash_cluster(spark, sf_dir):
-    """LSH health diagnostics: the bucket-size histogram per MinHash
-    band (how many buckets of each size every band produced).  This is
-    the metric that catches the scale-killer the judge flagged in r2 —
-    a band whose buckets grow linearly with corpus size means the
-    within-bucket candidate join is degrading toward quadratic; a
-    healthy histogram stays dominated by size-1/2 buckets at any
-    corpus size.  Reuses the exact band signatures of q_dedup_fuzzy
-    (operators/minhash.py), so the histogram describes the production
-    pipeline, not a replica."""
-    from skyhookdb_ceph_spark.operators import minhash
-
-    d = Catalog(spark, sf_dir).documents
-    sig = minhash.band_signatures(minhash.shingle_sets(d))
-    return (
-        sig.groupBy("b", "bsig")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .groupBy("b", "bucket_size")
-        .agg(F.count(F.lit(1)).alias("n_buckets"))
-        .orderBy("b", "bucket_size")
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2.15.14 Zipf vocabulary analysis
-# ---------------------------------------------------------------------------
-
-_ZIPF_ORACLE = """
-WITH terms AS (
-  SELECT unnest(string_split(text, ' ')) AS term FROM documents),
-freq AS (
-  SELECT term, CAST(count(*) AS BIGINT) AS cnt FROM terms
-  WHERE term <> '' GROUP BY term),
-top AS (SELECT term, cnt FROM freq ORDER BY cnt DESC, term LIMIT 50)
-SELECT CAST(row_number() OVER (ORDER BY cnt DESC, term) AS BIGINT) AS rank,
-  term, cnt,
-  floor((ln(CAST(cnt AS DOUBLE))
-         + ln(CAST(row_number() OVER (ORDER BY cnt DESC, term) AS DOUBLE)))
-        * 1000000 + 0.5) / 1000000 AS zipf_score
-FROM top ORDER BY rank
-"""
-
-
-@query("q_text_zipf", oracle=_ZIPF_ORACLE, tags=("llm", "text"))
-def q_text_zipf(spark, sf_dir):
-    """Zipf's-law check on the corpus vocabulary: top-50 terms by
-    frequency with log(freq) + log(rank) (constant under an ideal
-    Zipf distribution — the standard sanity plot for tokenizer
-    corpora).  The heavy stage is the term count (one keyed shuffle);
-    ranking happens AFTER a TakeOrderedAndProject top-50, so the
-    global window orders 50 rows, not the vocabulary."""
-    d = ensure_parallelism(Catalog(spark, sf_dir).documents)
-    top = (
-        d.select(F.explode(F.split("text", " ")).alias("term"))
-        .filter(F.col("term") != "")
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.desc("cnt"), "term")
-        .limit(50)
-    )
-    w = Window.orderBy(F.desc("cnt"), "term")  # 50 rows post-limit
-    return top.select(
-        F.row_number().over(w).cast("bigint").alias("rank"),
-        "term",
-        "cnt",
-        quantize(
-            F.log(F.col("cnt").cast("double"))
-            + F.log(F.row_number().over(w).cast("double")),
-            6,
-        ).alias("zipf_score"),
-    ).orderBy("rank")
-
-
-# ---------------------------------------------------------------------------
 # §2.15.15 TPC-H Q4: priority counts gated on a correlated EXISTS
 # ---------------------------------------------------------------------------
 
@@ -1358,71 +1245,3 @@ def q_ts_ewma(spark, sf_dir):
             F.expr(f"({_EWMA_NUM}) / ({_EWMA_DEN})"), 6
         ).alias("ewma"),
     ).orderBy("event_type", "bucket")
-
-
-# ---------------------------------------------------------------------------
-# §2.15.22 Prefix-containment dedup
-# ---------------------------------------------------------------------------
-
-_PREFIX_ORACLE = """
-WITH synth AS (
-  SELECT doc_id + 1000000 AS doc_id, substr(text, 1, 120) AS text
-  FROM documents WHERE doc_id % 10 = 0 AND length(text) >= 120),
-corpus AS (
-  SELECT doc_id, text FROM documents UNION ALL SELECT doc_id, text FROM synth),
-keyed AS (
-  SELECT doc_id, text, length(text) AS n, substr(text, 1, 64) AS k
-  FROM corpus WHERE length(text) >= 64)
-SELECT a.doc_id AS prefix_id, min(b.doc_id) AS of_id
-FROM keyed a JOIN keyed b
-  ON a.k = b.k AND a.doc_id <> b.doc_id
-  AND (b.n > a.n OR (b.n = a.n AND a.doc_id < b.doc_id))
-  AND substr(b.text, 1, a.n) = a.text
-GROUP BY a.doc_id ORDER BY prefix_id
-"""
-
-
-@query("q_dedup_prefix", oracle=_PREFIX_ORACLE, tags=("llm", "dedup"))
-def q_dedup_prefix(spark, sf_dir):
-    """Prefix-containment dedup: documents that are exact prefixes of
-    a longer document (truncation artifacts — the dedup class MinHash
-    under-catches because shingle sets differ in size).  Candidates
-    join on a fixed 64-char anchor key, so the match is a keyed
-    equi-join with a residual prefix check — never all-pairs; docs
-    shorter than the anchor are excluded by contract.  A synthetic
-    truncation set (every 10th doc's first 120 chars) guarantees the
-    fixture exercises hits deterministically."""
-    d = Catalog(spark, sf_dir).documents
-    synth = (
-        d.filter((F.col("doc_id") % 10 == 0) & (F.length("text") >= 120))
-        .select(
-            (F.col("doc_id") + 1000000).alias("doc_id"),
-            F.substring("text", 1, 120).alias("text"),
-        )
-    )
-    corpus = d.select("doc_id", "text").unionByName(synth)
-    keyed = corpus.filter(F.length("text") >= 64).select(
-        "doc_id",
-        "text",
-        F.length("text").alias("n"),
-        F.substring("text", 1, 64).alias("k"),
-    )
-    a = keyed.selectExpr("doc_id AS a_id", "text AS a_text", "n AS a_n", "k")
-    b = keyed.selectExpr("doc_id AS b_id", "text AS b_text", "n AS b_n", "k AS bk")
-    return (
-        a.join(
-            b,
-            (F.col("k") == F.col("bk"))
-            & (F.col("a_id") != F.col("b_id"))
-            & (
-                (F.col("b_n") > F.col("a_n"))
-                | ((F.col("b_n") == F.col("a_n")) & (F.col("a_id") < F.col("b_id")))
-            )
-            & (
-                F.expr("substr(b_text, 1, a_n)") == F.col("a_text")
-            ),
-        )
-        .groupBy(F.col("a_id").alias("prefix_id"))
-        .agg(F.min("b_id").alias("of_id"))
-        .orderBy("prefix_id")
-    )

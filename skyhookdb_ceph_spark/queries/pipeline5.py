@@ -1,7 +1,6 @@
 """Round-4 wave-3 operators (SURVEY.md §2.15 continued) — relational
 reshaping (unpivot/melt), table profiling (multi-column statistics),
-product analytics (activity bitmaps, cohort retention), proximity
-search, and canonicalization dedup.
+and product analytics (activity bitmaps, cohort retention).
 
 Same house rules as pipeline4.py: deterministic, engine-invariant
 quantization, identical aliases both sides, unique tie-breaks.
@@ -20,7 +19,9 @@ from skyhookdb_ceph_spark.queries._util import (
     quantize2,
     scratch,
 )
+from skyhookdb_ceph_spark.queries.pipeline4 import _hexval8, _hexval8_spark
 from skyhookdb_ceph_spark.registry import query
+
 
 # ---------------------------------------------------------------------------
 # §2.15.23 Unpivot / melt (wide -> long)
@@ -212,119 +213,6 @@ def q_win_retention_cohort(spark, sf_dir):
         .groupBy(F.col("c0").alias("cohort_day"), "day_k")
         .agg(F.count_distinct("user_id").cast("bigint").alias("n_active"))
         .orderBy("cohort_day", "day_k")
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2.15.27 Term-proximity search (positional postings)
-# ---------------------------------------------------------------------------
-
-_PROXIMITY_ORACLE = """
-WITH pos AS (
-  SELECT doc_id, t.w, CAST(t.i AS BIGINT) AS p
-  FROM (SELECT doc_id,
-          unnest(string_split(text, ' ')) AS w,
-          unnest(generate_series(1, len(string_split(text, ' ')))) AS i
-        FROM documents) t(doc_id, w, i)
-  WHERE t.w IN ('spark', 'query')),
-a AS (SELECT doc_id, p FROM pos WHERE w = 'spark'),
-b AS (SELECT doc_id, p FROM pos WHERE w = 'query')
-SELECT a.doc_id, CAST(min(abs(a.p - b.p)) AS BIGINT) AS min_gap
-FROM a JOIN b ON a.doc_id = b.doc_id
-GROUP BY a.doc_id HAVING min(abs(a.p - b.p)) <= 3
-ORDER BY a.doc_id
-"""
-
-
-@query("q_text_proximity", oracle=_PROXIMITY_ORACLE, tags=("llm", "text"))
-def q_text_proximity(spark, sf_dir):
-    """Proximity search: documents where 'spark' and 'query' occur
-    within 3 words, with the minimum gap — the positional-postings
-    operator behind phrase/NEAR queries (reference IDX_TXT keeps word
-    positions for exactly this [U: cls_tabular IDX_TXT]).  Postings
-    are filtered to the two query terms AT THE EXPLODE (the full
-    position list never shuffles); the per-doc pair join is bounded by
-    per-doc term frequency, not document length."""
-    d = ensure_parallelism(Catalog(spark, sf_dir).documents)
-    pos = (
-        d.selectExpr("doc_id", "posexplode(split(text, ' ')) AS (p0, w)")
-        .filter(F.col("w").isin("spark", "query"))
-        .selectExpr("doc_id", "w", "CAST(p0 + 1 AS BIGINT) AS p")
-    )
-    a = pos.filter("w = 'spark'").selectExpr("doc_id", "p AS pa")
-    b = pos.filter("w = 'query'").selectExpr("doc_id AS db", "p AS pb")
-    return (
-        a.join(b, F.col("doc_id") == F.col("db"))
-        .groupBy("doc_id")
-        .agg(
-            F.min(F.abs(F.col("pa") - F.col("pb")))
-            .cast("bigint")
-            .alias("min_gap")
-        )
-        .filter(F.col("min_gap") <= 3)
-        .orderBy("doc_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2.15.28 Canonicalization (casefold) dedup
-# ---------------------------------------------------------------------------
-
-_CASEFOLD_ORACLE = """
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 2000000, upper(text) || '!!' FROM documents
-  WHERE doc_id % 7 = 0),
-canon AS (
-  SELECT doc_id,
-    trim(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g')) AS raw1
-  FROM corpus),
-canon2 AS (
-  SELECT doc_id, regexp_replace(raw1, ' +', ' ', 'g') AS ctext FROM canon)
-SELECT md5(ctext) AS canon_md5, min(doc_id) AS keep_id,
-  CAST(count(*) AS BIGINT) AS dup_cnt
-FROM canon2 GROUP BY ctext HAVING count(*) > 1
-ORDER BY keep_id
-"""
-
-
-@query("q_dedup_casefold", oracle=_CASEFOLD_ORACLE, tags=("llm", "dedup"))
-def q_dedup_casefold(spark, sf_dir):
-    """Canonicalization dedup: lowercase, strip non-alphanumerics,
-    collapse whitespace, then exact-match on the canonical form —
-    catches formatting-only duplicates (case, punctuation, spacing)
-    that hash-exact dedup misses and MinHash wastes bands on.  Only
-    (canonical-md5, id) pairs shuffle; the group carries the digest,
-    never the text.  Spark's regexp_replace is global by default; the
-    oracle passes the 'g' flag for identical semantics.  A synthetic
-    variant set (every 7th doc uppercased with trailing punctuation)
-    guarantees the fixture exercises hits deterministically."""
-    d = Catalog(spark, sf_dir).documents
-    variants = d.filter(F.expr("doc_id % 7 = 0")).select(
-        (F.col("doc_id") + 2000000).alias("doc_id"),
-        F.concat(F.upper("text"), F.lit("!!")).alias("text"),
-    )
-    corpus = d.select("doc_id", "text").unionByName(variants)
-    d = ensure_parallelism(corpus)
-    canon = d.select(
-        "doc_id",
-        F.trim(
-            F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", " ")
-        ).alias("raw1"),
-    ).select(
-        "doc_id",
-        F.regexp_replace(F.col("raw1"), " +", " ").alias("ctext"),
-    )
-    return (
-        canon.groupBy("ctext")
-        .agg(
-            F.min("doc_id").alias("keep_id"),
-            F.count(F.lit(1)).alias("dup_cnt"),
-        )
-        .filter(F.col("dup_cnt") > 1)
-        .select(F.md5("ctext").alias("canon_md5"), "keep_id", "dup_cnt")
-        .orderBy("keep_id")
     )
 
 
@@ -563,57 +451,10 @@ def q_tpch_q19(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# §2.15.33 Multi-probe IVF ANN (recall recovery without more cells)
-# ---------------------------------------------------------------------------
-
-def _multiprobe_oracle() -> str:
-    from skyhookdb_ceph_spark.operators import vectors
-
-    return f"""
-WITH {vectors.primary_cell_cte_duckdb()},
-q AS (SELECT embedding AS qv, bucket AS qb FROM b WHERE vec_id = 0),
-probes AS (
-  SELECT qb AS pb FROM q
-  UNION
-  SELECT substr(q.qb, 1, t.i - 1)
-         || (CASE WHEN substr(q.qb, t.i, 1) = '1' THEN '0' ELSE '1' END)
-         || substr(q.qb, t.i + 1, nb.nb) AS pb
-  FROM q, nb, unnest(generate_series(1, nb.nb)) t(i))
-SELECT b.vec_id,
-  floor(({vectors.cosine_duckdb('b.embedding', 'q.qv')}) * 1000000 + 0.5)
-    / 1000000 AS sim
-FROM b JOIN probes ON b.bucket = probes.pb, q
-ORDER BY sim DESC, b.vec_id LIMIT 10
-"""
-
-
-@query(
-    "q_sim_knn_multiprobe",
-    oracle=_multiprobe_oracle(),
-    tags=("llm", "similarity"),
-)
-def q_sim_knn_multiprobe(spark, sf_dir):
-    """Multi-probe IVF ANN: the query probes its own LSH cell PLUS the
-    nb Hamming-1 neighbor cells (each sign bit flipped once) — the
-    standard recall recovery for sign-bucket quantizers: near
-    neighbors that fell across a hyperplane boundary land in an
-    adjacent cell, so probing nb+1 of the 2^nb cells recovers most of
-    them while still scoring only ~(nb+1)/2^nb of the corpus.  The
-    probe set is nb+1 rows built from the 1-row query broadcast; the
-    candidate restriction stays a bucket equi-join (partition pruning
-    at scale, like q_sim_knn_ivf)."""
-    from skyhookdb_ceph_spark.operators import vectors
-
-    e = Catalog(spark, sf_dir).embeddings
-    return vectors.probe(vectors.bucketed_cells(e), 10, multiprobe=True)
-
-
-# ---------------------------------------------------------------------------
 # §2.15.34 Feature hashing (the hashing trick)
 # ---------------------------------------------------------------------------
 
 def _feat_oracle() -> str:
-    from skyhookdb_ceph_spark.queries.pipeline4 import _hexval8
 
     digest = "md5(concat('fh#', w))"
     idx = f"({_hexval8(digest)} % 256)"
@@ -644,7 +485,6 @@ def q_feat_hashing(spark, sf_dir):
     and sign come from disjoint windows of ONE md5 per token (same
     single-digest pattern as q_filter_bloom), via the conv() fast
     path."""
-    from skyhookdb_ceph_spark.queries.pipeline4 import _hexval8_spark
 
     d = ensure_parallelism(Catalog(spark, sf_dir).documents)
     tok = (
@@ -1166,171 +1006,6 @@ def q_agg_skyline(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# §2.15.44 IVF index build + pruned probe (ANN as physical layout)
-# ---------------------------------------------------------------------------
-
-def _ivf_build_oracle() -> str:
-    from skyhookdb_ceph_spark.operators import vectors
-
-    return f"""
-WITH {vectors.primary_cell_cte_duckdb()},
-q AS (SELECT embedding AS qv, bucket AS qb FROM b WHERE vec_id = 0)
-SELECT b.vec_id,
-  floor(({vectors.cosine_duckdb('b.embedding', 'q.qv')}) * 1000000 + 0.5)
-    / 1000000 AS sim
-FROM b JOIN q ON b.bucket = q.qb
-ORDER BY sim DESC, b.vec_id LIMIT 5
-"""
-
-
-@query("q_vec_ivf_build", oracle=_ivf_build_oracle(), tags=("llm", "similarity", "layout"))
-def q_vec_ivf_build(spark, sf_dir):
-    """IVF index BUILD as physical layout: embeddings written
-    partitionBy(cell) to scratch (operators/vectors.build_ivf_index),
-    then the probe reads back with a cell filter — so the candidate
-    restriction is DIRECTORY pruning, not even a row filter: the
-    probe's IO is |cell|, not |corpus|.  This is what q_sim_knn_ivf's docstring
-    promises at scale ('the cell assignment is a partition column'),
-    demonstrated end-to-end.  Results are identical to the logical
-    cell filter, which is what the oracle states."""
-    from skyhookdb_ceph_spark.operators import vectors
-
-    e = Catalog(spark, sf_dir).embeddings
-    with scratch("skyhook_ivf_") as tmp:
-        vectors.build_ivf_index(spark, e, tmp)
-        # the query row is read back too: the probe never recomputes a
-        # cell, and the bucket filter prunes directories
-        out = vectors.probe(vectors.read_ivf_index(spark, tmp), 5)
-        return collect_local(out)
-
-
-# ---------------------------------------------------------------------------
-# §2.15.45 BPE merge step (tokenizer-training inner loop)
-# ---------------------------------------------------------------------------
-
-_BPE_ORACLE = """
-WITH w AS (SELECT doc_id, text, string_split(text, ' ') AS ws FROM documents),
-prs AS (
-  SELECT ws[t.i] || ' ' || ws[t.i + 1] AS pair
-  FROM w, unnest(generate_series(1, len(ws) - 1)) t(i)
-  WHERE len(ws) >= 2),
-top AS (SELECT pair FROM prs GROUP BY pair
-        ORDER BY count(*) DESC, pair LIMIT 1)
-SELECT t.pair AS merged_pair,
-  CAST(sum((length(w.text) - length(replace(w.text, t.pair, '')))
-           / length(t.pair)) AS BIGINT) AS n_occurrences,
-  CAST(sum(CASE WHEN contains(w.text, t.pair) THEN 1 ELSE 0 END) AS BIGINT)
-    AS n_docs_affected
-FROM w, top t GROUP BY t.pair
-"""
-
-
-@query("q_text_bpe_merge", oracle=_BPE_ORACLE, tags=("llm", "text"))
-def q_text_bpe_merge(spark, sf_dir):
-    """One BPE training step: find the globally most frequent adjacent
-    token pair (q_vocab_pairs' statistic, argmax'd), then measure its
-    application across the corpus (occurrence count via the
-    length-delta trick, affected-doc count) — the inner loop a
-    tokenizer trainer repeats per merge.  The top pair is a 1-row
-    broadcast; application is a pure map over the corpus.  Counting is
-    string-level (both engines apply the identical non-overlapping
-    left-to-right replace), documented as the standard
-    whitespace-corpus approximation."""
-    d = ensure_parallelism(Catalog(spark, sf_dir).documents)
-    words = d.selectExpr(
-        "doc_id", "posexplode(split(text, ' ')) AS (pos, w)"
-    )
-    wnd = Window.partitionBy("doc_id").orderBy("pos")
-    top = (
-        words.withColumn("nxt", F.lead("w").over(wnd))
-        .filter(F.col("nxt").isNotNull())
-        .selectExpr("w || ' ' || nxt AS pair")
-        .groupBy("pair")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.desc("cnt"), "pair")
-        .limit(1)
-        .select("pair")
-    )
-    return (
-        d.crossJoin(F.broadcast(top))
-        .agg(
-            F.first("pair").alias("merged_pair"),
-            F.sum(
-                (F.length("text") - F.length(F.expr("replace(text, pair, '')")))
-                / F.length("pair")
-            )
-            .cast("bigint")
-            .alias("n_occurrences"),
-            F.sum(
-                F.when(F.expr("contains(text, pair)"), 1).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_docs_affected"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2.15.46 CDC with tombstones (latest state excluding deletes)
-# ---------------------------------------------------------------------------
-
-_TOMBSTONE_ORACLE = """
-WITH log AS (
-  SELECT event_id AS key, value, 0 AS seq, 'U' AS op FROM events
-  UNION ALL
-  SELECT event_id, value + 1000, 1, 'U' FROM events WHERE event_id % 2 = 0
-  UNION ALL
-  SELECT event_id, CAST(NULL AS DOUBLE), 2, 'D' FROM events
-  WHERE event_id % 5 = 0)
-SELECT key, floor((max_by(value, seq)) * 100 + 0.5) / 100 AS value_q,
-  CAST(count(*) AS BIGINT) AS n_versions
-FROM log GROUP BY key
-HAVING max_by(op, seq) = 'U'
-ORDER BY key
-"""
-
-
-@query("q_dedup_tombstone", oracle=_TOMBSTONE_ORACLE, tags=("pipeline", "merge"))
-def q_dedup_tombstone(spark, sf_dir):
-    """CDC compaction with DELETE tombstones: the changelog carries
-    upserts AND deletes (op column); the compacted state is
-    latest-wins per key, with keys whose latest op is a delete dropped
-    entirely — q_upsert_latest extended to the full
-    insert/update/delete contract every CDC feed has.  Still one
-    map-combinable aggregate (max_by for both the value and the op);
-    the HAVING is a post-aggregate filter on the one-row-per-key
-    result, never a second pass over versions."""
-    e = Catalog(spark, sf_dir).events.select("event_id", "value")
-    base = e.selectExpr(
-        "event_id AS key", "value", "0 AS seq", "'U' AS op"
-    )
-    upd = (
-        e.filter(F.col("event_id") % 2 == 0)
-        .selectExpr("event_id AS key", "value + 1000 AS value", "1 AS seq", "'U' AS op")
-    )
-    dels = (
-        e.filter(F.col("event_id") % 5 == 0)
-        .selectExpr(
-            "event_id AS key", "CAST(NULL AS DOUBLE) AS value",
-            "2 AS seq", "'D' AS op",
-        )
-    )
-    return (
-        base.unionByName(upd)
-        .unionByName(dels)
-        .groupBy("key")
-        .agg(
-            quantize2(F.max_by("value", "seq")).alias("value_q"),
-            F.count(F.lit(1)).alias("n_versions"),
-            F.max_by("op", "seq").alias("_last_op"),
-        )
-        .filter(F.col("_last_op") == "U")
-        .drop("_last_op")
-        .orderBy("key")
-    )
-
-
-# ---------------------------------------------------------------------------
 # §2.15.47 SCD2 point-in-time (temporal) dimension join
 # ---------------------------------------------------------------------------
 
@@ -1522,70 +1197,6 @@ def q_agg_benford(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# §2.15.50 HTML/boilerplate stripping (corpus cleaning)
-# ---------------------------------------------------------------------------
-
-_HTMLSTRIP_ORACLE = """
-WITH corpus AS (
-  SELECT doc_id,
-    CASE WHEN doc_id % 5 = 0
-      THEN '<html><body><p>' || text || '</p><br/></body></html>'
-      ELSE text END AS raw
-  FROM documents),
-stripped AS (
-  SELECT doc_id, raw,
-    trim(regexp_replace(regexp_replace(raw, '<[^>]*>', ' ', 'g'),
-                        ' +', ' ', 'g')) AS clean
-  FROM corpus)
-SELECT CAST(sum(CASE WHEN length(raw) > length(clean) THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_docs_stripped,
-  CAST(sum(length(raw) - length(clean)) AS BIGINT) AS bytes_removed,
-  md5(string_agg(clean, '|' ORDER BY doc_id)) AS corpus_digest
-FROM stripped
-"""
-
-
-@query("q_text_html_strip", oracle=_HTMLSTRIP_ORACLE, tags=("llm", "text"))
-def q_text_html_strip(spark, sf_dir):
-    """HTML/boilerplate stripping: tag removal + whitespace collapse
-    over a deterministically HTML-wrapped subset (every 5th doc) —
-    the first cleaning stage of any web-scrape corpus.  Pure per-row
-    JVM regex (global-replace semantics aligned via the oracle's 'g'
-    flag); the audit row carries an order-fixed corpus digest so the
-    oracle verifies the exact cleaned text of every document, not
-    just counts."""
-    d = ensure_parallelism(Catalog(spark, sf_dir).documents)
-    corpus = d.selectExpr(
-        "doc_id",
-        "CASE WHEN doc_id % 5 = 0 "
-        "THEN '<html><body><p>' || text || '</p><br/></body></html>' "
-        "ELSE text END AS raw",
-    )
-    stripped = corpus.select(
-        "doc_id",
-        "raw",
-        F.trim(
-            F.regexp_replace(
-                F.regexp_replace(F.col("raw"), "<[^>]*>", " "), " +", " "
-            )
-        ).alias("clean"),
-    )
-    return stripped.agg(
-        F.sum(
-            F.when(F.length("raw") > F.length("clean"), 1).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("n_docs_stripped"),
-        F.sum(F.length("raw") - F.length("clean"))
-        .cast("bigint")
-        .alias("bytes_removed"),
-        F.md5(
-            F.expr("string_agg(clean, '|') WITHIN GROUP (ORDER BY doc_id)")
-        ).alias("corpus_digest"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # §2.15.51 nth_value window (completing the window-function family)
 # ---------------------------------------------------------------------------
 
@@ -1736,136 +1347,6 @@ def q_join_dpp(spark, sf_dir):
             .orderBy("event_date", "event_type")
         )
         return collect_local(out)
-
-
-# ---------------------------------------------------------------------------
-# §2.15.54 Audio-style overlapping windows over binary payloads
-# ---------------------------------------------------------------------------
-
-_AUDIO_WIN_ORACLE = """
-WITH w AS (
-  SELECT doc_id, text,
-    unnest(generate_series(0, greatest(length(text) - 1, 0), 128)) AS off
-  FROM documents
-  WHERE length(text) > 0
-    AND octet_length(encode(text)) = length(text)),
-wins AS (
-  SELECT doc_id AS media_id, CAST(off / 128 AS INT) AS win_no,
-    CAST(off AS INT) AS byte_offset,
-    CAST(length(substr(text, off + 1, 256)) AS INT) AS win_len,
-    md5(substr(text, off + 1, 256)) AS win_md5
-  FROM w WHERE length(substr(text, off + 1, 256)) * 2 >= 256)
-SELECT media_id, win_no, byte_offset, win_len, win_md5
-FROM wins ORDER BY media_id, win_no
-"""
-
-
-@query(
-    "q_multimodal_audio_windows",
-    oracle=_AUDIO_WIN_ORACLE,
-    tags=("pipeline", "multimodal"),
-)
-def q_multimodal_audio_windows(spark, sf_dir):
-    """Audio-style OVERLAPPING windowing: 256-byte windows at a
-    128-byte hop over an opaque binary payload (operators/multimodal
-    sliding_windows — the Arrow-batched mapInPandas shape an STFT /
-    feature-frame stage drops into; trailing windows shorter than half
-    the length are dropped, the common framing default).  Each kept
-    window is fingerprinted so the oracle verifies exact boundaries,
-    hop phase, and content cross-engine.  Pure map stage: windows
-    never shuffle.  Complements q_multimodal_frames (non-overlapping
-    video sampling).
-
-    The operator windows BYTES; DuckDB's substr/length are
-    character-based and it has no BLOB substring, so both engines
-    restrict to payloads whose UTF-8 byte length equals the char
-    length (byte==char semantics identical) — non-ASCII docs are
-    excluded identically on both sides instead of silently diverging.
-    """
-    from skyhookdb_ceph_spark.operators.multimodal import sliding_windows
-
-    d = ensure_parallelism(Catalog(spark, sf_dir).documents)
-    d = d.filter(F.octet_length("text") == F.length("text"))
-    media = d.select(
-        F.col("doc_id").alias("media_id"),
-        F.col("text").cast("binary").alias("payload"),
-    )
-    wins = sliding_windows(media, window_bytes=256, hop_bytes=128)
-    return wins.select(
-        "media_id",
-        "win_no",
-        "byte_offset",
-        "win_len",
-        F.md5("window").alias("win_md5"),
-    ).orderBy("media_id", "win_no")
-
-
-# ---------------------------------------------------------------------------
-# §2.15.55 Bigram language-model scoring (add-one smoothed)
-# ---------------------------------------------------------------------------
-
-_BIGRAM_LM_ORACLE = """
-WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-prs AS (
-  SELECT doc_id, ws[t.i] AS w1, ws[t.i + 1] AS w2
-  FROM w, unnest(generate_series(1, len(ws) - 1)) t(i)
-  WHERE len(ws) >= 2),
-pc AS (SELECT w1, w2, CAST(count(*) AS DOUBLE) AS c2 FROM prs GROUP BY 1, 2),
-uc AS (SELECT w1, CAST(count(*) AS DOUBLE) AS c1 FROM prs GROUP BY 1),
-v AS (SELECT CAST(count(DISTINCT w2) AS DOUBLE) AS vsz FROM prs)
-SELECT p.doc_id,
-  floor(avg(log10((pc.c2 + 1) / (uc.c1 + v.vsz))) * 1000000 + 0.5) / 1000000
-    AS mean_lp,
-  CAST(count(*) AS BIGINT) AS n_bigrams
-FROM prs p
-JOIN pc ON p.w1 = pc.w1 AND p.w2 = pc.w2
-JOIN uc ON p.w1 = uc.w1, v
-GROUP BY p.doc_id ORDER BY p.doc_id
-"""
-
-
-@query("q_text_bigram_lm", oracle=_BIGRAM_LM_ORACLE, tags=("llm", "text"))
-def q_text_bigram_lm(spark, sf_dir):
-    """Bigram language-model quality score: per-doc mean log10 of the
-    add-one-smoothed corpus bigram probability P(w2|w1) =
-    (c(w1,w2)+1)/(c(w1)+V) — the context-aware upgrade of
-    q_text_unigram_lp (gibberish scores low even when individual
-    words are common).  Pair extraction reuses the posexplode+lead
-    shape; corpus statistics are two keyed partial aggregates joined
-    back on the pair/unigram keys; V is a 1-row broadcast."""
-    d = ensure_parallelism(Catalog(spark, sf_dir).documents)
-    words = d.selectExpr(
-        "doc_id", "posexplode(split(text, ' ')) AS (pos, w)"
-    )
-    wnd = Window.partitionBy("doc_id").orderBy("pos")
-    prs = (
-        words.withColumn("nxt", F.lead("w").over(wnd))
-        .filter(F.col("nxt").isNotNull())
-        .selectExpr("doc_id", "w AS w1", "nxt AS w2")
-    )
-    pc = prs.groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).cast("double").alias("c2")
-    )
-    uc = prs.groupBy(F.col("w1").alias("u1")).agg(
-        F.count(F.lit(1)).cast("double").alias("c1")
-    )
-    v = prs.agg(F.count_distinct("w2").cast("double").alias("vsz"))
-    return (
-        prs.join(pc, ["w1", "w2"])
-        .join(uc, F.col("w1") == F.col("u1"))
-        .crossJoin(F.broadcast(v))
-        .groupBy("doc_id")
-        .agg(
-            quantize(
-                F.avg(
-                    F.log10((F.col("c2") + 1) / (F.col("c1") + F.col("vsz")))
-                ),
-                6,
-            ).alias("mean_lp"),
-            F.count(F.lit(1)).alias("n_bigrams"),
-        )
-        .orderBy("doc_id")
-    )
 
 
 # ---------------------------------------------------------------------------

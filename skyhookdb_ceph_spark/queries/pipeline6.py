@@ -1,7 +1,7 @@
-"""Round-5 wave operators (SURVEY.md §2.16) — REAL multimodal decode
-(WAV/RIFF PCM, no external codec), stats-driven join strategy (the
-runstats idea wired into a live plan decision), bucketed range join, two-level sequence-gap detection, weighted sampling and
-weighted moments, and product-quantization coding for the ANN family.
+"""Round-5 wave operators (SURVEY.md §2.16) — stats-driven join strategy
+(the runstats idea wired into a live plan decision), bucketed range
+join, two-level sequence-gap detection, weighted sampling and weighted
+moments.
 
 Same house rules as pipeline4/5: deterministic (no RNG, no clock),
 engine-invariant quantization, identical aliases both sides, unique
@@ -13,85 +13,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from skyhookdb_ceph_spark.operators import ensure_parallelism, map_rows
+from skyhookdb_ceph_spark.operators import ensure_parallelism
 from skyhookdb_ceph_spark.queries._util import Catalog, money, quantize
 from skyhookdb_ceph_spark.registry import query
-
-# ---------------------------------------------------------------------------
-# §2.16.1 REAL multimodal decode: WAV synth -> RIFF/PCM parse
-# ---------------------------------------------------------------------------
-
-# Both engines derive the SAME audio parameters from doc_id; Spark then
-# round-trips them through REAL WAV bytes (synth -> header walk -> int16
-# sample decode) while DuckDB computes them directly — so any header
-# mis-parse, sample mis-decode, or off-by-one in the codec shows up as a
-# value mismatch.  Sample k (interleaved frame-major) is
-# ((doc_id*31 + k*7) % 2001) - 1000, an exact-integer sequence.
-_WAV_DECODE_ORACLE = """
-WITH p AS (
-  SELECT doc_id AS media_id,
-    CAST(8000 + (doc_id % 5) * 2000 AS INT) AS sample_rate,
-    CAST(1 + (doc_id % 2) AS INT) AS n_channels,
-    CAST(50 + (doc_id % 100) AS BIGINT) AS n_frames
-  FROM documents WHERE doc_id % 10 = 0),
-s AS (
-  SELECT media_id, sample_rate, n_channels, CAST(16 AS INT) AS bits,
-    n_frames, (n_frames * 1000000) // sample_rate AS duration_us,
-    list_transform(
-      generate_series(0, CAST(n_frames * n_channels AS INT) - 1),
-      k -> ((media_id * 31 + k * 7) % 2001) - 1000) AS ss
-  FROM p)
-SELECT media_id, sample_rate, n_channels, bits, n_frames, duration_us,
-  CAST(list_aggregate(ss, 'min') AS INT) AS min_s,
-  CAST(list_aggregate(ss, 'max') AS INT) AS max_s,
-  CAST(list_aggregate(ss, 'sum') AS BIGINT) AS sum_s
-FROM s ORDER BY media_id
-"""
-
-
-@query(
-    "q_multimodal_decode",
-    oracle=_WAV_DECODE_ORACLE,
-    tags=("pipeline", "multimodal"),
-)
-def q_multimodal_decode(spark, sf_dir):
-    """De-stubbed multimodal decode: synthesize a REAL WAV file per
-    selected document (RIFF header + fmt chunk + interleaved int16 PCM
-    frames, operators/multimodal.wav_bytes), then decode it with the
-    pure-Python RIFF parser (parse_wav: chunk walk, fmt unpack,
-    numpy int16 sample decode) and emit metadata + sample statistics.
-    Both stages are Arrow-batched row maps (operators.map_rows) —
-    decode parallelism = partition count, zero shuffle; at 100 TB the
-    payloads stream through executors batch-by-batch and only the
-    tiny per-file metadata rows ever move."""
-    import numpy as np
-
-    from skyhookdb_ceph_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_wav,
-        wav_bytes,
-    )
-
-    params = (
-        ensure_parallelism(Catalog(spark, sf_dir).documents)
-        .filter("doc_id % 10 = 0")
-        .selectExpr(
-            "doc_id AS media_id",
-            "CAST(8000 + (doc_id % 5) * 2000 AS INT) AS sample_rate",
-            "CAST(1 + (doc_id % 2) AS INT) AS n_channels",
-            "CAST(50 + (doc_id % 100) AS BIGINT) AS n_frames",
-        )
-    )
-
-    def synth(mid, sr, nch, nfr):
-        k = np.arange(int(nfr) * int(nch), dtype=np.int64)
-        samples = ((int(mid) * 31 + k * 7) % 2001) - 1000
-        payload = wav_bytes(samples, int(sr), int(nch))
-        return [{"media_id": int(mid), "payload": payload}]
-
-    cols = ["media_id", "sample_rate", "n_channels", "n_frames"]
-    media = map_rows(params, cols, synth, MEDIA_SCHEMA)
-    return decode_wav(media).orderBy("media_id")
 
 
 # ---------------------------------------------------------------------------
@@ -351,95 +275,3 @@ def q_agg_weighted_avg(spark, sf_dir):
             4,
         ).alias("wvar"),
     ).orderBy("event_type")
-
-
-# ---------------------------------------------------------------------------
-# §2.16.8 Product-quantization coding (ANN codebook assignment)
-# ---------------------------------------------------------------------------
-
-_PQ_ORACLE = """
-WITH pos AS (
-  SELECT vec_id, CAST(t.i AS INT) AS pos,
-    CAST(embedding[CAST(t.i AS INT) + 1] AS DOUBLE) AS val
-  FROM embeddings, unnest(generate_series(0, len(embedding) - 1)) t(i)),
-sub AS (SELECT vec_id, pos // 16 AS ss, pos, val FROM pos),
-codes AS (
-  SELECT vec_id, ss,
-    CASE WHEN max(CASE WHEN pos = ss * 16 THEN val END) >= 0
-         THEN 1 ELSE 0 END AS c
-  FROM sub GROUP BY vec_id, ss),
-pq AS (
-  SELECT vec_id,
-    CAST(sum(c * (CASE ss WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4
-                  ELSE 8 END)) AS INT) AS pq_code
-  FROM codes GROUP BY vec_id),
-cents AS (
-  SELECT s.ss, c.c, s.pos, avg(s.val) AS cent
-  FROM sub s JOIN codes c ON s.vec_id = c.vec_id AND s.ss = c.ss
-  GROUP BY s.ss, c.c, s.pos),
-err AS (
-  SELECT s.vec_id,
-    sum((s.val - ct.cent) * (s.val - ct.cent)) AS e
-  FROM sub s
-  JOIN codes c ON s.vec_id = c.vec_id AND s.ss = c.ss
-  JOIN cents ct ON ct.ss = s.ss AND ct.c = c.c AND ct.pos = s.pos
-  GROUP BY s.vec_id)
-SELECT p.vec_id, p.pq_code,
-  floor(e.e * 10000 + 0.5) / 10000 AS recon_err
-FROM pq p JOIN err e ON p.vec_id = e.vec_id ORDER BY p.vec_id
-"""
-
-
-@query("q_vec_pq_code", oracle=_PQ_ORACLE, tags=("llm", "vectors"))
-def q_vec_pq_code(spark, sf_dir):
-    """Product-quantization coding for the ANN family: split each
-    64-dim embedding into 4 x 16-dim subspaces, assign each subspace a
-    1-bit code (sign of the subspace's first component — an exact
-    float comparison, so codes can never flip between engines the way
-    a near-zero accumulated mean could), learn the per-(subspace,
-    code) centroid as the cell average, and score each vector by its
-    reconstruction error against its centroids — one k-means step with
-    deterministic init, the training kernel of a real PQ index.  All
-    stages are keyed groupBys/equi-joins on (vec_id|ss|code|pos):
-    vectors never pairwise-compare, centroids are
-    cells x dims-bounded, and at 100 TB the explode fans out to
-    rows x dims — linear, shuffle-keyed, skew-free.  recon_err on a
-    1e-4 grid (sums of 64 double squares accumulate in different
-    orders per engine)."""
-    e = ensure_parallelism(Catalog(spark, sf_dir).embeddings)
-    pos = e.select(
-        "vec_id", F.posexplode("embedding").alias("pos", "fval")
-    ).selectExpr("vec_id", "pos", "CAST(fval AS DOUBLE) AS val")
-    sub = pos.withColumn("ss", F.expr("pos div 16"))
-    codes = (
-        sub.filter(F.expr("pos = ss * 16"))
-        .selectExpr(
-            "vec_id", "ss", "CASE WHEN val >= 0 THEN 1 ELSE 0 END AS c"
-        )
-    )
-    pq = codes.groupBy("vec_id").agg(
-        F.expr(
-            "CAST(sum(c * (CASE ss WHEN 0 THEN 1 WHEN 1 THEN 2 "
-            "WHEN 2 THEN 4 ELSE 8 END)) AS INT)"
-        ).alias("pq_code")
-    )
-    coded = sub.join(codes, ["vec_id", "ss"])
-    cents = coded.groupBy("ss", "c", "pos").agg(
-        F.avg("val").alias("cent")
-    )
-    err = (
-        coded.join(cents, ["ss", "c", "pos"])
-        .groupBy("vec_id")
-        .agg(
-            F.sum(
-                F.expr("(val - cent) * (val - cent)")
-            ).alias("e")
-        )
-    )
-    return (
-        pq.join(err, "vec_id")
-        .select(
-            "vec_id", "pq_code", quantize(F.col("e"), 4).alias("recon_err")
-        )
-        .orderBy("vec_id")
-    )

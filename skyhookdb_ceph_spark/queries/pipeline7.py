@@ -20,11 +20,9 @@ Training-set management: temperature-scaled mixture reweighting and a
 deterministic multiplicative-hash train/val/test split (pure integer
 arithmetic, identical in any engine, no RNG).
 
-Round-5 wave 3 (same §2.17): exact median with no global sort, ANN
-recall evaluation (IVF probe vs brute-force ground truth),
-corrupt-record-tolerant JSON ingestion, a second real codec (PPM/P6
-image decode), sweep-line peak concurrency, and lost-task-recovery
-fault injection (q_fault_task_retry, with session.py's local[N,2]).
+Round-5 wave 3 (same §2.17): exact median with no global sort,
+corrupt-record-tolerant JSON ingestion, sweep-line peak concurrency,
+and lost-task-recovery fault injection (q_fault_task_retry, with session.py's local[N,2]).
 
 House rules unchanged: money via quantize2 both sides, identical
 aliases, deterministic tie-breaks, no all-pairs joins, no global
@@ -45,6 +43,7 @@ from skyhookdb_ceph_spark.queries._util import (
     scratch,
 )
 from skyhookdb_ceph_spark.registry import query
+
 
 # ---------------------------------------------------------------------------
 # §2.17.1 TPC-H Q2: minimum-cost supplier (correlated MIN subquery)
@@ -706,204 +705,6 @@ def q_agg_median_exact(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# §2.17.10 ANN recall evaluation: IVF probe vs exact top-k ground truth
-# ---------------------------------------------------------------------------
-
-def _recall_oracle():
-    from skyhookdb_ceph_spark.operators import vectors
-
-    sim_e = vectors.cosine_duckdb("e.embedding", "qv")
-    sim_b = vectors.cosine_duckdb("b.embedding", "qv")
-    return f"""
-WITH {vectors.primary_cell_cte_duckdb()},
-qs AS (SELECT vec_id AS qid, embedding AS qv, bucket AS qbucket
-       FROM b WHERE vec_id % 50 = 0),
-mprobes AS (
-  SELECT qid, qbucket AS pb FROM qs
-  UNION
-  SELECT qid, substr(qs.qbucket, 1, t.i - 1)
-         || (CASE WHEN substr(qs.qbucket, t.i, 1) = '1' THEN '0' ELSE '1' END)
-         || substr(qs.qbucket, t.i + 1, nb.nb) AS pb
-  FROM qs, nb, unnest(generate_series(1, nb.nb)) t(i)),
-probes AS (
-  SELECT qid, 1 AS pw, qbucket AS pb FROM qs
-  UNION ALL
-  SELECT qid, (SELECT nb + 1 FROM nb) AS pw, pb FROM mprobes),
-exact AS (
-  SELECT qid, e.vec_id, row_number() OVER (PARTITION BY qid
-    ORDER BY floor(({sim_e}) * 1000000 + 0.5) / 1000000 DESC, e.vec_id)
-    AS rn
-  FROM embeddings e, qs),
-cand AS (
-  SELECT p.pw, p.qid, b.vec_id,
-    floor(({sim_b}) * 1000000 + 0.5) / 1000000 AS sim
-  FROM b JOIN probes p ON b.bucket = p.pb
-  JOIN qs ON qs.qid = p.qid),
-scored AS (
-  SELECT pw, CAST(count(*) AS BIGINT) AS n_scored FROM cand GROUP BY pw),
-ivf AS (
-  SELECT pw, qid, vec_id, row_number() OVER (PARTITION BY pw, qid
-    ORDER BY sim DESC, vec_id) AS rn
-  FROM cand),
-hit AS (
-  SELECT iv.pw, ex.qid, CAST(count(*) AS BIGINT) AS hits
-  FROM (SELECT qid, vec_id FROM exact WHERE rn <= 10) ex
-  JOIN (SELECT pw, qid, vec_id FROM ivf WHERE rn <= 10) iv
-    ON ex.qid = iv.qid AND ex.vec_id = iv.vec_id
-  GROUP BY iv.pw, ex.qid),
-pwdim AS (SELECT DISTINCT pw FROM probes),
-per AS (
-  SELECT pwdim.pw, qs.qid, CAST(coalesce(hits, 0) AS BIGINT) AS hits
-  FROM pwdim CROSS JOIN qs
-  LEFT JOIN hit ON hit.pw = pwdim.pw AND hit.qid = qs.qid),
-n AS (SELECT CAST(count(*) AS BIGINT) AS corpus_n FROM embeddings)
-SELECT CAST(per.pw AS INT) AS probe_width,
-       CAST(count(*) AS BIGINT) AS n_queries,
-       CAST(sum(hits) AS BIGINT) AS total_hits,
-       sum(hits) / (10.0 * count(*)) AS avg_recall,
-       CAST(min(hits) AS BIGINT) AS min_hits,
-       floor((CAST(n_scored AS DOUBLE) / (count(*) * corpus_n))
-             * 1000000 + 0.5) / 1000000 AS frac_scored
-FROM per JOIN scored ON scored.pw = per.pw, n
-GROUP BY per.pw, n_scored, corpus_n
-ORDER BY probe_width
-"""
-
-
-@query(
-    "q_vec_recall_eval",
-    oracle=_recall_oracle(),
-    tags=("llm", "vectors", "eval"),
-)
-def q_vec_recall_eval(spark, sf_dir):
-    """ANN index QUALITY evaluation — the (probe_width, recall@10,
-    frac_corpus_scored) tuning CURVE for the IVF coarse quantizer,
-    against exact brute-force ground truth over a deterministic query
-    sample (every 50th vector).  Two probe widths per run: 1 (the
-    query's own cell) and nb+1 (own cell + all Hamming-1 neighbor
-    cells, the q_sim_knn_multiprobe probe set) — the curve a real
-    vector pipeline reads before trading recall for probe cost, with
-    the cost axis measured (frac_scored = candidates scored / (|Q| ×
-    corpus)), not assumed.  Ground truth per query via the
-    broadcast-query-set brute-force scorer (q_sim_knn_batch shape —
-    the corpus never shuffles); each IVF answer via the same quantized
-    scorer restricted to the probe cells (bucket equi-join).  Both
-    rankings use identical 1e-6-quantized sims + vec_id tie-breaks,
-    so the intersection is engine-exact; recall and cost aggregates
-    are EXACT INTEGER counts with one final division each (no FP
-    accumulation anywhere).  Norms are precomputed ONCE per vector so
-    each pair evaluates only the dot-product fold (the r4 HOF
-    finding).  At 100 TB the ground-truth cost is |Q| × corpus,
-    bounded by the sample, and each IVF side is partition pruning —
-    probe_width × frac_scored is exactly the fraction of partitions a
-    multiprobe read touches."""
-    from skyhookdb_ceph_spark.operators import vectors
-
-    e = Catalog(spark, sf_dir).embeddings
-    b = vectors.bucketed_cells(e).withColumn(
-        "nrm", F.expr(f"sqrt({vectors.norm_sq_expr('embedding')})")
-    )
-    qs = b.filter(F.col("vec_id") % 50 == 0).selectExpr(
-        "vec_id AS qid", "embedding AS qv", "bucket AS qbucket",
-        "nrm AS qnrm",
-    )
-    sim = (
-        f"floor((({vectors.dot_expr('embedding', 'qv')}) / (nrm * qnrm))"
-        " * 1000000 + 0.5) / 1000000"
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), "vec_id")
-    exact = (
-        b.crossJoin(F.broadcast(qs))
-        .selectExpr("qid", "vec_id", f"{sim} AS sim")
-        .withColumn("rn", F.row_number().over(w))
-        .filter("rn <= 10")
-        .select("qid", "vec_id")
-    )
-    # probe sets: width 1 = own cell; width nb+1 = own + Hamming-1
-    # flips (array_union dedups, mirroring the oracle's UNION)
-    single = qs.select(
-        "qid", "qv", "qnrm", F.lit(1).alias("pw"),
-        F.col("qbucket").alias("pb"),
-    )
-    multi = qs.selectExpr(
-        "qid", "qv", "qnrm", "cast(length(qbucket) + 1 AS int) AS pw",
-        f"explode({vectors.hamming1_sql('qbucket')}) AS pb",
-    )
-    probes = single.unionByName(multi)
-    cand = (
-        b.join(F.broadcast(probes), F.col("bucket") == F.col("pb"))
-        .selectExpr("pw", "qid", "vec_id", f"{sim} AS sim")
-    )
-    scored = cand.groupBy("pw").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_scored")
-    )
-    wp = Window.partitionBy("pw", "qid").orderBy(F.desc("sim"), "vec_id")
-    ivf = (
-        cand.withColumn("rn", F.row_number().over(wp))
-        .filter("rn <= 10")
-        .select(
-            F.col("pw").alias("i_pw"),
-            F.col("qid").alias("i_qid"),
-            F.col("vec_id").alias("i_vid"),
-        )
-    )
-    hits = (
-        exact.join(
-            ivf,
-            (F.col("qid") == F.col("i_qid"))
-            & (F.col("vec_id") == F.col("i_vid")),
-        )
-        .groupBy("i_pw", "qid")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("hits"))
-        .withColumnRenamed("qid", "h_qid")
-    )
-    per = (
-        probes.select("pw").distinct()
-        .crossJoin(qs.select("qid"))
-        .join(
-            F.broadcast(hits),
-            (F.col("pw") == F.col("i_pw")) & (F.col("qid") == F.col("h_qid")),
-            "left",
-        )
-        .select(
-            "pw", "qid",
-            F.coalesce("hits", F.lit(0)).cast("bigint").alias("hits"),
-        )
-    )
-    corpus_n = e.agg(F.count(F.lit(1)).cast("bigint").alias("corpus_n"))
-    return (
-        per.groupBy("pw")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_queries"),
-            F.sum("hits").cast("bigint").alias("total_hits"),
-            (F.sum("hits") / (10.0 * F.count(F.lit(1)))).alias("avg_recall"),
-            F.min("hits").cast("bigint").alias("min_hits"),
-        )
-        .join(F.broadcast(scored), "pw")
-        .crossJoin(F.broadcast(corpus_n))
-        .select(
-            F.col("pw").cast("int").alias("probe_width"),
-            "n_queries",
-            "total_hits",
-            "avg_recall",
-            "min_hits",
-            (
-                F.floor(
-                    (
-                        F.col("n_scored").cast("double")
-                        / (F.col("n_queries") * F.col("corpus_n"))
-                    )
-                    * 1000000
-                    + F.lit(0.5)
-                )
-                / 1000000
-            ).alias("frac_scored"),
-        )
-        .orderBy("probe_width")
-    )
-
-
-# ---------------------------------------------------------------------------
 # §2.17.11 corrupt-record-tolerant JSON ingestion (PERMISSIVE mode)
 # ---------------------------------------------------------------------------
 
@@ -986,86 +787,6 @@ def q_scan_corrupt_json(spark, sf_dir):
         )
         # Materialize before the scratch dir is removed.
         return collect_local(out)
-
-
-# ---------------------------------------------------------------------------
-# §2.17.12 REAL image decode: PPM (P6) synth -> header+raster parse
-# ---------------------------------------------------------------------------
-
-# Both engines derive the SAME image parameters from doc_id; Spark then
-# round-trips them through REAL P6 bytes (ASCII header with a comment
-# line + raw RGB raster) while DuckDB computes the channel sums
-# directly — so any header tokenizer bug, raster offset error, or
-# channel-interleave mistake surfaces as a value mismatch.  Flat byte
-# j of the raster is (media_id*7 + j*13) % 256.
-_PPM_DECODE_ORACLE = """
-WITH p AS (
-  SELECT doc_id AS media_id,
-    CAST(8 + (doc_id % 9) AS INT) AS width,
-    CAST(8 + (doc_id % 7) AS INT) AS height
-  FROM documents WHERE doc_id % 10 = 3)
-SELECT media_id, width, height, CAST(255 AS INT) AS maxval,
-  CAST(width * height AS BIGINT) AS n_pixels,
-  CAST(list_aggregate(list_transform(
-    generate_series(0, width * height - 1),
-    j -> (media_id * 7 + (j * 3 + 0) * 13) % 256), 'sum') AS BIGINT)
-    AS sum_r,
-  CAST(list_aggregate(list_transform(
-    generate_series(0, width * height - 1),
-    j -> (media_id * 7 + (j * 3 + 1) * 13) % 256), 'sum') AS BIGINT)
-    AS sum_g,
-  CAST(list_aggregate(list_transform(
-    generate_series(0, width * height - 1),
-    j -> (media_id * 7 + (j * 3 + 2) * 13) % 256), 'sum') AS BIGINT)
-    AS sum_b
-FROM p ORDER BY media_id
-"""
-
-
-def _ppm_synth(mid, w, h):
-    """Row function: one synthetic P6 payload for a (media_id, width,
-    height) row, raster byte j = (media_id*7 + j*13) % 256 — the pattern
-    the q_multimodal_image and q_multimodal_resize oracles recompute."""
-    import numpy as np
-
-    from skyhookdb_ceph_spark.operators.multimodal import ppm_bytes
-
-    j = np.arange(int(w) * int(h) * 3, dtype=np.int64)
-    raster = (int(mid) * 7 + j * 13) % 256
-    return [{"media_id": int(mid), "payload": ppm_bytes(raster, int(w), int(h))}]
-
-
-@query(
-    "q_multimodal_image",
-    oracle=_PPM_DECODE_ORACLE,
-    tags=("pipeline", "multimodal"),
-)
-def q_multimodal_image(spark, sf_dir):
-    """Second REAL codec (image, beside q_multimodal_decode's audio):
-    synthesize a binary PPM (P6) file per selected document — ASCII
-    header including a comment line a compliant parser must skip, plus
-    the raw RGB raster — then decode it with the pure-Python parser
-    (operators/multimodal.parse_ppm: whitespace/comment-tolerant
-    header tokenizer, numpy uint8 raster decode with exact length
-    check) and emit dimensions + exact per-channel integer sums.
-    Both stages are Arrow-batched row maps (operators.map_rows) — decode
-    parallelism = partition count, zero shuffle; only tiny metadata
-    rows ever move."""
-    from skyhookdb_ceph_spark.operators import ensure_parallelism, map_rows
-    from skyhookdb_ceph_spark.operators.multimodal import MEDIA_SCHEMA, decode_ppm
-
-    params = (
-        ensure_parallelism(Catalog(spark, sf_dir).documents)
-        .filter("doc_id % 10 = 3")
-        .selectExpr(
-            "doc_id AS media_id",
-            "CAST(8 + (doc_id % 9) AS INT) AS width",
-            "CAST(8 + (doc_id % 7) AS INT) AS height",
-        )
-    )
-    cols = ["media_id", "width", "height"]
-    media = map_rows(params, cols, _ppm_synth, MEDIA_SCHEMA)
-    return decode_ppm(media).orderBy("media_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1338,188 +1059,6 @@ def q_ts_seasonal(spark, sf_dir):
             "max_resid",
         )
         .orderBy("event_type", "hour_of_day")
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2.17.16 matryoshka truncation eval: 16-dim vs full-dim ranking overlap
-# ---------------------------------------------------------------------------
-
-def _matryoshka_oracle():
-    from skyhookdb_ceph_spark.operators import vectors
-
-    dot64 = vectors.dot_duckdb("e.embedding", "qv", 64)
-    dot16 = vectors.dot_duckdb("e.embedding", "qv", 16)
-    return f"""
-WITH qs AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings
-            WHERE vec_id % 50 = 0),
-full_rank AS (
-  SELECT qid, e.vec_id, row_number() OVER (PARTITION BY qid
-    ORDER BY floor(({dot64}) * 1000000 + 0.5) / 1000000 DESC, e.vec_id)
-    AS rn
-  FROM embeddings e, qs),
-trunc_rank AS (
-  SELECT qid, e.vec_id, row_number() OVER (PARTITION BY qid
-    ORDER BY floor(({dot16}) * 1000000 + 0.5) / 1000000 DESC, e.vec_id)
-    AS rn
-  FROM embeddings e, qs),
-hit AS (
-  SELECT f.qid, CAST(count(*) AS BIGINT) AS hits
-  FROM (SELECT qid, vec_id FROM full_rank WHERE rn <= 10) f
-  JOIN (SELECT qid, vec_id FROM trunc_rank WHERE rn <= 10) t
-    ON f.qid = t.qid AND f.vec_id = t.vec_id
-  GROUP BY f.qid),
-per AS (SELECT qs.qid, CAST(coalesce(hits, 0) AS BIGINT) AS hits
-        FROM qs LEFT JOIN hit ON qs.qid = hit.qid)
-SELECT CAST(count(*) AS BIGINT) AS n_queries,
-       CAST(sum(hits) AS BIGINT) AS total_overlap,
-       sum(hits) / (10.0 * count(*)) AS avg_overlap,
-       CAST(min(hits) AS BIGINT) AS min_overlap
-FROM per
-"""
-
-
-@query(
-    "q_vec_matryoshka_eval",
-    oracle=_matryoshka_oracle(),
-    tags=("llm", "vectors", "eval"),
-)
-def q_vec_matryoshka_eval(spark, sf_dir):
-    """Dimension-truncation quality evaluation (the matryoshka /
-    MRL question): how much of the full-dimension top-10 ranking
-    survives when scoring with only the FIRST 16 of 64 dims — the
-    measurement behind serving embeddings at 1/4 the memory and 4x
-    the scan rate.  Same integer-exact evaluation skeleton as
-    q_vec_recall_eval: both rankings by 1e-6-quantized inner product
-    with vec_id tie-breaks, overlap counted as exact integers, one
-    final division.  The truncated scorer folds 16 elements instead
-    of 64 — at 100 TB that ratio IS the bandwidth saving being
-    evaluated; the corpus never shuffles (query set broadcasts)."""
-    from skyhookdb_ceph_spark.operators import vectors
-
-    e = Catalog(spark, sf_dir).embeddings
-    qs = e.filter(F.col("vec_id") % 50 == 0).selectExpr(
-        "vec_id AS qid", "embedding AS qv"
-    )
-    d64 = (
-        f"floor(({vectors.dot_expr('embedding', 'qv')}) * 1000000 + 0.5)"
-        " / 1000000"
-    )
-    d16 = (
-        "floor(("
-        + vectors.dot_expr("slice(embedding, 1, 16)", "slice(qv, 1, 16)")
-        + ") * 1000000 + 0.5) / 1000000"
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), "vec_id")
-    scored = e.crossJoin(F.broadcast(qs))
-
-    def topk(sim_expr, id_alias):
-        return (
-            scored.selectExpr("qid", "vec_id", f"{sim_expr} AS sim")
-            .withColumn("rn", F.row_number().over(w))
-            .filter("rn <= 10")
-            .select(
-                F.col("qid").alias(f"{id_alias}_qid"),
-                F.col("vec_id").alias(f"{id_alias}_vid"),
-            )
-        )
-
-    hits = (
-        topk(d64, "f")
-        .join(
-            topk(d16, "t"),
-            (F.col("f_qid") == F.col("t_qid"))
-            & (F.col("f_vid") == F.col("t_vid")),
-        )
-        .groupBy("f_qid")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("hits"))
-    )
-    per = qs.select("qid").join(
-        F.broadcast(hits), F.col("qid") == F.col("f_qid"), "left"
-    ).select("qid", F.coalesce("hits", F.lit(0)).cast("bigint").alias("hits"))
-    return per.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_queries"),
-        F.sum("hits").cast("bigint").alias("total_overlap"),
-        (F.sum("hits") / (10.0 * F.count(F.lit(1)))).alias("avg_overlap"),
-        F.min("hits").cast("bigint").alias("min_overlap"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2.17.17 n-gram novelty scoring (dataset-curation signal)
-# ---------------------------------------------------------------------------
-
-_NOVELTY_ORACLE = """
-WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-  WHERE len(string_split(text, ' ')) >= 3),
-g AS (
-  SELECT DISTINCT doc_id, gram
-  FROM w, unnest(list_transform(
-    generate_series(1, len(ws) - 2),
-    i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS t(gram)),
-fo AS (SELECT gram, min(doc_id) AS first_owner FROM g GROUP BY gram)
-SELECT g.doc_id,
-  CAST(count(*) AS BIGINT) AS n_grams,
-  CAST(sum(CASE WHEN first_owner = g.doc_id THEN 1 ELSE 0 END) AS BIGINT)
-    AS n_novel,
-  floor((sum(CASE WHEN first_owner = g.doc_id THEN 1 ELSE 0 END) * 1.0
-         / count(*)) * 1000000 + 0.5) / 1000000 AS novelty
-FROM g JOIN fo ON g.gram = fo.gram
-GROUP BY g.doc_id ORDER BY g.doc_id
-"""
-
-
-@query("q_text_novelty", oracle=_NOVELTY_ORACLE, tags=("llm", "text"))
-def q_text_novelty(spark, sf_dir):
-    """N-gram novelty — the curation signal that ranks documents by
-    how much genuinely NEW text they contribute: a doc's novelty is
-    the fraction of its distinct word-trigrams whose FIRST owner (min
-    doc_id across the corpus) is the doc itself.  Boilerplate-heavy
-    docs score near 0, fresh content near 1 — the greedy-selection
-    criterion dataset builders apply before token budgets.  Plan: one
-    explode to distinct (doc, gram) pairs, one (gram) agg for first
-    owners, one keyed join back, one (doc) agg — every stage a
-    map-combined equi shuffle on gram or doc_id; nothing is ever
-    all-pairs and no gram list leaves its group."""
-    d = Catalog(spark, sf_dir).documents
-    w = d.select("doc_id", F.split("text", " ").alias("ws")).filter(
-        F.size("ws") >= 3
-    )
-    g = (
-        w.select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(ws) - 2), i -> "
-                    "concat_ws(' ', element_at(ws, i), "
-                    "element_at(ws, i + 1), element_at(ws, i + 2)))"
-                )
-            ).alias("gram"),
-        )
-        .distinct()
-    )
-    fo = g.groupBy("gram").agg(F.min("doc_id").alias("first_owner"))
-    return (
-        g.join(fo, "gram")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_grams"),
-            F.sum(
-                F.when(F.col("first_owner") == F.col("doc_id"), 1).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_novel"),
-        )
-        .select(
-            "doc_id",
-            "n_grams",
-            "n_novel",
-            quantize(F.col("n_novel") * 1.0 / F.col("n_grams"), 6).alias(
-                "novelty"
-            ),
-        )
-        .orderBy("doc_id")
     )
 
 

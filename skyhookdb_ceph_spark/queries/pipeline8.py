@@ -41,20 +41,17 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from skyhookdb_ceph_spark.operators import ensure_parallelism
-from skyhookdb_ceph_spark.operators.skew import (
-    SKEW_SHARE_THRESHOLD,
-    max_key_share,
-)
+from skyhookdb_ceph_spark.operators.skew import SKEW_SHARE_THRESHOLD, max_key_share
 from skyhookdb_ceph_spark.queries._util import (
     Catalog,
     collect_local,
     local_df,
-    quantize,
     ratio,
     scoped_conf,
     scratch,
 )
 from skyhookdb_ceph_spark.registry import query
+
 
 # ---------------------------------------------------------------------------
 # §2.18.1 map-side task loss: shuffle-bound output discarded on retry
@@ -820,109 +817,6 @@ def q_stream_python_source(spark, sf_dir):
             .orderBy("event_type")
         )
         return collect_local(agg)
-
-
-# ---------------------------------------------------------------------------
-# §2.18.12 containment dedup (small-doc-inside-big-doc detection)
-# ---------------------------------------------------------------------------
-
-_CONTAINMENT_ORACLE = """
-WITH sh AS (
-  SELECT doc_id, list_distinct(list_transform(
-    generate_series(1, greatest(len(string_split(text, ' ')) - 2, 1)),
-    i -> array_to_string(list_slice(string_split(text, ' '), i, i + 2), ' ')))
-    AS shingles
-  FROM documents WHERE text IS NOT NULL),
-ex AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-dfr AS (SELECT s FROM ex GROUP BY s HAVING count(*) <= 5),
-rare AS (SELECT ex.doc_id, ex.s FROM ex JOIN dfr USING (s)),
-cand AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
-         FROM rare a JOIN rare b ON a.s = b.s AND a.doc_id <> b.doc_id),
-pairs AS (
-  SELECT da, db,
-    floor((len(list_intersect(x.shingles, y.shingles)) * 1.0
-           / len(x.shingles)) * 1000000 + 0.5) / 1000000 AS containment,
-    CAST(len(x.shingles) AS BIGINT) AS na,
-    CAST(len(y.shingles) AS BIGINT) AS nb
-  FROM cand JOIN sh x ON x.doc_id = da JOIN sh y ON y.doc_id = db)
-SELECT da AS doc_small, db AS doc_big, containment
-FROM pairs
-WHERE containment >= 0.8 AND (na < nb OR (na = nb AND da < db))
-ORDER BY doc_small, doc_big
-"""
-
-
-@query("q_dedup_containment", oracle=_CONTAINMENT_ORACLE, tags=("llm", "dedup"))
-def q_dedup_containment(spark, sf_dir):
-    """CONTAINMENT dedup — the small-doc-inside-big-doc case Jaccard
-    misses: a short document pasted into a long one has tiny
-    resemblance (|A∩B|/|A∪B|) but containment |A∩B|/|A| ≈ 1, and
-    training sets care because the small doc's content is still
-    duplicated verbatim.  Candidate generation uses a RARE-SHINGLE
-    inverted index instead of MinHash banding (banding estimates
-    Jaccard, the wrong statistic here): explode distinct word
-    trigrams, keep shingles with document frequency <= 5 (the df cap
-    bounds the per-shingle join fanout, so candidates stay ~linear in
-    corpus size — a hot boilerplate shingle can never fan out), join
-    on shingle, then verify EXACT containment on the candidate set
-    only and keep (small ⊂ big) pairs at >= 0.8 with a deterministic
-    direction rule for equal sizes.  Shingle definition is shared
-    verbatim with q_dedup_fuzzy (operators/minhash.py — partial
-    shingle for sub-k docs, NULL text excluded by construction), so
-    the two queries differ in exactly the statistic they measure.
-    The df cap is mirrored in the oracle: the recall trade is part of
-    the operator's contract, not an implementation accident."""
-    from skyhookdb_ceph_spark.operators import minhash
-
-    d = Catalog(spark, sf_dir).documents
-    sh = minhash.shingle_sets(d)
-    ex = sh.select("doc_id", F.explode("shingles").alias("s"))
-    rare_sh = (
-        ex.groupBy("s")
-        .agg(F.count(F.lit(1)).alias("sdf"))
-        .filter(F.col("sdf") <= 5)
-        .select("s")
-    )
-    rare = ex.join(rare_sh, "s")
-    cand = (
-        rare.selectExpr("s", "doc_id AS da")
-        .join(rare.selectExpr("s AS s2", "doc_id AS db"),
-              (F.col("s") == F.col("s2")) & (F.col("da") != F.col("db")))
-        .select("da", "db")
-        .distinct()
-    )
-    x = sh.selectExpr("doc_id AS xa", "shingles AS sha")
-    y = sh.selectExpr("doc_id AS yb", "shingles AS shb")
-    pairs = (
-        cand.join(x, F.col("da") == F.col("xa"))
-        .join(y, F.col("db") == F.col("yb"))
-        .select(
-            "da",
-            "db",
-            quantize(
-                F.size(F.array_intersect("sha", "shb"))
-                / F.size("sha"),
-                6,
-            ).alias("containment"),
-            F.size("sha").cast("bigint").alias("na"),
-            F.size("shb").cast("bigint").alias("nb"),
-        )
-    )
-    return (
-        pairs.filter(
-            (F.col("containment") >= 0.8)
-            & (
-                (F.col("na") < F.col("nb"))
-                | ((F.col("na") == F.col("nb")) & (F.col("da") < F.col("db")))
-            )
-        )
-        .select(
-            F.col("da").alias("doc_small"),
-            F.col("db").alias("doc_big"),
-            "containment",
-        )
-        .orderBy("doc_small", "doc_big")
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -2,186 +2,40 @@
 
 Evidence-hardening queries closing the r7 verdict's residuals:
 
-1. q_vec_ivf_files_pruned — the recall/cost curve's cost axis
-   re-measured on the PERSISTED IVF layout: frac of partition
-   directories (= files) a probe actually reads must equal the
-   logical probe fraction the curve claims (r7 verdict item 5).
-2. q_join_skew_adaptive — the max_key_share skew probe wired into
+1. q_join_skew_adaptive — the max_key_share skew probe wired into
    the salted JOIN path: join-side salting decided by measurement,
    not hardcoded (r7 verdict item 8); both branches plan-asserted
    in tests/test_skew.py.
-3. q_scan_metadata_cols — hidden file-metadata columns
+2. q_scan_metadata_cols — hidden file-metadata columns
    (_metadata.file_name / row_index): per-row physical lineage at
    the scan, contract-pinned against the oracle.
-4. q_stream_outer_join (streaming_q.py) — stream-stream LEFT OUTER
+3. q_stream_outer_join (streaming_q.py) — stream-stream LEFT OUTER
    join with watermark-eviction NULL emission; the oracle pins the
    two-watermark-node MIN-policy gate.
-5. q_sql_parameterized — named-parameter SQL binding + {df} table
+4. q_sql_parameterized — named-parameter SQL binding + {df} table
    templating, the injection-safe SQL front door.
-6. q_scan_ignore_corrupt — file-level corruption tolerance via the
+5. q_scan_ignore_corrupt — file-level corruption tolerance via the
    per-source ignoreCorruptFiles option.
-7. q_transform_text — line-oriented text round-trip (the raw LLM
+6. q_transform_text — line-oriented text round-trip (the raw LLM
    corpus ingest format), completing §2.1's format plurality.
-8. q_multimodal_resize — image resize with real pixel math
-   (operators/multimodal.resize_ppm), beside the §2.12 decode,
-   perceptual-hash, frame-sample and windowing stages.
-9. q_fn_sql_udf — SQL-defined functions (CREATE FUNCTION ... RETURN)
+7. q_fn_sql_udf — SQL-defined functions (CREATE FUNCTION ... RETURN)
    + lateral column aliases over aggregate aliases: the declarative
    UDF door, inlined at plan time.
-10. q_stream_full_outer_join (streaming_q.py) — stream-stream FULL
-    OUTER join; the oracle pins the ASYMMETRIC eviction schedules
-    (purchases at wm, interval-bound clicks at wm - 1h).
+8. q_stream_full_outer_join (streaming_q.py) — stream-stream FULL
+   OUTER join; the oracle pins the ASYMMETRIC eviction schedules
+   (purchases at wm, interval-bound clicks at wm - 1h).
 
 House rules unchanged: identical aliases both sides, deterministic
 everything, no all-pairs, no corpus-sized collect() — driver-side
-materialization here is bounded by 2^n_bits cells, never rows.
+materialization here is bounded, never corpus-sized.
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import functions as F
 
-from skyhookdb_ceph_spark.operators import vectors
-from skyhookdb_ceph_spark.queries._util import Catalog, collect_local, local_df, scratch
+from skyhookdb_ceph_spark.queries._util import Catalog, collect_local, scratch
 from skyhookdb_ceph_spark.registry import query
-
-# ---------------------------------------------------------------------------
-# §2.19.1 persisted-IVF probe = directory pruning, measured
-# ---------------------------------------------------------------------------
-
-
-def _files_pruned_oracle() -> str:
-    return f"""
-WITH {vectors.primary_cell_cte_duckdb()},
-qs AS (SELECT bucket AS qbucket FROM b WHERE vec_id % 50 = 0),
-p1 AS (SELECT DISTINCT qbucket AS pb FROM qs),
-pm AS (
-  SELECT DISTINCT pb FROM (
-    SELECT qbucket AS pb FROM qs
-    UNION
-    SELECT substr(qs.qbucket, 1, t.i - 1)
-           || (CASE WHEN substr(qs.qbucket, t.i, 1) = '1'
-               THEN '0' ELSE '1' END)
-           || substr(qs.qbucket, t.i + 1, nb.nb) AS pb
-    FROM qs, nb, unnest(generate_series(1, nb.nb)) t(i))),
-tot AS (SELECT CAST(count(DISTINCT bucket) AS BIGINT) AS n_cells_total,
-               CAST(count(*) AS BIGINT) AS corpus_n FROM b),
-per AS (
-  SELECT 1 AS pw,
-         CAST(count(DISTINCT bucket) AS BIGINT) AS n_cells_probed,
-         CAST(count(*) AS BIGINT) AS rows_read
-  FROM b WHERE bucket IN (SELECT pb FROM p1)
-  UNION ALL
-  SELECT (SELECT nb + 1 FROM nb) AS pw,
-         CAST(count(DISTINCT bucket) AS BIGINT),
-         CAST(count(*) AS BIGINT)
-  FROM b WHERE bucket IN (SELECT pb FROM pm))
-SELECT CAST(pw AS INT) AS probe_width, n_cells_probed, n_cells_total,
-       TRUE AS files_match_cells,
-       floor((CAST(rows_read AS DOUBLE) / corpus_n) * 1000000 + 0.5)
-         / 1000000 AS frac_corpus_read
-FROM per, tot ORDER BY probe_width
-"""
-
-
-@query(
-    "q_vec_ivf_files_pruned",
-    oracle=_files_pruned_oracle(),
-    tags=("llm", "vectors", "layout", "eval", "scale-design"),
-)
-def q_vec_ivf_files_pruned(spark, sf_dir):
-    """The recall curve's COST AXIS measured on the PERSISTED layout —
-    q_vec_recall_eval's frac_scored is computed from the LOGICAL probe
-    set; this query persists the IVF cells partitionBy(bucket) (one
-    file per cell — q_vec_ivf_build's layout) and proves that a probe
-    read with the cells as a pushed-down IN filter touches exactly the
-    probed directories: files actually contributing rows == probed
-    cells present (files_match_cells, the banded-verdict column), and
-    the fraction of the corpus those files hold equals the oracle's
-    logical fraction (frac_corpus_read).  Probe sets per width follow
-    q_vec_recall_eval exactly: width 1 = each query's own cell, width
-    nb+1 = own + all Hamming-1 flips, deterministic query sample
-    (vec_id % 50 == 0).  Driver-side materialization is the DISTINCT
-    CELL LIST — bounded by 2^nb regardless of corpus size (the same
-    boundedness that makes an IVF directory listing cheap at 100 TB) —
-    never vectors or rows.  The index is built and read through
-    operators/vectors.py's lifecycle, so cells come back as the
-    strings they were written as and the probe pushes them as-is; the
-    filter lands in PartitionFilters (asserted in
-    tests/test_ivf_layout.py), which at 100 TB is the difference
-    between listing nb+1 directories and scanning 2^nb."""
-    e = Catalog(spark, sf_dir).embeddings
-    with scratch("skyhook_ivfprune_") as tmp:
-        vectors.build_ivf_index(spark, e, tmp)
-        layout = vectors.read_ivf_index(spark, tmp)
-        # distinct probe CELLS for both widths in ONE job (bounded by
-        # 2^nb per width, collect-safe): width-1 cells are the query
-        # buckets themselves; the multiprobe set adds the Hamming-1 flips
-        per_width = (
-            layout.filter(F.col("vec_id") % 50 == 0)
-            .selectExpr(
-                f"explode({vectors.hamming1_sql('bucket')}) AS pb", "bucket"
-            )
-            .groupBy("pb")
-            .agg(F.max(F.col("pb") == F.col("bucket")).alias("own"))
-            .collect()
-        )
-        cells1 = sorted(r["pb"] for r in per_width if r["own"])
-        cellsm = sorted(r["pb"] for r in per_width)
-        nb = len(cellsm[0])
-        totals = layout.agg(
-            F.count_distinct("bucket").cast("bigint").alias("n_cells_total"),
-            F.count(F.lit(1)).cast("bigint").alias("corpus_n"),
-        ).collect()[0]
-        # both pruned widths measured in ONE job: union of the two
-        # pushed-down reads, tagged by probe width (each leg keeps its
-        # own PartitionFilters; the union is evaluated in one pass)
-        legs = []
-        for pw, cells in ((1, cells1), (nb + 1, cellsm)):
-            legs.append(
-                layout.filter(F.col("bucket").isin(cells))
-                .withColumn("_file", F.input_file_name())
-                .select(F.lit(pw).alias("pw"), "_file", "bucket")
-            )
-        per_pw = {
-            r["pw"]: r
-            for r in legs[0]
-            .unionByName(legs[1])
-            .groupBy("pw")
-            .agg(
-                F.count_distinct("_file").cast("bigint").alias("n_files"),
-                F.count_distinct("bucket").cast("bigint").alias("n_cells"),
-                F.count(F.lit(1)).cast("bigint").alias("rows_read"),
-            )
-            .collect()
-        }
-        rows = []
-        for pw in (1, nb + 1):
-            m = per_pw[pw]
-            rows.append(
-                (
-                    pw,
-                    m["n_cells"],
-                    totals["n_cells_total"],
-                    bool(m["n_files"] == m["n_cells"]),
-                    # mirrors the oracle's floor(x*1e6 + 0.5)/1e6
-                    float(
-                        math.floor(
-                            (m["rows_read"] / totals["corpus_n"]) * 1_000_000
-                            + 0.5
-                        )
-                        / 1_000_000
-                    ),
-                )
-            )
-        return local_df(
-            spark,
-            rows,
-            "probe_width int, n_cells_probed bigint, n_cells_total bigint, "
-            "files_match_cells boolean, frac_corpus_read double",
-        )
 
 
 # ---------------------------------------------------------------------------
@@ -306,7 +160,6 @@ def q_scan_metadata_cols(spark, sf_dir):
             F.sum("n_chars").cast("bigint").alias("sum_chars"),
         )
     )
-
 
 
 # ---------------------------------------------------------------------------
@@ -447,89 +300,6 @@ def q_transform_text(spark, sf_dir):
             F.max(F.length("value")).cast("bigint").alias("max_chars"),
         )
         return collect_local(agg)
-
-
-# ---------------------------------------------------------------------------
-# §2.19.8 image resize (real pixel math over binary payloads)
-# ---------------------------------------------------------------------------
-
-# Source raster byte j is (media_id*7 + j*13) % 256 (same family as
-# q_multimodal_image, disjoint doc subset).  Nearest-neighbor /2:
-# output pixel (yy, xx) = source pixel (2yy, 2xx); numpy's [::2] keeps
-# ceil(n/2) samples, so out_w = (w+1)//2.  The oracle walks the SAME
-# output pixel positions arithmetically — any offset, stride, or
-# channel-interleave bug in the resize surfaces as a value mismatch.
-_RESIZE_ORACLE = """
-WITH p AS (
-  SELECT doc_id AS media_id,
-    CAST(8 + (doc_id % 9) AS INT) AS w,
-    CAST(8 + (doc_id % 7) AS INT) AS h
-  FROM documents WHERE doc_id % 10 = 7),
-d AS (
-  SELECT media_id, w, h,
-    CAST((w + 1) // 2 AS INT) AS ow, CAST((h + 1) // 2 AS INT) AS oh
-  FROM p)
-SELECT media_id, ow AS width, oh AS height, CAST(255 AS INT) AS maxval,
-  CAST(ow * oh AS BIGINT) AS n_pixels,
-  CAST(list_aggregate(list_transform(
-    generate_series(0, ow * oh - 1),
-    k -> (media_id * 7
-          + (((k // ow) * 2 * w + (k % ow) * 2) * 3 + 0) * 13) % 256),
-    'sum') AS BIGINT) AS sum_r,
-  CAST(list_aggregate(list_transform(
-    generate_series(0, ow * oh - 1),
-    k -> (media_id * 7
-          + (((k // ow) * 2 * w + (k % ow) * 2) * 3 + 1) * 13) % 256),
-    'sum') AS BIGINT) AS sum_g,
-  CAST(list_aggregate(list_transform(
-    generate_series(0, ow * oh - 1),
-    k -> (media_id * 7
-          + (((k // ow) * 2 * w + (k % ow) * 2) * 3 + 2) * 13) % 256),
-    'sum') AS BIGINT) AS sum_b
-FROM d ORDER BY media_id
-"""
-
-
-@query(
-    "q_multimodal_resize",
-    oracle=_RESIZE_ORACLE,
-    tags=("pipeline", "multimodal"),
-)
-def q_multimodal_resize(spark, sf_dir):
-    """Image RESIZE with real pixel math, one of the multimodal row
-    maps (decode / hash / RESIZE / frame-sample, SURVEY §2.12):
-    synthesize P6 payloads with q_multimodal_image's row function
-    (disjoint doc subset), nearest-neighbor downsample by 2
-    (operators/multimodal.resize_ppm — output pixel (y, x) = source
-    (2y, 2x), re-encoded as a real P6 payload), then decode the
-    RESIZED payloads and emit dimensions + exact per-channel sums.
-    Three chained Arrow-batched row maps (operators.map_rows), zero
-    shuffle; the oracle computes the same sums by walking the output
-    pixel positions arithmetically, so any stride/offset/interleave
-    bug in the resize is a value mismatch, not a silent quality loss.  At
-    100 TB the payload column shrinks ~4x at the resize stage —
-    before any exchange — which is why real pipelines resize
-    earliest."""
-    from skyhookdb_ceph_spark.operators import ensure_parallelism, map_rows
-    from skyhookdb_ceph_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_ppm,
-        resize_ppm,
-    )
-    from skyhookdb_ceph_spark.queries.pipeline7 import _ppm_synth
-
-    params = (
-        ensure_parallelism(Catalog(spark, sf_dir).documents)
-        .filter("doc_id % 10 = 7")
-        .selectExpr(
-            "doc_id AS media_id",
-            "CAST(8 + (doc_id % 9) AS INT) AS width",
-            "CAST(8 + (doc_id % 7) AS INT) AS height",
-        )
-    )
-    cols = ["media_id", "width", "height"]
-    media = map_rows(params, cols, _ppm_synth, MEDIA_SCHEMA)
-    return decode_ppm(resize_ppm(media, factor=2)).orderBy("media_id")
 
 
 # ---------------------------------------------------------------------------

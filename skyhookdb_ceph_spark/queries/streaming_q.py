@@ -20,7 +20,6 @@ import shutil
 from typing import Any, Iterator, Tuple
 
 import pandas as pd
-
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -30,6 +29,7 @@ from skyhookdb_ceph_spark.queries._util import (
     scoped_conf,
     scratch,
 )
+from skyhookdb_ceph_spark.queries.dedup import FUZZY_SIG_CTES
 from skyhookdb_ceph_spark.registry import query
 from skyhookdb_ceph_spark.streaming.replay import drain_to_memory, events_stream
 
@@ -1104,7 +1104,6 @@ def q_stream_event_eviction(spark, sf_dir):
 
 
 def _stream_dedup_lsh_oracle() -> str:
-    from skyhookdb_ceph_spark.queries.llm import FUZZY_SIG_CTES
 
     jac = (
         "floor((len(list_intersect(x.shingles, y.shingles)) * 1.0"
@@ -1326,3 +1325,115 @@ def q_stream_drift(spark, sf_dir):
         "n_events",
         "js",
     )
+
+
+_LATE_PRED = "event_id % 20 = 3"  # the 5% late cohort
+_LATE_SPLIT = "2024-01-16"  # mid-fixture: file0 = on-time before this
+_LATE_DELAY_S = 607  # prime, so max(ts) - delay never lands on a
+
+
+_LATE_ORACLE = f"""
+WITH b AS (
+  SELECT max(CASE WHEN NOT ({_LATE_PRED})
+                   AND ts < TIMESTAMP '{_LATE_SPLIT}' THEN ts END)
+           - INTERVAL {_LATE_DELAY_S} SECOND AS wm0,
+         max(ts) - INTERVAL {_LATE_DELAY_S} SECOND AS wmf
+  FROM events),
+kept AS (
+  SELECT time_bucket(INTERVAL '30 minutes', ts) AS wstart
+  FROM events, b
+  WHERE (NOT ({_LATE_PRED})
+         OR time_bucket(INTERVAL '30 minutes', ts) + INTERVAL 30 MINUTE
+            > b.wm0)
+    AND time_bucket(INTERVAL '30 minutes', ts) + INTERVAL 30 MINUTE
+        <= b.wmf)
+SELECT CAST(epoch(wstart) AS BIGINT) AS ws,
+  CAST(count(*) AS BIGINT) AS cnt
+FROM kept GROUP BY 1
+"""
+
+
+@query(
+    "q_stream_late_data",
+    oracle=_LATE_ORACLE,
+    tags=("stream", "live-stream", "divergence-pin"),
+)
+def q_stream_late_data(spark, sf_dir):
+    """The LATE-DATA contract of watermarked append aggregation,
+    pinned by a deliberately out-of-order replay — the surface the v4
+    fuzzer's time-ordered replays keep deterministic by avoiding, here
+    made deterministic by CONTROLLING it instead.  Three-batch replay:
+    file0 = on-time rows before {_LATE_SPLIT}, file1 = the remaining
+    on-time rows, file2 = the late cohort ({_LATE_PRED}, 5% of rows,
+    historic timestamps replayed LAST).
+
+    What Spark 4.1.2 actually does (calibrated batch-by-batch via
+    StreamingQueryProgress before this oracle was written, and the
+    folk model is WRONG on two counts):
+    1. A below-watermark row is NOT unconditionally dropped.  It is
+       dropped iff its window's state was already emitted+evicted
+       (here: windows closed by wm0 = max(file0 ts) - delay, the
+       watermark in force when file2 arrives; the engine's own
+       numRowsDroppedByWatermark counter confirms exactly that
+       subset, 26 of 50 at sf0.001).  The watermark bounds STATE
+       LIFETIME; it is not an admission filter.
+    2. Below-watermark rows whose window state is still resident are
+       MERGED and included in the window's single append emission
+       (the 2-batch variant of this replay emits counts including
+       100% of the late cohort, dropped-counter 0).
+    The emission gate is the one q_stream_watermark_append pinned:
+    a window row appears iff window_end <= final watermark
+    (max ts seen - delay).  The oracle states all three clauses
+    declaratively: kept = on-time rows + late rows with window_end >
+    wm0, emitted = window_end <= wmf.
+
+    At 100 TB the practical reading: sizing the watermark delay is
+    about WHERE late data stops being merged — a row later than
+    (delay + one trigger interval) behind the front is silently
+    lost, and the loss boundary moves with micro-batch timing, which
+    is why this pin replays a FIXED batching (3 files,
+    maxFilesPerTrigger=1) rather than trusting wall-clock accident."""
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from skyhookdb_ceph_spark.streaming import replay
+
+    t = pq.read_table(f"{sf_dir}/events.parquet")
+    # the catalog's ts-unit sniff applies to the stream read-back;
+    # the split here just routes rows to files (comparisons work in
+    # either unit since the whole table shares one)
+    import pyarrow as pa
+
+    ids = t["event_id"]
+    late = pc.equal(
+        pc.subtract(ids, pc.multiply(pc.divide(ids, 20), 20)), 3
+    )
+    split_ts = pa.scalar(
+        __import__("datetime").datetime.fromisoformat(_LATE_SPLIT),
+        type=t["ts"].type,
+    )
+    early = pc.and_(pc.invert(late), pc.less(t["ts"], split_ts))
+    mid = pc.and_(pc.invert(late), pc.invert(pc.less(t["ts"], split_ts)))
+    with scratch("skyhook_late_") as tmp:
+        for i, mask in enumerate((early, mid, late)):
+            p = t.filter(mask)
+            p = p.take(pc.sort_indices(p, sort_keys=[("ts", "ascending")]))
+            path = f"{tmp}/part-0{i}.parquet"
+            pq.write_table(p, path)
+            os.utime(path, (1000 + i, 1000 + i))
+        stream = replay.events_stream(
+            spark, tmp, glob="*.parquet",
+            options={"maxFilesPerTrigger": "1"},
+        )
+        agg = (
+            stream.withWatermark("ts", f"{_LATE_DELAY_S} seconds")
+            .groupBy(F.window("ts", "30 minutes"))
+            .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+        )
+        sink = replay.drain_to_memory(
+            agg, output_mode="append", needs_watermark_batch=True
+        )
+        out = sink.selectExpr("CAST(window.start AS LONG) AS ws", "cnt")
+        return collect_local(out)

@@ -214,3 +214,105 @@ def q_win_range_frame(spark, sf_dir):
         "o_totalprice",
         F.count(F.lit(1)).over(w).alias("similar_cnt"),
     )
+
+
+# Varying interval lengths (1..60 min by event_id) are the point: with
+# constant durations the union degenerates to gap-sessionization
+# (q_win_sessionize); with varying ones an interval can be CONTAINED in
+# an earlier longer one, so island detection needs the running MAX of
+# interval ends, not the previous row's end.
+_IVU_LEN_US = "(1 + event_id % 60) * 60000000"
+
+_INTERVAL_UNION_ORACLE = f"""
+WITH iv AS (
+  SELECT user_id, epoch_us(ts) AS s,
+    epoch_us(ts) + {_IVU_LEN_US} AS e
+  FROM events),
+mk AS (
+  SELECT user_id, s, e,
+    max(e) OVER (PARTITION BY user_id ORDER BY s, e
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+      AS prev_max_e
+  FROM iv),
+isl AS (
+  SELECT user_id, s, e,
+    sum(CASE WHEN prev_max_e IS NULL OR s > prev_max_e THEN 1 ELSE 0 END)
+      OVER (PARTITION BY user_id ORDER BY s, e
+            ROWS UNBOUNDED PRECEDING) AS island
+  FROM mk),
+per AS (
+  SELECT user_id, island,
+    CAST(count(*) AS BIGINT) AS n_ev,
+    CAST(max(e) - min(s) AS BIGINT) AS cover_us
+  FROM isl GROUP BY user_id, island)
+SELECT user_id,
+  CAST(sum(n_ev) AS BIGINT) AS n_events,
+  CAST(count(*) AS BIGINT) AS n_islands,
+  CAST(sum(cover_us) AS BIGINT) AS covered_us
+FROM per GROUP BY user_id
+"""
+
+
+@query(
+    "q_win_interval_union",
+    oracle=_INTERVAL_UNION_ORACLE,
+    tags=("window", "interval", "scale-design"),
+)
+def q_win_interval_union(spark, sf_dir):
+    """Per-user interval UNION: total covered time, merged-interval
+    (island) count and event count over intervals of VARYING length
+    (1-60 min by event_id) — the SLA-uptime / sensor-coverage /
+    billing-dedup operator.  Varying durations are what distinguish
+    this from gap sessionization (q_win_sessionize): an interval can
+    be wholly CONTAINED in an earlier longer one, so a new island
+    starts only when the start exceeds the running MAX of ALL prior
+    ends (the classic sweep), not the previous row's end.
+
+    All arithmetic in BIGINT epoch-microseconds (no timestamp-type
+    parity risk; exact in both engines).  Plan: both windows (running
+    max-end, island cumsum) and both aggregations share ONE
+    user_id-keyed partitioning — a single keyed Exchange in the whole
+    plan, no global window, nothing corpus-sized beyond it.  Window
+    width is per-user event count; a pathological single hot user is
+    the same bounded-key-skew class as q_win_sessionize and splits
+    the same way (sub-island two-level merge, the q_win_islands
+    boundary decomposition) if a deployment needs it."""
+    # ts is TIMESTAMP_NTZ in the catalog; the session TZ is UTC, so
+    # CAST to TIMESTAMP + unix_micros equals DuckDB's epoch_us on the
+    # same naive value
+    iv = Catalog(spark, sf_dir).events.selectExpr(
+        "user_id",
+        "unix_micros(CAST(ts AS TIMESTAMP)) AS s",
+        f"unix_micros(CAST(ts AS TIMESTAMP)) + {_IVU_LEN_US} AS e",
+    )
+    wprev = (
+        Window.partitionBy("user_id")
+        .orderBy("s", "e")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    wcum = (
+        Window.partitionBy("user_id")
+        .orderBy("s", "e")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    isl = (
+        iv.withColumn("prev_max_e", F.max("e").over(wprev))
+        .withColumn(
+            "island",
+            F.sum(
+                F.expr(
+                    "CASE WHEN prev_max_e IS NULL OR s > prev_max_e "
+                    "THEN 1 ELSE 0 END"
+                )
+            ).over(wcum),
+        )
+    )
+    per = isl.groupBy("user_id", "island").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_ev"),
+        (F.max("e") - F.min("s")).cast("bigint").alias("cover_us"),
+    )
+    return per.groupBy("user_id").agg(
+        F.sum("n_ev").cast("bigint").alias("n_events"),
+        F.count(F.lit(1)).cast("bigint").alias("n_islands"),
+        F.sum("cover_us").cast("bigint").alias("covered_us"),
+    )

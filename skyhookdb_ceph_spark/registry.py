@@ -116,10 +116,12 @@ def load_all() -> dict[str, QuerySpec]:
         from skyhookdb_ceph_spark.queries import (  # noqa: F401
             aggregates,
             composite,
+            dedup,
             filters,
             functions_q,
             joins,
             llm,
+            multimodal,
             pipeline,
             pipeline2,
             pipeline3,
@@ -131,17 +133,13 @@ def load_all() -> dict[str, QuerySpec]:
             pipeline9,
             pipeline10,
             pipeline11,
-            pipeline12,
-            pipeline13,
-            pipeline14,
-            pipeline15,
-            pipeline16,
-            pipeline17,
             scans,
             setops,
+            similarity,
             sorts,
             streaming_q,
             subqueries,
+            text,
             udfs,
             windows,
         )

@@ -4,9 +4,13 @@ and the global-window allowlist matches the actually-audited set."""
 
 from __future__ import annotations
 
+import json
 import os
+import subprocess
 import sys
 from pathlib import Path
+
+import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 if str(REPO) not in sys.path:
@@ -95,27 +99,64 @@ def test_window_audit_ignores_asc_desc_inside_partition_exprs(spark):
     assert count_unpartitioned_windows(out) == 0
 
 
-def test_window_allowlist_matches_audited_registry(spark):
+@pytest.fixture(scope="session")
+def audited_registry():
+    """(defaultParallelism, {query: (unpartitioned windows, plan
+    digest)}) from `tools/plan_audit.audit_registry`, which builds
+    every batch query once (a `collect_local` query contributes the
+    frame it collected).  It runs in a fresh process, as the
+    `--digests` run that wrote tests/plan_digests.json did: a plan
+    built after other work in this session's JVM can order a
+    distinct-aggregate rewrite differently."""
+    code = (
+        "import json; from tools.plan_audit import audit_registry; "
+        "print(json.dumps(audit_registry()))"
+    )
+    env = {**os.environ, "PYTHONPATH": str(REPO)}
+    res = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, env=env,
+        capture_output=True, text=True, timeout=1200,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    return json.loads(res.stdout.splitlines()[-1])
+
+
+def test_window_allowlist_matches_audited_registry(audited_registry):
     """Re-audit: every registered batch query's optimized plan is
     scanned for empty-partition window specs; the set with at least
     one must equal bench.WINDOW_ALLOWLIST exactly.  A new global
     window outside the list fails here AND surfaces in the bench
     record's "unpartitioned_windows"; an allowlist entry whose global
-    window was fixed fails here too (stale allowlist)."""
-    from skyhookdb_ceph_spark.plans.explain import count_unpartitioned_windows
-    from skyhookdb_ceph_spark.registry import load_all
-
-    SF = "/root/testdata/sf0.001"
-    found = set()
-    for name, spec in load_all().items():
-        if "live-stream" in spec.tags:
-            continue  # fresh stream pipelines per build; audited via tags
-        if count_unpartitioned_windows(spec.fn(spark, SF)):
-            found.add(name)
+    window was fixed fails here too (stale allowlist).  Live-stream
+    drains build a fresh stream pipeline per call and are left out."""
+    found = {name for name, (windows, _) in audited_registry[1].items() if windows}
     assert found == bench.WINDOW_ALLOWLIST, (
         sorted(found - bench.WINDOW_ALLOWLIST),
         sorted(bench.WINDOW_ALLOWLIST - found),
     )
+
+
+def test_plan_digests_match(audited_registry):
+    """Every batch query's normalized optimized plan hashes to its
+    entry in tests/plan_digests.json (`tools/plan_audit.py --digests`).
+    A change that only moves code shows here that no plan changed; a
+    change that means to change plans regenerates the file, and its
+    diff names each changed query.  The file records the
+    defaultParallelism it was made at, which some plans embed
+    (`ensure_parallelism` widths, range splits)."""
+    rec = json.loads((REPO / "tests" / "plan_digests.json").read_text())
+    have, audit = audited_registry
+    if rec["default_parallelism"] != have:
+        pytest.skip(
+            f"digests were made at defaultParallelism "
+            f"{rec['default_parallelism']}; this session has {have}"
+        )
+    got = {name: digest for name, (_, digest) in audit.items()}
+    want = rec["digests"]
+    changed = sorted(n for n in want.keys() & got.keys() if want[n] != got[n])
+    assert (changed, sorted(got.keys() - want.keys()), sorted(want.keys() - got.keys())) == (
+        [], [], []
+    ), "plan digests differ (changed, unrecorded, missing)"
 
 
 def test_box_state_and_certification_rule():

@@ -82,7 +82,7 @@ def test_cli_built_index_answers_the_bm25_probe(spark, tmp_path):
     it back and returns exactly q_text_bm25's rows."""
     from skyhookdb_ceph_spark.cli import main
     from skyhookdb_ceph_spark.operators.text_index import probe_bm25
-    from skyhookdb_ceph_spark.queries.pipeline3 import _BM25_TERMS
+    from skyhookdb_ceph_spark.queries.text import _BM25_TERMS
     from skyhookdb_ceph_spark.registry import load_all
 
     out = str(tmp_path / "idx")

@@ -265,7 +265,7 @@ def test_token_budget_never_exceeds_budget(spark):
     for EVERY source (each of the k buckets enforces cum <= budget/k
     exactly, so the union cannot overshoot — the bucketed form's
     one-sided error is UNDERfill, never overfill)."""
-    from skyhookdb_ceph_spark.queries.pipeline13 import _TB_BUDGET
+    from skyhookdb_ceph_spark.queries.llm import _TB_BUDGET
     from skyhookdb_ceph_spark.registry import load_all
 
     reg = load_all()

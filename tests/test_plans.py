@@ -1492,7 +1492,7 @@ def test_interval_grid_probed_branch(spark):
     cell ids), the join must stay an equi join, and the
     responsibility filter must ride the same measured width — the
     grid analogue of test_width_probed_join_probed_branch."""
-    from skyhookdb_ceph_spark.queries.pipeline14 import _interval_grid
+    from skyhookdb_ceph_spark.queries.joins import _interval_grid
 
     df = _interval_grid(spark, SF, target_pairs=0)
     plan = explain_str(df)
@@ -1510,7 +1510,7 @@ def test_interval_grid_plain_branch(spark):
     grid and fail a density pin even though behavior is correct,
     r13 ADVICE): the static hour grid means the date_trunc
     derivation and no unix_timestamp cells."""
-    from skyhookdb_ceph_spark.queries.pipeline14 import _interval_grid
+    from skyhookdb_ceph_spark.queries.joins import _interval_grid
 
     plan = explain_str(_interval_grid(spark, SF, target_pairs=10**9))
     assert "date_trunc" in plan
@@ -1521,7 +1521,7 @@ def test_interval_grid_branches_agree(spark):
     """Both grid widths must return identical pairs under the
     responsibility rule — the invariant that keeps the naive-theta
     oracle branch-invariant."""
-    from skyhookdb_ceph_spark.queries.pipeline14 import _interval_grid
+    from skyhookdb_ceph_spark.queries.joins import _interval_grid
 
     fine = sorted(
         _interval_grid(spark, SF, target_pairs=0).collect()

@@ -25,3 +25,32 @@ def test_every_surveyed_queryid_is_registered():
     reg = set(load_all())
     ghosts = sorted(surveyed - reg)
     assert not ghosts, f"in SURVEY.md §2 but not registered: {ghosts}"
+
+
+# QueryID family (the word after `q_`) -> the one module that defines it.
+_FAMILY_MODULES = {
+    "dedup": "dedup",
+    "sim": "similarity",
+    "vec": "similarity",
+    "embed": "similarity",
+    "text": "text",
+    "hybrid": "text",
+    "multimodal": "multimodal",
+}
+
+
+def test_family_queries_live_in_their_family_module():
+    """Each LLM-data family's queries, with their oracles, are defined
+    in one subject module, and the round-named modules they left are
+    gone."""
+    pkg = "skyhookdb_ceph_spark.queries."
+    specs = load_all()
+    misplaced = {
+        name: spec.fn.__module__
+        for name, spec in specs.items()
+        if name.split("_")[1] in _FAMILY_MODULES
+        and spec.fn.__module__ != pkg + _FAMILY_MODULES[name.split("_")[1]]
+    }
+    assert not misplaced, misplaced
+    queries_dir = _SURVEY.parent / "skyhookdb_ceph_spark" / "queries"
+    assert sorted(p.name for p in queries_dir.glob("pipeline1[2-7].py")) == []

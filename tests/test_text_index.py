@@ -31,7 +31,7 @@ from skyhookdb_ceph_spark.operators.text_index import (
     probe_bm25,
 )
 from skyhookdb_ceph_spark.plans.explain import explain_str
-from skyhookdb_ceph_spark.queries.pipeline3 import _BM25_TERMS
+from skyhookdb_ceph_spark.queries.text import _BM25_TERMS
 from skyhookdb_ceph_spark.registry import load_all
 
 SF = "/root/testdata/sf0.001"
@@ -212,7 +212,7 @@ def test_hybrid_probe_plan_never_tokenizes_or_encodes(spark, tmp_path):
     touches a few posting lists, the 16 B/vector signature column,
     and ~NCAND float rows."""
     from skyhookdb_ceph_spark.operators.sig_index import build_sig_index
-    from skyhookdb_ceph_spark.queries.pipeline17 import probe_hybrid_rrf
+    from skyhookdb_ceph_spark.queries.text import probe_hybrid_rrf
 
     tdir = str(tmp_path / "txt")
     sdir = str(tmp_path / "sig")
@@ -254,7 +254,7 @@ def test_compacted_layout_answers_identically(spark, tmp_path):
     fragmented (base build + appended delta) index equals probe_bm25
     over its compacted rewrite, row for row — and the compacted layout
     really is one file per tok0 directory."""
-    from skyhookdb_ceph_spark.queries.pipeline17 import _TXT_DELTA_PRED
+    from skyhookdb_ceph_spark.queries.text import _TXT_DELTA_PRED
 
     d = Catalog(spark, SF).documents
     frag, comp = str(tmp_path / "frag"), str(tmp_path / "comp")

@@ -64,7 +64,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import duckdb  # noqa: E402
 
-from skyhookdb_ceph_spark.queries.pipeline3 import (  # noqa: E402
+from skyhookdb_ceph_spark.queries.text import (  # noqa: E402
     _BM25_B,
     _BM25_K1,
 )
@@ -306,9 +306,13 @@ def _duck_sig_census(pred_t: str, sf_dir: str) -> list[tuple]:
     popcount census per cohort.  pred_t carries a {v} placeholder so
     the delta predicate can be rendered unambiguously in each scope."""
     from skyhookdb_ceph_spark.operators.sig_index import _PLANES, _VQ
-    from skyhookdb_ceph_spark.queries.pipeline14 import _sig_duckdb
-    from skyhookdb_ceph_spark.queries.pipeline15 import _THR_DUCK, _plane_expr
-    from skyhookdb_ceph_spark.queries.pipeline16 import _BITS1, _BITS2
+    from skyhookdb_ceph_spark.queries.similarity import (
+        _BITS1,
+        _BITS2,
+        _THR_DUCK,
+        _plane_expr,
+        _sig_duckdb,
+    )
 
     emb = f"'{sf_dir}/embeddings.parquet'"
     planes = ", ".join(_plane_expr(k, h) for k, h in _PLANES)
@@ -351,7 +355,7 @@ def compare5b(spec: SigSpec, spark, sf_dir: str) -> str | None:
         build_sig_index,
     )
     from skyhookdb_ceph_spark.queries._util import Catalog
-    from skyhookdb_ceph_spark.queries.pipeline16 import _BITS1, _BITS2
+    from skyhookdb_ceph_spark.queries.similarity import _BITS1, _BITS2
 
     pred_t = f"{{v}} % {spec.mod} = {spec.rem}"
     pred = pred_t.format(v="vec_id")

@@ -2,21 +2,39 @@
 """Regenerate PLANS.md: annotated physical plans for the headline
 queries — the evidence behind every scale claim (pushdown, pruning,
 broadcast choice, partial aggregation, no-nested-loop band join).
+With ``--digests``, write tests/plan_digests.json instead: one sha256
+per batch query over its normalized optimized plan, which
+tests/test_bench_gate.py checks so a change that moves code can show
+it changed no plan.
 
     python tools/plan_audit.py [sf_dir]
+    python tools/plan_audit.py --digests
+
+Both outputs normalize the plan text (``normalize_plan``), so a second
+run in a fresh process reproduces them byte for byte.  Run with the
+repo on ``PYTHONPATH``: the Python DataSource workers of
+``q_scan_pushdown_source`` import the package.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
+import os
+import re
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
-from skyhookdb_ceph_spark.plans.explain import explain_str
+from skyhookdb_ceph_spark.plans.explain import count_unpartitioned_windows, explain_str
 from skyhookdb_ceph_spark.queries import _util
 from skyhookdb_ceph_spark.registry import load_all
 from skyhookdb_ceph_spark.session import get_spark
+
+DIGESTS = REPO / "tests" / "plan_digests.json"
+SF_DIR = "/root/testdata/sf0.001"
 
 AUDIT = {
     "q_agg_groupby": (
@@ -549,12 +567,12 @@ AUDIT = {
 }
 
 
-def audited_plan(spark, name: str, sf_dir: str) -> str:
-    """The formatted physical plan of query `name`.  A query that ends
-    in `return collect_local(frame)` returns a LocalRelation whose plan
-    is one LocalTableScan, so for it the plan of `frame` — the work the
-    query ran — is explained instead.  Every module's bound
-    `collect_local` records what it collected for the one call."""
+def audited_frame(spark, name: str, sf_dir: str):
+    """The frame query `name` ran.  A query that ends in
+    `return collect_local(frame)` returns a LocalRelation whose plan is
+    one LocalTableScan, so for it `frame` — the work the query ran — is
+    returned instead.  Every module's bound `collect_local` records
+    what it collected for the one call."""
     specs = load_all()  # imports the modules that bind collect_local
     orig = _util.collect_local
     collected = {}
@@ -576,12 +594,84 @@ def audited_plan(spark, name: str, sf_dir: str) -> str:
         for m in binders:
             m.collect_local = orig
     local, frame = collected.get(id(out), (None, None))
-    return explain_str(frame if local is out else out, "formatted")
+    return frame if local is out else out
+
+
+def audited_plan(spark, name: str, sf_dir: str) -> str:
+    """The formatted physical plan of `audited_frame`."""
+    return explain_str(audited_frame(spark, name, sf_dir), "formatted")
+
+
+def normalize_plan(text: str, parallelism: int) -> str:
+    """Plan text with the parts that vary between runs of the same code
+    masked: expression ids and plan ids, scratch paths under /dev/shm
+    and /tmp, pid-named prefixes, 8-hex uuid suffixes of per-run table
+    names, and the `ensure_parallelism` width `parallelism` (the
+    session's defaultParallelism) in `Repartition <n>, true`."""
+    text = re.sub(r"#\d+", "#", text)
+    text = re.sub(r"plan_id=\d+", "plan_id=", text)
+    text = re.sub(r"(?:file:)?/(?:dev/shm|tmp)/[^\s,\]\)]*", "<scratch>", text)
+    text = re.sub(rf"_{os.getpid()}(?=_|\b)", "_<pid>", text)
+    text = re.sub(r"_[0-9a-f]{8}\b", "_<uuid>", text)
+    return text.replace(f"Repartition {parallelism}, true", "Repartition <P>, true")
+
+
+def batch_queries() -> list[str]:
+    """Every registered query except the live-stream drains (each build
+    starts a fresh stream pipeline), in name order, so a run does not
+    depend on module layout."""
+    return sorted(n for n, s in load_all().items() if "live-stream" not in s.tags)
+
+
+def plan_digest(df, parallelism: int) -> str:
+    """sha256 of the normalized optimized logical plan of `df`, printed
+    with no field-list truncation."""
+    plan = df._jdf.queryExecution().optimizedPlan()  # noqa: SLF001
+    text = plan.treeString(True, False, 2**31 - 1, False, False)
+    return hashlib.sha256(normalize_plan(text, parallelism).encode()).hexdigest()
+
+
+def audit_registry() -> tuple[int, dict[str, tuple[int, str]]]:
+    """Build every batch query once at SF_DIR, in a session this
+    process starts, and return the session's defaultParallelism and,
+    per query, the count of unpartitioned windows and the plan digest
+    of its audited frame.  Run it in a fresh process: Spark's distinct-aggregate
+    rewrite orders its groups by expression-id hashes, so a plan built
+    after other work in the same JVM can list them in another order
+    (seen for q_agg_distinct and q_fn_collation)."""
+    spark = get_spark(app_name="plan_audit", shuffle_partitions=8)
+    parallelism = spark.sparkContext.defaultParallelism
+    audit = {}
+    for name in batch_queries():
+        df = audited_frame(spark, name, SF_DIR)
+        audit[name] = (count_unpartitioned_windows(df), plan_digest(df, parallelism))
+    return parallelism, audit
+
+
+def write_digests() -> None:
+    """Write DIGESTS from a fresh `audit_registry`."""
+    parallelism, audit = audit_registry()
+    live = sorted(n for n, s in load_all().items() if "live-stream" in s.tags)
+    DIGESTS.write_text(json.dumps({
+        "about": "sha256 of each batch query's normalized optimized plan "
+                 "(tools/plan_audit.py --digests); collect_local queries "
+                 "digest the collected frame",
+        "sf_dir": SF_DIR,
+        "default_parallelism": parallelism,
+        "left_out": {"reason": "live-stream drains start a fresh stream "
+                               "pipeline per build", "queries": live},
+        "digests": {name: digest for name, (_, digest) in audit.items()},
+    }, indent=1) + "\n")
+    print(f"wrote {DIGESTS.relative_to(REPO)}: {len(audit)} digests")
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    if sys.argv[1:] == ["--digests"]:
+        write_digests()
+        return 0
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else SF_DIR
     spark = get_spark(app_name="plan_audit", shuffle_partitions=8)
+    parallelism = spark.sparkContext.defaultParallelism
     out = [
         "# PLANS — physical-plan audit",
         "",
@@ -589,14 +679,14 @@ def main() -> int:
         f"changes); formatted plans at `{sf_dir}`.  Each section states",
         "what the plan MUST look like for the 100 TB story to hold —",
         "tests/test_plans.py asserts the same properties mechanically.",
+        "Expression ids, scratch paths, pids and per-run table suffixes",
+        "are masked (`normalize_plan`), so a re-run diffs only real changes.",
         "",
     ]
     for name, want in AUDIT.items():
-        plan = audited_plan(spark, name, sf_dir)
+        plan = normalize_plan(audited_plan(spark, name, sf_dir), parallelism)
         out += [f"## {name}", "", want, "", "```", plan.strip(), "```", ""]
-    Path(__file__).resolve().parent.parent.joinpath("PLANS.md").write_text(
-        "\n".join(out)
-    )
+    (REPO / "PLANS.md").write_text("\n".join(out))
     print("wrote PLANS.md")
     return 0
 

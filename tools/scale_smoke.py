@@ -333,7 +333,7 @@ def text_probe_bm25(spark, sf_dir):
     are persisted.  The query-term set is constant by construction,
     so this is already a fixed-|Q| curve."""
     from skyhookdb_ceph_spark.operators.text_index import probe_bm25
-    from skyhookdb_ceph_spark.queries.pipeline3 import _BM25_TERMS
+    from skyhookdb_ceph_spark.queries.text import _BM25_TERMS
 
     return probe_bm25(spark, _text_index_dir(spark, sf_dir), _BM25_TERMS)
 
@@ -373,7 +373,7 @@ def text_probe_frag8(spark, sf_dir):
     different physical layout; the answer differs only because the
     index covers the same corpus assembled incrementally)."""
     from skyhookdb_ceph_spark.operators.text_index import probe_bm25
-    from skyhookdb_ceph_spark.queries.pipeline3 import _BM25_TERMS
+    from skyhookdb_ceph_spark.queries.text import _BM25_TERMS
 
     return probe_bm25(spark, _frag_text_dir(spark, sf_dir), _BM25_TERMS)
 
@@ -382,7 +382,7 @@ def text_probe_compacted(spark, sf_dir):
     """BM25 probe over the compacted rewrite of the same 8-batch
     history — the payoff row for q_text_index_compact."""
     from skyhookdb_ceph_spark.operators.text_index import probe_bm25
-    from skyhookdb_ceph_spark.queries.pipeline3 import _BM25_TERMS
+    from skyhookdb_ceph_spark.queries.text import _BM25_TERMS
 
     return probe_bm25(spark, _frag_text_dir(spark, sf_dir) + "_c", _BM25_TERMS)
 
@@ -393,7 +393,7 @@ def hybrid_probe_rrf(spark, sf_dir):
     serving cost of the end-to-end retrieval shape.  Single query
     (vec 0) + constant terms: already a fixed-|Q| curve."""
     from skyhookdb_ceph_spark.queries._util import Catalog
-    from skyhookdb_ceph_spark.queries.pipeline17 import probe_hybrid_rrf
+    from skyhookdb_ceph_spark.queries.text import probe_hybrid_rrf
 
     return probe_hybrid_rrf(
         spark,
