@@ -151,7 +151,7 @@ def test_plan_digests_match(audited_registry):
             f"digests were made at defaultParallelism "
             f"{rec['default_parallelism']}; this session has {have}"
         )
-    got = {name: digest for name, (_, digest) in audit.items()}
+    got = {n: d for n, (_, d) in audit.items() if n not in rec["unstable"]["queries"]}
     want = rec["digests"]
     changed = sorted(n for n in want.keys() & got.keys() if want[n] != got[n])
     assert (changed, sorted(got.keys() - want.keys()), sorted(want.keys() - got.keys())) == (

@@ -34,6 +34,9 @@ from skyhookdb_ceph_spark.registry import load_all
 from skyhookdb_ceph_spark.session import get_spark
 
 DIGESTS = REPO / "tests" / "plan_digests.json"
+# Plans with several distinct aggregates: Spark's rewrite orders their
+# groups by expression-id hashes, which differ between processes.
+UNSTABLE = ("q_agg_distinct", "q_fn_collation")
 SF_DIR = "/root/testdata/sf0.001"
 
 AUDIT = {
@@ -660,7 +663,9 @@ def write_digests() -> None:
         "default_parallelism": parallelism,
         "left_out": {"reason": "live-stream drains start a fresh stream "
                                "pipeline per build", "queries": live},
-        "digests": {name: digest for name, (_, digest) in audit.items()},
+        "unstable": {"reason": "distinct-aggregate group order follows "
+                               "expression-id hashes", "queries": list(UNSTABLE)},
+        "digests": {n: d for n, (_, d) in audit.items() if n not in UNSTABLE},
     }, indent=1) + "\n")
     print(f"wrote {DIGESTS.relative_to(REPO)}: {len(audit)} digests")
 
