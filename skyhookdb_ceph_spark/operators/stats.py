@@ -16,6 +16,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+# The one broadcast budget: the most bytes of a join side the engine
+# replicates to every executor.  session.py hands it to the planner as
+# spark.sql.autoBroadcastJoinThreshold (a FILE-statistics estimate), and
+# the measured-payload join choices compare measured_dim_bytes against
+# it, so a static and a measured decision never disagree about how much
+# is too much to ship.  64 MB, not Spark's 10 MB default: it is the
+# threshold the session planner has always used, so no file-statistics
+# plan moves, and at 16 bytes per two-key row it admits ~4M dimension
+# rows — an sf10 TPC-H customer table broadcasts, an sf100 one shuffles.
+BROADCAST_BUDGET_BYTES = 64 * 1024 * 1024
+
+
 def column_stats(df: DataFrame, cols: list[str]) -> DataFrame:
     """(col, min, max, cnt, ndv) per requested numeric column in ONE
     scan: stack() unpivots the columns to (col, val) rows, then a
@@ -87,6 +99,32 @@ def measured_block_width(
     return None if width >= span else int(width)
 
 
+def ghost_blocks(df: DataFrame, width: int, frame_sec: int) -> DataFrame:
+    """The block split measured_block_width sizes, over the epoch-second
+    column `sec`: every row gets `blk` = floor(sec / width) and
+    `emit` = 1, and each row in the last frame_sec seconds of its block
+    is copied into the next block as a contributor-only ghost
+    (`emit` = 0).  A trailing RANGE window of at most frame_sec seconds,
+    partitioned by (key, blk) over the result, then sees each real
+    row's whole frame inside its block (width >= frame_sec, so a frame
+    reaches at most one block back; a ghost's sec is below its block's
+    start, so ghosts never tie with real rows).  Callers drop emit = 0
+    after the window.
+
+    The ghost test is pmod, not %: Spark's % takes the dividend's sign,
+    so for a pre-1970 (negative) sec it disagrees with the floor
+    division that assigned the block, and the rows just before such a
+    block boundary would never be ghosted forward."""
+    s = df.withColumn("blk", F.floor(F.col("sec") / width))
+    real = s.withColumn("emit", F.lit(1))
+    ghost = (
+        s.filter(F.pmod(F.col("sec"), F.lit(width)) >= width - frame_sec)
+        .withColumn("blk", F.col("blk") + 1)
+        .withColumn("emit", F.lit(0))
+    )
+    return real.unionByName(ghost)
+
+
 def measured_shuffle_width(
     df: DataFrame,
     target_rows_per_task: int,
@@ -142,8 +180,6 @@ def measured_dim_bytes(
     which can be orders of magnitude smaller (two columns of a wide
     table) or larger (decompressed strings) than the file stat.  One
     aggregate-sized driver row, same cost class as the other probes."""
-    from pyspark.sql import functions as F
-
     # octet_length, not length: length() counts CHARACTERS, so
     # multibyte UTF-8 strings undercount the byte payload and a dim
     # near the broadcast budget could be misclassified (r10 advisory).

@@ -33,7 +33,7 @@ from skyhookdb_ceph_spark.operators import (
     simhash,
     vectors,
 )
-from skyhookdb_ceph_spark.queries._util import Catalog, quantize, quantize2
+from skyhookdb_ceph_spark.queries._util import Catalog, money, quantize
 from skyhookdb_ceph_spark.registry import query
 
 
@@ -640,7 +640,7 @@ def q_dedup_tombstone(spark, sf_dir):
         .unionByName(dels)
         .groupBy("key")
         .agg(
-            quantize2(F.max_by("value", "seq")).alias("value_q"),
+            money(F.max_by("value", "seq")).alias("value_q"),
             F.count(F.lit(1)).alias("n_versions"),
             F.max_by("op", "seq").alias("_last_op"),
         )

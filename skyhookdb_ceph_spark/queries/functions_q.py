@@ -9,10 +9,11 @@ the hot path.
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import types as T
 
 from skyhookdb_ceph_spark.operators import ensure_parallelism
-from skyhookdb_ceph_spark.queries._util import Catalog, F, quantize, ratio
+from skyhookdb_ceph_spark.queries._util import Catalog, F, money, quantize, ratio
 from skyhookdb_ceph_spark.registry import query
 
 
@@ -363,4 +364,468 @@ def q_fn_map_json(spark, sf_dir):
     return w.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("cnt"),
         ratio(F.avg(k)).alias("avg_k"),
+    )
+
+
+@query(
+    "q_fn_url_parse",
+    oracle=(
+        "SELECT doc_id, url, "
+        "regexp_extract(url, '^https://([^/]+)', 1) AS host, "
+        "regexp_extract(url, '^https://[^/]+(/[^?]*)', 1) AS path, "
+        "regexp_extract(url, 'ref=([a-z0-9]+)', 1) AS ref_param "
+        "FROM (SELECT doc_id, 'https://' || source || '.example.com/' || lang "
+        "|| '/doc/' || CAST(doc_id AS VARCHAR) || '?ref=' || lang AS url FROM documents)"
+    ),
+    tags=("pipeline", "text"),
+)
+def q_fn_url_parse(spark, sf_dir):
+    """URL parsing (host / path / query param) — the crawl-metadata
+    extraction every web-corpus pipeline runs.  URLs are synthesized
+    deterministically from fixture columns (the corpus has none);
+    Spark's parse_url is the JVM fast path, the oracle mirrors with
+    anchored regexes."""
+    d = Catalog(spark, sf_dir).documents
+    url = F.concat(
+        F.lit("https://"), F.col("source"), F.lit(".example.com/"),
+        F.col("lang"), F.lit("/doc/"), F.col("doc_id").cast("string"),
+        F.lit("?ref="), F.col("lang"),
+    )
+    u = d.select("doc_id", url.alias("url"))
+    return u.select(
+        "doc_id",
+        "url",
+        F.parse_url("url", F.lit("HOST")).alias("host"),
+        F.parse_url("url", F.lit("PATH")).alias("path"),
+        F.parse_url("url", F.lit("QUERY"), F.lit("ref")).alias("ref_param"),
+    )
+
+
+_HISTOGRAM_ORACLE = """
+WITH g AS (
+  SELECT CAST(least(floor(l_extendedprice / 11000), 9) AS INT) AS bucket,
+    CAST(count(*) AS BIGINT) AS cnt
+  FROM lineitem GROUP BY 1)
+SELECT bucket,
+  CAST(bucket * 11000 AS DOUBLE) AS lo,
+  CAST(bucket * 11000 + 11000 AS DOUBLE) AS hi,
+  cnt,
+  floor(cnt * 1.0 / sum(cnt) OVER () * 1000000 + 0.5) / 1000000 AS share
+FROM g
+"""
+
+
+@query("q_fn_histogram", oracle=_HISTOGRAM_ORACLE, tags=("pipeline", "agg"))
+def q_fn_histogram(spark, sf_dir):
+    """Fixed-width histogram of l_extendedprice (10 bins of 11000, top
+    bin open): the dataset-profiling pass a pipeline runs before
+    choosing filters/curriculum thresholds.  Bin assignment is pure
+    integer math (floor-divide), so it partial-aggregates map-side and
+    the shuffle carries at most 10 rows regardless of input size; the
+    share window runs over those 10 aggregate rows, never over data."""
+    li = Catalog(spark, sf_dir).lineitem
+    g = li.groupBy(
+        F.least(F.floor(F.col("l_extendedprice") / 11000), F.lit(9))
+        .cast("int")
+        .alias("bucket")
+    ).agg(F.count("*").alias("cnt"))
+    return g.select(
+        "bucket",
+        (F.col("bucket").cast("double") * 11000).alias("lo"),
+        (F.col("bucket").cast("double") * 11000 + 11000).alias("hi"),
+        "cnt",
+        quantize(F.col("cnt") / F.sum("cnt").over(Window.partitionBy()), 6).alias(
+            "share"
+        ),
+    )
+
+
+_STRUCT_ORACLE = """
+WITH ranked AS (
+  SELECT o_custkey, o_orderkey, o_totalprice,
+    CAST(floor(epoch(o_orderdate)) AS BIGINT) AS sec,
+    row_number() OVER (PARTITION BY o_custkey
+                       ORDER BY floor(epoch(o_orderdate)), o_orderkey) AS rn,
+    count(*) OVER (PARTITION BY o_custkey) AS n_orders
+  FROM orders)
+SELECT o_custkey AS custkey, o_orderkey AS first_orderkey,
+  sec AS first_sec,
+  floor(o_totalprice * 100 + 0.5) / 100 AS first_price,
+  CAST(n_orders AS BIGINT) AS n_orders
+FROM ranked WHERE rn = 1
+"""
+
+
+@query("q_fn_struct_ops", oracle=_STRUCT_ORACLE, tags=("functions",))
+def q_fn_struct_ops(spark, sf_dir):
+    """Struct algebra: per customer, orders are packed into an array of
+    structs, array_sort uses the struct's NATURAL lexicographic order
+    (epoch sec, then orderkey — deterministic tie-break), and the
+    earliest order's fields are projected back out of the nested
+    value.  Exercises struct(), collect_list, array_sort on structs,
+    element_at and nested-field access; the oracle states the same
+    thing relationally (row_number = 1).  One keyed shuffle; the
+    per-group array is order-count bounded."""
+    o = Catalog(spark, sf_dir).orders
+    packed = (
+        o.select(
+            "o_custkey",
+            F.struct(
+                F.unix_timestamp("o_orderdate").alias("sec"),
+                F.col("o_orderkey").alias("okey"),
+                F.col("o_totalprice").alias("price"),
+            ).alias("rec"),
+        )
+        .groupBy("o_custkey")
+        .agg(
+            F.array_sort(F.collect_list("rec")).alias("recs"),
+            F.count(F.lit(1)).alias("n_orders"),
+        )
+    )
+    first = F.element_at(F.col("recs"), 1)
+    return packed.select(
+        F.col("o_custkey").alias("custkey"),
+        first.getField("okey").alias("first_orderkey"),
+        first.getField("sec").alias("first_sec"),
+        money(first.getField("price")).alias("first_price"),
+        "n_orders",
+    )
+
+
+_UNPIVOT_ORACLE = """
+SELECT l_orderkey, l_linenumber, 'quantity' AS metric,
+       floor(l_quantity * 1000000 + 0.5) / 1000000 AS val
+FROM lineitem WHERE l_orderkey % 50 = 0
+UNION ALL
+SELECT l_orderkey, l_linenumber, 'price',
+       floor(l_extendedprice * 1000000 + 0.5) / 1000000
+FROM lineitem WHERE l_orderkey % 50 = 0
+UNION ALL
+SELECT l_orderkey, l_linenumber, 'discount',
+       floor(l_discount * 1000000 + 0.5) / 1000000
+FROM lineitem WHERE l_orderkey % 50 = 0
+UNION ALL
+SELECT l_orderkey, l_linenumber, 'tax',
+       floor(l_tax * 1000000 + 0.5) / 1000000
+FROM lineitem WHERE l_orderkey % 50 = 0
+"""
+
+
+@query("q_fn_unpivot", oracle=_UNPIVOT_ORACLE, tags=("functions", "reshape"))
+def q_fn_unpivot(spark, sf_dir):
+    """Unpivot / melt: four measure columns to (metric, val) rows via
+    stack() — the inverse of q_agg_pivot, a single Generate over the
+    scan (pure map, no shuffle; the 4x row fan-out is the contract).
+    The oracle states the same reshape as UNION ALL.  Deterministic
+    1/50 orderkey thinning keeps the long output bounded."""
+    li = Catalog(spark, sf_dir).lineitem.filter(
+        F.expr("l_orderkey % 50 = 0")
+    )
+    return li.selectExpr(
+        "l_orderkey",
+        "l_linenumber",
+        "stack(4, "
+        "'quantity', floor(l_quantity * 1000000 + 0.5) / 1000000, "
+        "'price', floor(l_extendedprice * 1000000 + 0.5) / 1000000, "
+        "'discount', floor(l_discount * 1000000 + 0.5) / 1000000, "
+        "'tax', floor(l_tax * 1000000 + 0.5) / 1000000"
+        ") AS (metric, val)",
+    )
+
+
+_TRY_ORACLE = """
+WITH raw AS (
+  SELECT doc_id, n_chars,
+    CASE WHEN doc_id % 3 = 0 THEN 'x' || CAST(doc_id AS VARCHAR)
+         ELSE CAST(doc_id AS VARCHAR) END AS s
+  FROM documents)
+SELECT doc_id, TRY_CAST(s AS BIGINT) AS parsed,
+  CASE WHEN TRY_CAST(s AS BIGINT) IS NULL THEN 1 ELSE 0 END AS parse_err,
+  floor((CAST(n_chars AS DOUBLE) / nullif(doc_id % 5, 0)) * 1000000 + 0.5)
+    / 1000000 AS safe_ratio
+FROM raw ORDER BY doc_id
+"""
+
+
+@query("q_fn_try_cast", oracle=_TRY_ORACLE, tags=("functions",))
+def q_fn_try_cast(spark, sf_dir):
+    """Error-safe parsing: TRY_CAST returns NULL on malformed input
+    (every 3rd id gets a non-numeric prefix) instead of failing the
+    job — the dirty-data ingestion contract — plus NULL-safe division
+    via nullif.  At 100 TB a single bad row must never kill a stage;
+    per-row error columns make the failure rate itself queryable."""
+    d = Catalog(spark, sf_dir).documents
+    raw = d.selectExpr(
+        "doc_id",
+        "n_chars",
+        "CASE WHEN doc_id % 3 = 0 THEN concat('x', CAST(doc_id AS STRING)) "
+        "ELSE CAST(doc_id AS STRING) END AS s",
+    )
+    return raw.selectExpr(
+        "doc_id",
+        "TRY_CAST(s AS BIGINT) AS parsed",
+        "CASE WHEN TRY_CAST(s AS BIGINT) IS NULL THEN 1 ELSE 0 END AS parse_err",
+        "floor((CAST(n_chars AS DOUBLE) / nullif(doc_id % 5, 0)) * 1000000 + 0.5)"
+        " / 1000000 AS safe_ratio",
+    ).orderBy("doc_id")
+
+
+_STRING_ADV_ORACLE = """
+SELECT c_custkey,
+  reverse(c_mktsegment) AS seg_rev,
+  translate(c_mktsegment, 'AEIOU', 'aeiou') AS seg_lowvowel,
+  lpad(CAST(c_custkey AS VARCHAR), 8, '0') AS key_padded,
+  repeat(substr(c_mktsegment, 1, 1), 3) AS initial_x3,
+  left(c_name, 4) AS name_head,
+  right(c_name, 2) AS name_tail
+FROM customer ORDER BY c_custkey
+"""
+
+
+@query("q_fn_string_adv", oracle=_STRING_ADV_ORACLE, tags=("functions",))
+def q_fn_string_adv(spark, sf_dir):
+    """Advanced string surface: reverse, translate (char mapping),
+    zero-padding lpad, repeat, left/right — completing the §2.4
+    function family (basic ops in q_fn_string).  Pure per-row JVM
+    expressions; byte-identical in both engines on ASCII fixtures."""
+    c = Catalog(spark, sf_dir).customer
+    return c.selectExpr(
+        "c_custkey",
+        "reverse(c_mktsegment) AS seg_rev",
+        "translate(c_mktsegment, 'AEIOU', 'aeiou') AS seg_lowvowel",
+        "lpad(CAST(c_custkey AS STRING), 8, '0') AS key_padded",
+        "repeat(substr(c_mktsegment, 1, 1), 3) AS initial_x3",
+        "left(c_name, 4) AS name_head",
+        "right(c_name, 2) AS name_tail",
+    ).orderBy("c_custkey")
+
+
+_TRY_ARITH_ORACLE = """
+WITH t AS (
+  SELECT o_orderkey,
+    CASE WHEN o_orderkey % 7 = 0 THEN 0.0 ELSE CAST(o_orderkey % 5 AS DOUBLE) END
+      AS denom,
+    o_totalprice
+  FROM orders WHERE o_custkey < 100)
+SELECT
+  CAST(count(*) AS BIGINT) AS n_rows,
+  CAST(sum(CASE WHEN denom = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_null_div,
+  floor(sum(CASE WHEN denom = 0 THEN NULL
+            ELSE o_totalprice / denom END) * 100 + 0.5) / 100
+    AS sum_safe_ratio
+FROM t
+"""
+
+
+@query("q_fn_try_arith", oracle=_TRY_ARITH_ORACLE, tags=("functions",))
+def q_fn_try_arith(spark, sf_dir):
+    """Error-safe arithmetic — try_divide yields NULL on a zero
+    divisor instead of Infinity (non-ANSI float semantics) or a job
+    abort (ANSI mode): the difference between one bad row poisoning a
+    100 TB aggregate and that row degrading to NULL.  The oracle
+    expresses the identical semantics as an explicit CASE guard, so
+    the try_* fast path is proven equivalent to the defensive SQL
+    users write by hand.  Pure codegen map + one scalar aggregate."""
+    o = Catalog(spark, sf_dir).orders.filter(F.col("o_custkey") < 100)
+    t = o.select(
+        "o_totalprice",
+        F.when(F.col("o_orderkey") % 7 == 0, F.lit(0.0))
+        .otherwise((F.col("o_orderkey") % 5).cast("double"))
+        .alias("denom"),
+    )
+    safe = t.withColumn(
+        "ratio", F.expr("try_divide(o_totalprice, nullif(denom, 0.0))")
+    )
+    return safe.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+        F.sum(F.when(F.col("denom") == 0, 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_null_div"),
+        money(F.sum("ratio")).alias("sum_safe_ratio"),
+    )
+
+
+_VARIANT_ORACLE = """
+SELECT event_type,
+       CAST(count(*) AS BIGINT) AS cnt,
+       CAST(sum(CAST(json_extract_string(props, '$.k') AS INT)) AS BIGINT)
+         AS sum_k,
+       CAST(count(*) AS BIGINT) AS n_missing_null,
+       'OBJECT<k: BIGINT>' AS variant_schema
+FROM events GROUP BY event_type ORDER BY event_type
+"""
+
+
+@query("q_fn_variant", oracle=_VARIANT_ORACLE, tags=("functions", "semi-structured"))
+def q_fn_variant(spark, sf_dir):
+    """The VARIANT type — Spark 4's binary semi-structured encoding
+    (parse_json once, typed variant_get extraction after): the open
+    lakehouse answer to storing JSON as strings and re-parsing per
+    access.  Three semantics proven against the JSON-string oracle:
+    typed path extraction equals json_extract (sum over every row),
+    try_variant_get on an absent path is NULL for EVERY row (never an
+    error — n_missing_null == cnt), and schema_of_variant infers the
+    stable object shape, pinned as a literal verdict column.  The
+    fixture stores props as string so the parse still runs per row
+    here; the type's 100 TB payoff is WRITING the variant column to
+    parquet once and paying binary field access, not Jackson, on
+    every later read — same plan, parse hoisted to ingest."""
+    e = Catalog(spark, sf_dir).events
+    v = e.select(
+        "event_type",
+        F.expr("variant_get(parse_json(props), '$.k', 'int')").alias("k"),
+        F.expr(
+            "try_variant_get(parse_json(props), '$.absent', 'int')"
+        ).alias("miss"),
+        F.expr("schema_of_variant(parse_json(props))").alias("sch"),
+    )
+    return (
+        v.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("cnt"),
+            F.sum("k").cast("bigint").alias("sum_k"),
+            F.count_if(F.col("miss").isNull()).cast("bigint").alias(
+                "n_missing_null"
+            ),
+            F.min("sch").alias("variant_schema"),
+        )
+        .orderBy("event_type")
+    )
+
+
+_COLLATION_ORACLE = """
+WITH ws AS (
+  SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+w AS (
+  SELECT CASE WHEN i % 2 = 1 THEN upper(toks[i]) ELSE toks[i] END AS w2
+  FROM ws, unnest(generate_series(1, len(toks))) t(i)
+  WHERE toks[i] <> '')
+SELECT CAST(count(*) AS BIGINT) AS n_words,
+       CAST(count(DISTINCT w2) AS BIGINT) AS distinct_cs,
+       CAST(count(DISTINCT lower(w2)) AS BIGINT) AS distinct_ci
+FROM w
+"""
+
+
+@query("q_fn_collation", oracle=_COLLATION_ORACLE, tags=("functions", "text"))
+def q_fn_collation(spark, sf_dir):
+    """COLLATION-aware comparison — Spark 4 collations make
+    case-insensitive equality a property of the COLUMN instead of a
+    lower() wrapped around every predicate and join key: the distinct
+    count over collate(w, 'UTF8_LCASE') must equal the oracle's
+    explicit count(DISTINCT lower(w)).  Case variation is synthesized
+    deterministically (every even-position token uppercased —
+    1-based/0-based indexing aligned between engines) so the
+    case-sensitive and case-insensitive counts provably diverge on
+    the same data.  At scale the win is plan-level: a collated
+    equi-join or aggregate hashes the collation key directly — no
+    derived lower() column to materialize, shuffle, and keep in sync
+    on 100 TB of text."""
+    d = ensure_parallelism(Catalog(spark, sf_dir).documents)
+    w = (
+        d.selectExpr("posexplode(split(text, ' ')) AS (pos, w)")
+        .filter("w <> ''")
+        .selectExpr(
+            "CASE WHEN pos % 2 = 0 THEN upper(w) ELSE w END AS w2"
+        )
+    )
+    return w.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_words"),
+        F.count_distinct("w2").cast("bigint").alias("distinct_cs"),
+        F.count_distinct(F.expr("collate(w2, 'UTF8_LCASE')"))
+        .cast("bigint")
+        .alias("distinct_ci"),
+    )
+
+
+_SQL_UDF_ORACLE = """
+SELECT l_returnflag,
+       CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100)
+                AS BIGINT)) AS BIGINT) AS rev_cents,
+       CAST(count(*) AS BIGINT) AS n_rows,
+       CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100)
+                AS BIGINT)) // count(*) AS BIGINT) AS avg_rev_cents
+FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
+"""
+
+
+@query("q_fn_sql_udf", oracle=_SQL_UDF_ORACLE, tags=("function", "sql"))
+def q_fn_sql_udf(spark, sf_dir):
+    """SQL-DEFINED functions (Spark 4 `CREATE FUNCTION ... RETURN
+    expr`) + lateral column aliases — the declarative UDF door: the
+    business definition (discounted price) lives ONCE as a named SQL
+    function, is inlined by Catalyst at plan time (no Python worker,
+    no serialization boundary — contrast §2.9's pandas UDFs), and the
+    lateral alias derives avg_rev_cents from the rev_cents/n_rows
+    aggregate ALIASES in the same SELECT — no subquery, no
+    re-aggregation.  Per-row cents quantization before the sum
+    keeps both engines integer-exact.  The oracle inlines the same
+    expressions — value equality proves the function call IS the
+    expression, and the whole plan stays one partial/final aggregate
+    over the scan."""
+    Catalog(spark, sf_dir).lineitem.createOrReplaceTempView(
+        "li_sql_udf_v"
+    )
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY FUNCTION skyhook_disc_price("
+        "p DOUBLE, d DOUBLE) RETURNS DOUBLE RETURN p * (1 - d)"
+    )
+    return spark.sql(
+        "SELECT l_returnflag, "
+        "  CAST(sum(CAST(floor("
+        "    skyhook_disc_price(l_extendedprice, l_discount) * 100"
+        "  ) AS BIGINT)) AS BIGINT) AS rev_cents, "
+        "  CAST(count(*) AS BIGINT) AS n_rows, "
+        # lateral column aliases: avg derives from the two aggregate
+        # ALIASES in the same SELECT — no subquery, no re-aggregation
+        "  CAST(rev_cents DIV n_rows AS BIGINT) AS avg_rev_cents "
+        "FROM li_sql_udf_v GROUP BY l_returnflag ORDER BY l_returnflag"
+    )
+
+
+_HOF_ORACLE = """
+SELECT vec_id,
+  CAST(len(list_filter(embedding, x -> x > 0)) AS INT) AS n_pos,
+  CAST(len(list_filter(embedding, x -> abs(x) > 2)) > 0 AS BOOLEAN)
+    AS has_big,
+  CAST(len(list_filter(embedding, x -> abs(x) >= 10)) = 0 AS BOOLEAN)
+    AS all_small,
+  floor((list_aggregate(list_transform(generate_series(1, len(embedding)),
+      i -> CAST(embedding[i] AS DOUBLE) * (i - 1)), 'sum'))
+    * 1000000 + 0.5) / 1000000 AS idx_weighted
+FROM embeddings
+"""
+
+
+@query("q_fn_higher_order", oracle=_HOF_ORACLE, tags=("function", "array"))
+def q_fn_higher_order(spark, sf_dir):
+    """The higher-order-lambda surface q_fn_array's transform/aggregate
+    pair leaves open: filter (keep positive components), exists (any
+    |x| > 2), forall (all |x| < 10), and a position-aware reduction
+    (sum of x_i * i via zip_with against a sequence).  All four are
+    Catalyst lambda expressions — JVM-evaluated inside whole-stage
+    codegen, no Python worker, no explode: the per-row array never
+    becomes 64 rows.  At 100 TB that is the difference between a map
+    over n rows and a shuffle-prone explode into n x dim rows."""
+    e = Catalog(spark, sf_dir).embeddings
+    emb_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    idx = F.sequence(F.lit(0), F.size("embedding") - 1)
+
+    return e.select(
+        "vec_id",
+        F.size(F.filter(F.col("embedding"), lambda x: x > 0)).alias("n_pos"),
+        F.exists(F.col("embedding"), lambda x: F.abs(x) > 2).alias(
+            "has_big"
+        ),
+        F.forall(F.col("embedding"), lambda x: F.abs(x) < 10).alias(
+            "all_small"
+        ),
+        quantize(
+            F.aggregate(
+                F.zip_with(emb_d, idx, lambda x, i: x * i.cast("double")),
+                F.lit(0.0),
+                lambda acc, v: acc + v,
+            ),
+            6,
+        ).alias("idx_weighted"),
     )

@@ -94,3 +94,33 @@ def q_sort_nulls(spark, sf_dir):
         .orderBy(F.col("status_np").asc_nulls_first(), F.col("o_orderkey").asc())
         .limit(100)
     )
+
+
+_PAGINATION_ORACLE = """
+SELECT o_orderkey, o_custkey,
+  floor(o_totalprice * 100 + 0.5) / 100 AS total_price
+FROM orders ORDER BY o_totalprice DESC, o_orderkey
+LIMIT 20 OFFSET 40
+"""
+
+
+@query("q_sort_pagination", oracle=_PAGINATION_ORACLE, tags=("sort",))
+def q_sort_pagination(spark, sf_dir):
+    """Keyset-free pagination: page 3 of the price-ranked orders via
+    ORDER BY + LIMIT/OFFSET.  Spark plans offset+limit as a combined
+    top-(offset+limit) (per-partition heaps of 60 rows, driver
+    discards the first 40) — fine for UI-depth pages; deep pagination
+    at 100 TB should switch to keyset predicates (WHERE key > last)
+    which q_filter_range_conj's pushdown shape covers.  Unique
+    orderkey tie-break keeps both engines' page boundary identical."""
+    o = Catalog(spark, sf_dir).orders
+    return (
+        o.select(
+            "o_orderkey",
+            "o_custkey",
+            money(F.col("o_totalprice")).alias("total_price"),
+        )
+        .orderBy(F.desc(F.col("o_totalprice")), "o_orderkey")
+        .offset(40)
+        .limit(20)
+    )

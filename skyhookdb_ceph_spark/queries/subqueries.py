@@ -283,3 +283,76 @@ def q_sql_empty_rollup(spark, sf_dir):
         )
     )
     return rolled.unionByName(grand)
+
+
+# The ORACLE is the plain-SQL equivalent (DuckDB has no pipe parser);
+# proving the pipe form returns identical rows shows it is pure
+# front-end sugar over the same logical plan.
+_PIPE_ORACLE = """
+SELECT l_returnflag, l_linestatus,
+       CAST(count(*) AS BIGINT) AS n_items,
+       CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
+FROM lineitem
+WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+GROUP BY l_returnflag, l_linestatus
+ORDER BY l_returnflag, l_linestatus
+"""
+
+_PIPE_SQL = """
+FROM lineitem
+|> WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+|> AGGREGATE CAST(count(*) AS BIGINT) AS n_items,
+             CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
+   GROUP BY l_returnflag, l_linestatus
+|> SELECT l_returnflag, l_linestatus, n_items, sum_qty
+|> ORDER BY l_returnflag, l_linestatus
+"""
+
+
+@query("q_sql_pipe", oracle=_PIPE_ORACLE, tags=("sql",))
+def q_sql_pipe(spark, sf_dir):
+    """SQL PIPE syntax (`|>`) — Spark 4's linear query form (the
+    SQL-pipe proposal adopted from GoogleSQL): FROM → WHERE →
+    AGGREGATE → SELECT → ORDER BY as sequential stages instead of
+    inside-out clauses.  The fifth SQL door (after CTE / VALUES /
+    named-window / recursive): the pipe text parses to EXACTLY the
+    plan the clause form plans — same pushed filter, same
+    partial/final aggregate — which the differential check proves by
+    running the clause form on DuckDB (which has no pipe parser) and
+    demanding identical rows.  Front-end plurality matters at an
+    organization level: pipeline authors write linear SQL, the engine
+    optimizes it identically."""
+    Catalog(spark, sf_dir).register_views()
+    return spark.sql(_PIPE_SQL)
+
+
+_PARAM_SQL_ORACLE = """
+SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS cnt,
+       floor(sum(o_totalprice) * 100 + 0.5) / 100 AS sum_price
+FROM orders WHERE o_totalprice > 150000.0
+GROUP BY o_orderpriority ORDER BY o_orderpriority
+"""
+
+
+@query("q_sql_parameterized", oracle=_PARAM_SQL_ORACLE, tags=("sql",))
+def q_sql_parameterized(spark, sf_dir):
+    """PARAMETERIZED SQL — named `:param` markers bound server-side
+    (spark.sql(..., args=...)) plus `{df}` templating for the table
+    reference: the injection-safe front door every SQL-speaking
+    application should use instead of string interpolation (a
+    user-supplied threshold can never smuggle SQL past the parser —
+    parameters bind as typed literals AFTER parsing).  The sixth SQL
+    door next to CTE / VALUES / named-window / recursive / pipe.
+    Same plan as the literal form — pushed filter, partial/final
+    agg — because binding happens before optimization; the oracle IS
+    the literal form, proving the bound parameter reaches the plan
+    with identical semantics."""
+    orders = Catalog(spark, sf_dir).orders
+    return spark.sql(
+        "SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS cnt, "
+        "floor(sum(o_totalprice) * 100 + 0.5) / 100 AS sum_price "
+        "FROM {orders} WHERE o_totalprice > :minp "
+        "GROUP BY o_orderpriority ORDER BY o_orderpriority",
+        args={"minp": 150000.0},
+        orders=orders,
+    )

@@ -31,7 +31,7 @@ from skyhookdb_ceph_spark.registry import query
 @pandas_udf(T.DoubleType())
 def _revenue_udf(price: pd.Series, discount: pd.Series) -> pd.Series:
     # floor(x*100+0.5)/100: the same engine-invariant quantization as
-    # queries/_util.quantize2, in vectorized numpy.
+    # queries/_util.money, in vectorized numpy.
     return np.floor(price * (1 - discount) * 100 + 0.5) / 100
 
 

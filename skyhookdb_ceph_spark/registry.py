@@ -119,20 +119,12 @@ def load_all() -> dict[str, QuerySpec]:
             dedup,
             filters,
             functions_q,
+            graph,
             joins,
             llm,
+            maintenance,
             multimodal,
-            pipeline,
-            pipeline2,
-            pipeline3,
-            pipeline4,
-            pipeline5,
-            pipeline6,
-            pipeline7,
-            pipeline8,
-            pipeline9,
-            pipeline10,
-            pipeline11,
+            resilience,
             scans,
             setops,
             similarity,
@@ -140,6 +132,7 @@ def load_all() -> dict[str, QuerySpec]:
             streaming_q,
             subqueries,
             text,
+            timeseries,
             udfs,
             windows,
         )

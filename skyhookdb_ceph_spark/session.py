@@ -20,6 +20,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from skyhookdb_ceph_spark.operators.stats import BROADCAST_BUDGET_BYTES
+
 
 def _usable_cpus() -> int:
     """Cores this process may run on (its affinity mask, not the host's
@@ -92,7 +94,7 @@ def get_spark(
         # pushed filters — the SkyhookDM-style storage-side evaluation
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.cbo.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.autoBroadcastJoinThreshold", str(BROADCAST_BUDGET_BYTES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # catalog tables (bucketed joins) go to scratch, not the repo cwd:
         # tmpfs locally, same rule as queries/_util.scratch.  A real

@@ -104,10 +104,9 @@ def audited_registry():
     """(defaultParallelism, {query: (unpartitioned windows, plan
     digest)}) from `tools/plan_audit.audit_registry`, which builds
     every batch query once (a `collect_local` query contributes the
-    frame it collected).  It runs in a fresh process, as the
-    `--digests` run that wrote tests/plan_digests.json did: a plan
-    built after other work in this session's JVM can order a
-    distinct-aggregate rewrite differently."""
+    frame it collected).  It runs in a fresh process, so the plans are
+    built in a session of their own, as the `--digests` run that wrote
+    tests/plan_digests.json built them."""
     code = (
         "import json; from tools.plan_audit import audit_registry; "
         "print(json.dumps(audit_registry()))"
@@ -151,7 +150,7 @@ def test_plan_digests_match(audited_registry):
             f"digests were made at defaultParallelism "
             f"{rec['default_parallelism']}; this session has {have}"
         )
-    got = {n: d for n, (_, d) in audit.items() if n not in rec["unstable"]["queries"]}
+    got = {n: d for n, (_, d) in audit.items()}
     want = rec["digests"]
     changed = sorted(n for n in want.keys() & got.keys() if want[n] != got[n])
     assert (changed, sorted(got.keys() - want.keys()), sorted(want.keys() - got.keys())) == (

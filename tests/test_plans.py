@@ -593,7 +593,7 @@ def test_skyline_window_runs_over_aggregate(spark):
     assert plan.index("Window") < plan.index("HashAggregate"), plan
 
 
-# ---- pipeline7: TPC-H completion wave --------------------------------------
+# ---- TPC-H completion (queries/composite.py) ------------------------------
 
 
 def test_tpch_q2_min_is_partitioned_window(spark):
@@ -747,7 +747,7 @@ def test_skew_adaptive_agg_plain_branch_on_uniform_key(spark):
     take the plain partial/final aggregate — no salt column anywhere
     in the plan (the second shuffle would be pure overhead)."""
     from skyhookdb_ceph_spark.plans.explain import explain_str as es
-    from skyhookdb_ceph_spark.queries.pipeline8 import adaptive_sum_by_key
+    from skyhookdb_ceph_spark.queries.aggregates import adaptive_sum_by_key
 
     df = spark.range(1000).selectExpr("id AS k", "id * 0.5 AS value")
     plan = es(adaptive_sum_by_key(df, "k"))
@@ -880,9 +880,7 @@ def test_density_blocks_plain_branch_plan(spark):
     exchange keyed on event_type alone."""
     import re
 
-    from skyhookdb_ceph_spark.queries.pipeline10 import (
-        _trailing_hour_window,
-    )
+    from skyhookdb_ceph_spark.queries.windows import _trailing_hour_window
 
     df = _trailing_hour_window(spark, SF, target_rows=10_000_000)
     plan = explain_str(df)
@@ -894,9 +892,7 @@ def test_density_blocks_plain_branch_plan(spark):
 def test_density_blocks_branches_agree(spark):
     """Both physical branches must return byte-identical rows — the
     invariant that lets the oracle ignore which branch ran."""
-    from skyhookdb_ceph_spark.queries.pipeline10 import (
-        _trailing_hour_window,
-    )
+    from skyhookdb_ceph_spark.queries.windows import _trailing_hour_window
 
     blocked = _trailing_hour_window(spark, SF, target_rows=64).collect()
     plain = _trailing_hour_window(
@@ -1006,7 +1002,7 @@ def test_width_probed_join_probed_branch(spark):
     post-join aggregate's."""
     import re
 
-    from skyhookdb_ceph_spark.queries.pipeline11 import _width_probed_join
+    from skyhookdb_ceph_spark.queries.joins import _width_probed_join
 
     plan = explain_str(_width_probed_join(spark, SF, target_rows=1000))
     assert plan.count("REPARTITION_BY_NUM") == 2
@@ -1028,7 +1024,7 @@ def test_width_probed_join_plain_branch(spark):
 def test_width_probed_branches_agree(spark):
     """Both physical branches must return byte-identical rows — the
     invariant that lets the oracle ignore which branch ran."""
-    from skyhookdb_ceph_spark.queries.pipeline11 import _width_probed_join
+    from skyhookdb_ceph_spark.queries.joins import _width_probed_join
 
     probed = _width_probed_join(spark, SF, target_rows=1000).collect()
     plain = _width_probed_join(spark, SF, target_rows=10**9).collect()
@@ -1091,7 +1087,7 @@ def test_incremental_merge_delta_filter_pushed(spark):
     delta scan — the plan property that makes the refresh O(delta),
     never a rescan of base history."""
     from skyhookdb_ceph_spark.queries._util import Catalog
-    from skyhookdb_ceph_spark.queries.pipeline11 import _IVM_CUT
+    from skyhookdb_ceph_spark.queries.aggregates import _IVM_CUT
 
     ev = Catalog(spark, SF).events
     from pyspark.sql import functions as F
@@ -1158,15 +1154,14 @@ def test_triangles_all_joins_keyed(spark):
 
 
 def test_broadcast_probed_join_both_branches(spark):
-    """Measured-payload broadcast choice: the shipped 10 MB budget must
-    pick BroadcastHashJoin on the fixture dim; a forced 1-byte budget
-    must pick the keyed shuffle join instead — and both branches must
+    """Measured-payload broadcast choice: the shipped budget must pick
+    BroadcastHashJoin on the fixture dim; a forced 1-byte budget must
+    pick the keyed shuffle join instead — and both branches must
     return identical rows."""
-    from skyhookdb_ceph_spark.queries.pipeline11 import (
-        _broadcast_probed_join,
-    )
+    from skyhookdb_ceph_spark.operators.stats import BROADCAST_BUDGET_BYTES
+    from skyhookdb_ceph_spark.queries.joins import _broadcast_probed_join
 
-    bcast = _broadcast_probed_join(spark, SF, 10 << 20)
+    bcast = _broadcast_probed_join(spark, SF, BROADCAST_BUDGET_BYTES)
     shuf = _broadcast_probed_join(spark, SF, 1)
     assert "BroadcastHashJoin" in joins_used(bcast)
     assert joins_used(shuf) & {"ShuffledHashJoin", "SortMergeJoin"}

@@ -169,10 +169,7 @@ def test_hexval8_spark_fast_path_matches_portable(spark):
     """The conv()-based Spark fast path must produce the identical
     BIGINT as the portable substr/instr arithmetic the DuckDB oracles
     use — across all three digest windows, on real key data."""
-    from skyhookdb_ceph_spark.queries.pipeline4 import (
-        _hexval8,
-        _hexval8_spark,
-    )
+    from skyhookdb_ceph_spark.queries._util import _hexval8, _hexval8_spark
 
     df = spark.range(0, 5000).selectExpr("md5(concat('t#', id)) AS h")
     for start in (1, 9, 17):
@@ -299,6 +296,49 @@ def test_day_block_ghost_window_model(events):
         if emit == 1
     ]
     assert sorted(naive) == sorted(blocked)
+
+
+@pytest.mark.parametrize("width", [86400, 7200])
+def test_ghost_blocks_equal_the_plain_window_across_the_epoch(spark, width):
+    """operators/stats.ghost_blocks in Spark, on seconds either side of
+    1970 and on every block boundary: the (key, blk) trailing-hour
+    RANGE window over real + ghost rows, ghosts dropped, must equal the
+    plain per-key window.  The model above uses Python's floor-mod;
+    Spark's % takes the dividend's sign, so a ghost test written with %
+    loses the ghosts of every block before 1970."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from skyhookdb_ceph_spark.operators.stats import ghost_blocks
+
+    secs = []
+    for b in (-2, -1, 0, 1):  # block starts around the epoch
+        start = b * width
+        secs += [start - 3601, start - 3600, start - 1, start, start + 1]
+    secs += [-100, -100, -1, 0, 0, 1, 3599, 3600, 3601]  # ties included
+    rows = [(k, sec, (sec * 7 + i) % 500) for i, sec in enumerate(secs) for k in "ab"]
+    df = spark.createDataFrame(rows, "k STRING, sec BIGINT, cents BIGINT")
+
+    def trailing(frame, keys):
+        w = Window.partitionBy(*keys).orderBy("sec").rangeBetween(-3600, 0)
+        return frame.select(
+            "k",
+            "sec",
+            "cents",
+            *(["emit"] if "emit" in frame.columns else []),
+            F.count(F.lit(1)).over(w).alias("n"),
+            F.sum("cents").over(w).alias("s"),
+        )
+
+    plain = trailing(df, ["k"]).collect()
+    blocked = (
+        trailing(ghost_blocks(df, width, 3600), ["k", "blk"])
+        .filter("emit = 1")
+        .drop("emit")
+        .collect()
+    )
+    assert sorted(map(tuple, blocked)) == sorted(map(tuple, plain))
+    assert len(plain) == len(rows)
 
 
 def test_hll_error_bound_across_promotion_boundary(spark):

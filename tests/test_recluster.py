@@ -9,7 +9,7 @@ import glob
 from pyspark.sql import functions as F
 
 from skyhookdb_ceph_spark.plans.explain import explain_str
-from skyhookdb_ceph_spark.queries.scans import (
+from skyhookdb_ceph_spark.queries.maintenance import (
     _RC_HI,
     _RC_LO,
     recluster_layouts,

@@ -79,7 +79,7 @@ def test_event_eviction_multi_batch_matches_batch_answer(
     """Eviction must never change the ANSWER, only the state bound:
     a forced 3-batch time-ordered replay through the evicting state fn
     must equal the batch funnel query exactly."""
-    from skyhookdb_ceph_spark.queries.pipeline11 import q_win_event_pattern
+    from skyhookdb_ceph_spark.queries.windows import q_win_event_pattern
     from skyhookdb_ceph_spark.queries.streaming_q import (
         _event_eviction_stream,
     )
@@ -176,7 +176,7 @@ def test_event_pattern_multi_batch_invariant(spark, sf_small, tmp_path):
     drained result must equal the single-batch run AND the batch
     funnel query.  This is what the per-batch recompute + post-drain
     max_by(seq_len) collapse buys."""
-    from skyhookdb_ceph_spark.queries.pipeline11 import q_win_event_pattern
+    from skyhookdb_ceph_spark.queries.windows import q_win_event_pattern
     from skyhookdb_ceph_spark.queries.streaming_q import (
         _event_pattern_stream,
         q_stream_event_pattern,

@@ -34,9 +34,6 @@ from skyhookdb_ceph_spark.registry import load_all
 from skyhookdb_ceph_spark.session import get_spark
 
 DIGESTS = REPO / "tests" / "plan_digests.json"
-# Plans with several distinct aggregates: Spark's rewrite orders their
-# groups by expression-id hashes, which differ between processes.
-UNSTABLE = ("q_agg_distinct", "q_fn_collation")
 SF_DIR = "/root/testdata/sf0.001"
 
 AUDIT = {
@@ -605,18 +602,98 @@ def audited_plan(spark, name: str, sf_dir: str) -> str:
     return explain_str(audited_frame(spark, name, sf_dir), "formatted")
 
 
+def _split_top(s: str) -> list[str]:
+    """Split `s` on the commas outside any brackets or parentheses."""
+    items, depth, start = [], 0, 0
+    for i, ch in enumerate(s):
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            items.append(s[start:i].strip())
+            start = i + 1
+    items.append(s[start:].strip())
+    return items
+
+
+def _bracket_lists(s: str) -> list[tuple[int, int]]:
+    """(start, end) of each top-level [...] in `s`, brackets included."""
+    spans, depth = [], 0
+    for i, ch in enumerate(s):
+        if ch == "[":
+            if depth == 0:
+                start = i
+            depth += 1
+        elif ch == "]":
+            depth -= 1
+            if depth == 0:
+                spans.append((start, i + 1))
+    return spans
+
+
+def _sorted_lists(line: str) -> str:
+    """`line` with the items of each top-level [...] list sorted."""
+    out, pos = [], 0
+    for a, b in _bracket_lists(line):
+        items = ", ".join(sorted(_split_top(line[a + 1 : b - 1])))
+        out += [line[pos:a], f"[{items}]"]
+        pos = b
+    return "".join(out) + line[pos:]
+
+
+def _canonical_distinct_groups(text: str) -> str:
+    """Mask the order Spark's distinct-aggregate rewrite picks.
+
+    The rewrite numbers its groups (`gid`) and orders the columns of
+    its `Expand` and of the grouping `Aggregate` above it by
+    expression-id hashes, so the same query lists them in another order
+    in another process.  Each group is renumbered by the sorted set of
+    expressions its `Expand` projection keeps, every `gid# = k` above
+    that `Expand` follows the new numbers, and the rewrite's column
+    lists are sorted."""
+    lines = text.split("\n")
+    done = 0
+    for i, line in enumerate(lines):
+        head = line.find("Expand [[")
+        spans = _bracket_lists(line[head:]) if head >= 0 else []
+        if len(spans) != 2 or not line.endswith(", gid#]"):
+            continue
+        (a, b), (c, d) = spans
+        rows = [_split_top(r[1:-1]) for r in _split_top(line[head + a + 1 : head + b - 1])]
+        cols = _split_top(line[head + c + 1 : head + d - 1])
+        keys = {r[-1]: tuple(sorted(x for x in r[:-1] if x != "null")) for r in rows}
+        order = sorted(set(keys.values()))
+        if len(order) != len(rows):
+            continue
+        canon = {gid: str(order.index(k)) for gid, k in keys.items()}
+        rows = sorted("[" + ", ".join(sorted(r[:-1]) + [canon[r[-1]]]) + "]" for r in rows)
+        cols = sorted(cols[:-1]) + cols[-1:]
+        lines[i] = f"{line[:head]}Expand [{', '.join(rows)}], [{', '.join(cols)}]"
+        for j in range(done, i):
+            lines[j] = re.sub(
+                r"gid# = (\d+)", lambda m: f"gid# = {canon.get(m.group(1), m.group(1))}", lines[j]
+            )
+            if "Aggregate [" in lines[j] and "gid#]," in lines[j]:
+                lines[j] = _sorted_lists(lines[j])
+        done = i + 1
+    return "\n".join(lines)
+
+
 def normalize_plan(text: str, parallelism: int) -> str:
     """Plan text with the parts that vary between runs of the same code
     masked: expression ids and plan ids, scratch paths under /dev/shm
     and /tmp, pid-named prefixes, 8-hex uuid suffixes of per-run table
-    names, and the `ensure_parallelism` width `parallelism` (the
-    session's defaultParallelism) in `Repartition <n>, true`."""
+    names, the `ensure_parallelism` width `parallelism` (the session's
+    defaultParallelism) in `Repartition <n>, true`, and the group order
+    of the distinct-aggregate rewrite (`_canonical_distinct_groups`)."""
     text = re.sub(r"#\d+", "#", text)
     text = re.sub(r"plan_id=\d+", "plan_id=", text)
     text = re.sub(r"(?:file:)?/(?:dev/shm|tmp)/[^\s,\]\)]*", "<scratch>", text)
     text = re.sub(rf"_{os.getpid()}(?=_|\b)", "_<pid>", text)
     text = re.sub(r"_[0-9a-f]{8}\b", "_<uuid>", text)
-    return text.replace(f"Repartition {parallelism}, true", "Repartition <P>, true")
+    text = text.replace(f"Repartition {parallelism}, true", "Repartition <P>, true")
+    return _canonical_distinct_groups(text)
 
 
 def batch_queries() -> list[str]:
@@ -638,10 +715,7 @@ def audit_registry() -> tuple[int, dict[str, tuple[int, str]]]:
     """Build every batch query once at SF_DIR, in a session this
     process starts, and return the session's defaultParallelism and,
     per query, the count of unpartitioned windows and the plan digest
-    of its audited frame.  Run it in a fresh process: Spark's distinct-aggregate
-    rewrite orders its groups by expression-id hashes, so a plan built
-    after other work in the same JVM can list them in another order
-    (seen for q_agg_distinct and q_fn_collation)."""
+    of its audited frame."""
     spark = get_spark(app_name="plan_audit", shuffle_partitions=8)
     parallelism = spark.sparkContext.defaultParallelism
     audit = {}
@@ -663,9 +737,7 @@ def write_digests() -> None:
         "default_parallelism": parallelism,
         "left_out": {"reason": "live-stream drains start a fresh stream "
                                "pipeline per build", "queries": live},
-        "unstable": {"reason": "distinct-aggregate group order follows "
-                               "expression-id hashes", "queries": list(UNSTABLE)},
-        "digests": {n: d for n, (_, d) in audit.items() if n not in UNSTABLE},
+        "digests": {n: d for n, (_, d) in audit.items()},
     }, indent=1) + "\n")
     print(f"wrote {DIGESTS.relative_to(REPO)}: {len(audit)} digests")
 
